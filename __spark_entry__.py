@@ -2395,7 +2395,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rel_pattern_bootstrap": _q_rel_pattern_bootstrap,  # 2-round Snowball loop (new r06)
     }
     head = [k for k in _R07_WINDOW if k in d]
-    assert len(head) == 50, f"gate window must be exactly 50, got {len(head)}"
+    if len(head) != 50:
+        raise ValueError(f"gate window must be exactly 50, got {len(head)}")
     return {k: d[k] for k in head + [k for k in d if k not in set(head)]}
 
 

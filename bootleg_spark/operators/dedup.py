@@ -448,6 +448,9 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     materialized blocks. (``localCheckpoint`` trades executor-loss
     resilience for speed — on a long cluster run with preemptible
     executors, set a checkpoint dir and use ``.checkpoint()`` instead.)
+
+    Raises ``ValueError`` if a label still changed in round ``max_iter``
+    (the round that sees no change is the one that proves convergence).
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -485,9 +488,13 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         labels.unpersist()
         labels = new_labels
         if changed == 0:
-            break
+            edges.unpersist()
+            return labels.select("id", F.col("label").alias("cluster_id"))
     edges.unpersist()
-    return labels.select("id", F.col("label").alias("cluster_id"))
+    raise ValueError(
+        f"dup_clusters did not converge after {max_iter} rounds — "
+        "labels would split components; raise max_iter"
+    )
 
 
 def dedup_keep(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -6,8 +6,13 @@ Centralizes the config we rely on everywhere:
   bootleg/run.py:344-374);
 - Arrow on (every Python-side stage in this repo is a pandas/Arrow UDF,
   never per-row Python);
-- shuffle partitions sized to the local core count (on a real cluster
-  this would be ~2-3x total executor cores).
+- shuffle partitions sized to the local core count: 2 per core, with
+  no floor (on a real cluster this would be ~2-3x total executor cores).
+  Every exchange runs that many tasks however small its input is, and
+  most exchanges here are small (dimension builds, per-batch dedup and
+  commits, connected-components rounds), so each extra task is pure
+  fixed cost: scheduling, a Python worker round trip per pandas-UDF
+  task, and one more tiny file per snapshot-table commit.
 """
 
 from __future__ import annotations
@@ -27,6 +32,13 @@ def get_spark(
     """Build (or fetch) a local SparkSession.
 
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
+    ``shuffle_partitions`` defaults to ``2 * cores``, with no floor: two
+    waves of tasks per exchange absorb uneven task times, and every task
+    beyond that is fixed cost on the small exchanges this pipeline is
+    full of. A floor of 32 ran ~10 tasks per core on a 3-core session
+    and cut incremental-crawl throughput by ~1.7x (BENCH.md "Shuffle
+    width").
+
     On a real cluster the same code runs unchanged under
     ``spark-submit --py-files bootleg_spark.zip`` — only ``master`` and
     memory sizing move to submit-time config.
@@ -45,7 +57,7 @@ def get_spark(
         cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     cores = int(cores)
     if shuffle_partitions is None:
-        shuffle_partitions = max(32, 2 * cores)
+        shuffle_partitions = 2 * cores
     if aqe is None:
         aqe = os.environ.get("SPARK_GRAFT_AQE", "false").lower() == "true"
     aqe_s = "true" if aqe else "false"

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from bootleg_spark.operators import dedup, similarity
 
@@ -81,6 +82,14 @@ def test_dup_clusters_chain_and_components(spark):
     assert all(got[i] == 1 for i in range(1, 31))
     assert all(got[i] == 100 for i in (100, 101, 102))
     assert len(got) == 33
+
+
+def test_dup_clusters_raises_when_not_converged(spark):
+    """One round cannot settle a 6-node chain: the labels it leaves
+    would split the component, so the call must fail, not return them."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 6)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="converge"):
+        dedup.dup_clusters(pairs, max_iter=1)
 
 
 def test_dedup_keep_singletons_and_clusters(spark):

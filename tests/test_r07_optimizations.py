@@ -9,15 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from bootleg_spark.operators import dedup
-from bootleg_spark.session import fan_scan, get_spark
+from bootleg_spark.session import fan_scan
 from bootleg_spark.sources.synth import read_documents
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    return get_spark(app_name="r07-opt-tests", cores=4)
 
 
 @pytest.fixture(scope="module")

@@ -1,13 +1,17 @@
-"""Sentence-JSONL ingestion tests — including the reference's own
-end2end fixture file as input (dataset.py:495-545 semantics)."""
+"""Sentence-JSONL ingestion tests — including an end2end fixture file
+in the reference's format as input (dataset.py:495-545 semantics)."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from bootleg_spark.sources import sentences
 
-REF_JSONL = "/root/reference/tests/data/data_loader/end2end_train.jsonl"
+# end2end_train.jsonl format; sentence 0 carries the reference fixture's
+# first line (two gold mentions: alias1 → Q1, multi word alias2 → Q4)
+REF_JSONL = str(Path(__file__).parent / "data" / "end2end_train.jsonl")
 
 
 def test_reads_reference_fixture(spark):
