@@ -64,8 +64,8 @@ class SparkAnnotator:
         which returns plain dicts — do NOT put this in a batch job:
         every mention row lands in driver memory. Bulk callers use
         :meth:`label_frame` (DataFrame-in/out, no collect) or
-        ``KgPipeline.linked()`` / ``linked_fused()`` and keep the
-        result distributed."""
+        ``KgPipeline.linked()`` / ``linked_fused()`` (the one fused
+        linking kernel) and keep the result distributed."""
         if isinstance(text_list, str):
             text_list = [text_list]
         spark = self.pipe.spark

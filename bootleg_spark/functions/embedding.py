@@ -111,7 +111,8 @@ def make_mlp_encoder(dim: int, hidden: int = 64, seed: int = 12345):
 def masked_class_logsoftmax(pred: np.ndarray, mask: np.ndarray, temp: float = 1.0) -> np.ndarray:
     """Masked log-softmax over the last axis (eval_utils.py:32-56 semantics:
     ``log_softmax(pred/temp + log(mask + 1e-45))``)."""
-    assert temp > 0
+    if not temp > 0:
+        raise ValueError(f"temperature must be > 0, got {temp}")
     x = pred / temp + np.log(mask.astype(np.float64) + 1e-45)
     x = x - x.max(axis=-1, keepdims=True)
     ex = np.exp(x)
@@ -132,3 +133,30 @@ def score_batch(
     probs = np.exp(masked_class_logsoftmax(pred, mask, temp))
     probs = probs * mask  # zero out padded candidates exactly
     return probs, probs.argmax(axis=-1)
+
+
+def link_candidates(
+    ctx: np.ndarray, cand_lists: list, qid2row: dict, mat: np.ndarray
+) -> tuple[list, np.ndarray, np.ndarray]:
+    """Score each mention's candidate QIDs against the static entity matrix.
+
+    ``ctx`` (B,D) context encodings, ``cand_lists`` B candidate-QID lists
+    (pads like "-1" allowed), ``qid2row``/``mat`` the broadcast matrix.
+    Fills the (B,K,D) candidate tensor and its mask — a candidate absent
+    from the matrix is masked out — then :func:`score_batch`. Returns
+    ``(qid_pred, top_prob, probs)``: the argmax QID per mention, or "-1"
+    when none of its candidates is in the matrix, its prob, and the
+    (B,K) prob table."""
+    n = len(cand_lists)
+    k = max((len(c) for c in cand_lists), default=1)
+    ent = np.zeros((n, k, ctx.shape[1]), dtype=np.float64)
+    mask = np.zeros((n, k), dtype=bool)
+    for i, cands in enumerate(cand_lists):
+        for j, q in enumerate(cands):
+            row = qid2row.get(q)
+            if row is not None:
+                ent[i, j] = mat[row]
+                mask[i, j] = True
+    probs, arg = score_batch(ctx, ent, mask)
+    qid_pred = [cand_lists[i][arg[i]] if mask[i].any() else "-1" for i in range(n)]
+    return qid_pred, probs[np.arange(n), arg], probs

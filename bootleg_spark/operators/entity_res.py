@@ -23,7 +23,7 @@ Skew note: block sizes are bounded by name-collision counts, not
 corpus size; a pathological hot block (every record named "home") is
 the same hot-key problem as the candidate join and takes the same
 salting escape hatch. The verify join ships only (id, normalized
-name) pairs.
+name, gram array) pairs.
 """
 
 from __future__ import annotations
@@ -70,47 +70,40 @@ def block_records(
 
 
 def candidate_pairs(blocked: DataFrame, id_col: str = "rec_id") -> DataFrame:
-    """(id1, norm1, id2, norm2): within-block record pairs, id1 < id2
-    (each unordered pair once). One self-equi-join on the block key."""
-    has_grams = "grams" in blocked.columns
-    extra_a = [F.col("grams").alias("g1"), F.col("ng").alias("ng1")] if has_grams else []
-    extra_b = [F.col("grams").alias("g2"), F.col("ng").alias("ng2")] if has_grams else []
-    a = blocked.select(
-        F.col("block"),
-        F.col(id_col).alias("id1"),
-        F.col("norm").alias("norm1"),
-        *extra_a,
-    )
-    b = blocked.select(
-        F.col("block"),
-        F.col(id_col).alias("id2"),
-        F.col("norm").alias("norm2"),
-        *extra_b,
-    )
-    return a.join(b, "block").where(F.col("id1") < F.col("id2")).drop("block")
+    """(id1, norm1, g1, ng1, id2, norm2, g2, ng2): within-block record
+    pairs, id1 < id2 (each unordered pair once), carrying each side's
+    gram array from :func:`block_records`. One self-equi-join on the
+    block key."""
+
+    def side(k):
+        return blocked.select(
+            F.col("block"),
+            F.col(id_col).alias(f"id{k}"),
+            F.col("norm").alias(f"norm{k}"),
+            F.col("grams").alias(f"g{k}"),
+            F.col("ng").alias(f"ng{k}"),
+        )
+
+    return side(1).join(side(2), "block").where(F.col("id1") < F.col("id2")).drop("block")
 
 
-def verified_pairs(
-    pairs: DataFrame, min_jaccard: float = 0.8, ngram: int = 3
-) -> DataFrame:
+def verified_pairs(pairs: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
     """(id1, id2, jaccard): pairs whose normalized names have character-
     n-gram Jaccard ≥ min_jaccard (rounded to 6). Intersection size via
     inclusion–exclusion on distinct-gram counts — no array_intersect
     (engines disagree on its null semantics).
 
-    When ``pairs`` carries precomputed g1/g2 gram arrays (the
-    :func:`block_records` → :func:`candidate_pairs` chain does), they
-    are used as-is — per-record shingling happens once per RECORD, not
-    once per pair; the fallback re-derives them from norm1/norm2 for
-    callers that built pairs another way."""
-    if "g1" in pairs.columns:
-        g1, g2 = F.col("g1"), F.col("g2")
-    else:
-        g1 = _char_ngrams(F.col("norm1"), ngram)
-        g2 = _char_ngrams(F.col("norm2"), ngram)
+    ``pairs`` must carry the g1/g2 gram arrays of the
+    :func:`block_records` → :func:`candidate_pairs` chain: the gram
+    width is decided once, in :func:`block_records`, and shingling
+    happens once per RECORD, not once per pair."""
+    missing = {"g1", "g2"} - set(pairs.columns)
+    if missing:
+        raise ValueError(
+            f"verified_pairs needs the gram arrays {sorted(missing)}; build "
+            "pairs with block_records -> candidate_pairs"
+        )
     with_sets = pairs.select(
-        "id1", "id2", g1.alias("g1"), g2.alias("g2")
-    ).select(
         "id1",
         "id2",
         F.size("g1").alias("n1"),

@@ -1,4 +1,4 @@
-"""All-JVM entity linking: the zero-Python strategy for clean web text.
+"""All-JVM entity linking: the zero-Python mirror of the fused kernel.
 
 On rows that provably take the Python extractor's clean-text fast path
 (and with a single-token alias dictionary), EVERY stage — boilerplate
@@ -8,17 +8,16 @@ workers, no Arrow traffic.
 
 MEASURED VERDICT (BENCH.md "Mention-matcher strategies", round 4):
 end-to-end this is NOT the fastest triples path on this workload —
-fused mapInPandas 2.15 s vs 9.9 s (all-JVM) / 6.0 s (hybrid) at
-sf0.1×50 on 32 pinned cores. The round-3 "497k pages/s JVM ceiling"
-measured a passthrough with no mention dataflow; real JVM scoring pays
-mention-grain exchanges + O(dim·T) aggregation that cost more than the
-~0.3 s/5k-pages of single-core numpy they displace. So
-``KgPipeline.triples()`` defaults to the fused path, and this module
-is the right tool for OTHER shapes: mentions-only jobs (the relational
-extractor alone sustains ~500k pages/s), popularity-scorer pipelines
-(relational end to end), or any scorer whose per-candidate cost dwarfs
-an exchange. All strategies are output-identical (parity pinned by
-tests/test_jvm_link.py and the shared driver oracles).
+fused mapInPandas 2.15 s vs 9.9 s all-JVM at sf0.1×50 on 32 pinned
+cores. The round-3 "497k pages/s JVM ceiling" measured a passthrough
+with no mention dataflow; real JVM scoring pays mention-grain exchanges
++ O(dim·T) aggregation that cost more than the ~0.3 s/5k-pages of
+single-core numpy they displace. So ``KgPipeline`` links and emits
+triples through its one fused kernel, and the triples strategies built
+on this module were deleted. What stays backs
+``KgPipeline.linked_relational`` (the ``linked_relational`` and
+``mentions_relational`` queries), whose output is pinned to the fused
+kernel's by tests/test_jvm_link.py and the shared driver oracles.
 
 Output parity with the Python path:
 
@@ -34,7 +33,8 @@ Output parity with the Python path:
   tests/test_jvm_link.py pins qid_pred/spans exactly and probs at
   1e-9 on the full synthetic corpus.
 
-Guards (each checked per row; failing rows take the Python path):
+Guards (each checked per row; the relational path is exact only on
+rows passing both):
 
 - :func:`jvm_extractable_expr` — html decodes to ASCII-printable +
   basic whitespace with no '&': then Python's ``html.unescape`` is the
@@ -330,91 +330,6 @@ def score_mentions_relational(
     return m.where(
         F.col("qid_pred").isNotNull() & (F.col("prob") > F.lit(threshold))
     ).select("doc_id", "mention_pos", "alias", "qid_pred", "prob")
-
-
-def score_mentions_pandas(
-    mentions: DataFrame,
-    ent_matrix_bc,
-    cand_dict_bc,
-    dim: int = S.EMB_DIM,
-    window: int = S.MAX_SEQ_WINDOW_LEN,
-    threshold: float = S.PROB_THRESHOLD,
-    encoder=None,
-) -> DataFrame:
-    """④ scoring as ONE Arrow-batched pandas UDF over mention rows
-    carrying pre-built context token arrays (from
-    :func:`context_tokens_expr`) — the hybrid between the fused
-    all-Python pipeline and the all-relational scorer.
-
-    Versus the fused path, Arrow ships ~70 short tokens per MENTION
-    (~0.3 rows/page) instead of the full html of every page — an
-    order less transfer. Versus the relational scorer, the per-mention
-    math runs in numpy (bitwise identical to the fused path: same
-    ``featurize_tokens`` accumulation order, same einsum) instead of
-    O(dim·T) aggregate buffers. ``encoder=None`` uses the feature-hash
-    featurizer directly on the token arrays; a custom encoder gets the
-    joined token string (the ``featurize_texts`` contract)."""
-    import numpy as np
-    import pandas as pd
-
-    from bootleg_spark.functions.embedding import (
-        featurize_tokens,
-        featurize_texts,
-        score_batch,
-    )
-
-    out_schema = (
-        "doc_id long, mention_pos int, alias string, qid_pred string, prob double"
-    )
-
-    def _score(batches):
-        qid2row, mat = ent_matrix_bc.value
-        cands = cand_dict_bc.value
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pd.DataFrame(
-                    {c: [] for c in ["doc_id", "mention_pos", "alias", "qid_pred", "prob"]}
-                )
-                continue
-            toks = pdf["_ctx_toks"]
-            if encoder is None:
-                ctx = np.zeros((n, dim), dtype=np.float64)
-                for i, tl in enumerate(toks):
-                    ctx[i] = featurize_tokens(list(tl), dim)
-            else:
-                ctx = encoder([" ".join(tl) for tl in toks], dim)
-            cl = [cands[a] for a in pdf["alias"]]
-            k = max(len(c) for c in cl)
-            ent = np.zeros((n, k, dim), dtype=np.float64)
-            mask = np.zeros((n, k), dtype=bool)
-            for i, cands_i in enumerate(cl):
-                for j, q in enumerate(cands_i):
-                    row = qid2row.get(q)
-                    if row is not None:
-                        ent[i, j] = mat[row]
-                        mask[i, j] = True
-            probs, arg = score_batch(ctx, ent, mask)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mention_pos": pdf["mention_pos"],
-                    "alias": pdf["alias"],
-                    "qid_pred": [
-                        cl[i][arg[i]] if mask[i].any() else "-1" for i in range(n)
-                    ],
-                    "prob": probs[np.arange(n), arg],
-                }
-            )
-
-    compact = mentions.select(
-        "doc_id",
-        "mention_pos",
-        "alias",
-        context_tokens_expr(F.col("_arr"), F.col("_tok_idx"), window).alias("_ctx_toks"),
-    )
-    out = compact.mapInPandas(_score, out_schema)
-    return out.where((F.col("qid_pred") != "-1") & (F.col("prob") > F.lit(threshold)))
 
 
 def link_neural_relational(

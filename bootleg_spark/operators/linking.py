@@ -30,7 +30,7 @@ from pyspark.sql.types import (
 )
 
 from bootleg_spark import synthspec as S
-from bootleg_spark.functions.embedding import featurize_texts, score_batch
+from bootleg_spark.functions.embedding import featurize_texts, link_candidates
 from bootleg_spark.functions.textproc import (
     EntityStringConstants,
     build_entity_string,
@@ -228,8 +228,8 @@ def link_neural(
 
     Input needs (text, char_start, char_end, cand_qids). Entire batch is
     vectorized: context featurization + einsum dot + masked softmax
-    (score_batch). Mentions whose top prob ≤ threshold are dropped
-    (bootleg_annotator.py:602-625). ``encoder`` must match the one used
+    (link_candidates, shared with the fused kernel). Mentions whose top
+    prob ≤ threshold are dropped (bootleg_annotator.py:602-625). ``encoder`` must match the one used
     to build the entity matrix (see :func:`build_entity_embeddings`).
     """
     enc = encoder or featurize_texts
@@ -246,22 +246,8 @@ def link_neural(
             extract_context((int(a), int(b)), t or "", max_seq_window_len)
             for t, a, b in zip(text, cs, ce)
         ]
-        ctx = enc(contexts, dim)
-        k = max(len(c) for c in cand_qids)
-        ent = np.zeros((n, k, dim), dtype=np.float64)
-        mask = np.zeros((n, k), dtype=bool)
-        qlists = []
-        for i, cands in enumerate(cand_qids):
-            cands = list(cands)
-            qlists.append(cands)
-            for j, q in enumerate(cands):
-                row = qid2row.get(q)
-                if row is not None:
-                    ent[i, j] = mat[row]
-                    mask[i, j] = True
-        probs, arg = score_batch(ctx, ent, mask)
-        qid_pred = [qlists[i][arg[i]] if mask[i].any() else "-1" for i in range(n)]
-        top = probs[np.arange(n), arg]
+        qlists = [list(c) for c in cand_qids]
+        qid_pred, top, probs = link_candidates(enc(contexts, dim), qlists, qid2row, mat)
         return pd.DataFrame(
             {
                 "qid_pred": qid_pred,

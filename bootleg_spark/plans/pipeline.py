@@ -71,14 +71,14 @@ class KgPipeline:
         self.sf_dir = sf_dir
         self.dim = dim
         self.encoder = encoder or featurize_texts
-        # None ⇒ default feature-hash: the hybrid scorer may then skip
-        # the join-to-string round trip and featurize token arrays
+        # None ⇒ default feature-hash, the only encoder the relational
+        # scorer (linked_relational) mirrors
         self._custom_encoder = encoder
         self.dims = build_dims(spark, sf_dir)
         alias_rows = [r["alias"] for r in self.dims["aliases"].select("alias").collect()]
         self.alias_set_bc = spark.sparkContext.broadcast(frozenset(alias_rows))
-        # longest alias word count: drives the extractor dead-pass skip
-        # and the relational fast-path dispatch (linked_fused)
+        # longest alias word count: drives the fused kernel's extractor
+        # dead-pass skip; linked_relational needs it to be 1
         self.dict_max_words = max((len(a.split()) for a in alias_rows), default=1)
         # pre-group + cache the candidate arrays once: every query joins
         # against this (the reference builds its alias trie once at init,
@@ -135,138 +135,75 @@ class KgPipeline:
             return link_neural(mc, self.ent_matrix_bc, text_col="text_extracted", encoder=self.encoder)
         return link_popularity(mc)
 
-    # strictly single-spaced lowercase alnum text: on such rows the
-    # Python tokenizer == split(' '), lnrm == identity, and (with a
-    # 1-token dictionary) every multi-gram pass is dead — the extractor
-    # is then EXACTLY the relational plan (see
-    # extract_mentions_ngram_relational). Double spaces are excluded
-    # because split(' ') would emit empty tokens that change neighbor
-    # adjacency vs the whitespace-collapsing Python tokenizer.
-    _CLEAN_TEXT_RE = "^[a-z0-9]+( [a-z0-9]+)*$"
-
-    def linked_hybrid(self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD) -> DataFrame:
-        """①–④ with ROW-LEVEL dispatch (valid only when the dictionary
-        is single-token): clean-token rows take the all-JVM relational
-        extractor + a scoring UDF over mention rows only; other rows
-        take the Python extractor. Output identical to the staged/fused
-        paths (test_parity + the golden oracles pin it).
-
-        MEASURED VERDICT (sf0.1 ×100, 32 pinned cores): the relational
-        extraction itself runs ~500k pages/s, but end-to-end this path
-        LOSES to the single-pass fused UDF (≈9s vs 4.3s for 500k pages)
-        — the extractor was only ~0.8s of the fused path's 2.6s Python
-        cost, and the hybrid pays a second UDF boundary, a second
-        evaluation of the extract UDF (one per dispatch branch), and
-        mention-row Arrow traffic that carries the page text. It is
-        kept as a strategy because the trade flips when scoring is the
-        bottleneck: with a heavy (BERT/GPU) scorer the scoring UDF
-        dominates either way and this path feeds it ~0.3 rows/page
-        instead of every page; for mentions-only jobs the relational
-        extractor alone is the fastest path by far.
-        """
-        from bootleg_spark.operators.mentions import extract_mentions_ngram_relational
-
-        p = extract_text(pages if pages is not None else self.pages()).select(
-            "url", "doc_id", "text_extracted"
-        )
-        clean = F.col("text_extracted").rlike(self._CLEAN_TEXT_RE)
-        m_fast = extract_mentions_ngram_relational(
-            p.where(clean), self.dims["aliases"], text_col="text_extracted"
-        )
-        m_slow = extract_mentions_ngram(
-            p.where(~clean), self.alias_set_bc, text_col="text_extracted"
-        )
-        mentions = m_fast.unionByName(m_slow)
-        mc = attach_candidates(mentions, self.dims["alias_cands"], grouped=self.grouped_cands)
-        return link_neural(
-            mc, self.ent_matrix_bc, text_col="text_extracted",
-            threshold=threshold, encoder=self.encoder,
-        )
-
-    def linked_fused(self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD) -> DataFrame:
-        """①–④ fused into ONE ``mapInPandas`` pass (the throughput path
-        for multi-word dictionaries; single-token dictionaries dispatch
-        to :meth:`linked_hybrid`, which is faster still).
+    def _link(self, pages: DataFrame | None, cols: list[str], emit, schema: str) -> DataFrame:
+        """The one fused linking kernel: ①–④ in ONE ``mapInPandas`` pass.
 
         The staged plan chains three ArrowEvalPython nodes — each spawns
         its own Python worker per task and round-trips the page text
         through Arrow (3 workers/task, 4 JVM↔Python hops). Fusing
         extract → mentions → candidates → score into a single iterator
         measured ~3× the throughput at 32 cores (45k → 132k pages/sec)
-        with byte-identical output (pytest-pinned equivalence). The
+        with byte-identical output (pytest-pinned equivalence); the
         staged operators remain the compositional/testing surface.
-        """
+
+        Per Arrow batch of ``cols`` + html, the kernel strips each page,
+        matches its mentions, encodes every mention's context and scores
+        them all at once, then yields ``emit(batch, found, qid, prob)``:
+        the batch's input columns, the (alias, start, end) mentions found
+        on each page, and one qid/prob per mention in page order (qid
+        "-1" when no candidate is in the entity matrix)."""
         import numpy as np
 
-        alias_bc = self.alias_set_bc
-        mat_bc = self.ent_matrix_bc
-        cand_bc = self.cand_dict_bc
-        dim = self.dim
-        window = S.MAX_SEQ_WINDOW_LEN
-
-        from bootleg_spark.functions.embedding import score_batch
+        from bootleg_spark.functions.embedding import link_candidates
         from bootleg_spark.functions.textproc import extract_context, extract_html_text
         from bootleg_spark.operators.mentions import ngram_extract_aliases
 
-        enc = self.encoder  # ships to executors via the UDF closure
+        alias_bc, mat_bc, cand_bc = self.alias_set_bc, self.ent_matrix_bc, self.cand_dict_bc
+        enc, dim, dict_w = self.encoder, self.dim, self.dict_max_words
+        window = S.MAX_SEQ_WINDOW_LEN
+
+        def _kernel(batches):
+            aliases = alias_bc.value
+            qid2row, mat = mat_bc.value
+            cands = cand_bc.value
+            for pdf in batches:
+                found, ctx, cl = [], [], []
+                for html in pdf["html"]:
+                    text = extract_html_text(bytes(html))
+                    ms = ngram_extract_aliases(text, aliases, 1, 6, dict_max_words=dict_w)
+                    found.append(ms)
+                    for a, s, e in ms:
+                        ctx.append(extract_context((s, e), text, window))
+                        cl.append(cands[a])
+                vecs = enc(ctx, dim) if ctx else np.zeros((0, dim))
+                qid, prob, _ = link_candidates(vecs, cl, qid2row, mat)
+                yield emit(pdf, found, qid, prob)
+
+        p = pages if pages is not None else self.pages()
+        return p.select(*cols, "html").mapInPandas(_kernel, schema)
+
+    def linked_fused(self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD) -> DataFrame:
+        """①–④ through the fused kernel (:meth:`_link`): one row per
+        mention linked above ``threshold``, the staged :meth:`linked`
+        columns minus the candidate arrays."""
+        span_cols = ["url", "doc_id", "mention_pos", "alias", "char_start", "char_end"]
+
+        def _mention_rows(pdf, found, qid, prob):
+            rows = [
+                (url, doc_id, i, a, s, e)
+                for url, doc_id, ms in zip(pdf["url"], pdf["doc_id"], found)
+                for i, (a, s, e) in enumerate(ms)
+            ]
+            out = pd.DataFrame(rows, columns=span_cols)
+            out["qid_pred"] = qid
+            out["prob"] = prob
+            return out
+
         schema = (
             "url string, doc_id long, mention_pos int, alias string, "
             "char_start int, char_end int, qid_pred string, prob double"
         )
-
-        def _fused(batches):
-            aliases = alias_bc.value
-            qid2row, mat = mat_bc.value
-            cands = cand_bc.value
-            dict_w = max((len(a.split()) for a in aliases), default=1)
-            for pdf in batches:
-                url_o, doc_o, pos_o, al_o, cs_o, ce_o, ctx_o, cl_o = ([] for _ in range(8))
-                for url, doc_id, html in zip(pdf["url"], pdf["doc_id"], pdf["html"]):
-                    text = extract_html_text(bytes(html))
-                    for i, (a, s, e) in enumerate(
-                        ngram_extract_aliases(text, aliases, 1, 6, dict_max_words=dict_w)
-                    ):
-                        url_o.append(url)
-                        doc_o.append(doc_id)
-                        pos_o.append(i)
-                        al_o.append(a)
-                        cs_o.append(s)
-                        ce_o.append(e)
-                        ctx_o.append(extract_context((s, e), text, window))
-                        cl_o.append(cands[a])
-                n = len(doc_o)
-                if n == 0:
-                    yield pd.DataFrame(
-                        {c: [] for c in ["url", "doc_id", "mention_pos", "alias",
-                                          "char_start", "char_end", "qid_pred", "prob"]}
-                    )
-                    continue
-                ctx = enc(ctx_o, dim)
-                k = max(len(c) for c in cl_o)
-                ent = np.zeros((n, k, dim))
-                mask = np.zeros((n, k), dtype=bool)
-                for i, cl in enumerate(cl_o):
-                    for j, q in enumerate(cl):
-                        row = qid2row.get(q)
-                        if row is not None:
-                            ent[i, j] = mat[row]
-                            mask[i, j] = True
-                probs, arg = score_batch(ctx, ent, mask)
-                yield pd.DataFrame(
-                    {
-                        "url": url_o,
-                        "doc_id": doc_o,
-                        "mention_pos": pos_o,
-                        "alias": al_o,
-                        "char_start": cs_o,
-                        "char_end": ce_o,
-                        "qid_pred": [cl_o[i][arg[i]] if mask[i].any() else "-1" for i in range(n)],
-                        "prob": probs[np.arange(n), arg],
-                    }
-                )
-
-        p = pages if pages is not None else self.pages()
-        out = p.select("url", "doc_id", "html").mapInPandas(_fused, schema)
+        out = self._link(pages, ["url", "doc_id"], _mention_rows, schema)
         return out.where((F.col("qid_pred") != "-1") & (F.col("prob") > F.lit(threshold)))
 
     def _cand_embs(self):
@@ -290,12 +227,13 @@ class KgPipeline:
         matcher → relational context windows + feature-hash scoring
         (operators/jvm_link.py). Valid ONLY for rows passing
         ``jvm_extractable_expr`` ∧ ``clean_text_expr`` with a
-        single-token dictionary — the caller guards (``triples_auto``
-        does; tests exercise the guard violations). ``text_col`` skips
-        the html strip when the caller already carries extracted text
-        (triples_auto does, so the regex chain runs once per row, not
-        twice). Output matches :meth:`linked_fused` exactly on qid/span
-        columns and to ~1e-15 on probs (see jvm_link module docstring).
+        single-token dictionary — the caller guards (tests exercise the
+        guard violations). ``text_col`` skips the html strip when the
+        caller already carries extracted text. Output matches
+        :meth:`linked_fused` exactly on qid/span columns and to ~1e-15
+        on probs (see jvm_link module docstring). It backs the
+        ``linked_relational`` query; triples always take the fused
+        kernel.
         """
         from bootleg_spark.operators import jvm_link
         from bootleg_spark.operators.mentions import extract_mentions_ngram_relational
@@ -310,8 +248,7 @@ class KgPipeline:
                 "linked_relational hard-codes the default feature-hash "
                 "scorer; with a custom encoder the entity embeddings and "
                 "the relational context vectors would disagree — use "
-                "linked_fused (or score_mentions_pandas, which threads "
-                "the encoder)"
+                "linked_fused, which threads the encoder"
             )
         p = pages if pages is not None else self.pages()
         if text_col is None:
@@ -332,96 +269,9 @@ class KgPipeline:
             "qid_pred", "prob",
         )
 
-    def _triples_dispatch(self, pages, threshold, scorer_fn) -> DataFrame:
-        """Shared guard-split + triples assembly for the JVM-extraction
-        strategies: rows passing the guards (ASCII no-'&' html, clean
-        single-spaced alnum text) take JVM extraction + relational
-        mentions + ``scorer_fn(mentions)``; everything else falls back
-        to the fused ``mapInPandas`` path. Outputs unioned and
-        deduplicated — a page lives entirely in one branch and triple
-        emission is per-page co-occurrence, so the union is exact.
-
-        Scale note: the two branches are two filtered scans of the
-        input. The fallback branch's Python workers receive ONLY its
-        rows (the guard filter runs JVM-side before Arrow), so on a
-        clean corpus the second scan is decode+regex only, no Python.
-        When the fallback fraction is material, the production form is
-        the usual two-stage lake layout (extract once, persist text,
-        link from the text table) rather than re-deriving text per run.
-        """
-        from bootleg_spark.operators import jvm_link
-        from bootleg_spark.operators.mentions import extract_mentions_ngram_relational
-
-        jvm_ok = jvm_link.jvm_extractable_expr(F.col("html"))
-        text_jvm = F.when(jvm_ok, jvm_link.html_text_expr(F.col("html")))
-        staged = pages.withColumn("_text_jvm", text_jvm)
-        guarded = F.col("_text_jvm").isNotNull() & jvm_link.clean_text_expr(
-            F.col("_text_jvm")
-        )
-        fast_pages = staged.where(guarded).select("doc_id", "_text_jvm")
-        slow_pages = staged.where(~guarded).drop("_text_jvm")
-        # lean path: triples need only (doc_id, qid_pred) — score at
-        # mention grain, skip the span/url attribute join entirely
-        mentions = extract_mentions_ngram_relational(
-            fast_pages, self.dims["aliases"], text_col="_text_jvm", keep_arr=True
-        )
-        linked = scorer_fn(mentions)
-        ents = doc_entities(linked, id_col="doc_id", qid_col="qid_pred")
-        fast_triples = triples_from_doc_entities(ents, self.dims["kg_relations"])
-        slow_triples = self.triples_fused_local(slow_pages, threshold)
-        return fast_triples.unionByName(slow_triples).dropDuplicates(
-            ["subj", "pred", "obj"]
-        )
-
-    def triples_auto(
-        self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD
-    ) -> DataFrame:
-        """①–⑤ with per-row dispatch to the all-JVM plan (zero Python on
-        guarded rows) — see :meth:`_triples_dispatch`. Requires BOTH a
-        single-token dictionary AND the default feature-hash encoder:
-        the relational scorer hard-codes the md5 feature-hash math, so
-        a pipeline built with a custom encoder must not mix it with
-        custom-encoded entity embeddings (silently wrong dots) — such
-        pipelines fall back to the fused path entirely."""
-        from bootleg_spark.operators import jvm_link
-
-        p = pages if pages is not None else self.pages()
-        if self.dict_max_words != 1 or self._custom_encoder is not None:
-            return self.triples_fused_local(p, threshold)
-        return self._triples_dispatch(
-            p,
-            threshold,
-            lambda mentions: jvm_link.score_mentions_relational(
-                mentions, self._cand_embs(), dim=self.dim, threshold=threshold
-            ),
-        )
-
-    def triples_hybrid_jvm(
-        self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD
-    ) -> DataFrame:
-        """①–⑤ with JVM extraction + relational mentions + an
-        Arrow-batched numpy scorer over compact mention rows
-        (jvm_link.score_mentions_pandas) — same guard/fallback split as
-        :meth:`triples_auto`, but encoder-agnostic: a custom encoder
-        threads through to the scorer. Bitwise-identical probs to the
-        fused path (same numpy ops); Arrow carries ~70 tokens per
-        mention instead of every page's html."""
-        from bootleg_spark.operators import jvm_link
-
-        p = pages if pages is not None else self.pages()
-        if self.dict_max_words != 1:
-            return self.triples_fused_local(p, threshold)
-        return self._triples_dispatch(
-            p,
-            threshold,
-            lambda mentions: jvm_link.score_mentions_pandas(
-                mentions, self.ent_matrix_bc, self.cand_dict_bc,
-                dim=self.dim, threshold=threshold, encoder=self._custom_encoder,
-            ),
-        )
-
     def triples_fused_local(self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD) -> DataFrame:
-        """①–⑤ in one pass: per-page triple emission inside the fused UDF.
+        """①–⑤ in one pass: per-page triple emission inside the fused
+        kernel (:meth:`_link`).
 
         A page's mentions are all produced from its single input row, so
         the page's linked-entity set is complete partition-locally — the
@@ -431,71 +281,22 @@ class KgPipeline:
         volume (beyond broadcast budgets) use ``triples(fused=False…)``'s
         semi-join plan instead.
         """
-        import numpy as np
-
-        alias_bc = self.alias_set_bc
-        mat_bc = self.ent_matrix_bc
-        cand_bc = self.cand_dict_bc
         rel_bc = self.rel_dict_bc
-        dim = self.dim
-        window = S.MAX_SEQ_WINDOW_LEN
 
-        from bootleg_spark.functions.embedding import score_batch
-        from bootleg_spark.functions.textproc import extract_context, extract_html_text
-        from bootleg_spark.operators.mentions import ngram_extract_aliases
-
-        enc = self.encoder  # ships to executors via the UDF closure
-
-        def _fused_triples(batches):
-            aliases = alias_bc.value
-            qid2row, mat = mat_bc.value
-            cands = cand_bc.value
+        def _page_triples(pdf, found, qid, prob):
             rels = rel_bc.value
-            dict_w = max((len(a.split()) for a in aliases), default=1)
-            for pdf in batches:
-                # pass 1: mentions + contexts, page boundaries remembered
-                ctx_o, cl_o, bounds = [], [], []
-                for html in pdf["html"]:
-                    text = extract_html_text(bytes(html))
-                    start = len(ctx_o)
-                    for a, s, e in ngram_extract_aliases(
-                        text, aliases, 1, 6, dict_max_words=dict_w
-                    ):
-                        ctx_o.append(extract_context((s, e), text, window))
-                        cl_o.append(cands[a])
-                    bounds.append((start, len(ctx_o)))
-                out = set()
-                n = len(ctx_o)
-                if n:
-                    ctx = enc(ctx_o, dim)
-                    k = max(len(c) for c in cl_o)
-                    ent = np.zeros((n, k, dim))
-                    mask = np.zeros((n, k), dtype=bool)
-                    for i, cl in enumerate(cl_o):
-                        for j, q in enumerate(cl):
-                            row = qid2row.get(q)
-                            if row is not None:
-                                ent[i, j] = mat[row]
-                                mask[i, j] = True
-                    probs, arg = score_batch(ctx, ent, mask)
-                    top = probs[np.arange(n), arg]
-                    for lo, hi in bounds:
-                        page_ents = {
-                            cl_o[i][arg[i]]
-                            for i in range(lo, hi)
-                            if mask[i].any() and top[i] > threshold
-                        }
-                        for q in page_ents:
-                            for rel, obj in rels.get(q, ()):
-                                if obj in page_ents and obj != q:
-                                    out.add((q, rel, obj))
-                yield pd.DataFrame(
-                    {"subj": [t[0] for t in out], "pred": [t[1] for t in out],
-                     "obj": [t[2] for t in out]}
-                )
+            out, lo = set(), 0
+            for ms in found:
+                hi = lo + len(ms)
+                ents = {qid[i] for i in range(lo, hi) if qid[i] != "-1" and prob[i] > threshold}
+                lo = hi
+                for q in ents:
+                    for rel, obj in rels.get(q, ()):
+                        if obj in ents and obj != q:
+                            out.add((q, rel, obj))
+            return pd.DataFrame(list(out), columns=["subj", "pred", "obj"])
 
-        p = pages if pages is not None else self.pages()
-        local = p.select("html").mapInPandas(_fused_triples, "subj string, pred string, obj string")
+        local = self._link(pages, [], _page_triples, "subj string, pred string, obj string")
         return local.dropDuplicates(["subj", "pred", "obj"])
 
     def triples(
@@ -507,22 +308,16 @@ class KgPipeline:
     ) -> DataFrame:
         """⑤ co-occurrence pairs ⋈ relations → dedup'd (subj, pred, obj).
 
-        ``fused=True`` (default) runs ①–⑤ as the single-pass
-        :meth:`triples_fused_local` — the MEASURED winner. Round 4
-        built two JVM-heavy alternatives and benchmarked all three
-        interleaved at sf0.1×50 on 32 pinned cores (BENCH.md "mention
-        matcher strategies"): fused 2.15 s best / 2.45 s median,
-        :meth:`triples_hybrid_jvm` (JVM extract+mentions, Arrow numpy
-        scorer over mention rows) 6.0 s, :meth:`triples_auto` (zero
-        Python) 9.9 s. The round-3 "JVM passthrough ceiling" (497k
-        pages/s) measured transfer without mention dataflow; actual
-        per-mention JVM scoring pays exchanges + O(dim·T) aggregation
-        that cost more than the ~0.3 s/5k-pages of single-core numpy
-        they displace. The JVM paths remain the right choice for
-        mentions-only jobs (relational extractor alone ~500k pages/s)
-        and popularity-scorer pipelines (fully relational end to end),
-        and both are parity-pinned against this path by
-        tests/test_jvm_link.py.
+        ``fused=True`` (default) runs ①–⑤ as :meth:`triples_fused_local`,
+        the one fused linking kernel. Round 4 benchmarked it against two
+        JVM-heavy strategies interleaved at sf0.1×50 on 32 pinned cores
+        (BENCH.md "Mention-matcher strategies"): fused 2.15 s best, JVM
+        extraction + an Arrow scorer over mention rows 6.0 s, zero
+        Python 9.9 s — per-mention JVM scoring pays exchanges +
+        O(dim·T) aggregation that cost more than the single-core numpy
+        it displaces, so both were deleted. ``fused=False`` runs the
+        staged :meth:`linked` plan plus the relation semi-join, the
+        reference the fused kernel is checked against.
         """
         if fused and extractor == "ngram" and scorer == "neural":
             return self.triples_fused_local(pages)

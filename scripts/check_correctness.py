@@ -12,8 +12,10 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import duckdb  # noqa: E402
 

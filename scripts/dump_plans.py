@@ -10,8 +10,10 @@ from __future__ import annotations
 import contextlib
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -45,7 +47,7 @@ plans above show `Window [...], [_pid#...]` over
 ```
 scan pages (filtered to not-yet-done buckets)
   -> observe(per-bucket page counts)           <- CollectMetrics, no extra scan
-  -> linked_fused (ONE MapInPandas)            <- the fused 100-TB path
+  -> linked_fused (ONE MapInPandas)            <- the one fused linking kernel
   -> doc_entities + bucket tag
   -> broadcast-relations ⋈ + shuffle-hash left-semi (per-bucket dedup)
   -> write partitionBy(_bucket), dynamic partition overwrite
@@ -129,7 +131,7 @@ def main() -> None:
     for title, df in sections:
         out.append(f"\n## {title}\n\n```\n{plan_of(df)}\n```\n")
     out.append(SCALE_NOTES)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("".join(out))
     print("wrote PLANS.md")
     spark.stop()

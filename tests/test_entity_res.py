@@ -60,3 +60,11 @@ def test_short_strings_use_whole_string_shingle(spark):
            for r in verified_pairs(candidate_pairs(blocked), 0.8).collect()}
     # 'ab' vs 'ab' -> 1.0; 'ab' vs 'ax' -> disjoint single shingles -> 0.0
     assert out == {("a1", "a2"): 1.0}
+
+
+def test_verify_requires_gram_arrays(records):
+    """Pairs built without block_records' grams are refused, not
+    re-shingled at some other width."""
+    pairs = candidate_pairs(block_records(records)).drop("g1", "g2")
+    with pytest.raises(ValueError, match="g1"):
+        verified_pairs(pairs)

@@ -3,10 +3,9 @@
 Every fast-path component is pinned against the Python implementation
 it mirrors: the html strip against extract_html_text on the guarded
 class, the context-window expression against extract_context, the
-dense feature-hash vector bitwise against featurize_texts, and the
-three end-to-end triples strategies against each other on the full
-synthetic corpora (including a deliberately dirty corpus that
-exercises the guard fallback)."""
+dense feature-hash vector bitwise against featurize_texts, and
+linked_relational against the fused kernel on the full synthetic
+corpus."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,7 +146,7 @@ def test_dense_context_vector_bitwise_matches_featurizer(spark, pipe):
 
 
 # ---------------------------------------------------------------------------
-# End-to-end: three strategies, one answer
+# End-to-end: relational and fused linking, one answer
 # ---------------------------------------------------------------------------
 
 def test_linked_relational_matches_fused(spark, pipe):
@@ -210,16 +209,16 @@ def test_argmax_margins_dwarf_float_noise(spark, pipe):
     assert n_ties <= len(toks) * 0.05  # ties must stay rare
 
 
-def test_triples_strategies_agree_on_dirty_corpus(spark, pipe):
-    """A corpus mixing guarded and unguarded rows: the dispatching
-    strategies must route each row correctly and still reproduce the
-    fused path exactly."""
+def test_fused_triples_match_staged_on_dirty_corpus(spark, pipe):
+    """A corpus mixing guarded and unguarded rows (an html entity, and
+    punctuated text): the fused kernel's triples must equal the staged
+    plan's on every row."""
     from bootleg_spark.functions.textproc import render_page_html
 
     base = pipe.pages()
     # dirty rows: entity-bearing html (fails the '&' guard) and
     # punctuated text (fails the clean-text guard) — both still carry
-    # real mentions for the Python fallback to find
+    # real mentions
     texts = [r["text"] for r in base.select("text").limit(2).collect()]
     dirty = spark.createDataFrame(
         [
@@ -236,10 +235,9 @@ def test_triples_strategies_agree_on_dirty_corpus(spark, pipe):
         "doc_id",
     )
     mixed = base.unionByName(dirty)
-    t_f = {tuple(r) for r in pipe.triples_fused_local(mixed).collect()}
-    t_a = {tuple(r) for r in pipe.triples_auto(mixed).collect()}
-    t_h = {tuple(r) for r in pipe.triples_hybrid_jvm(mixed).collect()}
-    assert t_f == t_a == t_h and len(t_f) > 0
+    fused = {tuple(r) for r in pipe.triples(mixed).collect()}
+    staged = {tuple(r) for r in pipe.triples(mixed, fused=False).collect()}
+    assert fused == staged and len(fused) > 0
 
 
 def test_salted_candidate_join_matches_broadcast(spark, pipe):
@@ -264,19 +262,14 @@ def test_salted_candidate_join_matches_broadcast(spark, pipe):
     assert a == b and len(a) > 0
 
 
-def test_custom_encoder_falls_back_and_relational_refuses(spark):
+def test_linked_relational_refuses_custom_encoder(spark):
     """Review regression: the relational scorer hard-codes feature-hash
     context vectors, so a custom-encoder pipeline must NOT mix them
-    with custom-encoded entity embeddings — triples_auto falls back to
-    the fused path (outputs equal), linked_relational refuses loudly."""
+    with custom-encoded entity embeddings — linked_relational refuses
+    loudly."""
     from bootleg_spark.functions.embedding import make_mlp_encoder
 
     mlp_pipe = KgPipeline(spark, SF_SMOKE, encoder=make_mlp_encoder(64))
-    t_f = {tuple(r) for r in mlp_pipe.triples_fused_local().collect()}
-    t_a = {tuple(r) for r in mlp_pipe.triples_auto().collect()}
-    t_h = {tuple(r) for r in mlp_pipe.triples_hybrid_jvm().collect()}
-    assert t_a == t_f  # fallback, not silent hash-vs-mlp garbage
-    assert t_h == t_f  # hybrid threads the encoder through
     with pytest.raises(ValueError, match="custom encoder"):
         mlp_pipe.linked_relational()
 

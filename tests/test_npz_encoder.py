@@ -1,6 +1,7 @@
 """The .npz file-backed transformer encoder through the featurize seam
 (VERDICT r4 ask #5): broadcast-weights packaging, init-once worker
-load, and plan-invariance through linked_fused AND triples_hybrid_jvm.
+load, and plan-invariance through the fused kernel's two emitters
+(linked_fused and the fused triples).
 """
 
 from __future__ import annotations
@@ -53,10 +54,10 @@ def test_export_is_deterministic_and_loads(spark, npz_path, tmp_path):
         NpzEncoder.from_file(spark, npz_path, S.EMB_DIM + 1)
 
 
-def test_npz_encoder_through_fused_and_hybrid(spark, npz_path):
+def test_npz_encoder_through_fused_kernel(spark, npz_path):
     """The whole point: a file-exported model slots into the pipeline
     with NO Spark-plan change — same single-MapInPandas fused plan,
-    same hybrid plan shape — and the outputs are internally consistent
+    same fused-triples plan shape — and the outputs are internally consistent
     (every prediction inside its candidate set, probs valid) while
     actually differing from the default encoder's scores."""
     pipe_npz = KgPipeline(
@@ -101,18 +102,12 @@ def test_npz_encoder_through_fused_and_hybrid(spark, npz_path):
     }
     assert staged == fused
 
-    # hybrid JVM path: encoder-agnostic by contract; plan shape
-    # unchanged vs the default-encoder hybrid
-    tri_npz = pipe_npz.triples_hybrid_jvm()
-    tri_def = pipe_def.triples_hybrid_jvm()
+    # fused triples: plan shape unchanged vs the default encoder, and
+    # equal to the staged triples under the SAME encoder
+    tri_npz = pipe_npz.triples()
+    tri_def = pipe_def.triples()
     for name in ("MapInPandas", "ArrowEvalPython", "Exchange"):
         assert n_nodes(plan_of(tri_npz), name) == n_nodes(plan_of(tri_def), name)
-    got = tri_npz.select("subj", "pred", "obj").collect()
+    got = {tuple(r) for r in tri_npz.collect()}
     assert len(got) > 0
-    # and the hybrid's triples under the npz encoder match the fused
-    # pipeline's triples under the SAME encoder (three-way parity
-    # extends to swapped weights)
-    fused_tri = {
-        tuple(r) for r in pipe_npz.triples().select("subj", "pred", "obj").collect()
-    }
-    assert {tuple(r) for r in got} == fused_tri
+    assert got == {tuple(r) for r in pipe_npz.triples(fused=False).collect()}

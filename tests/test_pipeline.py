@@ -52,6 +52,22 @@ def test_fused_local_triples_equal_staged_semijoin(pipe):
     assert fused == staged and len(fused) > 0
 
 
+def test_fused_kernel_emitters_handle_pages_without_mentions(pipe, spark):
+    """A batch in which no page carries an alias: both emitters of the
+    fused kernel return no rows under their declared schemas."""
+    pages = spark.createDataFrame(
+        [(f"https://x/{i}", b"<html><body>qqqq zzzz</body></html>", i) for i in range(4)],
+        "url string, html binary, doc_id long",
+    )
+    linked, tri = pipe.linked_fused(pages), pipe.triples_fused_local(pages)
+    assert linked.collect() == [] and tri.collect() == []
+    assert linked.schema.simpleString() == (
+        "struct<url:string,doc_id:bigint,mention_pos:int,alias:string,"
+        "char_start:int,char_end:int,qid_pred:string,prob:double>"
+    )
+    assert tri.schema.simpleString() == "struct<subj:string,pred:string,obj:string>"
+
+
 def test_neural_triples_deterministic_across_partitioning(pipe, spark):
     """Partition-invariance: same triple set whether the input is 1 or 16
     partitions (the in-process analogue of the reference's 1-vs-2-worker
