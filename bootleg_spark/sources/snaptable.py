@@ -20,10 +20,13 @@ What it reproduces, and how it maps onto the real thing:
   a new snapshot that simply doesn't reference the old ones; the old
   snapshot stays readable (``version=``) until :func:`vacuum` drops
   files no retained snapshot references.
-- **Optimistic commit.** The snapshot file is published with
-  ``os.link`` (create-exclusive) — two writers racing to version N+1
-  get one winner and one ``CommitConflict`` to retry on the new base,
-  Iceberg's atomic-swap contract. Same shared-POSIX-filesystem
+- **Optimistic commit.** Every writer commits through one
+  :func:`_commit`: it reloads the latest snapshot as the base, carries
+  ``schema``/``schema_json``/``partition_spec``/``delete_files`` and
+  the monotone ``stream_batch_id`` replay watermark from it, and
+  publishes with ``os.link`` (create-exclusive) — two writers racing
+  to version N+1 get one winner, and the loser retries on the new
+  base, Iceberg's atomic-swap contract. Same shared-POSIX-filesystem
   contract as sources/warc.py's sink (object stores: conditional PUT).
 - **Scan planning on stats.** Each manifest entry carries min/max per
   leaf column (read from the parquet footers the files already have —
@@ -91,7 +94,7 @@ def _try_publish(table: str, snap: dict) -> bool:
     # file list into side manifests exactly as Iceberg does". Readers
     # inline it back in load_snapshot; at 10^6 files the snapshot
     # file itself stays tiny and O(1) to read/parse for version
-    # resolution (latest_version, version_as_of, watermark scans).
+    # resolution (latest_version, version_as_of).
     inline_max = int(os.environ.get("SNAPTABLE_INLINE_FILES_MAX", "2000"))
     to_write = snap
     if len(snap.get("files", [])) + len(snap.get("delete_files", [])) > inline_max:
@@ -125,6 +128,60 @@ def _try_publish(table: str, snap: dict) -> bool:
             if os.path.exists(side_path):
                 os.unlink(side_path)
         return False
+
+
+# base fields every commit inherits unless its builder overrides them
+_CARRIED = ("schema", "schema_json", "partition_spec", "delete_files")
+
+
+def _commit(table: str, mode: str, build, max_retries: int = 3) -> dict | None:
+    """The one optimistic commit every writer goes through. Each attempt
+    reloads the latest snapshot as ``base`` (``None`` for a new table)
+    and calls ``build(base)`` for the new snapshot's own fields —
+    ``files`` at least; ``None`` aborts without publishing, and
+    ``CommitConflict``/``ValueError`` propagate.
+
+    The snapshot carries the :data:`_CARRIED` fields from ``base``;
+    ``build``'s fields override them, and a field set to ``None`` drops
+    the carried value (an overwrite sheds pending delete files). The
+    streaming replay watermark ``stream_batch_id`` is the max of
+    base's and build's, so no commit — overwrite, rollback, zorder —
+    can lower it; ``total_rows`` is always the sum over ``files``. A lost
+    race re-derives the base; ``max_retries`` losses raise."""
+    for _ in range(max_retries):
+        version = latest_version(table)
+        base = None if version is None else load_snapshot(table, version)
+        fields = build(base)
+        if fields is None:
+            return None
+        snap = {
+            "format_version": FORMAT_VERSION,
+            "version": (version or 0) + 1,
+            "parent": version,
+            "mode": mode,
+            **{k: base.get(k) for k in _CARRIED if base},
+            **fields,
+        }
+        marks = {(base or {}).get("stream_batch_id"), fields.get("stream_batch_id")}
+        snap["stream_batch_id"] = max(marks - {None}, default=None)
+        for k in ("partition_spec", "delete_files", "stream_batch_id"):
+            if snap.get(k) is None or snap[k] == []:
+                snap.pop(k, None)
+        snap["total_rows"] = sum(f["rows"] for f in snap["files"])
+        if _try_publish(table, snap):
+            return snap
+    raise CommitConflict(
+        f"{mode} lost the commit race {max_retries} times on {table} — "
+        "a live writer is outpacing this one"
+    )
+
+
+def _rebase(base: dict, replaced: set[str], new_files: list[dict]) -> list[dict] | None:
+    """``base``'s files minus ``replaced`` plus ``new_files``; ``None``
+    when a concurrent writer already dropped a replaced file."""
+    if not replaced <= {f["path"] for f in base["files"]}:
+        return None
+    return [f for f in base["files"] if f["path"] not in replaced] + new_files
 
 
 def version_as_of(table: str, ts: float) -> int:
@@ -490,6 +547,41 @@ def _keep_nonempty(rewritten: list[dict], table: str) -> list[dict]:
     return [e for e in rewritten if e["rows"] > 0]
 
 
+def _rel(table: str, uri: str) -> str:
+    """The manifest (table-relative) path of an ``input_file_name()``
+    URI (``file:///...``)."""
+    for pre in ("file://", "file:"):
+        if uri.startswith(pre):
+            uri = uri[len(pre):]
+            break
+    return os.path.relpath(uri, table)
+
+
+def _rewrite_files(
+    spark: SparkSession, table: str, snap0: dict, rels, fn
+) -> list[dict]:
+    """Rewrite ``snap0``'s data files ``rels`` as ``fn(scan)`` — the rows
+    to keep — one Spark write per partition group, so the new manifest
+    entries keep valid partition values (one group, the common case, is
+    one write). Zero-row outputs are dropped."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(snap0["schema_json"]))
+    entry_by_rel = {f["path"]: f for f in snap0["files"]}
+    groups: dict[tuple, list[str]] = {}
+    for rel in sorted(rels):
+        key = tuple(sorted((entry_by_rel[rel].get("partition") or {}).items()))
+        groups.setdefault(key, []).append(os.path.join(table, rel))
+    new_files: list[dict] = []
+    for key, paths in sorted(groups.items()):
+        rewritten = _write_data_files(fn(spark.read.schema(schema).parquet(*paths)), table)
+        if key:
+            for e in rewritten:
+                e["partition"] = dict(key)
+        new_files.extend(_keep_nonempty(rewritten, table))
+    return new_files
+
+
 def _check_append_schema(base: dict, df_schema) -> None:
     """Append-time schema rule (Iceberg add-column evolution): the
     incoming schema must contain every existing column with an
@@ -546,17 +638,15 @@ def write_table(
 
     The data write itself goes through Spark (executors write parquet
     in parallel into a staging dir); the driver then moves the files
-    to write-once unique names, lifts their footer stats, and runs the
-    optimistic commit loop. A lost race re-derives the version AND the
-    append base from the winner's snapshot before retrying."""
-    import time as _time
-
+    to write-once unique names, lifts their footer stats, and commits
+    through :func:`_commit`. An append re-derives its base from the
+    latest snapshot on every attempt; an overwrite drops pending delete
+    files and keeps the replay watermark."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     spec = _norm_partition_spec(partition_by) if partition_by else None
-    base0_version = latest_version(table)
-    if mode == "append" and base0_version is not None:
-        base0 = load_snapshot(table, base0_version)
+    if mode == "append" and latest_version(table) is not None:
+        base0 = load_snapshot(table)
         base_spec = base0.get("partition_spec")
         if spec is None:
             spec = base_spec  # appends inherit the table's layout
@@ -567,58 +657,48 @@ def write_table(
                 "with the new spec instead"
             )
         _check_append_schema(base0, df.schema)
-    t0 = _time.time()
-    new_files = _write_data_files(df, table, spec)
-    write_secs = round(_time.time() - t0, 3)
+    new_files, metrics = _timed_write(df, table, spec)
 
-    schema_json = df.schema.json()
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        files = list(new_files)
-        carried_deletes = None
-        if mode == "append" and base_version is not None:
-            base = load_snapshot(table, base_version)
-            _check_append_schema(base, df.schema)
-            files = base["files"] + files
-            # pending merge-on-read delete files survive appends (they
-            # constrain the OLD rows; the new rows match them only if
-            # genuinely re-inserting a deleted key, Iceberg's own
-            # value-equality semantics); overwrite drops them
-            carried_deletes = base.get("delete_files")
-        version = (base_version or 0) + 1
-        snap = {
-            "format_version": FORMAT_VERSION,
-            "version": version,
-            "parent": base_version,
-            "mode": mode,
+    def build(base):
+        fields = {
             "schema": df.schema.simpleString(),
-            "schema_json": schema_json,
-            **({"partition_spec": spec} if spec else {}),
-            **({"delete_files": carried_deletes} if carried_deletes else {}),
-            "files": files,
-            "total_rows": sum(f["rows"] for f in files),
-            # write-throughput metrics for the NEW files (north-rule:
-            # metrics live in the manifest) — stamped before the atomic
-            # publish, never edited after
-            "write_seconds": write_secs,
-            "new_rows": sum(f["rows"] for f in new_files),
-            "rows_per_sec": (
-                round(sum(f["rows"] for f in new_files) / write_secs, 2)
-                if write_secs > 0
-                else None
-            ),
+            "schema_json": df.schema.json(),
+            "partition_spec": spec,
+            "files": new_files,
+            # overwrite drops pending merge-on-read delete files; an
+            # append carries them (they constrain the OLD rows; the new
+            # rows match them only if genuinely re-inserting a deleted
+            # key, Iceberg's own value-equality semantics)
+            "delete_files": None,
+            **metrics,
             **(extra or {}),
         }
-        # create-EXCLUSIVE publish: os.link fails with EEXIST if a
-        # concurrent writer won this version — unlike os.replace,
-        # which would silently clobber their commit
-        if _try_publish(table, snap):
-            return snap
-        # lost the race: re-derive base + version
-    raise CommitConflict(
-        f"lost the commit race {max_retries} times on {table} — "
-        "a live writer is outpacing this one"
-    )
+        if mode == "append" and base is not None:
+            _check_append_schema(base, df.schema)
+            fields["files"] = base["files"] + new_files
+            del fields["delete_files"]
+        return fields
+
+    return _commit(table, mode, build, max_retries)
+
+
+def _timed_write(
+    df: DataFrame, table: str, spec: list[dict] | None
+) -> tuple[list[dict], dict]:
+    """:func:`_write_data_files` plus the write-throughput keys for the
+    NEW files (north-rule: metrics live in the manifest) — stamped
+    before the atomic publish, never edited after."""
+    import time as _time
+
+    t0 = _time.time()
+    new_files = _write_data_files(df, table, spec)
+    secs = round(_time.time() - t0, 3)
+    rows = sum(f["rows"] for f in new_files)
+    return new_files, {
+        "write_seconds": secs,
+        "new_rows": rows,
+        "rows_per_sec": round(rows / secs, 2) if secs > 0 else None,
+    }
 
 
 def commit_stream_batch(df: DataFrame, table: str, batch_id: int) -> dict | None:
@@ -630,24 +710,19 @@ def commit_stream_batch(df: DataFrame, table: str, batch_id: int) -> dict | None
     recorded in the table's latest snapshot — detected here and turned
     into a no-op ``None``, so the table never double-appends. That is
     Iceberg's streaming-sink idempotence contract (snapshot summary
-    carries the epoch id); it assumes ONE streaming writer per table —
-    interleave other writers and the monotonic check is void (same
-    restriction as Iceberg's single-committer-per-stream). The batch's
-    data must itself be replay-deterministic, which Structured
+    carries the epoch id); it assumes ONE streaming writer per table
+    (same restriction as Iceberg's single-committer-per-stream). The
+    batch's data must itself be replay-deterministic, which Structured
     Streaming guarantees for replayable sources.
 
-    The watermark is the MAX ``stream_batch_id`` across all retained
-    snapshots, not just the latest: a maintenance commit (compact also
-    carries the key forward, but e.g. a manual overwrite would not)
-    must never reset the replay guard — losing it would let a replayed
-    micro-batch double-append silently (ADVICE r05 medium)."""
-    last = None
-    for v in _list_versions(table):
-        b = load_snapshot(table, v).get("stream_batch_id")
-        if b is not None and (last is None or b > last):
-            last = b
-    if last is not None and batch_id <= last:
-        return None  # replayed batch — already committed
+    Every commit carries the watermark forward and none lowers it (see
+    :func:`_commit`), so the latest snapshot alone holds it: one
+    snapshot load whatever the table's history, and no overwrite,
+    rollback, maintenance pass or vacuum can reset the replay guard."""
+    if latest_version(table) is not None:
+        last = load_snapshot(table).get("stream_batch_id")
+        if last is not None and batch_id <= last:
+            return None  # replayed batch — already committed
     return write_table(
         df, table, mode="append", extra={"stream_batch_id": batch_id}
     )
@@ -681,7 +756,7 @@ def delete_rows(
     3. **Rewrite**: only touched files are re-read and rewritten minus
        matching rows (executor-parallel, same write path as any
        commit).
-    4. **Commit**: optimistic loop re-derives the base each attempt;
+    4. **Commit**: each :func:`_commit` attempt re-bases on the latest;
        if a concurrent writer dropped any touched file (overwrite /
        compaction / another delete), this delete ABORTS with ``None``
        rather than resurrecting stale data — same contract as
@@ -769,8 +844,8 @@ def _cow_rewrite(
 ) -> dict | None:
     """Shared copy-on-write machinery for DELETE and UPDATE: metadata
     prune → input_file_name touch detection → per-partition-group
-    rewrite via ``transform(df, cond)`` → optimistic commit carrying
-    spec + stream watermark. ``summary(n_matched)`` supplies the
+    rewrite via ``transform(df, cond)`` → :func:`_commit` on the
+    re-based file list. ``summary(n_matched)`` supplies the
     mode-specific manifest keys."""
     snap0, cand_paths = plan_files(table, prune=prune)
     if _has_positional(snap0):
@@ -794,71 +869,22 @@ def _cow_rewrite(
     )
     if not touched_rows:
         return None  # nothing matches: no-op, no new snapshot
-    # input_file_name returns a URI (file:///...); normalize to the
-    # real paths we handed the reader
-    def _norm(p: str) -> str:
-        for pre in ("file://", "file:"):
-            if p.startswith(pre):
-                return p[len(pre):]
-        return p
-
-    touched = {_norm(r["f"]) for r in touched_rows}
+    touched_rel = {_rel(table, r["f"]) for r in touched_rows}
     n_matched = sum(r["n"] for r in touched_rows)
-    touched_rel = {os.path.relpath(p, table) for p in touched}
-    # rewrite per partition group so new manifest entries keep valid
-    # partition values (one group, the common case, is one Spark write)
-    entry_by_rel = {f["path"]: f for f in snap0["files"]}
-    groups: dict[tuple, list[str]] = {}
-    for rel in sorted(touched_rel):
-        key = tuple(sorted((entry_by_rel[rel].get("partition") or {}).items()))
-        groups.setdefault(key, []).append(os.path.join(table, rel))
-    new_files: list[dict] = []
-    for key, paths in sorted(groups.items()):
-        rewritten = _write_data_files(
-            transform(spark.read.schema(schema).parquet(*paths), cond), table
-        )
-        if key:
-            for e in rewritten:
-                e["partition"] = dict(key)
-        new_files.extend(_keep_nonempty(rewritten, table))
+    new_files = _rewrite_files(
+        spark, table, snap0, touched_rel, lambda scan: transform(scan, cond)
+    )
 
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        base = load_snapshot(table, base_version)
-        base_paths = {f["path"] for f in base["files"]}
-        if not touched_rel <= base_paths:
+    def build(base):
+        files = _rebase(base, touched_rel, new_files)
+        if files is None:
             return None  # concurrent writer dropped a touched file
         _check_rewrite_base(table, snap0, base)
-        files = [f for f in base["files"] if f["path"] not in touched_rel] + new_files
-        version = base_version + 1
-        snap_out = {
-            "format_version": FORMAT_VERSION,
-            "version": version,
-            "parent": base_version,
-            "mode": mode,
-            "schema": base["schema"],
-            "schema_json": base["schema_json"],
-            **(
-                {"partition_spec": base["partition_spec"]}
-                if base.get("partition_spec")
-                else {}
-            ),
-            "files": files,
-            "total_rows": sum(f["rows"] for f in files),
-            **summary(n_matched),
-            "rewritten": sorted(touched_rel),
-        }
-        if base.get("stream_batch_id") is not None:
-            snap_out["stream_batch_id"] = base["stream_batch_id"]
-        # pending MOR delete files still constrain the (rewritten)
-        # rows — they apply by value, not by file identity
-        if base.get("delete_files"):
-            snap_out["delete_files"] = base["delete_files"]
-        if _try_publish(table, snap_out):
-            return snap_out
-    raise CommitConflict(
-        f"{mode} lost the commit race {max_retries} times on {table}"
-    )
+        # pending MOR delete files still constrain the (rewritten) rows
+        # — they apply by value, not by file identity — so they carry
+        return {"files": files, **summary(n_matched), "rewritten": sorted(touched_rel)}
+
+    return _commit(table, mode, build, max_retries)
 
 
 def delete_rows_mor(
@@ -891,11 +917,10 @@ def delete_rows_mor(
     delete_entries = _write_data_files(keys.distinct(), table)
     for e in delete_entries:
         e["equality_cols"] = eq_cols
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        if base_version is None:
+
+    def build(base):
+        if base is None:
             raise FileNotFoundError(f"no snapshots in {table}")
-        base = load_snapshot(table, base_version)
         # exact field names from schema_json, not a substring probe of
         # the simpleString (ADVICE r06: 'id' would false-match 'doc_id'
         # and commit a delete file that breaks every subsequent read)
@@ -903,30 +928,12 @@ def delete_rows_mor(
         missing = [c for c in eq_cols if c not in field_names]
         if missing:
             raise ValueError(f"equality columns {missing} not in table schema")
-        version = base_version + 1
-        snap_out = {
-            "format_version": FORMAT_VERSION,
-            "version": version,
-            "parent": base_version,
-            "mode": "delete-mor",
-            "schema": base["schema"],
-            "schema_json": base["schema_json"],
-            **(
-                {"partition_spec": base["partition_spec"]}
-                if base.get("partition_spec")
-                else {}
-            ),
+        return {
             "files": base["files"],
-            "total_rows": base["total_rows"],  # base rows; live rows < this
-            "delete_files": base.get("delete_files", []) + delete_entries,
+            "delete_files": (base.get("delete_files") or []) + delete_entries,
         }
-        if base.get("stream_batch_id") is not None:
-            snap_out["stream_batch_id"] = base["stream_batch_id"]
-        if _try_publish(table, snap_out):
-            return snap_out
-    raise CommitConflict(
-        f"delete-mor lost the commit race {max_retries} times on {table}"
-    )
+
+    return _commit(table, "delete-mor", build, max_retries)
 
 
 def delete_rows_positional(
@@ -978,42 +985,21 @@ def delete_rows_positional(
         return None
     for e in delete_entries:
         e["positional"] = True
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        base = load_snapshot(table, base_version)
+    scanned = {f["path"] for f in snap0["files"]}
+
+    def build(base):
         # concurrent appends only ADD files (coordinates stay valid);
         # a rewrite of any scanned file invalidates them
-        if not (
-            {f["path"] for f in snap0["files"]}
-            <= {f["path"] for f in base["files"]}
-        ):
+        if _rebase(base, scanned, []) is None:
             raise CommitConflict(
                 f"data files rewritten under positional delete on {table}; recompute"
             )
-        version = base_version + 1
-        snap_out = {
-            "format_version": FORMAT_VERSION,
-            "version": version,
-            "parent": base_version,
-            "mode": "delete-pos",
-            "schema": base["schema"],
-            "schema_json": base["schema_json"],
-            **(
-                {"partition_spec": base["partition_spec"]}
-                if base.get("partition_spec")
-                else {}
-            ),
+        return {
             "files": base["files"],
-            "total_rows": base["total_rows"],  # base rows; live rows < this
-            "delete_files": base.get("delete_files", []) + delete_entries,
+            "delete_files": (base.get("delete_files") or []) + delete_entries,
         }
-        if base.get("stream_batch_id") is not None:
-            snap_out["stream_batch_id"] = base["stream_batch_id"]
-        if _try_publish(table, snap_out):
-            return snap_out
-    raise CommitConflict(
-        f"delete-pos lost the commit race {max_retries} times on {table}"
-    )
+
+    return _commit(table, "delete-pos", build, max_retries)
 
 
 def _has_positional(snap: dict) -> bool:
@@ -1113,10 +1099,10 @@ def apply_deletes(
     # touched = files holding at least one key match (any equality
     # group): files whose surviving-row count (after the anti-joins)
     # differs from their manifest row count
-    base = spark.read.schema(schema).parquet(*all_paths)
+    scan = spark.read.schema(schema).parquet(*all_paths)
     positional = _has_positional(snap0)
     if positional:
-        survived = _with_row_provenance(base)
+        survived = _with_row_provenance(scan)
         by_rel: dict[str, int] = {
             r["_fp"]: r["n"]
             for r in _apply_mor_deletes(spark, table, survived, snap0)
@@ -1125,82 +1111,40 @@ def apply_deletes(
             .collect()
         }
     else:
-        survived = (
-            base.select(*schema.fieldNames(), F.input_file_name().alias("_f"))
-        )
+        survived = scan.select(*schema.fieldNames(), F.input_file_name().alias("_f"))
         survived = _apply_mor_deletes(
             spark, table, survived, snap0
         ).groupBy("_f").agg(F.count(F.lit(1)).alias("n"))
-        counts = {r["_f"]: r["n"] for r in survived.collect()}
-
-        def _norm(p: str) -> str:
-            for pre in ("file://", "file:"):
-                if p.startswith(pre):
-                    return p[len(pre):]
-            return p
-
-        by_rel = {
-            os.path.relpath(_norm(f), table): n for f, n in counts.items()
-        }
+        by_rel = {_rel(table, r["_f"]): r["n"] for r in survived.collect()}
     touched_rel = {
         e["path"]
         for e in snap0["files"]
         if by_rel.get(e["path"], 0) != e["rows"]
     }
-    entry_by_rel = {f["path"]: f for f in snap0["files"]}
-    groups: dict[tuple, list[str]] = {}
-    for rel in sorted(touched_rel):
-        key = tuple(sorted((entry_by_rel[rel].get("partition") or {}).items()))
-        groups.setdefault(key, []).append(os.path.join(table, rel))
-    new_files: list[dict] = []
-    for key, paths in sorted(groups.items()):
-        scan = spark.read.schema(schema).parquet(*paths)
+
+    def remaining(scan):
         if positional:
-            remaining = _apply_mor_deletes(
+            return _apply_mor_deletes(
                 spark, table, _with_row_provenance(scan), snap0
             ).drop("_fp", "_ri")
-        else:
-            remaining = _apply_mor_deletes(spark, table, scan, snap0)
-        rewritten = _write_data_files(remaining, table)
-        if key:
-            for e in rewritten:
-                e["partition"] = dict(key)
-        new_files.extend(_keep_nonempty(rewritten, table))
+        return _apply_mor_deletes(spark, table, scan, snap0)
 
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        basev = load_snapshot(table, base_version)
-        base_paths = {f["path"] for f in basev["files"]}
-        if not touched_rel <= base_paths:
-            return None
-        if (basev.get("delete_files") or []) != pending:
+    new_files = _rewrite_files(spark, table, snap0, touched_rel, remaining)
+
+    def build(base):
+        if (base.get("delete_files") or []) != pending:
             return None  # new deletes landed meanwhile — replan
-        files = [f for f in basev["files"] if f["path"] not in touched_rel] + new_files
-        version = base_version + 1
-        snap_out = {
-            "format_version": FORMAT_VERSION,
-            "version": version,
-            "parent": base_version,
-            "mode": "apply-deletes",
-            "schema": basev["schema"],
-            "schema_json": basev["schema_json"],
-            **(
-                {"partition_spec": basev["partition_spec"]}
-                if basev.get("partition_spec")
-                else {}
-            ),
+        files = _rebase(base, touched_rel, new_files)
+        if files is None:
+            return None
+        return {
             "files": files,
-            "total_rows": sum(f["rows"] for f in files),
+            "delete_files": None,
             "applied_delete_files": [e["path"] for e in pending],
             "rewritten": sorted(touched_rel),
         }
-        if basev.get("stream_batch_id") is not None:
-            snap_out["stream_batch_id"] = basev["stream_batch_id"]
-        if _try_publish(table, snap_out):
-            return snap_out
-    raise CommitConflict(
-        f"apply-deletes lost the commit race {max_retries} times on {table}"
-    )
+
+    return _commit(table, "apply-deletes", build, max_retries)
 
 
 def _overlaps(lo, hi, op: str, value) -> bool:
@@ -1484,74 +1428,32 @@ def merge_rows(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
-
-    def _norm(p: str) -> str:
-        for pre in ("file://", "file:"):
-            if p.startswith(pre):
-                return p[len(pre):]
-        return p
-
-    touched_rel = {os.path.relpath(_norm(r["_f"]), table) for r in touched_rows}
+    touched_rel = {_rel(table, r["_f"]) for r in touched_rows}
     n_updated = sum(r["n"] for r in touched_rows)
-    spec = snap0.get("partition_spec")
-    entry_by_rel = {f["path"]: f for f in snap0["files"]}
-    new_files: list[dict] = []
-    groups: dict[tuple, list[str]] = {}
-    for rel in sorted(touched_rel):
-        key = tuple(sorted((entry_by_rel[rel].get("partition") or {}).items()))
-        groups.setdefault(key, []).append(os.path.join(table, rel))
-    for key, paths in sorted(groups.items()):
-        remainder = (
-            spark.read.schema(schema).parquet(*paths).join(keys, key_cols, "left_anti")
-        )
-        rewritten = _write_data_files(remainder, table)
-        if key:
-            for e in rewritten:
-                e["partition"] = dict(key)
-        new_files.extend(_keep_nonempty(rewritten, table))
+    new_files = _rewrite_files(
+        spark, table, snap0, touched_rel,
+        lambda scan: scan.join(keys, key_cols, "left_anti"),
+    )
     # the whole source (updates + inserts) goes through the normal
     # partitioned write path, so inserts land with correct layout;
     # aligned to the TABLE's schema and column order (extra source
     # columns would be evolution — do that with an append first)
     src_aligned = source.select(*[f.name for f in schema.fields])
-    new_files.extend(_write_data_files(src_aligned, table, spec))
+    new_files.extend(_write_data_files(src_aligned, table, snap0.get("partition_spec")))
 
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        base = load_snapshot(table, base_version)
-        base_paths = {f["path"] for f in base["files"]}
-        if not touched_rel <= base_paths:
+    def build(base):
+        files = _rebase(base, touched_rel, new_files)
+        if files is None:
             return None  # concurrent writer dropped a touched file
         _check_rewrite_base(table, snap0, base)
-        files = [f for f in base["files"] if f["path"] not in touched_rel] + new_files
-        version = base_version + 1
-        snap_out = {
-            "format_version": FORMAT_VERSION,
-            "version": version,
-            "parent": base_version,
-            "mode": "merge",
-            "schema": base["schema"],
-            "schema_json": base["schema_json"],
-            **(
-                {"partition_spec": base["partition_spec"]}
-                if base.get("partition_spec")
-                else {}
-            ),
+        return {
             "files": files,
-            "total_rows": sum(f["rows"] for f in files),
             "merge_keys": list(key_cols),
             "updated_rows": n_updated,
             "rewritten": sorted(touched_rel),
         }
-        if base.get("stream_batch_id") is not None:
-            snap_out["stream_batch_id"] = base["stream_batch_id"]
-        if base.get("delete_files"):
-            snap_out["delete_files"] = base["delete_files"]
-        if _try_publish(table, snap_out):
-            return snap_out
-    raise CommitConflict(
-        f"merge lost the commit race {max_retries} times on {table}"
-    )
+
+    return _commit(table, "merge", build, max_retries)
 
 
 def compact(
@@ -1570,9 +1472,9 @@ def compact(
     Rewrites ONLY files with fewer than ``target_rows`` rows; row
     content is unchanged (same rows, fewer files) so readers see no
     data difference, and the PRE-compaction snapshot still
-    time-travels to the original files until vacuum. Concurrency: the
-    commit loop re-derives the latest snapshot each attempt and
-    re-bases (latest files − compacted + new); if a concurrent
+    time-travels to the original files until vacuum. Concurrency: each
+    :func:`_commit` attempt re-bases on the latest snapshot (latest
+    files − compacted + new); if a concurrent
     overwrite/compaction removed any of the planned files, the
     compaction aborts with ``None`` rather than resurrecting them.
     Returns the committed snapshot, or None when there is nothing to
@@ -1585,17 +1487,12 @@ def compact(
     the group's partition values are stamped onto the rewritten
     entries. Iceberg's rewrite_data_files has the same per-partition
     grouping."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
     snap = load_snapshot(table)
     if _has_positional(snap):
         raise ValueError(
             "pending positional delete files — their (file, row_pos) "
             "coordinates would dangle after a rewrite; run apply_deletes first"
         )
-    schema = StructType.fromJson(_json.loads(snap["schema_json"]))
     groups: dict[tuple, list[dict]] = {}
     for f in snap["files"]:
         if f["rows"] < target_rows:
@@ -1605,56 +1502,23 @@ def compact(
     if not groups:
         return None
     new_files: list[dict] = []
-    small: list[dict] = []
-    for key, entries in sorted(groups.items()):
-        small.extend(entries)
-        total = sum(f["rows"] for f in entries)
-        n_out = max(1, -(-total // target_rows))  # ceil
-        paths = [os.path.join(table, f["path"]) for f in entries]
-        rewritten = _write_data_files(
-            spark.read.schema(schema).parquet(*paths).coalesce(n_out), table
+    small_set: set[str] = set()
+    for _, entries in sorted(groups.items()):
+        rels = {f["path"] for f in entries}
+        small_set |= rels
+        n_out = max(1, -(-sum(f["rows"] for f in entries) // target_rows))  # ceil
+        new_files += _rewrite_files(
+            spark, table, snap, rels, lambda scan: scan.coalesce(n_out)
         )
-        if key:
-            for e in rewritten:
-                e["partition"] = dict(key)
-        new_files.extend(_keep_nonempty(rewritten, table))
-    small_set = {f["path"] for f in small}
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        base = load_snapshot(table, base_version)
-        base_paths = {f["path"] for f in base["files"]}
-        if not small_set <= base_paths:
+
+    def build(base):
+        files = _rebase(base, small_set, new_files)
+        if files is None:
             return None  # a concurrent writer dropped some planned file
         _check_rewrite_base(table, snap, base)
-        files = [f for f in base["files"] if f["path"] not in small_set] + new_files
-        version = base_version + 1
-        snap_out = {
-            "format_version": FORMAT_VERSION,
-            "version": version,
-            "parent": base_version,
-            "mode": "compact",
-            "schema": base["schema"],
-            "schema_json": base["schema_json"],
-            **(
-                {"partition_spec": base["partition_spec"]}
-                if base.get("partition_spec")
-                else {}
-            ),
-            "files": files,
-            "total_rows": sum(f["rows"] for f in files),
-            "compacted": sorted(small_set),
-        }
-        # carry the streaming replay watermark through maintenance: a
-        # compaction between a stream commit and its checkpoint must
-        # not erase the batch-id guard, or the replayed batch would
-        # double-append (exactly-once contract, ADVICE r05 medium)
-        if base.get("stream_batch_id") is not None:
-            snap_out["stream_batch_id"] = base["stream_batch_id"]
-        if base.get("delete_files"):
-            snap_out["delete_files"] = base["delete_files"]
-        if _try_publish(table, snap_out):
-            return snap_out
-    raise CommitConflict(f"compaction lost the commit race {max_retries} times on {table}")
+        return {"files": files, "compacted": sorted(small_set)}
+
+    return _commit(table, "compact", build, max_retries)
 
 
 def zorder_table(
@@ -1681,14 +1545,17 @@ def zorder_table(
     Rows are unchanged except that pending merge-on-read deletes are
     materialized away (the rewrite reads post-filter rows — a z-order
     pass doubles as ``apply_deletes``). Commits as a normal overwrite
-    snapshot (mode ``overwrite``, ``zorder`` recorded in the manifest);
-    the pre-zorder version still time-travels."""
+    snapshot (mode ``overwrite``, ``zorder`` recorded in the manifest)
+    that keeps the table's partition spec and replay watermark; the
+    pre-zorder version still time-travels. A commit that lands while the
+    rewrite runs makes it raise ``CommitConflict`` — rerun it."""
     from pyspark.sql import functions as F
 
     if bits * len(cols) > 63:
         raise ValueError(f"bits*len(cols) = {bits * len(cols)} exceeds 63")
     base_snap = load_snapshot(table)
-    df = read_table(spark, table)
+    planned = base_snap["version"]
+    df = read_table(spark, table, version=planned)
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
@@ -1712,24 +1579,26 @@ def zorder_table(
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-    # maintenance contract (ADVICE r06): like compact, a zorder rewrite
-    # must not strip the table's hidden-partitioning spec or the
-    # streaming replay watermark — a vacuum retaining only post-zorder
-    # snapshots would otherwise void the exactly-once guard
-    extra = {"zorder": list(cols), "zorder_bits": bits}
-    if base_snap.get("stream_batch_id") is not None:
-        extra["stream_batch_id"] = base_snap["stream_batch_id"]
-    partition_by = None
-    if base_snap.get("partition_spec"):
-        partition_by = [
-            (e["col"], e["transform"], e["n"])
-            if e["transform"] == "bucket"
-            else (e["col"], e["transform"])
-            for e in base_snap["partition_spec"]
-        ]
-    return write_table(
-        clustered, table, mode="overwrite", extra=extra, partition_by=partition_by
-    )
+    new_files, metrics = _timed_write(clustered, table, base_snap.get("partition_spec"))
+
+    def build(base):
+        # the rewrite holds exactly v{planned}'s rows: publishing it over
+        # a later commit would silently drop that commit's rows
+        if base["version"] != planned:
+            raise CommitConflict(
+                f"{table} moved past v{planned} during zorder; rerun it"
+            )
+        return {
+            "schema": clustered.schema.simpleString(),
+            "schema_json": clustered.schema.json(),
+            "files": new_files,
+            "delete_files": None,  # materialized by the post-filter read
+            **metrics,
+            "zorder": list(cols),
+            "zorder_bits": bits,
+        }
+
+    return _commit(table, "overwrite", build)
 
 
 def vacuum(
@@ -1741,7 +1610,7 @@ def vacuum(
     the Iceberg expire-snapshots contract.
 
     Also sweeps TRUE orphans: files under ``data/`` referenced by NO
-    snapshot at all (abandoned writes — a commit loop that lost the
+    snapshot at all (abandoned writes — a commit that lost the
     race ``max_retries`` times, or a crash between ``_write_data_files``
     and the commit leave staged-then-moved files that no manifest ever
     named; ADVICE r05). Those never age out via snapshot expiry, so
@@ -2050,42 +1919,21 @@ def rollback_table(table: str, to_version: int, max_retries: int = 3) -> dict:
     data is read or rewritten, and the versions in between stay in the
     history for audit until vacuumed. The bad-deploy escape hatch: an
     upstream job corrupted v7–v9, `rollback_table(t, 6)` serves v6's
-    bytes as v10 in milliseconds at any table size.
-
-    Streaming note: the replay watermark is the MAX ``stream_batch_id``
-    over retained snapshots (see :func:`commit_stream_batch`), so a
-    rollback does NOT lower it — a micro-batch whose rows were rolled
-    back stays acknowledged rather than silently re-appending. Rolling
-    back a streaming sink means you did not want those rows; re-ingest
-    explicitly if you did."""
+    bytes as v10 in milliseconds at any table size. The replay
+    watermark is the one field not restored: like every commit, a
+    rollback keeps the base's ``stream_batch_id``, so a micro-batch whose
+    rows were rolled back stays acknowledged rather than silently
+    re-appending (re-ingest explicitly if you wanted those rows)."""
     target = load_snapshot(table, to_version)
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        snap = {
-            "format_version": FORMAT_VERSION,
-            "version": (base_version or 0) + 1,
-            "parent": base_version,
-            "mode": "rollback",
-            "schema": target["schema"],
-            "schema_json": target["schema_json"],
-            **(
-                {"partition_spec": target["partition_spec"]}
-                if target.get("partition_spec")
-                else {}
-            ),
-            **(
-                {"delete_files": target["delete_files"]}
-                if target.get("delete_files")
-                else {}
-            ),
+    return _commit(
+        table,
+        "rollback",
+        lambda base: {
+            **{k: target.get(k) for k in _CARRIED},
             "files": target["files"],
-            "total_rows": target["total_rows"],
             "rolled_back_to": to_version,
-        }
-        if _try_publish(table, snap):
-            return snap
-    raise CommitConflict(
-        f"lost the commit race {max_retries} times rolling back {table}"
+        },
+        max_retries,
     )
 
 
@@ -2170,50 +2018,29 @@ def publish_staged(table: str, wap_id: str, max_retries: int = 3) -> dict:
     """Atomically make a staged write visible: new snapshot = current
     base's files + the staged files (pure metadata — no data I/O, so
     publish is O(manifest) regardless of staged volume). The base may
-    have moved since staging; the optimistic loop re-derives it, and the
-    staged schema is re-checked against the CURRENT base (a concurrent
-    add-column evolution the staged data lacks aborts with a clear
-    error rather than publishing rows that silently drop the column).
-    On success the staging record is removed."""
+    have moved since staging; each :func:`_commit` attempt re-derives
+    it, and the staged schema is re-checked against the CURRENT base (a
+    concurrent add-column evolution the staged data lacks aborts with a
+    clear error rather than publishing rows that silently drop the
+    column). On success the staging record is removed."""
     from pyspark.sql.types import StructType
 
     staged = load_staged(table, wap_id)
     staged_schema = StructType.fromJson(json.loads(staged["schema_json"]))
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        base = load_snapshot(table, base_version)
+
+    def build(base):
         _check_append_schema(base, staged_schema)
-        files = base["files"] + staged["files"]
-        snap = {
-            "format_version": FORMAT_VERSION,
-            "version": base_version + 1,
-            "parent": base_version,
-            "mode": "wap_publish",
+        return {
             "schema": staged["schema"],
             "schema_json": staged["schema_json"],
-            **(
-                {"partition_spec": base["partition_spec"]}
-                if base.get("partition_spec")
-                else {}
-            ),
-            **(
-                {"delete_files": base["delete_files"]}
-                if base.get("delete_files")
-                else {}
-            ),
-            "files": files,
-            "total_rows": sum(f["rows"] for f in files),
+            "files": base["files"] + staged["files"],
             "new_rows": staged["new_rows"],
             "wap_id": wap_id,
         }
-        if base.get("stream_batch_id") is not None:
-            snap["stream_batch_id"] = base["stream_batch_id"]
-        if _try_publish(table, snap):
-            os.unlink(_wap_path(table, wap_id))
-            return snap
-    raise CommitConflict(
-        f"lost the commit race {max_retries} times publishing {wap_id!r}"
-    )
+
+    snap = _commit(table, "wap_publish", build, max_retries)
+    os.unlink(_wap_path(table, wap_id))
+    return snap
 
 
 def drop_staged(table: str, wap_id: str) -> None:

@@ -4,6 +4,7 @@ skipping, vacuum."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -71,9 +72,10 @@ def test_optimistic_commit_conflict(spark, docs, tmp_path):
         orig_link = os.link
 
         def thief(src, dst, *a, **k):
-            # competitor wins every race: the target always exists
+            # competitor wins every race: a valid snapshot always
+            # already sits at the target version
             with open(dst, "w") as f:
-                f.write("{}")
+                json.dump({**snap, "version": int(os.path.basename(dst)[1:-5])}, f)
             return orig_link(src, dst, *a, **k)
 
         os.link = thief
@@ -1301,3 +1303,114 @@ def test_partitions_metadata_table(spark, docs, tmp_path):
     rows = st.partitions_table(spark, flat).collect()
     assert len(rows) == 1 and rows[0]["partition"] == "{}"
     assert rows[0]["n_rows"] == 100
+
+
+def _stream_batch(docs):
+    """Five rows no base table holds (doc_id 1000..1004)."""
+    return docs.where("doc_id < 5").withColumn("doc_id", F.col("doc_id") + 1000)
+
+
+def test_zorder_race_keeps_midflight_stream_batch(spark, docs, tmp_path, monkeypatch):
+    """A stream batch that commits while a zorder rewrite runs must not
+    be dropped by the zorder's overwrite: the zorder either raises
+    CommitConflict or keeps the batch, and the batch is never replayed
+    (not even once vacuum has expired every older snapshot)."""
+    table = str(tmp_path / "t")
+    st.write_table(docs, table)
+    batch = _stream_batch(docs)
+    real_write = st._write_data_files
+    fired = []
+
+    def racing_write(df, tbl, spec=None):
+        files = real_write(df, tbl, spec)
+        if not fired:  # right after the zorder's own data write
+            fired.append(True)
+            assert st.commit_stream_batch(batch, table, batch_id=4) is not None
+        return files
+
+    monkeypatch.setattr(st, "_write_data_files", racing_write)
+    with contextlib.suppress(st.CommitConflict):
+        st.zorder_table(spark, table, ["doc_id", "grp"], n_files=4)
+    monkeypatch.undo()
+    assert fired
+    assert st.read_table(spark, table).where("doc_id >= 1000").count() == 5
+    n = st.read_table(spark, table).count()
+    st.vacuum(table, keep_versions=1)
+    assert st.commit_stream_batch(batch, table, batch_id=4) is None
+    assert st.read_table(spark, table).count() == n
+    # rerun on the settled table: commits, keeps the rows and the watermark
+    s = st.zorder_table(spark, table, ["doc_id", "grp"], n_files=4)
+    assert s["stream_batch_id"] == 4 and st.read_table(spark, table).count() == n
+
+
+def _positional_then_apply(spark, docs, table):
+    st.delete_rows_positional(spark, table, "doc_id < 3")
+    return st.apply_deletes(spark, table)
+
+
+def _stage_then_publish(spark, docs, table):
+    st.stage_append(docs.where("grp = 1"), table, wap_id="w1")
+    return st.publish_staged(table, "w1")
+
+
+WRITERS = {
+    "append": lambda spark, docs, t: st.write_table(docs.where("grp = 0"), t, mode="append"),
+    "overwrite": lambda spark, docs, t: st.write_table(docs.where("grp = 0"), t),
+    "delete_rows": lambda spark, docs, t: st.delete_rows(spark, t, "doc_id < 10"),
+    "update_rows": lambda spark, docs, t: st.update_rows(
+        spark, t, "doc_id < 10", {"text": "'u'"}),
+    "merge_rows": lambda spark, docs, t: st.merge_rows(
+        spark, t, docs.where("doc_id < 10").withColumn("text", F.lit("m")), ["doc_id"]),
+    "delete_rows_mor": lambda spark, docs, t: st.delete_rows_mor(
+        spark, t, docs.where("doc_id < 3").select("doc_id")),
+    "positional_then_apply": _positional_then_apply,
+    "compact": lambda spark, docs, t: st.compact(spark, t),
+    "rollback_table": lambda spark, docs, t: st.rollback_table(t, 1),
+    "publish_staged": _stage_then_publish,
+}
+
+
+@pytest.mark.parametrize("writer", sorted(WRITERS))
+def test_every_writer_carries_stream_watermark(spark, docs, tmp_path, writer):
+    """Every commit carries the replay watermark forward, so after any
+    writer plus vacuum(keep_versions=1) a replayed batch is still a
+    no-op — the latest snapshot alone guards exactly-once."""
+    table = str(tmp_path / "t")
+    st.write_table(docs.repartition(2), table)
+    batch = _stream_batch(docs)
+    assert st.commit_stream_batch(batch, table, batch_id=7) is not None
+    snap = WRITERS[writer](spark, docs, table)
+    assert snap is not None and snap["version"] == st.latest_version(table)
+    assert snap.get("stream_batch_id") == 7
+    n = st.read_table(spark, table).count()
+    st.vacuum(table, keep_versions=1)
+    assert st.commit_stream_batch(batch, table, batch_id=7) is None
+    assert st.read_table(spark, table).count() == n
+
+
+def test_stream_commit_loads_do_not_grow_with_history(spark, docs, tmp_path, monkeypatch):
+    """The replay check reads the latest snapshot only: the number of
+    snapshot loads in one commit_stream_batch is the same after 5 and
+    after 10 prior stream commits."""
+    table = str(tmp_path / "t")
+    batch = docs.where("doc_id < 2").coalesce(1)
+    real_load = st.load_snapshot
+    calls = []
+
+    def counting_load(*a, **k):
+        calls.append(a)
+        return real_load(*a, **k)
+
+    def loads_for(batch_id):
+        calls.clear()
+        monkeypatch.setattr(st, "load_snapshot", counting_load)
+        assert st.commit_stream_batch(batch, table, batch_id=batch_id) is not None
+        monkeypatch.undo()
+        return len(calls)
+
+    for b in range(5):
+        st.commit_stream_batch(batch, table, batch_id=b)
+    at_5 = loads_for(5)
+    for b in range(6, 10):
+        st.commit_stream_batch(batch, table, batch_id=b)
+    assert loads_for(10) == at_5 <= 3
