@@ -1112,8 +1112,8 @@ def _q_candidates_salted(spark, sf_dir):
     (attach_candidates_salted: fact-derived salt × salt_n-replicated
     dim, shuffle-hash on (alias, salt)) driven through the popularity
     linker — row-identical to the broadcast attach_candidates plan, so
-    it shares the linked_popularity oracle. Skew behavior measured in
-    scripts/skew_bench.py / BENCH.md."""
+    it shares the linked_popularity oracle. Skew behavior: BENCH.md
+    "Head-alias skew evidence (round 4)"."""
     from bootleg_spark.operators.candidates import attach_candidates_salted
 
     m, d = _word_mentions(spark, sf_dir)

@@ -42,9 +42,10 @@ class SparkAnnotator:
             for r in pipe.dims["entities"].select("qid", "title").collect()
         }
 
-    def label_frame(self, texts_df, text_col: str = "text", id_col: str = "_txt_id"):
+    def label_frame(self, texts_df, text_col: str = "text"):
         """DataFrame-in / DataFrame-out form (the scale path): one row
-        per surviving mention with prediction columns."""
+        per surviving mention with prediction columns; every input
+        column (the text id included) is carried through."""
         pipe = self.pipe
         m = extract_mentions_ngram(texts_df, pipe.alias_set_bc, text_col=text_col)
         mc = attach_candidates(m, pipe.dims["alias_cands"], grouped=pipe.grouped_cands)

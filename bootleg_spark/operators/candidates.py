@@ -3,8 +3,9 @@
 The reference's central "join" (entity_symbols.get_qid_cands,
 bootleg/symbols/entity_symbols.py:434-491; eval_utils.py:59-114): per
 extracted alias, fetch the top-K candidate list sorted (score desc, id
-desc), pad to K with "-1" (eid 1), optionally prepend the "NC"
-not-in-candidates slot (eid 0) when train_in_candidates=False.
+desc), pad to K with "-1" (eid 1). The "NC" not-in-candidates slot
+(eid 0, train_in_candidates=False) is prepended by the
+``candidates_with_nc`` query.
 
 Spark-first shape: the candidate lists are pre-grouped once into a tiny
 dimension DataFrame (alias → ordered array<struct>), then attached to
@@ -18,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bootleg_spark import synthspec as S
-from bootleg_spark.functions.embedding import NC_EID, PAD_EID
+from bootleg_spark.functions.embedding import PAD_EID
 
 
 def grouped_candidates(
@@ -68,8 +69,8 @@ def attach_candidates_salted(
     times; the equi-join on (alias, salt) spreads the hot alias across
     ``salt_n`` reducers at the cost of a ``salt_n``× dim blow-up —
     cheap, the dim is one array row per alias. Output rows identical
-    to the broadcast form (pytest-pinned); scripts/skew_bench.py
-    measures the skew behavior."""
+    to the broadcast form (pytest-pinned); BENCH.md "Head-alias skew
+    evidence (round 4)" has the skew measurements."""
     cands = grouped if grouped is not None else grouped_candidates(alias_cands, max_candidates)
     salt = F.pmod(F.hash(*[F.col(k) for k in fact_keys]), F.lit(salt_n))
     fact = mentions.withColumn("_salt", salt)
@@ -83,41 +84,15 @@ def attach_candidates(
     mentions: DataFrame,
     alias_cands: DataFrame,
     max_candidates: int = S.MAX_CANDIDATES,
-    train_in_candidates: bool = True,
-    keep_unmatched: bool = False,
     grouped: DataFrame | None = None,
 ) -> DataFrame:
-    """Broadcast-join candidate arrays onto the mention stream.
+    """Broadcast-join candidate arrays onto the mention stream; mentions
+    whose alias has no candidates drop out (inner join).
 
-    ``train_in_candidates=False`` prepends the NC slot (qid "NC", eid 0)
-    exactly like map_aliases_to_candidates (eval_utils.py:59-87).
-    Unmatched aliases get all-pad lists when ``keep_unmatched``.
     Pass ``grouped`` (a cached grouped_candidates frame) to skip
-    rebuilding the aggregation on every query.
+    rebuilding the aggregation on every query. The NC-slot shape
+    (train_in_candidates=False) is built by the ``candidates_with_nc``
+    query.
     """
     cands = grouped if grouped is not None else grouped_candidates(alias_cands, max_candidates)
-    how = "left" if keep_unmatched else "inner"
-    out = mentions.join(F.broadcast(cands), "alias", how)
-    if keep_unmatched:
-        k = max_candidates
-        out = (
-            out.withColumn(
-                "cand_qids",
-                F.coalesce("cand_qids", F.expr(f"array_repeat('-1', {k})")),
-            )
-            .withColumn(
-                "cand_eids",
-                F.coalesce("cand_eids", F.expr(f"array_repeat(CAST({PAD_EID} AS BIGINT), {k})")),
-            )
-            .withColumn(
-                "cand_scores",
-                F.coalesce("cand_scores", F.expr(f"array_repeat(CAST(0.0 AS DOUBLE), {k})")),
-            )
-        )
-    if not train_in_candidates:
-        out = (
-            out.withColumn("cand_qids", F.concat(F.array(F.lit("NC")), "cand_qids"))
-            .withColumn("cand_eids", F.concat(F.array(F.lit(NC_EID).cast("long")), "cand_eids"))
-            .withColumn("cand_scores", F.concat(F.array(F.lit(0.0)), "cand_scores"))
-        )
-    return out
+    return mentions.join(F.broadcast(cands), "alias")

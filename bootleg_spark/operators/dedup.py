@@ -149,10 +149,10 @@ def shingle_array_expr(wc, n: int):
 def _band_minima_arrays(dshf: DataFrame, n_bands: int) -> DataFrame:
     """(id, band, min_hash) from a (id, dsh) shingle-array frame.
 
-    Same md5-hex order statistic as :func:`_band_minima`, but each
-    band's minimum is an ``array_min(transform(...))`` computed inside
-    the row: the r06 form still paid one groupBy(id) exchange over
-    every (id, shingle) row; this pays none — the scan projection emits
+    Each band b keeps min(md5(b || ':' || shingle)) over the doc's
+    distinct shingles, an ``array_min(transform(...))`` computed inside
+    the row: the r06 form paid one groupBy(id) exchange over every
+    (id, shingle) row; this pays none — the scan projection emits
     the finished n_bands-wide row per doc, and only the n_bands-row
     unpivot leaves the row."""
     aggs = [
@@ -191,29 +191,6 @@ def minhash_band_buckets(
     return _band_minima_arrays(
         doc_shingle_arrays(docs, shingle_n, text_col, id_col), n_bands
     )
-
-
-def _band_minima(sh: DataFrame, n_bands: int) -> DataFrame:
-    """(id, band, min_hash) from a (id, shingle) frame.
-
-    Single-pass plan: ONE groupBy(id) computing all n_bands minima as
-    separate aggregate expressions, then an n_bands-wide unpivot of the
-    per-doc row. The md5 count is unchanged (n_bands per shingle) but
-    nothing is exploded: the pre-aggregation row count stays at
-    |shingles| instead of n_bands × |shingles|, and the shuffle carries
-    one n_bands-wide row per doc per partition. Measured 1.2× over the
-    explode → groupBy(id, band) formulation at sf0.1 (1.86→1.58 s),
-    where fixed stage overhead dominates; the 8× pre-agg row saving is
-    the part that grows with corpus size."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{b}:"), F.col("shingle")))).alias(f"_h{b}")
-        for b in range(n_bands)
-    ]
-    per_doc = sh.groupBy("id").agg(*aggs)
-    stack_args = ", ".join(f"{b}, _h{b}" for b in range(n_bands))
-    return per_doc.select(
-        "id", F.expr(f"stack({n_bands}, {stack_args}) AS (band, min_hash)")
-    ).select("id", F.col("band").cast("int").alias("band"), "min_hash")
 
 
 def _bucket_pairs(
@@ -283,7 +260,6 @@ def minhash_verified_pairs(
     shingle_n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reuse_shingles: bool = True,
 ) -> DataFrame:
     """The standard two-stage near-dup pipeline: cheap LSH banding
     proposes candidate pairs, exact Jaccard over shingle sets verifies
@@ -305,12 +281,7 @@ def minhash_verified_pairs(
     Shuffled rows: the candidate distinct only. Same output: n_inter
     counts distinct shared shingles exactly as the oracle's join-count
     over distinct (id, shingle) rows, still modulo the documented
-    ~2⁻⁶⁴ xxhash64 collision tolerance the r06 verify join had.
-
-    ``reuse_shingles`` is retained for API compatibility; the packed
-    plan derives bands, sizes and sets in one in-row projection chain,
-    so there is no shingle frame left to persist."""
-    del reuse_shingles  # no exploded shingle frame left to persist
+    ~2⁻⁶⁴ xxhash64 collision tolerance the r06 verify join had."""
     # lazy localCheckpoint: the shingle-array frame feeds BOTH the
     # band-minima/bucket branch and the packed-set attach branch, and a
     # DAG-as-tree would evaluate the scan + shingling once per branch.

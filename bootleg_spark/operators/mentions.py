@@ -256,6 +256,47 @@ def ngram_extract_aliases(
     return sorted(used, key=lambda e: (e[1], e[2]))
 
 
+def _explode_mentions(df: DataFrame, col: str, make_spans) -> DataFrame:
+    """One row per mention: (df columns.., mention_pos, alias,
+    char_start, char_end), from an Arrow-batched pandas UDF over
+    ``col``. ``make_spans()`` runs on the executor once per batch (where
+    it reads the broadcasts) and returns ``value -> [(alias, start,
+    end)]``; null values yield no mentions."""
+
+    @F.pandas_udf(_MENTION_SCHEMA)
+    def _extract(values: pd.Series) -> pd.Series:
+        spans = make_spans()
+        return values.map(
+            lambda v: []
+            if v is None
+            else [{"alias": a, "char_start": s, "char_end": e} for a, s, e in spans(v)]
+        )
+
+    exploded = df.select("*", F.posexplode(_extract(F.col(col))).alias("mention_pos", "_m"))
+    return exploded.select(
+        *df.columns,
+        F.col("mention_pos").cast("int"),
+        F.col("_m.alias").alias("alias"),
+        F.col("_m.char_start").alias("char_start"),
+        F.col("_m.char_end").alias("char_end"),
+    )
+
+
+def _ngram_spans(alias_set_bc, min_alias_len: int, max_alias_len: int):
+    """``text -> [(alias, start, end)]`` over the broadcast alias set
+    (executor side)."""
+    aliases = alias_set_bc.value
+    # dict_max_words feeds the per-text dead-pass skip inside
+    # ngram_extract_aliases: on pure-alnum text every pass with
+    # n > longest-alias-words is provably matchless; on punctuated
+    # text lnrm can shrink a gram's word count, so all passes run
+    # (the reference hardcodes max_alias_len=6)
+    dict_w = max((len(a.split()) for a in aliases), default=1)
+    return lambda t: ngram_extract_aliases(
+        t, aliases, min_alias_len, max_alias_len, dict_max_words=dict_w
+    )
+
+
 def extract_mentions_ngram(
     df: DataFrame,
     alias_set_bc,
@@ -269,36 +310,8 @@ def extract_mentions_ngram(
     Spark's shared read-only memory, replacing the reference's mmap'd
     marisa trie shared across pool workers (extract_mentions.py:130).
     """
-
-    @F.pandas_udf(_MENTION_SCHEMA)
-    def _extract(texts: pd.Series) -> pd.Series:
-        aliases = alias_set_bc.value
-        # dict_max_words feeds the per-text dead-pass skip inside
-        # ngram_extract_aliases: on pure-alnum text every pass with
-        # n > longest-alias-words is provably matchless; on punctuated
-        # text lnrm can shrink a gram's word count, so all passes run
-        # (the reference hardcodes max_alias_len=6)
-        dict_w = max((len(a.split()) for a in aliases), default=1)
-        return texts.map(
-            lambda t: []
-            if t is None
-            else [
-                {"alias": a, "char_start": s, "char_end": e}
-                for a, s, e in ngram_extract_aliases(
-                    t, aliases, min_alias_len, max_alias_len, dict_max_words=dict_w
-                )
-            ]
-        )
-
-    exploded = df.select(
-        "*", F.posexplode(_extract(F.col(text_col))).alias("mention_pos", "_m")
-    )
-    return exploded.select(
-        *df.columns,
-        F.col("mention_pos").cast("int"),
-        F.col("_m.alias").alias("alias"),
-        F.col("_m.char_start").alias("char_start"),
-        F.col("_m.char_end").alias("char_end"),
+    return _explode_mentions(
+        df, text_col, lambda: _ngram_spans(alias_set_bc, min_alias_len, max_alias_len)
     )
 
 
@@ -317,34 +330,11 @@ def extract_mentions_ngram_from_html(
     is deterministic and is exactly what the staged plan ran first."""
     from bootleg_spark.functions.textproc import extract_html_text
 
-    @F.pandas_udf(_MENTION_SCHEMA)
-    def _extract(htmls: pd.Series) -> pd.Series:
-        aliases = alias_set_bc.value
-        dict_w = max((len(a.split()) for a in aliases), default=1)
+    def make_spans():
+        spans = _ngram_spans(alias_set_bc, min_alias_len, max_alias_len)
+        return lambda h: spans(extract_html_text(bytes(h)))
 
-        def one(h):
-            if h is None:
-                return []
-            t = extract_html_text(bytes(h))
-            return [
-                {"alias": a, "char_start": s, "char_end": e}
-                for a, s, e in ngram_extract_aliases(
-                    t, aliases, min_alias_len, max_alias_len, dict_max_words=dict_w
-                )
-            ]
-
-        return htmls.map(one)
-
-    exploded = df.select(
-        "*", F.posexplode(_extract(F.col(html_col))).alias("mention_pos", "_m")
-    )
-    return exploded.select(
-        *df.columns,
-        F.col("mention_pos").cast("int"),
-        F.col("_m.alias").alias("alias"),
-        F.col("_m.char_start").alias("char_start"),
-        F.col("_m.char_end").alias("char_end"),
-    )
+    return _explode_mentions(df, html_col, make_spans)
 
 
 def extract_mentions_word(
@@ -515,35 +505,18 @@ def extract_mentions_ner(
     surface->label dict) selects the deterministic gazetteer tagger;
     without it the capitalized-run regex tagger runs."""
 
-    @F.pandas_udf(_MENTION_SCHEMA)
-    def _extract(texts: pd.Series) -> pd.Series:
+    def make_spans():
         aliases = alias_set_bc.value
         ner_fn = (
             gazetteer_ner_fn(gazetteer_bc.value, max_alias_len)
             if gazetteer_bc is not None
             else regex_ner_spans
         )
-        return texts.map(
-            lambda t: []
-            if t is None
-            else [
-                {"alias": a, "char_start": s, "char_end": e}
-                for a, s, e in ner_extract_aliases(
-                    t, aliases, ner_fn, min_alias_len, max_alias_len
-                )
-            ]
+        return lambda t: ner_extract_aliases(
+            t, aliases, ner_fn, min_alias_len, max_alias_len
         )
 
-    exploded = df.select(
-        "*", F.posexplode(_extract(F.col(text_col))).alias("mention_pos", "_m")
-    )
-    return exploded.select(
-        *df.columns,
-        F.col("mention_pos").cast("int"),
-        F.col("_m.alias").alias("alias"),
-        F.col("_m.char_start").alias("char_start"),
-        F.col("_m.char_end").alias("char_end"),
-    )
+    return _explode_mentions(df, text_col, make_spans)
 
 
 def extract_mentions_ngram_relational_multi(
@@ -553,7 +526,6 @@ def extract_mentions_ngram_relational_multi(
     id_col: str = "doc_id",
     min_alias_len: int = 1,
     max_alias_len: int = 6,
-    prefilter: bool = True,
 ) -> DataFrame:
     """Multi-word generalization of
     :func:`extract_mentions_ngram_relational` — the full n-gram
@@ -581,8 +553,7 @@ def extract_mentions_ngram_relational_multi(
     L-token document, each duplicating the full ``_arr/_arrl/_keep``
     doc arrays — a ~6×-per-token row-copy amplification (no shuffle, it
     streams through codegen, but real memory-bandwidth cost; VERDICT r4
-    nit #3). With ``prefilter=True`` (default) the explode runs at
-    START grain instead: an array-lambda filter keeps only indices that
+    nit #3). So the explode runs at START grain instead: an array-lambda filter keeps only indices that
     pass every n-INDEPENDENT necessary condition — no left noun
     continuation, first token not ``'s'``, first token a stopword only
     when capitalized/sentence-initial, and (the big one) first token
@@ -590,9 +561,8 @@ def extract_mentions_ngram_relational_multi(
     codegen ``InSet`` hash probe built from the (broadcast-sized by
     contract) alias dim at plan time. Only surviving starts explode
     their ≤6 n-windows, so the heavy arrays are copied ~(matched-start
-    fraction)·6 times per token instead of 6. Measured
-    (scripts/multi_matcher_bench.py, BENCH.md "Multi-word matcher
-    window cap"): neutral (0.99–1.02×) when dictionary first tokens
+    fraction)·6 times per token instead of 6. Measured (BENCH.md
+    "Multi-word matcher window cap (round 5)"): neutral (0.99–1.02×) when dictionary first tokens
     densely cover the corpus — the interpreted filter pass offsets the
     explode savings — and 1.40× on 600-token docs with sparse coverage,
     the realistic alias-map shape. Then ONE broadcast join keyed
@@ -601,7 +571,7 @@ def extract_mentions_ngram_relational_multi(
     but at candidate grain — a handful of elements per document).
     Equality with the Python extractor is pinned by a hypothesis
     differential fuzz over capitalized multi-word vocab
-    (tests/test_mentions.py), run with the prefilter both on and off.
+    (tests/test_mentions.py).
     """
     stop = sorted(STOP_WORDS)
 
@@ -640,24 +610,19 @@ def extract_mentions_ngram_relational_multi(
         )
         return ok
 
-    if prefilter:
-        # dictionary first tokens, collected from the alias dim (which
-        # the join below broadcasts anyway — same memory contract).
-        # >10 values makes Catalyst compile isin() to an InSet hash
-        # probe, O(1) per token at any dictionary size.
-        firsts = sorted(
-            {
-                (r["alias"] or "").split(" ")[0]
-                for r in alias_df.select("alias").distinct().collect()
-            }
-        )
-        dict_start = lambda i: F.element_at(F.col("_arrl"), i + 1).isin(*firsts)  # noqa: E731
-    else:
-        dict_start = lambda i: F.lit(True)  # noqa: E731
-
+    # dictionary first tokens, collected from the alias dim (which
+    # the join below broadcasts anyway — same memory contract).
+    # >10 values makes Catalyst compile isin() to an InSet hash
+    # probe, O(1) per token at any dictionary size.
+    firsts = sorted(
+        {
+            (r["alias"] or "").split(" ")[0]
+            for r in alias_df.select("alias").distinct().collect()
+        }
+    )
     starts = F.filter(
         F.sequence(F.lit(0), F.col("_len") - 1),
-        lambda i: start_ok(i) & dict_start(i),
+        lambda i: start_ok(i) & F.element_at(F.col("_arrl"), i + 1).isin(*firsts),
     )
     si = base.withColumn("_i", F.explode(starts))
     wins = si.withColumn(

@@ -380,11 +380,15 @@ def ivf_table_topk(
                     c_o.append(c)
             yield pd.DataFrame({"query_id": q_o, "qv": v_o, "cell": c_o})
 
+    # lazy localCheckpoint: the cells collect below materializes the
+    # probes once and the returned plan reads those blocks, instead of
+    # re-running the scoring pass inside the join
     probes = (
         st.read_table(spark, table)
         .where(F.col(id_col) < n_queries)
         .select(id_col, vec_col)
         .mapInPandas(_score_probes, "query_id long, qv array<double>, cell long")
+        .localCheckpoint(eager=False)
     )
     probe_cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
 

@@ -41,14 +41,13 @@ def cooccurrence_pairs(ents: DataFrame) -> DataFrame:
     return e1.join(e2, "doc_id").where(F.col("subj") != F.col("obj"))
 
 
-def emit_triples(pairs: DataFrame, kg_relations: DataFrame, keep_lineage: bool = False) -> DataFrame:
+def emit_triples(pairs: DataFrame, kg_relations: DataFrame) -> DataFrame:
     """pairs ⋈ broadcast(kg_relations) → dedup'd (subj, pred, obj)."""
     rel = kg_relations.select(
         F.col("subj_qid").alias("subj"), F.col("rel").alias("pred"), F.col("obj_qid").alias("obj")
     )
     joined = pairs.join(F.broadcast(rel), ["subj", "obj"])
-    cols = ["subj", "pred", "obj"] + (["doc_id"] if keep_lineage else [])
-    return joined.select(*cols).dropDuplicates(["subj", "pred", "obj"])
+    return joined.select("subj", "pred", "obj").dropDuplicates()
 
 
 def triples_from_doc_entities(

@@ -152,7 +152,7 @@ def shingle_body_sql(n: int, src: str = "documents", extra_where: str = "") -> s
 
 def band_minima_body_sql(n_bands: int = 8) -> str:
     """CTE body: per-(id, band) MinHash bucket minima over a ``sh``
-    CTE — mirror of ``operators.dedup._band_minima``."""
+    CTE — mirror of ``operators.dedup._band_minima_arrays``."""
     vals = ",".join(f"({b})" for b in range(n_bands))
     return f"""
   SELECT id, b.band AS band, min(md5(CAST(b.band AS VARCHAR) || ':' || shingle)) AS min_hash

@@ -80,7 +80,7 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def fan_scan(df, min_parallelism: int | None = None, key_cols: tuple = ()):
+def fan_scan(df, key_cols: tuple = ()):
     """Scale-adaptive scan fan-out (optimization guide §2.5/§6.1).
 
     Parquet split planning is row-group-bound: a small input that is one
@@ -106,7 +106,7 @@ def fan_scan(df, min_parallelism: int | None = None, key_cols: tuple = ()):
     rows per plan. Hash-by-id also skips that pre-sort.
     """
     sc = df.sparkSession.sparkContext
-    target = int(min_parallelism or sc.defaultParallelism)
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         if key_cols:
             from pyspark.sql import functions as F

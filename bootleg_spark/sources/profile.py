@@ -27,8 +27,7 @@ Reference semantics (all re-implemented, none copied):
 Every transformation is a pure DataFrame plan: ``spark.read.json`` with
 an explicit schema (no sampling pass), posexplode for order-preserving
 truncation, map_entries for the type-system dict. The only Python is
-the Arrow-batched lnrm UDF, skipped on ASCII-only corpora via the
-codegen fast path.
+the Arrow-batched lnrm UDF.
 """
 
 from __future__ import annotations
@@ -44,7 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from bootleg_spark.functions.lnrm import lnrm_ascii_col, lnrm_udf
+from bootleg_spark.functions.lnrm import lnrm_udf
 
 # Explicit schema: no inference pass over the data (at 100 TB an
 # inference scan would double the read), stable column types regardless
@@ -227,9 +226,7 @@ def assert_valid_profile(profile: DataFrame, max_show: int = 5) -> None:
         raise ValueError(f"invalid entity profile: {msg}")
 
 
-def profile_entities(
-    profile: DataFrame, ascii_fast_path: bool = False, order: str = "qid"
-) -> DataFrame:
+def profile_entities(profile: DataFrame, order: str = "qid") -> DataFrame:
     """Entity dim (qid, eid, title, descr): dense 1-based eids via the
     two-phase distributed numbering (no global window) —
     entity_symbols.py:43-45.
@@ -263,15 +260,10 @@ def profile_entities(
     return dense_ids(ents, "qid", id_col="eid", start=1)
 
 
-def profile_alias_candidates(
-    profile: DataFrame, max_candidates: int = 30, ascii_fast_path: bool = False
-) -> DataFrame:
+def profile_alias_candidates(profile: DataFrame, max_candidates: int = 30) -> DataFrame:
     """(alias, qid, score, rank): lnrm-normalized mentions, per-alias
     sort (score desc, qid-string desc) truncated to max_candidates
-    (entity_profile.py:246-249 + entity_symbols.py:305-316).
-
-    ``ascii_fast_path`` swaps the Arrow lnrm UDF for the equivalent
-    JVM expression (valid for ASCII-only corpora)."""
+    (entity_profile.py:246-249 + entity_symbols.py:305-316)."""
     m = profile.select(
         F.col("entity_id").alias("qid"),
         F.explode("mentions").alias("mention"),
@@ -280,12 +272,7 @@ def profile_alias_candidates(
         F.element_at("mention", 1).alias("raw_mention"),
         F.element_at("mention", 2).cast("double").alias("score"),
     )
-    alias = (
-        lnrm_ascii_col(F.col("raw_mention"))
-        if ascii_fast_path
-        else lnrm_udf(F.col("raw_mention"))
-    )
-    m = m.select(alias.alias("alias"), "qid", "score").where(F.length("alias") > 0)
+    m = m.select(lnrm_udf(F.col("raw_mention")).alias("alias"), "qid", "score").where(F.length("alias") > 0)
     w = Window.partitionBy("alias").orderBy(F.desc("score"), F.desc("qid"))
     return m.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= max_candidates
@@ -339,15 +326,12 @@ def profile_dims(
     max_candidates: int = 30,
     max_types: int = 10,
     max_kg_connections: int = 100,
-    ascii_fast_path: bool = False,
 ) -> dict[str, DataFrame]:
     """All four dim tables from one profile frame — the Spark analogue
     of EntityProfile.load_from_jsonl (entity_profile.py:146-204)."""
     return {
         "entities": profile_entities(profile),
-        "alias_cands": profile_alias_candidates(
-            profile, max_candidates, ascii_fast_path=ascii_fast_path
-        ),
+        "alias_cands": profile_alias_candidates(profile, max_candidates),
         "entity_types": profile_entity_types(profile, max_types),
         "kg_relations": profile_kg_relations(profile, max_kg_connections),
     }

@@ -24,22 +24,38 @@ from bootleg_spark import synthspec as S
 from bootleg_spark.functions.textproc import STOP_WORDS
 
 
-# DataFrame cache keyed like _PIPE_CACHE: fan_scan's partition probe
-# plans the scan once per (session, dir) instead of on every query build
-_DOCS_CACHE: dict = {}
+# One entry per (session, sf_dir): the fanned documents scan (fan_scan's
+# partition probe plans it once, not on every query build) and, once
+# built, its dims; valid while documents.parquet keeps its
+# modification time
+_SCANS: dict[tuple[int, str], dict] = {}
+
+
+def _scan_entry(spark: SparkSession, sf_dir: str) -> dict:
+    """The cache entry for (session, sf_dir), rebuilt when
+    ``documents.parquet`` was rewritten since it was cached. The stamp
+    is the path's modification time read through the Hadoop FS (as
+    ``store.path_exists`` does), so any URI scheme works; the replaced
+    entry's cached dims are unpersisted."""
+    from bootleg_spark.session import fan_scan
+
+    path = f"{sf_dir}/documents.parquet"
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    stamp = fs.getFileStatus(p).getModificationTime() if fs.exists(p) else None
+    key = (id(spark), sf_dir)
+    entry = _SCANS.get(key)
+    if entry is None or entry["stamp"] != stamp:
+        if entry is not None:
+            for df in (entry["dims"] or {}).values():
+                df.unpersist()
+        docs = fan_scan(spark.read.parquet(path), key_cols=("doc_id",))
+        entry = _SCANS[key] = {"stamp": stamp, "docs": docs, "dims": None}
+    return entry
 
 
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bootleg_spark.session import fan_scan
-
-    key = (id(spark), sf_dir)
-    df = _DOCS_CACHE.get(key)
-    if df is None:
-        df = fan_scan(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"), key_cols=("doc_id",)
-        )
-        _DOCS_CACHE[key] = df
-    return df
+    return _scan_entry(spark, sf_dir)["docs"]
 
 
 def pages_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,28 +261,23 @@ def synthetic_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DIMS_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-
 def build_dims(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """All dimension tables for an sf dir (small → broadcast at join time).
 
-    Cached + persisted per (session, sf_dir): the dims are the pipeline's
-    static entity profile — built once, reused by every downstream query
-    (the reference mmaps them once per worker; we ``.cache()`` once per
-    executor)."""
-    key = (id(spark), sf_dir)
-    if key in _DIMS_CACHE:
-        return _DIMS_CACHE[key]
-    docs = read_documents(spark, sf_dir)
-    aliases = alias_vocab(docs).cache()
-    ents = entities_dim(aliases).cache()
-    dims = {
-        "documents": docs,
-        "aliases": aliases,
-        "entities": ents,
-        "alias_cands": alias_cands(ents).cache(),
-        "kg_relations": kg_relations(ents).cache(),
-    }
-    _DIMS_CACHE[key] = dims
-    return dims
+    Cached + persisted per (session, sf_dir) until ``documents.parquet``
+    is rewritten: the dims are the pipeline's static entity profile —
+    built once, reused by every downstream query (the reference mmaps
+    them once per worker; we ``.cache()`` once per executor)."""
+    entry = _scan_entry(spark, sf_dir)
+    if entry["dims"] is None:
+        docs = entry["docs"]
+        aliases = alias_vocab(docs).cache()
+        ents = entities_dim(aliases).cache()
+        entry["dims"] = {
+            "documents": docs,
+            "aliases": aliases,
+            "entities": ents,
+            "alias_cands": alias_cands(ents).cache(),
+            "kg_relations": kg_relations(ents).cache(),
+        }
+    return entry["dims"]

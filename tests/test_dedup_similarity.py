@@ -213,6 +213,19 @@ def test_ivf_table_layout_prunes_and_matches(spark, tmp_path):
     assert len(pruned) < n_files
 
 
+def test_ivf_table_topk_scores_probes_once(spark, tmp_path):
+    """The probe-scoring mapInPandas runs once, for the probe-cell
+    collect; the returned plan reads the checkpointed probes instead of
+    scoring them again inside the join."""
+    df = _emb_df(spark)
+    table = str(tmp_path / "vecs")
+    similarity.build_ivf_table(spark, df, table, n_cells=4)
+    out = similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=1)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert out.count() > 0
+
+
 def test_ivf_table_topk_no_queries_returns_empty(spark, tmp_path):
     """ADVICE r05 low: with no row satisfying id < n_queries the probe
     set is empty — must return an empty typed frame, not crash on

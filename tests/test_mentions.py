@@ -274,12 +274,3 @@ def test_relational_multiword_extractor_equals_python(spark):
     ]
     assert sorted(got) == sorted(expected)
     assert len(got) > 50  # the fixture really exercises matches
-    # the start-grain prefilter (InSet first-token probe) must be a
-    # pure optimization: identical rows with it disabled
-    got_nopre = [
-        (r["text"], r["alias"], r["char_start"], r["char_end"])
-        for r in extract_mentions_ngram_relational_multi(
-            df, adf, prefilter=False
-        ).collect()
-    ]
-    assert sorted(got_nopre) == sorted(expected)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from bootleg_spark.operators import dedup
 from bootleg_spark.session import fan_scan
-from bootleg_spark.sources.synth import read_documents
+from bootleg_spark.sources.synth import build_dims, read_documents
 
 SF = "/root/testdata/sf0.001"
 
@@ -42,6 +42,28 @@ def test_fan_scan_limit_is_projection_independent(docs):
     a = [r["doc_id"] for r in docs.limit(7).select("doc_id").collect()]
     b = [r["doc_id"] for r in docs.limit(7).select("doc_id", "text", "lang").collect()]
     assert a == b
+
+
+def test_rewritten_documents_invalidate_cached_scan_and_dims(spark, tmp_path):
+    """A documents.parquet rewritten in the same session is re-read:
+    the cached scan and the dims built from it follow the new rows."""
+    sf_dir = str(tmp_path)
+    path = f"{sf_dir}/documents.parquet"
+
+    def write(rows):
+        spark.createDataFrame(rows, "doc_id long, text string, lang string").write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    def aliases():
+        return {r["alias"] for r in build_dims(spark, sf_dir)["aliases"].collect()}
+
+    write([(1, "alpha bravo", "en"), (2, "charlie", "en")])
+    assert {r["doc_id"] for r in read_documents(spark, sf_dir).collect()} == {1, 2}
+    assert aliases() == {"alpha", "bravo", "charlie"}
+    write([(7, "delta echo", "en"), (8, "foxtrot", "en"), (9, "golf", "en")])
+    assert {r["doc_id"] for r in read_documents(spark, sf_dir).collect()} == {7, 8, 9}
+    assert aliases() == {"delta", "echo", "foxtrot", "golf"}
 
 
 def test_doc_shingle_arrays_match_word_shingles(docs):
