@@ -56,14 +56,13 @@ reach(src, dst) AS (
   SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst
 )"""
 
-_PIPE_CACHE: dict[tuple[str, str], KgPipeline] = {}
-
-
 def _pipe(spark: SparkSession, sf_dir: str) -> KgPipeline:
-    key = (str(id(spark)), sf_dir)
-    if key not in _PIPE_CACHE:
-        _PIPE_CACHE[key] = KgPipeline(spark, sf_dir)
-    return _PIPE_CACHE[key]
+    """The pipeline for (session, sf_dir), held in synth's scan entry:
+    a rewritten documents.parquet rebuilds it with the scan and dims."""
+    entry = synth._scan_entry(spark, sf_dir)
+    if "pipe" not in entry:
+        entry["pipe"] = KgPipeline(spark, sf_dir)
+    return entry["pipe"]
 
 
 def _docs(spark, sf_dir):

@@ -360,7 +360,6 @@ def materialize_triples(
     # resuming over a manifest written under a DIFFERENT scheme would
     # silently skip a different page set than was actually written and
     # mix partition-directory layouts (round-2 advice) — refuse instead.
-    # The layout itself is shared with the streaming merge (sources/store).
     layout = store.layout_id(["doc_id"], n_buckets)
     done: set[int] = set()
     if resume and os.path.exists(manifest_path):
@@ -436,9 +435,6 @@ def materialize_triples(
     conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         store.write_buckets(tri, triples_path, mode="overwrite")
-        # marker lets any other store consumer (e.g. the streaming merge,
-        # whose key is (subj,pred,obj), not doc_id) refuse this layout
-        store.write_layout_marker(pipe.spark, triples_path, layout)
     finally:
         conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     dt = time.time() - t0
@@ -479,7 +475,6 @@ def snapshot_triples(
     extractor: str = "ngram",
     scorer: str = "neural",
     n_files: int = 8,
-    threshold: float | None = None,
 ) -> dict:
     """Materialize the pipeline's (subj, pred, obj) triples as a
     committed snapshot of a snapshot-manifest graph table
@@ -503,8 +498,7 @@ def snapshot_triples(
     resume, snapshot the union)."""
     from bootleg_spark.sources import snaptable as st
 
-    kwargs = {} if threshold is None else {"threshold": threshold}
-    tri = pipe.triples(extractor=extractor, scorer=scorer, **kwargs)
+    tri = pipe.triples(extractor=extractor, scorer=scorer)
     # north-rule lineage: the snapshot records what produced it; the
     # write/commit throughput is stamped by write_table itself (inside
     # the manifest BEFORE the atomic publish — committed snapshots are
@@ -518,10 +512,35 @@ def snapshot_triples(
                 "sf_dir": pipe.sf_dir,
                 "extractor": extractor,
                 "scorer": scorer,
-                "threshold": threshold,
             }
         },
     )
+
+
+def insert_new_triples(tri: DataFrame, graph_table: str, batch_id: int) -> dict | None:
+    """Land ``tri`` in ``graph_table`` with edge-set semantics: the one
+    incremental graph writer, shared by :func:`incremental_kg_update`
+    and the page stream (streaming/ingest.py).
+
+    The anti-join against the graph gives the KG its set semantics
+    across batches (``pipe.triples`` dedups within a batch only); at
+    scale it is a shuffle join on (subj, pred, obj) against the graph —
+    the standard insert-if-absent shape, prunable further by reading
+    only the subj-range files the batch's triples can touch. The
+    survivors commit under the graph's ``batch_id`` watermark
+    (``commit_stream_batch``), so a replayed batch is a no-op even if
+    the anti-join has not already emptied it.
+
+    Returns the committed snapshot, or ``None`` for a replayed
+    ``batch_id``."""
+    from bootleg_spark.sources import snaptable as st
+
+    if st.latest_version(graph_table) is not None:
+        existing = st.read_table(tri.sparkSession, graph_table).select(
+            "subj", "pred", "obj"
+        )
+        tri = tri.join(existing, ["subj", "pred", "obj"], "left_anti")
+    return st.commit_stream_batch(tri, graph_table, batch_id=batch_id)
 
 
 def incremental_kg_update(
@@ -550,11 +569,7 @@ def incremental_kg_update(
       no-op anyway.
     - crash before the commit → plain replay, nothing was written.
 
-    The anti-join gives the KG its set semantics across batches
-    (``pipe.triples`` dedups within a batch only); at scale it is a
-    shuffle join on (subj, pred, obj) against the graph — the standard
-    insert-if-absent shape, prunable further by reading only the
-    subj-range files the batch's triples can touch.
+    Both guards live in :func:`insert_new_triples`.
 
     Returns ``{"consumed_version", "new_triples", "commit"}`` or
     ``None`` when the consumer is caught up."""
@@ -565,12 +580,7 @@ def incremental_kg_update(
         return None
     pages, v = got
     tri = pipe.triples(pages, extractor=extractor, scorer=scorer)
-    if st.latest_version(graph_table) is not None:
-        existing = st.read_table(pipe.spark, graph_table).select(
-            "subj", "pred", "obj"
-        )
-        tri = tri.join(existing, ["subj", "pred", "obj"], "left_anti")
-    commit = st.commit_stream_batch(tri, graph_table, batch_id=v)
+    commit = insert_new_triples(tri, graph_table, batch_id=v)
     st.ack_consumed(pages_table, group, v)
     return {
         "consumed_version": v,

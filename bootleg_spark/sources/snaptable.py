@@ -51,10 +51,11 @@ What it reproduces, and how it maps onto the real thing:
   retypes rejected); reads align every file to the snapshot schema
   with null backfill for pre-evolution files.
 
-The engine's own bucketed stores (sources/store.py) stay as-is — this
-layer is the general table-format seam; ``materialize_triples``-style
-ops would commit their bucket directories as snapshots on a real
-deployment.
+Every incremental graph write lands here: the page stream and the
+table-as-log step both insert through
+``plans/pipeline.py:insert_new_triples``. The one bucketed store left
+(sources/store.py) is ``materialize_triples``' mid-run checkpoint; on a
+real deployment it would commit its bucket directories as snapshots.
 """
 
 from __future__ import annotations

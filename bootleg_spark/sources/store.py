@@ -1,15 +1,17 @@
-"""Bucketed parquet store layout — ONE definition shared by the batch
-materializer (plans/pipeline.py:materialize_triples) and the streaming
-merge (streaming/ingest.py:merge_new_triples).
+"""Bucketed parquet store layout of the batch materializer
+(plans/pipeline.py:materialize_triples): the bucket key, the
+partition-directory scheme and the layout id its checkpoint manifest
+records, so resume can refuse a store written under a different layout
+instead of silently skipping the wrong rows (round-2 advice on the
+materializer manifest). Incremental writers do not use this layout;
+they land triples in the snapshot-manifest graph table
+(sources/snaptable.py).
 
 This is the Iceberg/Delta-shaped seam: on a cluster with a real table
 format, :func:`bucket_expr` becomes the table's ``bucket(n, cols...)``
-partition transform, :func:`write_buckets` becomes a table append /
-``MERGE INTO`` on the key, and :func:`read_buckets`'s manual ``isin``
-pruning becomes metadata-only partition pruning. The layout-id string
-versions the (key columns, bucket count, scheme) triple so resume logic
-can refuse a store written under a different layout instead of silently
-skipping the wrong rows (round-2 advice on the materializer manifest).
+partition transform, :func:`write_buckets` a table overwrite of the
+named partitions, and :func:`read_buckets`'s manual ``isin`` pruning
+metadata-only partition pruning.
 
 Keying on ``xxhash64`` (not ``hash``): Spark documents ``hash`` as
 Murmur3 whose seed/behavior is tied to internal use (it also backs
@@ -33,17 +35,13 @@ def bucket_expr(n_buckets: int, *cols) -> Column:
 
 
 def layout_id(key_cols: list[str], n_buckets: int) -> str:
-    """Version string recorded next to every bucketed store (manifest
-    lines / stream metadata); compare with ``==`` before resuming."""
+    """Version string recorded in every manifest line of a bucketed
+    store; compare with ``==`` before resuming."""
     return f"xxhash64({','.join(key_cols)})/{BUCKET_COL}={n_buckets}/v{LAYOUT_VERSION}"
 
 
-def with_bucket(df: DataFrame, key_cols: list[str], n_buckets: int) -> DataFrame:
-    return df.withColumn(BUCKET_COL, bucket_expr(n_buckets, *[F.col(c) for c in key_cols]))
-
-
 def write_buckets(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Write a ``with_bucket``-ed frame partitioned by the bucket column.
+    """Write a frame carrying :data:`BUCKET_COL` partitioned by it.
     ``mode="overwrite"`` pairs with dynamic partitionOverwriteMode for
     selective bucket rewrite (the materializer's resume)."""
     df.write.mode(mode).partitionBy(BUCKET_COL).parquet(path)
@@ -53,59 +51,3 @@ def read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFram
     """Partition-pruned read of only the named buckets — per-call read
     volume is O(store × |buckets| / n_buckets), not O(store)."""
     return spark.read.parquet(path).where(F.col(BUCKET_COL).isin(buckets))
-
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def write_layout_marker(spark: SparkSession, path: str, layout: str) -> None:
-    """Record ``layout`` in ``<path>/_LAYOUT`` (overwrites). Call when
-    creating a bucketed store so later writers can refuse a mismatched
-    scheme instead of silently mixing partition layouts."""
-    fs, _ = _fs_and_path(spark, path)
-    _, marker = _fs_and_path(spark, path.rstrip("/") + "/_LAYOUT")
-    out = fs.create(marker, True)
-    try:
-        out.write(bytearray(layout.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def read_layout_marker(spark: SparkSession, path: str) -> str | None:
-    """The layout id recorded at ``<path>/_LAYOUT``, or None if absent
-    (a store predating layout versioning — treat as a mismatch)."""
-    fs, _ = _fs_and_path(spark, path)
-    _, marker = _fs_and_path(spark, path.rstrip("/") + "/_LAYOUT")
-    if not fs.exists(marker):
-        return None
-    jvm = spark._jvm
-    reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(fs.open(marker)))
-    try:
-        return reader.readLine()
-    finally:
-        reader.close()
-
-
-def check_layout(spark: SparkSession, path: str, layout: str) -> None:
-    """Raise unless the store at ``path`` records exactly ``layout``."""
-    found = read_layout_marker(spark, path)
-    if found != layout:
-        raise ValueError(
-            f"store {path} was written under layout {found!r}, current "
-            f"layout is {layout!r}; merging would mix partition schemes — "
-            "use a fresh path or migrate the store"
-        )
-
-
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence check — valid for hdfs://, s3a://, file://
-    alike (``os.path.exists`` would silently say "no" for any non-local
-    URI). Only a missing path may skip an anti-join; real read errors
-    must propagate."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))

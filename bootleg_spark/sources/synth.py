@@ -26,17 +26,17 @@ from bootleg_spark.functions.textproc import STOP_WORDS
 
 # One entry per (session, sf_dir): the fanned documents scan (fan_scan's
 # partition probe plans it once, not on every query build) and, once
-# built, its dims; valid while documents.parquet keeps its
-# modification time
+# built, its dims (and the driver contract's KgPipeline, under "pipe");
+# valid while documents.parquet keeps its modification time
 _SCANS: dict[tuple[int, str], dict] = {}
 
 
 def _scan_entry(spark: SparkSession, sf_dir: str) -> dict:
     """The cache entry for (session, sf_dir), rebuilt when
     ``documents.parquet`` was rewritten since it was cached. The stamp
-    is the path's modification time read through the Hadoop FS (as
-    ``store.path_exists`` does), so any URI scheme works; the replaced
-    entry's cached dims are unpersisted."""
+    is the path's modification time read through the Hadoop FS, so any
+    URI scheme works (``os.path`` would see only local paths); the
+    replaced entry's cached dims are unpersisted."""
     from bootleg_spark.session import fan_scan
 
     path = f"{sf_dir}/documents.parquet"

@@ -3,171 +3,46 @@
 The reference is strictly batch (SURVEY.md §2.11: no watermarks/
 windows/state anywhere in Bootleg). This module is the engine extension
 for continuously arriving crawl data: a Structured Streaming file
-source over the pages table feeds the SAME relational stages
-(extract → word mentions → candidate top-1 → co-occurrence ⋈ relations)
-per micro-batch, with ``foreachBatch`` merging new triples into the
-materialized store idempotently.
-
-Merge design (round 2 — replaces the read-everything anti-join):
-- the store is written PARTITIONED BY a key-hash bucket column
-  (``pmod(xxhash64(subj,pred,obj), n_buckets)``);
-- each micro-batch computes its triples' buckets first, then reads ONLY
-  those store partitions for the anti-join (partition pruning on the
-  directory column — per-batch read volume is
-  O(store x touched_buckets / n_buckets), not O(store));
-- store absence is detected with an explicit path check; any OTHER read
-  error propagates (round 1's blanket ``except: pass`` could silently
-  skip the anti-join after a transient failure and append duplicates —
-  VERDICT r1 "What's wrong" #3).
-
-On a cluster with a table format (Delta/Iceberg — jars absent in this
-sandbox) the same ``foreachBatch`` body becomes a single ``MERGE INTO``
-on the key, and the bucket plumbing disappears.
+source over page-shaped parquet feeds every micro-batch through
+``KgPipeline.triples`` — the same fused linking kernel as the batch and
+table-as-log paths — and ``foreachBatch`` lands the triples in the
+snapshot-manifest graph table (sources/snaptable.py) through
+:func:`bootleg_spark.plans.pipeline.insert_new_triples`, the one
+incremental graph writer: an anti-join against the graph (edge-set
+semantics across batches) and a commit stamped with the micro-batch id
+(a batch replayed after a crash between commit and checkpoint is a
+no-op). On a cluster with Iceberg/Delta that step is a single
+``MERGE INTO`` on (subj, pred, obj).
 """
 
 from __future__ import annotations
 
-import os
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from bootleg_spark.operators.candidates import attach_candidates
-from bootleg_spark.operators.linking import link_popularity
-from bootleg_spark.operators.mentions import extract_mentions_word
-from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
-from bootleg_spark.sources import store
-
-N_BUCKETS = 64
-_KEY = ["subj", "pred", "obj"]
-
-
-def stream_pages(spark: SparkSession, src_dir: str, schema) -> DataFrame:
-    """File-source page stream (new parquet files under ``src_dir``).
-    maxFilesPerTrigger bounds per-batch work (backpressure)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src_dir)
-    )
-
-
-def triples_for_batch(batch: DataFrame, dims: dict) -> DataFrame:
-    """The batch pipeline applied to one micro-batch of pages."""
-    mentions = extract_mentions_word(
-        batch.select("doc_id", F.col("text")), dims["aliases"], text_col="text"
-    )
-    mc = attach_candidates(mentions, dims["alias_cands"])
-    linked = link_popularity(mc)
-    ents = doc_entities(linked, id_col="doc_id", qid_col="qid_pred")
-    return triples_from_doc_entities(ents, dims["kg_relations"])
-
-
-def merge_new_triples(
-    spark: SparkSession,
-    new: DataFrame,
-    triples_path: str,
-    n_buckets: int = N_BUCKETS,
-) -> list[int]:
-    """Idempotently append ``new`` (subj, pred, obj) to the bucketed
-    store (layout shared with the batch materializer via
-    :mod:`bootleg_spark.sources.store`); returns the bucket ids the
-    anti-join actually read (the pruning evidence the tests assert on).
-
-    Store absence must be decided explicitly: only a missing path skips
-    the anti-join; real read errors propagate.
-    """
-    layout = store.layout_id(_KEY, n_buckets)
-    keyed = store.with_bucket(new.select(*_KEY), _KEY, n_buckets)
-    # buckets present in this batch: <= n_buckets tiny rows to the driver.
-    # unpersist must target the SAME handle that was persisted — calling
-    # it on a frame derived from the cached one is a no-op for the cache
-    # manager and leaks one cached plan per micro-batch for the stream's
-    # lifetime (round-2 advice); finally guards the writer failing too.
-    cached = keyed.persist()
-    try:
-        touched = sorted(
-            r[store.BUCKET_COL]
-            for r in cached.select(store.BUCKET_COL).distinct().collect()
-        )
-        out = cached
-        if store.path_exists(spark, triples_path):
-            # refuse a store written under a different bucket key/count/
-            # column (incl. pre-versioning stores with no marker) — the
-            # anti-join would read the wrong partitions and the write
-            # would mix directory schemes
-            store.check_layout(spark, triples_path, layout)
-            existing = store.read_buckets(spark, triples_path, touched).select(*_KEY)
-            out = cached.join(existing, _KEY, "left_anti")
-            store.write_buckets(out, triples_path)
-        else:
-            store.write_buckets(out, triples_path)
-            store.write_layout_marker(spark, triples_path, layout)
-    finally:
-        cached.unpersist()
-    return touched
+from bootleg_spark.plans.pipeline import KgPipeline, insert_new_triples
 
 
 def start_snapshot_triple_stream(
-    spark: SparkSession,
+    pipe: KgPipeline,
     src_dir: str,
     table: str,
     checkpoint: str,
-    dims: dict,
-    schema,
     trigger_available_now: bool = True,
 ):
-    """Incremental triple materializer publishing to the
-    snapshot-manifest graph table (sources/snaptable.py) instead of the
-    bucketed store: every micro-batch appends ONE committed snapshot
-    stamped with its batch_id, so a replayed batch after a crash
-    between commit and checkpoint is detected and skipped
-    (``commit_stream_batch``) — exactly-once at the table level, with
-    the whole history time-travelable. The bucketed-store variant
-    (:func:`start_triple_stream`) dedups at ROW grain (content
-    anti-join); this one dedups at BATCH grain, which is the cheap and
-    sufficient rule when the source is replay-deterministic."""
-    from bootleg_spark.sources import snaptable as st
+    """Start the incremental triple materializer: new page files under
+    ``src_dir`` (schema of ``pipe.pages()``) are linked and inserted
+    into the graph ``table``, one committed snapshot per micro-batch,
+    the whole history time-travelable. maxFilesPerTrigger bounds
+    per-batch work (backpressure)."""
 
     def _commit(batch: DataFrame, batch_id: int) -> None:
-        st.commit_stream_batch(triples_for_batch(batch, dims), table, batch_id)
+        insert_new_triples(pipe.triples(batch), table, batch_id)
 
     writer = (
-        stream_pages(spark, src_dir, schema)
+        pipe.spark.readStream.schema(pipe.pages().schema)
+        .option("maxFilesPerTrigger", 8)
+        .parquet(src_dir)
         .writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_triple_stream(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    dims: dict,
-    schema,
-    trigger_available_now: bool = True,
-    n_buckets: int = N_BUCKETS,
-):
-    """Start the incremental triple materializer.
-
-    ``foreachBatch`` performs the idempotent bucket-pruned merge, so
-    replays/retries cannot duplicate (the streaming analogue of the
-    batch manifest's idempotent-resume rule).
-    """
-    triples_path = os.path.join(out_dir, "triples")
-    checkpoint = os.path.join(out_dir, "_checkpoint")
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        merge_new_triples(
-            batch.sparkSession, triples_for_batch(batch, dims), triples_path, n_buckets
-        )
-
-    writer = (
-        stream_pages(spark, src_dir, schema)
-        .writeStream.foreachBatch(_merge)
         .option("checkpointLocation", checkpoint)
     )
     if trigger_available_now:

@@ -66,6 +66,25 @@ def test_rewritten_documents_invalidate_cached_scan_and_dims(spark, tmp_path):
     assert aliases() == {"delta", "echo", "foxtrot", "golf"}
 
 
+def test_rewritten_documents_rebuild_entry_pipeline(spark, tmp_path):
+    """The driver contract's cached KgPipeline follows a rewritten
+    documents.parquet: its alias-set broadcast is rebuilt, not the one
+    built from the old rows."""
+    import __spark_entry__ as entrymod
+
+    sf_dir = str(tmp_path)
+
+    def write(text):
+        spark.createDataFrame([(1, text, "en")], "doc_id long, text string, lang string").write.mode(
+            "overwrite"
+        ).parquet(f"{sf_dir}/documents.parquet")
+
+    write("alpha bravo")
+    assert entrymod._pipe(spark, sf_dir).alias_set_bc.value == {"alpha", "bravo"}
+    write("delta echo")
+    assert entrymod._pipe(spark, sf_dir).alias_set_bc.value == {"delta", "echo"}
+
+
 def test_doc_shingle_arrays_match_word_shingles(docs):
     """explode(doc_shingle_arrays) ≡ word_shingles — the in-row form
     must reproduce the exploded+distinct r06 frame row-for-row."""

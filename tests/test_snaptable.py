@@ -266,6 +266,7 @@ def test_snapshot_carries_lineage_and_metrics(spark, tmp_path):
     lin = g["lineage"]
     assert lin["sf_dir"] == SF_SMOKE
     assert (lin["extractor"], lin["scorer"]) == ("word", "popularity")
+    assert set(lin) == {"sf_dir", "extractor", "scorer"}  # nothing it did not apply
     # durably in the manifest, not just the returned dict
     reread = st.load_snapshot(str(tmp_path / "graph"))
     assert reread["lineage"] == lin and reread["write_seconds"] > 0

@@ -1,77 +1,8 @@
-"""Streaming ingest: incremental triples == batch triples, idempotent."""
-
-import os
+"""Streaming ingest: incremental triples == batch triples, exactly once."""
 
 import pyspark.sql.functions as F
 
-from bootleg_spark.sources import synth
-from bootleg_spark.streaming.ingest import start_triple_stream, triples_for_batch
 from tests.conftest import SF_SMOKE
-
-
-def test_stream_matches_batch_and_is_idempotent(spark, tmp_path):
-    dims = synth.build_dims(spark, SF_SMOKE)
-    docs = dims["documents"].select("doc_id", "text")
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    # two "crawl arrivals"
-    docs.where(F.col("doc_id") % 2 == 0).write.parquet(src + "/part1")
-    docs.where(F.col("doc_id") % 2 == 1).write.parquet(src + "/part2")
-
-    q = start_triple_stream(spark, src + "/*", out, dims, docs.schema)
-    q.awaitTermination(300)
-
-    got = {
-        tuple(r)
-        for r in spark.read.parquet(os.path.join(out, "triples"))
-        .select("subj", "pred", "obj")
-        .collect()
-    }
-    expected = {tuple(r) for r in triples_for_batch(docs, dims).collect()}
-    assert got == expected and len(got) > 0
-
-    # restart over the same source: availableNow + checkpoint → no new
-    # files to process, and the anti-join merge keeps the store exact
-    q2 = start_triple_stream(spark, src + "/*", out, dims, docs.schema)
-    q2.awaitTermination(300)
-    got2 = {
-        tuple(r)
-        for r in spark.read.parquet(os.path.join(out, "triples"))
-        .select("subj", "pred", "obj")
-        .collect()
-    }
-    assert got2 == expected
-
-
-def test_merge_prunes_to_touched_buckets(spark, tmp_path):
-    """The anti-join reads ONLY the store partitions whose bucket
-    appears in the batch — per-batch read volume tracks the batch, not
-    the store (exact-once preserved across 3 merges)."""
-    from bootleg_spark.streaming.ingest import merge_new_triples
-
-    store = str(tmp_path / "triples")
-    mk = lambda rows: spark.createDataFrame(rows, ["subj", "pred", "obj"])
-
-    b1 = [(f"Q{i}", "rel", f"Q{i+1}") for i in range(40)]
-    touched1 = merge_new_triples(spark, mk(b1), store, n_buckets=64)
-    # batch 2: one duplicate + one new triple -> touches few buckets
-    b2 = [("Q0", "rel", "Q1"), ("X", "rel", "Y")]
-    touched2 = merge_new_triples(spark, mk(b2), store, n_buckets=64)
-    assert len(touched2) <= 2 < len(touched1)  # pruned read set
-    # batch 3: pure replay of batch 2 -> nothing appended
-    touched3 = merge_new_triples(spark, mk(b2), store, n_buckets=64)
-
-    got = {
-        tuple(r)
-        for r in spark.read.parquet(store).select("subj", "pred", "obj").collect()
-    }
-    assert got == set(b1) | set(b2)
-    # store stays partitioned by the SHARED layout's bucket column on
-    # disk (pruning is real; one layout module serves batch + streaming)
-    from bootleg_spark.sources.store import BUCKET_COL
-
-    assert any(p.startswith(f"{BUCKET_COL}=") for p in os.listdir(store))
 
 
 def test_session_windows_streaming_with_watermark(spark, tmp_path):
@@ -136,24 +67,6 @@ def test_session_windows_streaming_with_watermark(spark, tmp_path):
     assert not any(abs(tv - 100.0) < 1e-9 or tv > 99 for _, _, tv in got)
 
 
-def test_merge_refuses_layout_mismatch(spark, tmp_path):
-    """A store written under a different bucket count (or with no layout
-    marker at all — pre-versioning) must be refused, not silently merged
-    with the wrong partition pruning."""
-    import pytest
-
-    from bootleg_spark.streaming.ingest import merge_new_triples
-
-    store_path = str(tmp_path / "triples")
-    mk = lambda rows: spark.createDataFrame(rows, ["subj", "pred", "obj"])
-    merge_new_triples(spark, mk([("A", "r", "B")]), store_path, n_buckets=64)
-    with pytest.raises(ValueError, match="layout"):
-        merge_new_triples(spark, mk([("C", "r", "D")]), store_path, n_buckets=32)
-    os.remove(os.path.join(store_path, "_LAYOUT"))
-    with pytest.raises(ValueError, match="layout"):
-        merge_new_triples(spark, mk([("C", "r", "D")]), store_path, n_buckets=64)
-
-
 def test_linked_pipeline_runs_as_streaming_query(spark, tmp_path):
     """The fused KG linking plan (①–④, one stateless mapInPandas) must
     run unchanged under Structured Streaming: pages stream in as
@@ -193,47 +106,52 @@ def test_linked_pipeline_runs_as_streaming_query(spark, tmp_path):
 
 
 def test_snapshot_stream_exactly_once(spark, tmp_path):
-    """Streaming commits to the snapshot table: each micro-batch is one
-    version stamped with its batch_id; a restart reprocesses nothing,
-    a simulated batch REPLAY (crash between commit and checkpoint) is
+    """Streaming inserts into the snapshot graph table: two crawl
+    arrivals, each processed by its own stream run, leave exactly the
+    rows of ``pipe.triples`` over all pages — a triple both arrivals
+    produce lands once. A restart with no new input commits nothing,
+    and a replayed batch_id (crash between commit and checkpoint) is
     detected by the batch-id watermark and skipped."""
+    from bootleg_spark.plans.pipeline import KgPipeline, insert_new_triples
     from bootleg_spark.sources import snaptable as st
     from bootleg_spark.streaming.ingest import start_snapshot_triple_stream
 
-    dims = synth.build_dims(spark, SF_SMOKE)
-    docs = dims["documents"].select("doc_id", "text")
-
+    pipe = KgPipeline(spark, SF_SMOKE)
+    pages = pipe.pages()
     src = str(tmp_path / "src")
     table = str(tmp_path / "graph")
     ckpt = str(tmp_path / "ckpt")
-    docs.where(F.col("doc_id") % 2 == 0).write.parquet(src + "/part1")
-    docs.where(F.col("doc_id") % 2 == 1).write.parquet(src + "/part2")
 
-    q = start_snapshot_triple_stream(spark, src + "/*", table, ckpt, dims, docs.schema)
-    q.awaitTermination(300)
+    def run_stream():
+        q = start_snapshot_triple_stream(pipe, src + "/*", table, ckpt)
+        assert q.awaitTermination(300), "streaming query did not finish in 300s"
 
-    expected = {tuple(r) for r in triples_for_batch(docs, dims).collect()}
-    got = {
-        tuple(r)
-        for r in st.read_table(spark, table).select("subj", "pred", "obj").collect()
-    }
-    assert got == expected and len(got) > 0
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("subj", "pred", "obj").collect())
+
+    # the second arrival re-crawls every page, so each triple of the
+    # first arrives again: a writer without the anti-join lands it twice
+    pages.where(F.col("doc_id") % 2 == 0).write.parquet(src + "/part1")
+    run_stream()
+    first = rows(st.read_table(spark, table))
+    pages.write.parquet(src + "/part2")
+    run_stream()
+    got = rows(st.read_table(spark, table))
+    assert len(set(got)) == len(got)
+    assert got == rows(pipe.triples(pages)) and 0 < len(first) < len(got)
     v_after = st.latest_version(table)
     last_batch = st.load_snapshot(table)["stream_batch_id"]
 
     # restart with the same checkpoint: no new input → no new versions
-    q2 = start_snapshot_triple_stream(spark, src + "/*", table, ckpt, dims, docs.schema)
-    q2.awaitTermination(300)
+    run_stream()
     assert st.latest_version(table) == v_after
 
     # simulated replay of an already-committed batch → no-op, no version
-    replayed = st.commit_stream_batch(
-        triples_for_batch(docs.limit(3), dims), table, last_batch
-    )
-    assert replayed is None
+    recrawl = pipe.triples(pages)
+    assert insert_new_triples(recrawl, table, last_batch) is None
     assert st.latest_version(table) == v_after
-    # ...while a genuinely NEW batch commits the next version
-    s = st.commit_stream_batch(
-        triples_for_batch(docs.limit(3), dims), table, last_batch + 1
-    )
-    assert s is not None and s["version"] == v_after + 1
+    # ...while a genuinely NEW batch commits the next version, adding
+    # none of the triples already in the graph
+    s = insert_new_triples(recrawl, table, last_batch + 1)
+    assert s is not None and s["version"] == v_after + 1 and s["new_rows"] == 0
+    assert rows(st.read_table(spark, table)) == got
