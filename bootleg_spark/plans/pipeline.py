@@ -269,7 +269,12 @@ class KgPipeline:
             "qid_pred", "prob",
         )
 
-    def triples_fused_local(self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD) -> DataFrame:
+    def triples_fused_local(
+        self,
+        pages: DataFrame | None = None,
+        threshold: float = S.PROB_THRESHOLD,
+        group_cols: tuple | list = (),
+    ) -> DataFrame:
         """①–⑤ in one pass: per-page triple emission inside the fused
         kernel (:meth:`_link`).
 
@@ -280,24 +285,32 @@ class KgPipeline:
         mapInPandas → one global dropDuplicates. At full-Wikidata relation
         volume (beyond broadcast budgets) use ``triples(fused=False…)``'s
         semi-join plan instead.
+
+        ``group_cols`` are page columns carried onto each of the page's
+        triples; the dedup is then per group (the materializer's
+        ``_bucket``), as in ``triples_from_doc_entities(group_cols=…)``.
         """
         rel_bc = self.rel_dict_bc
+        p = pages if pages is not None else self.pages()
+        group_cols = list(group_cols)
+        cols = group_cols + ["subj", "pred", "obj"]
 
         def _page_triples(pdf, found, qid, prob):
             rels = rel_bc.value
             out, lo = set(), 0
-            for ms in found:
+            for ms, *key in zip(found, *(pdf[c] for c in group_cols)):
                 hi = lo + len(ms)
                 ents = {qid[i] for i in range(lo, hi) if qid[i] != "-1" and prob[i] > threshold}
                 lo = hi
                 for q in ents:
                     for rel, obj in rels.get(q, ()):
                         if obj in ents and obj != q:
-                            out.add((q, rel, obj))
-            return pd.DataFrame(list(out), columns=["subj", "pred", "obj"])
+                            out.add((*key, q, rel, obj))
+            return pd.DataFrame(list(out), columns=cols)
 
-        local = self._link(pages, [], _page_triples, "subj string, pred string, obj string")
-        return local.dropDuplicates(["subj", "pred", "obj"])
+        schema = "".join(f"{c} {p.schema[c].dataType.simpleString()}, " for c in group_cols)
+        local = self._link(p, group_cols, _page_triples, schema + "subj string, pred string, obj string")
+        return local.dropDuplicates(cols)
 
     def triples(
         self,
@@ -326,27 +339,68 @@ class KgPipeline:
         return triples_from_doc_entities(ents, self.dims["kg_relations"])
 
 
+def _manifest_done(out_dir: str, layout: str, sf_dir: str) -> set[int]:
+    """Buckets the store's ``_manifest.jsonl`` marks done (empty when
+    there is no manifest): what resume skips and what publication
+    requires. Refuses a manifest written under another layout (bucket
+    key, partition scheme, bucket count) or from another corpus: either
+    would skip a different page set than the store holds."""
+    manifest_path = os.path.join(out_dir, "_manifest.jsonl")
+    done: set[int] = set()
+    if not os.path.exists(manifest_path):
+        return done
+    with open(manifest_path) as f:
+        raw = f.readlines()
+    for idx, line in enumerate(raw):
+        if not line.strip():
+            continue
+        try:
+            rec = json.loads(line)
+        except json.JSONDecodeError:
+            if idx == len(raw) - 1:
+                # torn TRAILING line: the process died mid-append.
+                # Truncate it away (so this run's append starts on
+                # a clean line instead of concatenating onto the
+                # garbage) and carry on — the bucket is simply not
+                # marked done and gets recomputed; the dynamic-
+                # partition overwrite write is idempotent so the
+                # partial dir is replaced, never double-counted.
+                cut = len("".join(raw[:idx]).encode())
+                with open(manifest_path, "r+b") as tf:
+                    tf.truncate(cut)
+                break
+            raise  # torn line MID-file = real corruption, refuse
+        for key, want in (("layout", layout), ("sf_dir", sf_dir)):
+            if rec.get(key) != want:
+                raise ValueError(
+                    f"manifest {manifest_path} was written with {key} "
+                    f"{rec.get(key)!r}, this run has {want!r}; its "
+                    "buckets hold other pages — use a fresh out_dir "
+                    "or resume=False"
+                )
+        done.add(rec["bucket"])
+    return done
+
+
 def materialize_triples(
     pipe: KgPipeline,
     out_dir: str,
     n_buckets: int = 4,
     resume: bool = True,
-    extractor: str = "ngram",
-    scorer: str = "neural",
 ) -> list[dict]:
-    """Write triples bucketed by doc-id-hash with a checkpoint manifest,
-    in ONE pass over the input.
+    """Link the corpus once into a store of triples bucketed by
+    doc-id-hash, with a checkpoint manifest: the run's one linking
+    pass, which :func:`snapshot_triples` then publishes.
 
-    Round 1 looped over buckets on the driver, re-scanning the full
-    pages table once per bucket plus two extra count() scans (≈3·n_buckets
-    input scans — VERDICT r1 "What's wrong" #5). Now: a single filtered
-    scan feeds every remaining bucket via ``partitionBy("_bucket")`` with
-    dynamic partition overwrite; per-bucket page counts come from an
-    ``Observation`` (CollectMetrics inside the same write action, zero
-    extra scans) and triple counts from one aggregate over the small
-    output. On resume, completed buckets are filtered out of the scan and
-    their directories untouched — the Spark-native version of the
-    reference's skip-if-exists prep caching
+    A single filtered scan feeds every remaining bucket through the
+    fused kernel's triple emitter (:meth:`KgPipeline.triples_fused_local`
+    with ``group_cols=[_bucket]``, so triples dedup per bucket) and
+    ``partitionBy("_bucket")`` with dynamic partition overwrite. The
+    per-bucket page and triple counts come from two ``Observation``
+    objects (CollectMetrics inside the same write action: no extra
+    scan, no read-back). On resume, completed buckets are filtered out
+    of the scan and their directories untouched — the Spark-native
+    version of the reference's skip-if-exists prep caching
     (bootleg/utils/data_utils.py:57-104). At cluster scale ``n_buckets``
     grows with the input so each bucket is one recoverable unit of work.
     """
@@ -355,77 +409,24 @@ def materialize_triples(
     from bootleg_spark.sources import store
 
     os.makedirs(out_dir, exist_ok=True)
-    manifest_path = os.path.join(out_dir, "_manifest.jsonl")
-    # layout version pins (bucket key, partition scheme, bucket count):
-    # resuming over a manifest written under a DIFFERENT scheme would
-    # silently skip a different page set than was actually written and
-    # mix partition-directory layouts (round-2 advice) — refuse instead.
     layout = store.layout_id(["doc_id"], n_buckets)
-    done: set[int] = set()
-    if resume and os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            raw = f.readlines()
-        for idx, line in enumerate(raw):
-            if not line.strip():
-                continue
-            try:
-                rec = json.loads(line)
-            except json.JSONDecodeError:
-                if idx == len(raw) - 1:
-                    # torn TRAILING line: the process died mid-append.
-                    # Truncate it away (so this run's append starts on
-                    # a clean line instead of concatenating onto the
-                    # garbage) and carry on — the bucket is simply not
-                    # marked done and gets recomputed; the dynamic-
-                    # partition overwrite write is idempotent so the
-                    # partial dir is replaced, never double-counted.
-                    cut = len("".join(raw[:idx]).encode())
-                    with open(manifest_path, "r+b") as tf:
-                        tf.truncate(cut)
-                    break
-                raise  # torn line MID-file = real corruption, refuse
-            rec_layout = rec.get("layout")
-            if rec_layout != layout:
-                raise ValueError(
-                    f"manifest {manifest_path} was written under layout "
-                    f"{rec_layout!r}, current layout is {layout!r}; "
-                    "resume would skip the wrong pages — use a fresh "
-                    "out_dir or resume=False"
-                )
-            done.add(rec["bucket"])
+    done = _manifest_done(out_dir, layout, pipe.sf_dir) if resume else set()
     todo = [b for b in range(n_buckets) if b not in done]
     if not todo:
         return []
 
+    def per_bucket_counts(df, name):  # filled by the action that consumes df
+        obs = Observation(name)
+        bucket = F.col(store.BUCKET_COL)
+        return df.observe(obs, *[F.sum((bucket == b).cast("long")).alias(f"b{b}") for b in todo]), obs
+
     t0 = time.time()
-
-    def bucket_of(col):
-        return store.bucket_expr(n_buckets, col)
-
-    pages = pipe.pages()
+    pages = pipe.pages().withColumn(store.BUCKET_COL, store.bucket_expr(n_buckets, F.col("doc_id")))
     if done:
-        pages = pages.where(~bucket_of(F.col("doc_id")).isin(*done))
-    # Observation: per-bucket page counts collected DURING the write
-    # action (CollectMetrics node) — no extra input scan
-    obs = Observation("pages_per_bucket")
-    pages = pages.observe(
-        obs,
-        *[
-            F.sum((bucket_of(F.col("doc_id")) == b).cast("long")).alias(f"b{b}")
-            for b in todo
-        ],
-    )
-    if extractor == "ngram" and scorer == "neural":
-        linked = pipe.linked_fused(pages)  # single-UDF path, keeps doc_id
-    else:
-        linked = pipe.linked(pages, extractor, scorer)
-    ents = doc_entities(linked, id_col="doc_id", qid_col="qid_pred").withColumn(
-        "_bucket", bucket_of(F.col("doc_id"))
-    )
-    tri = triples_from_doc_entities(
-        ents, pipe.dims["kg_relations"], group_cols=["_bucket"]
-    )
-    triples_path = os.path.join(out_dir, "triples")
+        pages = pages.where(~F.col(store.BUCKET_COL).isin(*done))
+    pages, page_obs = per_bucket_counts(pages, "pages_per_bucket")
+    tri = pipe.triples_fused_local(pages, group_cols=[store.BUCKET_COL])
+    tri, tri_obs = per_bucket_counts(tri, "triples_per_bucket")
     # dynamic partition overwrite: ONE pass writes every remaining
     # bucket dir; completed buckets' dirs are untouched (their rows were
     # filtered out above), so a crash-and-resume rewrites only the
@@ -434,52 +435,42 @@ def materialize_triples(
     prev_mode = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        store.write_buckets(tri, triples_path, mode="overwrite")
+        store.write_buckets(tri, os.path.join(out_dir, "triples"), mode="overwrite")
     finally:
         conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     dt = time.time() - t0
-    page_counts = obs.get  # dict b{b} -> count, filled by the write action
-    # triple counts per bucket: one aggregate over the (small) output
-    tri_counts = {
-        r[store.BUCKET_COL]: r["c"]
-        for r in store.read_buckets(pipe.spark, triples_path, todo)
-        .groupBy(store.BUCKET_COL)
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
+    page_counts, tri_counts = page_obs.get, tri_obs.get  # filled by the write
     total_pages = sum(int(page_counts[f"b{b}"] or 0) for b in todo)
-    records = []
-    for b in todo:
-        rec = {
+    records = [
+        {
             "bucket": b,
             "layout": layout,
             "pages": int(page_counts[f"b{b}"] or 0),
-            "triples": int(tri_counts.get(b, 0)),
+            "triples": int(tri_counts[f"b{b}"] or 0),
             "seconds": round(dt, 3),  # wall time of the shared single pass
             "pages_per_sec": round(total_pages / dt, 2) if dt > 0 else None,
             "sf_dir": pipe.sf_dir,
-            "extractor": extractor,
-            "scorer": scorer,
         }
-        records.append(rec)
-    with open(manifest_path, "a") as f:
+        for b in todo
+    ]
+    with open(os.path.join(out_dir, "_manifest.jsonl"), "a") as f:
         for rec in records:
             f.write(json.dumps(rec) + "\n")
     return records
 
 
-def snapshot_triples(
-    pipe: KgPipeline,
-    table: str,
-    mode: str = "overwrite",
-    extractor: str = "ngram",
-    scorer: str = "neural",
-    n_files: int = 8,
-) -> dict:
-    """Materialize the pipeline's (subj, pred, obj) triples as a
-    committed snapshot of a snapshot-manifest graph table
-    (sources/snaptable.py) — the north-star "partitioned Iceberg graph
-    tables" shape, minus the jars.
+def snapshot_triples(pipe: KgPipeline, out_dir: str, table: str, n_buckets: int, n_files: int = 8) -> dict:
+    """Publish the bucket store :func:`materialize_triples` wrote to
+    ``out_dir`` as a committed snapshot of a snapshot-manifest graph
+    table (sources/snaptable.py) — the north-star "partitioned Iceberg
+    graph tables" shape, minus the jars. Links nothing: the store is
+    the run's one linking pass, and ``pipe`` supplies only the session
+    and the ``sf_dir`` the manifest must match.
+
+    Raises ``ValueError`` unless every one of the ``n_buckets`` buckets
+    is in the manifest (loaded as resume loads it). The store dedups
+    per bucket; the graph is its ``distinct`` union, so it holds each
+    triple once and equals ``pipe.triples()``.
 
     ``repartitionByRange(n_files, "subj")`` gives every data file a
     tight subj [min, max] in the manifest, so entity-centric reads
@@ -487,33 +478,30 @@ def snapshot_triples(
     ``snaptable.read_table(spark, table, prune=("subj", "=", qid))``)
     open one file out of ``n_files`` — metadata-only pruning, the
     graph-table access path that matters at 10^12 documents. Each
-    pipeline run commits a new VERSION: ``mode="overwrite"`` replaces
-    the graph (old versions stay time-travelable until vacuum),
-    ``mode="append"`` accumulates incremental crawl batches. Returns
-    the committed snapshot dict.
-
-    The bucketed-store materializer (:func:`materialize_triples`) stays
-    the mid-RUN checkpoint/resume mechanism; this is the published,
-    versioned END product of a run — the two compose (run buckets with
-    resume, snapshot the union)."""
+    publication commits a new VERSION that replaces the graph (old
+    versions stay time-travelable until vacuum). Returns the committed
+    snapshot dict."""
     from bootleg_spark.sources import snaptable as st
+    from bootleg_spark.sources import store
 
-    tri = pipe.triples(extractor=extractor, scorer=scorer)
+    layout = store.layout_id(["doc_id"], n_buckets)
+    done = _manifest_done(out_dir, layout, pipe.sf_dir)
+    missing = [b for b in range(n_buckets) if b not in done]
+    if missing:
+        raise ValueError(
+            f"buckets {missing} of {out_dir} are not materialized; "
+            "run materialize_triples to completion before publishing"
+        )
+    tri = store.read_buckets(pipe.spark, os.path.join(out_dir, "triples"), list(range(n_buckets)))
     # north-rule lineage: the snapshot records what produced it; the
     # write/commit throughput is stamped by write_table itself (inside
     # the manifest BEFORE the atomic publish — committed snapshots are
     # write-once and never edited after the fact)
     return st.write_table(
-        tri.repartitionByRange(n_files, "subj"),
+        tri.select("subj", "pred", "obj").distinct().repartitionByRange(n_files, "subj"),
         table,
-        mode=mode,
-        extra={
-            "lineage": {
-                "sf_dir": pipe.sf_dir,
-                "extractor": extractor,
-                "scorer": scorer,
-            }
-        },
+        mode="overwrite",
+        extra={"lineage": {"sf_dir": pipe.sf_dir, "layout": layout}},
     )
 
 

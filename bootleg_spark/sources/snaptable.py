@@ -53,9 +53,10 @@ What it reproduces, and how it maps onto the real thing:
 
 Every incremental graph write lands here: the page stream and the
 table-as-log step both insert through
-``plans/pipeline.py:insert_new_triples``. The one bucketed store left
-(sources/store.py) is ``materialize_triples``' mid-run checkpoint; on a
-real deployment it would commit its bucket directories as snapshots.
+``plans/pipeline.py:insert_new_triples``. A batch run links once into
+the bucketed store (sources/store.py, ``materialize_triples``' mid-run
+checkpoint), and ``snapshot_triples`` publishes the graph table from
+that store, without linking again.
 """
 
 from __future__ import annotations

@@ -3,8 +3,10 @@
 partition-directory scheme and the layout id its checkpoint manifest
 records, so resume can refuse a store written under a different layout
 instead of silently skipping the wrong rows (round-2 advice on the
-materializer manifest). Incremental writers do not use this layout;
-they land triples in the snapshot-manifest graph table
+materializer manifest). The store is a batch run's one linking pass;
+``snapshot_triples`` publishes the graph table from it
+(:func:`read_buckets` → distinct). Incremental writers do not use this
+layout; they land triples in the snapshot-manifest graph table
 (sources/snaptable.py).
 
 This is the Iceberg/Delta-shaped seam: on a cluster with a real table

@@ -45,18 +45,20 @@ plans above show `Window [...], [_pid#...]` over
 ## materialize_triples (one pass, bucketed write)
 
 ```
-scan pages (filtered to not-yet-done buckets)
+scan pages (filtered to not-yet-done buckets) + _bucket tag
   -> observe(per-bucket page counts)           <- CollectMetrics, no extra scan
-  -> linked_fused (ONE MapInPandas)            <- the one fused linking kernel
-  -> doc_entities + bucket tag
-  -> broadcast-relations ⋈ + shuffle-hash left-semi (per-bucket dedup)
+  -> triples_fused_local(group_cols=[_bucket]) <- the fused kernel's triple emitter (ONE MapInPandas)
+  -> dropDuplicates(_bucket, subj, pred, obj)  <- per-bucket dedup
+  -> observe(per-bucket triple counts)         <- second CollectMetrics, same action
   -> write partitionBy(_bucket), dynamic partition overwrite
 ```
 
-Total I/O per job: one input scan + one aggregate over the (small)
-triple output, independent of n_buckets; resume recomputes only buckets
+Total I/O per job: one input scan and one write, independent of
+n_buckets, with no read-back aggregate; resume recomputes only buckets
 missing from the manifest (tests/test_pipeline.py::
-test_manifest_partial_resume).
+test_manifest_partial_resume). `snapshot_triples` then publishes the
+store (read buckets → distinct → range-partition on subj → snapshot
+commit) without linking again.
 """
 
 

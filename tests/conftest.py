@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -17,3 +18,16 @@ def spark():
     s = get_spark(app_name="bootleg-spark-tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh Spark job group; return ``(result,
+    n_jobs)`` read from the status tracker (starts no job of its own)."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -54,7 +54,8 @@ def test_fused_local_triples_equal_staged_semijoin(pipe):
 
 def test_fused_kernel_emitters_handle_pages_without_mentions(pipe, spark):
     """A batch in which no page carries an alias: both emitters of the
-    fused kernel return no rows under their declared schemas."""
+    fused kernel (the triple emitter also with a group column) return
+    no rows under their declared schemas."""
     pages = spark.createDataFrame(
         [(f"https://x/{i}", b"<html><body>qqqq zzzz</body></html>", i) for i in range(4)],
         "url string, html binary, doc_id long",
@@ -66,6 +67,9 @@ def test_fused_kernel_emitters_handle_pages_without_mentions(pipe, spark):
         "char_start:int,char_end:int,qid_pred:string,prob:double>"
     )
     assert tri.schema.simpleString() == "struct<subj:string,pred:string,obj:string>"
+    grouped = pipe.triples_fused_local(pages.withColumn("_bucket", F.lit(0)), group_cols=["_bucket"])
+    assert grouped.collect() == []
+    assert grouped.schema.simpleString() == "struct<_bucket:int,subj:string,pred:string,obj:string>"
 
 
 def test_neural_triples_deterministic_across_partitioning(pipe, spark):
@@ -145,13 +149,13 @@ def test_neural_linking_subset_of_candidates(pipe):
 
 def test_manifest_resume(pipe, tmp_path):
     out = str(tmp_path / "kg_out")
-    recs = materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+    recs = materialize_triples(pipe, out, n_buckets=2)
     assert len(recs) == 2
     manifest = [json.loads(x) for x in open(os.path.join(out, "_manifest.jsonl"))]
     assert {m["bucket"] for m in manifest} == {0, 1}
     assert all(m["pages"] > 0 and m["seconds"] >= 0 for m in manifest)
     # resume: nothing left to do
-    recs2 = materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+    recs2 = materialize_triples(pipe, out, n_buckets=2)
     assert recs2 == []
     # buckets union must equal the one-shot pipeline result
     got = {
@@ -162,9 +166,25 @@ def test_manifest_resume(pipe, tmp_path):
     }
     expected = {
         tuple(r)
-        for r in pipe.triples(extractor="word", scorer="popularity").collect()
+        for r in pipe.triples().collect()
     }
     assert got == expected
+    # the store's rows, bucket tag and multiplicity included, are the
+    # staged plan's per-bucket triples: what LAYOUT_VERSION describes
+    from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
+    from bootleg_spark.sources import store
+
+    ents = doc_entities(pipe.linked()).withColumn(
+        store.BUCKET_COL, store.bucket_expr(2, F.col("doc_id"))
+    )
+    staged = triples_from_doc_entities(
+        ents, pipe.dims["kg_relations"], group_cols=[store.BUCKET_COL]
+    )
+    cols = [store.BUCKET_COL, "subj", "pred", "obj"]
+    stored = pipe.spark.read.parquet(os.path.join(out, "triples")).select(*cols)
+    assert sorted(tuple(r) for r in stored.collect()) == sorted(
+        tuple(r) for r in staged.select(*cols).collect()
+    )
 
 
 def test_manifest_layout_mismatch_refused(pipe, tmp_path):
@@ -172,10 +192,10 @@ def test_manifest_layout_mismatch_refused(pipe, tmp_path):
     key/count/partition scheme must refuse, not silently skip the wrong
     page set (round-2 advice: the r1→r2 layout change was unversioned)."""
     out = str(tmp_path / "kg_out")
-    materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+    materialize_triples(pipe, out, n_buckets=2)
     # a different n_buckets is a different bucket key → refuse
     with pytest.raises(ValueError, match="layout"):
-        materialize_triples(pipe, out, n_buckets=4, extractor="word", scorer="popularity")
+        materialize_triples(pipe, out, n_buckets=4)
     # an unversioned (pre-v2) manifest line → refuse
     mpath = os.path.join(out, "_manifest.jsonl")
     lines = [json.loads(x) for x in open(mpath)]
@@ -185,7 +205,47 @@ def test_manifest_layout_mismatch_refused(pipe, tmp_path):
         for m in lines:
             f.write(json.dumps(m) + "\n")
     with pytest.raises(ValueError, match="layout"):
-        materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+        materialize_triples(pipe, out, n_buckets=2)
+
+
+def test_manifest_sf_dir_mismatch_refused(pipe, tmp_path):
+    """Resuming into a store built from another corpus must refuse, not
+    skip buckets whose pages it never linked."""
+    out = str(tmp_path / "kg_out")
+    materialize_triples(pipe, out, n_buckets=2)
+    mpath = os.path.join(out, "_manifest.jsonl")
+    lines = [json.loads(x) for x in open(mpath)]
+    for m in lines:
+        m["sf_dir"] = "/elsewhere/sf9"
+    with open(mpath, "w") as f:
+        for m in lines:
+            f.write(json.dumps(m) + "\n")
+    with pytest.raises(ValueError, match="sf_dir"):
+        materialize_triples(pipe, out, n_buckets=2)
+
+
+def test_submit_sequence_links_once(pipe, tmp_path):
+    """scripts/submit_pipeline.py's sequence: materialize the bucket
+    store, then publish it. Publishing links nothing, so the whole
+    sequence stays within its job budget; the graph is pipe.triples()
+    with no triple twice, and an incomplete store refuses to publish."""
+    from bootleg_spark.plans.pipeline import snapshot_triples
+    from bootleg_spark.sources import snaptable as st
+    from tests.conftest import count_jobs
+
+    out, table = str(tmp_path / "kg_out"), str(tmp_path / "graph")
+    with pytest.raises(ValueError, match="not materialized"):
+        snapshot_triples(pipe, out, table, 2)
+
+    def _sequence():
+        materialize_triples(pipe, out, n_buckets=2)
+        return snapshot_triples(pipe, out, table, 2)
+
+    snap, n_jobs = count_jobs(pipe.spark, _sequence)
+    assert n_jobs <= 4  # ceiling: materialize 1 job + publish 3 jobs
+    got = sorted(tuple(r) for r in st.read_table(pipe.spark, table).collect())
+    assert got == sorted(tuple(r) for r in pipe.triples().collect())
+    assert len(got) == len(set(got)) == snap["total_rows"]
 
 
 def test_manifest_kill_mid_write_resume(pipe, tmp_path, monkeypatch):
@@ -211,7 +271,7 @@ def test_manifest_kill_mid_write_resume(pipe, tmp_path, monkeypatch):
     # patch the module attribute itself
     monkeypatch.setattr(store, "write_buckets", dying_write)
     with pytest.raises(RuntimeError, match="simulated kill"):
-        materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+        materialize_triples(pipe, out, n_buckets=2)
     monkeypatch.setattr(store, "write_buckets", real_write)
 
     # crash picture: partial store, empty manifest
@@ -219,7 +279,7 @@ def test_manifest_kill_mid_write_resume(pipe, tmp_path, monkeypatch):
     assert not os.path.isdir(os.path.join(out, "triples", "_bucket=1"))
     assert not os.path.exists(os.path.join(out, "_manifest.jsonl"))
 
-    recs = materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+    recs = materialize_triples(pipe, out, n_buckets=2)
     assert sorted(r["bucket"] for r in recs) == [0, 1]
 
     # reference picture: the same materialize into a FRESH dir (dedup
@@ -227,7 +287,7 @@ def test_manifest_kill_mid_write_resume(pipe, tmp_path, monkeypatch):
     # compare store to store, not store to the globally-deduped
     # pipe.triples())
     clean = str(tmp_path / "kg_clean")
-    materialize_triples(pipe, clean, n_buckets=2, extractor="word", scorer="popularity")
+    materialize_triples(pipe, clean, n_buckets=2)
 
     def _store_rows(path):
         return sorted(
@@ -249,7 +309,7 @@ def test_manifest_torn_trailing_line(pipe, tmp_path):
     mid-file — which no crash of the append-only writer can produce —
     still refuses as corruption."""
     out = str(tmp_path / "kg_out")
-    materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+    materialize_triples(pipe, out, n_buckets=2)
     mpath = os.path.join(out, "_manifest.jsonl")
     lines = open(mpath).read().splitlines()
 
@@ -257,20 +317,20 @@ def test_manifest_torn_trailing_line(pipe, tmp_path):
     with open(mpath, "w") as f:
         f.write(lines[0] + "\n")
         f.write(lines[1][: len(lines[1]) // 2])
-    recs = materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+    recs = materialize_triples(pipe, out, n_buckets=2)
     assert [r["bucket"] for r in recs] == [1]  # only the torn bucket redone
     # the torn tail was truncated before the append: every line parses,
     # both buckets are marked done, and a third run is a no-op
     reloaded = [json.loads(x) for x in open(mpath)]
     assert {m["bucket"] for m in reloaded} == {0, 1}
-    assert materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity") == []
+    assert materialize_triples(pipe, out, n_buckets=2) == []
 
     # torn line mid-file = corruption, refuse
     with open(mpath, "w") as f:
         f.write(lines[0][: len(lines[0]) // 2] + "\n")
         f.write(lines[1] + "\n")
     with pytest.raises(json.JSONDecodeError):
-        materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+        materialize_triples(pipe, out, n_buckets=2)
 
 
 def test_manifest_partial_resume(pipe, tmp_path):
@@ -279,7 +339,7 @@ def test_manifest_partial_resume(pipe, tmp_path):
     import shutil
 
     out = str(tmp_path / "kg_out")
-    materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+    materialize_triples(pipe, out, n_buckets=2)
     full = {
         tuple(r)
         for r in pipe.spark.read.parquet(os.path.join(out, "triples"))
@@ -295,7 +355,7 @@ def test_manifest_partial_resume(pipe, tmp_path):
             f.write(json.dumps(m) + "\n")
     shutil.rmtree(os.path.join(out, "triples", "_bucket=1"), ignore_errors=True)
 
-    recs = materialize_triples(pipe, out, n_buckets=2, extractor="word", scorer="popularity")
+    recs = materialize_triples(pipe, out, n_buckets=2)
     assert [r["bucket"] for r in recs] == [1]
     assert recs[0]["pages"] == lost[0]["pages"] and recs[0]["triples"] == lost[0]["triples"]
     got = {

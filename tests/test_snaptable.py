@@ -134,14 +134,15 @@ def test_snapshot_triples_graph_table(spark, tmp_path):
     version; subj-range data files make entity-centric reads open a
     strict subset of files; overwrite keeps the prior graph
     time-travelable."""
-    from bootleg_spark.plans.pipeline import KgPipeline, snapshot_triples
+    from bootleg_spark.plans.pipeline import KgPipeline, materialize_triples, snapshot_triples
     from tests.conftest import SF_SMOKE
 
     pipe = KgPipeline(spark, SF_SMOKE)
-    table = str(tmp_path / "graph")
-    s1 = snapshot_triples(pipe, table, extractor="word", scorer="popularity", n_files=4)
+    out, table = str(tmp_path / "kg_out"), str(tmp_path / "graph")
+    materialize_triples(pipe, out, n_buckets=2)
+    s1 = snapshot_triples(pipe, out, table, 2, n_files=4)
     assert s1["version"] == 1 and s1["total_rows"] > 0
-    expected = _rows(pipe.triples(extractor="word", scorer="popularity"))
+    expected = _rows(pipe.triples())
     assert _rows(st.read_table(spark, table)) == expected
 
     # entity-centric read: prune by subj opens fewer files, same rows
@@ -155,8 +156,8 @@ def test_snapshot_triples_graph_table(spark, tmp_path):
     )
     assert _rows(got) == sorted(t for t in expected if t[0] == some_subj)
 
-    # a second run (different scorer) commits v2; v1 stays readable
-    s2 = snapshot_triples(pipe, table, extractor="ngram", scorer="neural", n_files=4)
+    # a second publication commits v2; v1 stays readable
+    s2 = snapshot_triples(pipe, out, table, 2, n_files=4)
     assert s2["version"] == 2
     assert _rows(st.read_table(spark, table, version=1)) == expected
 
@@ -250,7 +251,8 @@ def test_snapshot_carries_lineage_and_metrics(spark, tmp_path):
     """North-rule: lineage + throughput metrics live in the manifest.
     Every committed snapshot stamps write_seconds / new_rows /
     rows_per_sec, and snapshot_triples adds run provenance."""
-    from bootleg_spark.plans.pipeline import KgPipeline, snapshot_triples
+    from bootleg_spark.plans.pipeline import KgPipeline, materialize_triples, snapshot_triples
+    from bootleg_spark.sources import store
     from tests.conftest import SF_SMOKE
 
     docs = spark.range(0, 50).select(
@@ -262,11 +264,13 @@ def test_snapshot_carries_lineage_and_metrics(spark, tmp_path):
     assert s["rows_per_sec"] > 0
 
     pipe = KgPipeline(spark, SF_SMOKE)
-    g = snapshot_triples(pipe, str(tmp_path / "graph"), extractor="word", scorer="popularity")
+    out = str(tmp_path / "kg_out")
+    materialize_triples(pipe, out, n_buckets=2)
+    g = snapshot_triples(pipe, out, str(tmp_path / "graph"), 2)
     lin = g["lineage"]
     assert lin["sf_dir"] == SF_SMOKE
-    assert (lin["extractor"], lin["scorer"]) == ("word", "popularity")
-    assert set(lin) == {"sf_dir", "extractor", "scorer"}  # nothing it did not apply
+    assert lin["layout"] == store.layout_id(["doc_id"], 2)
+    assert set(lin) == {"sf_dir", "layout"}  # nothing it did not apply
     # durably in the manifest, not just the returned dict
     reread = st.load_snapshot(str(tmp_path / "graph"))
     assert reread["lineage"] == lin and reread["write_seconds"] > 0
