@@ -51,7 +51,8 @@ class SparkAnnotator:
         mc = attach_candidates(m, pipe.dims["alias_cands"], grouped=pipe.grouped_cands)
         if self.scorer == "neural":
             return link_neural(
-                mc, pipe.ent_matrix_bc, text_col=text_col, threshold=self.threshold
+                mc, pipe.ent_matrix_bc, text_col=text_col, threshold=self.threshold,
+                encoder=pipe.encoder,
             )
         # popularity baseline: rank-1 candidate, probability fixed at 1.0
         return link_popularity(mc).withColumn("prob", F.lit(1.0))

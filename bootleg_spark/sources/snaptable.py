@@ -43,13 +43,15 @@ What it reproduces, and how it maps onto the real thing:
   stats.
 - **Copy-on-write row-level DELETE.** :func:`delete_rows` rewrites
   only the stats-pruned files that actually contain matching rows
-  (detected in one pushed-down scan grouped by ``input_file_name``),
-  carries every untouched file into the new snapshot, and aborts on
-  concurrent-writer conflicts — Iceberg's CoW delete, the
-  takedown/GDPR path.
+  (detected in one pushed-down scan grouped by each row's data file,
+  :func:`_touched`), carries every untouched file into the new
+  snapshot, and aborts on concurrent-writer conflicts — Iceberg's CoW
+  delete, the takedown/GDPR path.
 - **Schema evolution on append.** Appends may ADD columns (drops and
   retypes rejected); reads align every file to the snapshot schema
-  with null backfill for pre-evolution files.
+  with null backfill for pre-evolution files. Every parquet read of
+  the module — data files and delete files alike — goes through
+  :func:`_read_files` with a declared schema, so no read infers one.
 
 Every incremental graph write lands here: the page stream and the
 table-as-log step both insert through
@@ -104,32 +106,44 @@ def _try_publish(table: str, snap: dict) -> bool:
         side = {"files": snap["files"]}
         if snap.get("delete_files"):
             side["delete_files"] = snap["delete_files"]
-        side_tmp = os.path.join(table, SNAP_DIR, f".{ref}.tmp")
-        with open(side_tmp, "w") as f:
-            json.dump(side, f)
-        os.replace(side_tmp, os.path.join(table, SNAP_DIR, ref))
+        _write_json(os.path.join(table, SNAP_DIR, ref), side, exclusive=False)
         to_write = {
             k: v for k, v in snap.items() if k not in ("files", "delete_files")
         }
         to_write["files_ref"] = ref
         snap["files_ref"] = ref  # caller's dict mirrors the loaded form
-    tmp = os.path.join(
-        table, SNAP_DIR, f".v{snap['version']}-{uuid.uuid4().hex[:8]}.tmp"
-    )
+    if _write_json(_snap_path(table, snap["version"]), to_write, exclusive=True):
+        return True
+    # a losing racer's side manifest is unreferenced — reclaim now
+    if "files_ref" in snap:
+        side_path = os.path.join(table, SNAP_DIR, snap.pop("files_ref"))
+        if os.path.exists(side_path):
+            os.unlink(side_path)
+    return False
+
+
+def _write_json(path: str, obj, exclusive: bool) -> bool:
+    """Atomically write ``obj`` as JSON at ``path``: dump into a
+    dot-prefixed ``.tmp`` file in ``path``'s directory (where
+    :func:`vacuum`'s ``_snapshots/`` sweep finds a crashed writer's
+    leftover), then either ``os.link`` it create-exclusive — ``False``
+    when ``path`` already exists, the lost race — or ``os.replace`` it
+    (last writer wins)."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}-{uuid.uuid4().hex[:8]}.tmp")
     with open(tmp, "w") as f:
-        json.dump(to_write, f)
+        json.dump(obj, f)
+    if not exclusive:
+        os.replace(tmp, path)
+        return True
     try:
-        os.link(tmp, _snap_path(table, snap["version"]))
-        os.unlink(tmp)
+        os.link(tmp, path)
         return True
     except FileExistsError:
-        os.unlink(tmp)
-        # a losing racer's side manifest is unreferenced — reclaim now
-        if "files_ref" in snap:
-            side_path = os.path.join(table, SNAP_DIR, snap.pop("files_ref"))
-            if os.path.exists(side_path):
-                os.unlink(side_path)
         return False
+    finally:
+        os.unlink(tmp)
 
 
 # base fields every commit inherits unless its builder overrides them
@@ -549,14 +563,21 @@ def _keep_nonempty(rewritten: list[dict], table: str) -> list[dict]:
     return [e for e in rewritten if e["rows"] > 0]
 
 
-def _rel(table: str, uri: str) -> str:
-    """The manifest (table-relative) path of an ``input_file_name()``
-    URI (``file:///...``)."""
-    for pre in ("file://", "file:"):
-        if uri.startswith(pre):
-            uri = uri[len(pre):]
-            break
-    return os.path.relpath(uri, table)
+def _schema(record: dict):
+    """The declared schema (``StructType``) of a snapshot or staged
+    manifest."""
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(record["schema_json"]))
+
+
+def _read_files(spark: SparkSession, table: str, schema, rels) -> DataFrame:
+    """The module's one parquet read: ``table``'s files ``rels``
+    (manifest-relative paths) with the declared ``schema`` — no
+    inference job, and files that lack a column (written before an
+    add-column append) null-backfill it. No ``rels`` reads as an empty
+    frame of ``schema``."""
+    return spark.read.schema(schema).parquet(*(os.path.join(table, r) for r in rels))
 
 
 def _rewrite_files(
@@ -566,17 +587,15 @@ def _rewrite_files(
     to keep — one Spark write per partition group, so the new manifest
     entries keep valid partition values (one group, the common case, is
     one write). Zero-row outputs are dropped."""
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(snap0["schema_json"]))
+    schema = _schema(snap0)
     entry_by_rel = {f["path"]: f for f in snap0["files"]}
     groups: dict[tuple, list[str]] = {}
     for rel in sorted(rels):
         key = tuple(sorted((entry_by_rel[rel].get("partition") or {}).items()))
-        groups.setdefault(key, []).append(os.path.join(table, rel))
+        groups.setdefault(key, []).append(rel)
     new_files: list[dict] = []
-    for key, paths in sorted(groups.items()):
-        rewritten = _write_data_files(fn(spark.read.schema(schema).parquet(*paths)), table)
+    for key, group in sorted(groups.items()):
+        rewritten = _write_data_files(fn(_read_files(spark, table, schema, group)), table)
         if key:
             for e in rewritten:
                 e["partition"] = dict(key)
@@ -591,11 +610,8 @@ def _check_append_schema(base: dict, df_schema) -> None:
     becomes the union, and readers align old files to it with null
     backfill — see :func:`read_table`). Dropping or retyping a column
     on append is still rejected: that is an overwrite/migration."""
-    from pyspark.sql.types import StructType
-
-    base_schema = StructType.fromJson(json.loads(base["schema_json"]))
     new_fields = {f.name: f.dataType for f in df_schema.fields}
-    for f in base_schema.fields:
+    for f in _schema(base).fields:
         if f.name not in new_fields:
             raise ValueError(
                 f"append schema drops column {f.name!r} — appends may only "
@@ -751,7 +767,7 @@ def delete_rows(
        before any data I/O — a targeted delete on a 10^12-row table
        opens only the files whose range can match.
     2. **Touch detection**: one scan of the candidates, predicate
-       pushed down, grouped by ``input_file_name()`` — yields the
+       pushed down, grouped by each row's data file — yields the
        (small) set of files that actually contain matching rows and
        the per-file match counts. Files with zero matches are carried
        into the new snapshot UNTOUCHED (no rewrite amplification).
@@ -801,11 +817,8 @@ def update_rows(
     matches (per partition group), optimistic commit with
     concurrent-writer abort."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    snap0 = load_snapshot(table)
-    schema = StructType.fromJson(json.loads(snap0["schema_json"]))
-    types = {f.name: f.dataType for f in schema.fields}
+    types = {f.name: f.dataType for f in _schema(load_snapshot(table)).fields}
     for c in set_exprs:
         if c not in types:
             raise ValueError(f"SET column {c!r} is not a table column")
@@ -845,34 +858,23 @@ def _cow_rewrite(
     max_retries: int,
 ) -> dict | None:
     """Shared copy-on-write machinery for DELETE and UPDATE: metadata
-    prune → input_file_name touch detection → per-partition-group
-    rewrite via ``transform(df, cond)`` → :func:`_commit` on the
-    re-based file list. ``summary(n_matched)`` supplies the
-    mode-specific manifest keys."""
-    snap0, cand_paths = plan_files(table, prune=prune)
-    if _has_positional(snap0):
-        raise ValueError(
-            "pending positional delete files — their (file, row_pos) "
-            "coordinates would dangle after a rewrite; run apply_deletes first"
-        )
-    if not cand_paths:
+    prune → :func:`_touched` detection → per-partition-group rewrite via
+    ``transform(df, cond)`` → :func:`_commit` on the re-based file list.
+    ``summary(n_matched)`` supplies the mode-specific manifest keys."""
+    snap0 = load_snapshot(table)
+    _refuse_positional(snap0)
+    cands = _pruned(snap0, prune)
+    if not cands:
         return None
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    schema = StructType.fromJson(json.loads(snap0["schema_json"]))
     cond = F.expr(condition)
-    touched_rows = (
-        spark.read.schema(schema).parquet(*cand_paths)
-        .where(cond)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    if not touched_rows:
+    scan = _with_row_provenance(_read_files(spark, table, _schema(snap0), cands))
+    touched = _touched(scan.where(cond))
+    if not touched:
         return None  # nothing matches: no-op, no new snapshot
-    touched_rel = {_rel(table, r["f"]) for r in touched_rows}
-    n_matched = sum(r["n"] for r in touched_rows)
+    touched_rel = set(touched)
+    n_matched = sum(touched.values())
     new_files = _rewrite_files(
         spark, table, snap0, touched_rel, lambda scan: transform(scan, cond)
     )
@@ -926,8 +928,7 @@ def delete_rows_mor(
         # exact field names from schema_json, not a substring probe of
         # the simpleString (ADVICE r06: 'id' would false-match 'doc_id'
         # and commit a delete file that breaks every subsequent read)
-        field_names = {f["name"] for f in json.loads(base["schema_json"])["fields"]}
-        missing = [c for c in eq_cols if c not in field_names]
+        missing = sorted(set(eq_cols) - set(_schema(base).fieldNames()))
         if missing:
             raise ValueError(f"equality columns {missing} not in table schema")
         return {
@@ -967,17 +968,14 @@ def delete_rows_positional(
     Returns the committed snapshot (mode ``delete-pos``), or None when
     nothing matches."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     snap0 = load_snapshot(table)
-    paths = [os.path.join(table, f["path"]) for f in snap0["files"]]
-    if not paths:
+    rels = [f["path"] for f in snap0["files"]]
+    if not rels:
         return None
-    schema = StructType.fromJson(json.loads(snap0["schema_json"]))
-    scan = _with_row_provenance(spark.read.schema(schema).parquet(*paths))
-    if snap0.get("delete_files"):
-        # don't tombstone rows an earlier delete already killed
-        scan = _apply_mor_deletes(spark, table, scan, snap0)
+    scan = _with_row_provenance(_read_files(spark, table, _schema(snap0), rels))
+    # don't tombstone rows an earlier delete already killed
+    scan = _apply_mor_deletes(spark, table, scan, snap0)
     matches = scan.where(F.expr(condition)).select(
         F.col("_fp").alias("file_path"), F.col("_ri").alias("row_pos")
     )
@@ -1008,6 +1006,16 @@ def _has_positional(snap: dict) -> bool:
     return any(e.get("positional") for e in snap.get("delete_files") or [])
 
 
+def _refuse_positional(snap: dict) -> None:
+    """File-rewriting operations refuse while positional deletes are
+    pending: a rewrite would leave their coordinates dangling."""
+    if _has_positional(snap):
+        raise ValueError(
+            "pending positional delete files — their (file, row_pos) "
+            "coordinates would dangle after a rewrite; run apply_deletes first"
+        )
+
+
 def _check_rewrite_base(table: str, snap0: dict, base: dict) -> None:
     """Guard a rewrite commit (CoW delete/update, merge, compact)
     against delete files that landed BETWEEN planning on ``snap0`` and
@@ -1026,57 +1034,74 @@ def _check_rewrite_base(table: str, snap0: dict, base: dict) -> None:
         )
 
 
+# positional delete files hold the (file, row position) of each dead row
+_POSITIONAL_SCHEMA = "file_path string, row_pos long"
+
+
 def _with_row_provenance(df: DataFrame) -> DataFrame:
     """Attach (_fp, _ri) = (manifest-relative file path, row position)
-    from the parquet reader's ``_metadata`` struct — the provenance a
-    positional anti-join keys on. ``_metadata.file_path`` is a URI;
-    the manifest stores paths relative to the table root and every
-    data file lives under ``data/``, so the relative form is the
-    ``data/...`` suffix."""
+    from the parquet reader's ``_metadata`` struct — the key a
+    positional anti-join and :func:`_touched` group on. Every data file
+    lies flat under ``data/`` (:func:`_write_data_files`), so the
+    manifest path is ``data/`` + the file name. ``df`` must be a scan
+    (filters may sit on top, joins may not: ``_metadata`` does not
+    resolve through a join's output)."""
     from pyspark.sql import functions as F
 
     return df.select(
         "*",
-        F.regexp_extract(F.col("_metadata.file_path"), r"(data/.*)$", 1).alias("_fp"),
+        F.concat(F.lit("data/"), F.col("_metadata.file_name")).alias("_fp"),
         F.col("_metadata.row_index").alias("_ri"),
     )
 
 
-def _apply_mor_deletes(spark: SparkSession, table: str, df: DataFrame, snap: dict) -> DataFrame:
-    """Anti-join pending delete files into a scan — the merge-on-read
-    read tax. Equality entries group by their column set (one
-    anti-join per distinct set, applied BY VALUE); positional entries
-    (Iceberg v2's other flavor) anti-join on (file, row position) and
-    require the caller to have attached provenance via
-    :func:`_with_row_provenance` first. Key sets are small by the
-    mode's design, so Spark broadcasts them."""
+def _touched(df: DataFrame) -> dict[str, int]:
+    """``{rel: n}``: how many of ``df``'s rows each data file holds.
+    ``df`` is a filtered, joined or anti-joined scan carrying
+    :func:`_with_row_provenance`'s ``_fp``; files with no row are
+    absent."""
     from pyspark.sql import functions as F
 
+    rows = df.groupBy("_fp").agg(F.count(F.lit(1)).alias("n")).collect()
+    return {r["_fp"]: r["n"] for r in rows}
+
+
+def _apply_mor_deletes(spark: SparkSession, table: str, df: DataFrame, snap: dict) -> DataFrame:
+    """Anti-join ``snap``'s pending delete files into a scan of its data
+    files — the merge-on-read read tax; with none pending ``df`` comes
+    back as it is. Equality entries group by their column set (one
+    anti-join per distinct set, applied BY VALUE; the delete files are
+    read with those columns' table types); positional entries (Iceberg
+    v2's other flavor) anti-join on (file, row position). When
+    positional entries are pending and ``df`` carries no provenance,
+    it is attached here and dropped again. Key sets are small by the
+    mode's design, so Spark broadcasts them."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
     groups: dict[tuple, list[str]] = {}
-    pos_paths: list[str] = []
+    pos_rels: list[str] = []
     for e in snap.get("delete_files") or []:
         if e.get("positional"):
-            pos_paths.append(os.path.join(table, e["path"]))
+            pos_rels.append(e["path"])
         else:
-            groups.setdefault(tuple(e["equality_cols"]), []).append(
-                os.path.join(table, e["path"])
-            )
-    for cols, paths in sorted(groups.items()):
-        dels = spark.read.parquet(*paths).select(*cols).distinct()
+            groups.setdefault(tuple(e["equality_cols"]), []).append(e["path"])
+    added = ["_fp", "_ri"] if pos_rels and "_fp" not in df.columns else []
+    if added:
+        df = _with_row_provenance(df)
+    schema = _schema(snap)
+    for cols, rels in sorted(groups.items()):
+        key_schema = StructType([schema[c] for c in cols])
+        dels = _read_files(spark, table, key_schema, rels).distinct()
         df = df.join(F.broadcast(dels), list(cols), "left_anti")
-    if pos_paths:
-        if "_fp" not in df.columns or "_ri" not in df.columns:
-            raise AssertionError(
-                "positional delete files pending but the scan carries no "
-                "row provenance — read through _with_row_provenance"
-            )
+    if pos_rels:
         dels = (
-            spark.read.parquet(*pos_paths)
+            _read_files(spark, table, _POSITIONAL_SCHEMA, pos_rels)
             .select(F.col("file_path").alias("_fp"), F.col("row_pos").alias("_ri"))
             .distinct()
         )
         df = df.join(F.broadcast(dels), ["_fp", "_ri"], "left_anti")
-    return df
+    return df.drop(*added)
 
 
 def apply_deletes(
@@ -1089,49 +1114,25 @@ def apply_deletes(
     detection narrows the rewrite to files that actually hold matches,
     exactly like CoW delete. Returns the committed snapshot, or None
     when nothing is pending or the base moved underneath."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     snap0 = load_snapshot(table)
     pending = snap0.get("delete_files") or []
     if not pending:
         return None
-    schema = StructType.fromJson(json.loads(snap0["schema_json"]))
-    all_paths = [os.path.join(table, f["path"]) for f in snap0["files"]]
-    # touched = files holding at least one key match (any equality
-    # group): files whose surviving-row count (after the anti-joins)
-    # differs from their manifest row count
-    scan = spark.read.schema(schema).parquet(*all_paths)
-    positional = _has_positional(snap0)
-    if positional:
-        survived = _with_row_provenance(scan)
-        by_rel: dict[str, int] = {
-            r["_fp"]: r["n"]
-            for r in _apply_mor_deletes(spark, table, survived, snap0)
-            .groupBy("_fp")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-    else:
-        survived = scan.select(*schema.fieldNames(), F.input_file_name().alias("_f"))
-        survived = _apply_mor_deletes(
-            spark, table, survived, snap0
-        ).groupBy("_f").agg(F.count(F.lit(1)).alias("n"))
-        by_rel = {_rel(table, r["_f"]): r["n"] for r in survived.collect()}
+    rels = [f["path"] for f in snap0["files"]]
+    scan = _with_row_provenance(_read_files(spark, table, _schema(snap0), rels))
+    # touched = files holding at least one deleted row: files whose
+    # surviving-row count (after the anti-joins) differs from their
+    # manifest row count
+    survivors = _touched(_apply_mor_deletes(spark, table, scan, snap0))
     touched_rel = {
         e["path"]
         for e in snap0["files"]
-        if by_rel.get(e["path"], 0) != e["rows"]
+        if survivors.get(e["path"], 0) != e["rows"]
     }
-
-    def remaining(scan):
-        if positional:
-            return _apply_mor_deletes(
-                spark, table, _with_row_provenance(scan), snap0
-            ).drop("_fp", "_ri")
-        return _apply_mor_deletes(spark, table, scan, snap0)
-
-    new_files = _rewrite_files(spark, table, snap0, touched_rel, remaining)
+    new_files = _rewrite_files(
+        spark, table, snap0, touched_rel,
+        lambda scan: _apply_mor_deletes(spark, table, scan, snap0),
+    )
 
     def build(base):
         if (base.get("delete_files") or []) != pending:
@@ -1185,6 +1186,12 @@ def plan_files(
     stats are not lifted (non-JSON-native), prune purely through their
     ``days`` partition value."""
     snap = load_snapshot(table, version)
+    return snap, [os.path.join(table, rel) for rel in _pruned(snap, prune)]
+
+
+def _pruned(snap: dict, prune: tuple[str, str, object] | None) -> list[str]:
+    """The manifest paths of ``snap``'s files that :func:`plan_files`
+    keeps for ``prune``."""
     part_specs = {s["col"]: s for s in snap.get("partition_spec") or []}
     chosen = []
     for entry in snap["files"]:
@@ -1198,8 +1205,8 @@ def plan_files(
                 pv = (entry.get("partition") or {}).get(spec["name"])
                 if not _partition_keeps(spec, pv, op, value):
                     continue
-        chosen.append(os.path.join(table, entry["path"]))
-    return snap, chosen
+        chosen.append(entry["path"])
+    return chosen
 
 
 def read_table(
@@ -1227,21 +1234,9 @@ def read_table(
         if version is not None:
             raise ValueError("pass version= or ref=, not both")
         version = resolve_ref(table, ref)
-    snap, files = plan_files(table, version, prune)
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(snap["schema_json"]))
-    if not files:
-        return spark.createDataFrame([], schema)
-    df = spark.read.schema(schema).parquet(*files)
-    if snap.get("delete_files"):
-        if _has_positional(snap):
-            df = _apply_mor_deletes(
-                spark, table, _with_row_provenance(df), snap
-            ).drop("_fp", "_ri")
-        else:
-            df = _apply_mor_deletes(spark, table, df, snap)
-    return df
+    snap = load_snapshot(table, version)
+    df = _read_files(spark, table, _schema(snap), _pruned(snap, prune))
+    return _apply_mor_deletes(spark, table, df, snap)
 
 
 def read_incremental(
@@ -1290,18 +1285,9 @@ def read_incremental(
                 f"v{from_version} is not on v{to_version}'s parent chain"
             )
         v = snap["parent"]
-    base_paths = {f["path"] for f in load_snapshot(table, from_version)["files"]}
-    new_paths = [
-        os.path.join(table, f["path"])
-        for f in to_snap["files"]
-        if f["path"] not in base_paths
-    ]
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(to_snap["schema_json"]))
-    if not new_paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*new_paths)
+    base_rels = {f["path"] for f in load_snapshot(table, from_version)["files"]}
+    new_rels = [f["path"] for f in to_snap["files"] if f["path"] not in base_rels]
+    return _read_files(spark, table, _schema(to_snap), new_rels)
 
 
 CONSUMER_DIR = "_consumers"
@@ -1360,12 +1346,9 @@ def ack_consumed(table: str, group: str, version: int) -> None:
     cur = consumer_offset(table, group)
     if cur is not None and version <= cur:
         return
-    os.makedirs(os.path.join(table, CONSUMER_DIR), exist_ok=True)
-    path = _offset_path(table, group)
-    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as f:
-        json.dump({"group": group, "version": version}, f)
-    os.replace(tmp, path)
+    _write_json(
+        _offset_path(table, group), {"group": group, "version": version}, exclusive=False
+    )
 
 
 def merge_rows(
@@ -1386,7 +1369,7 @@ def merge_rows(
     one small aggregation on the source).
 
     Scale shape mirrors :func:`delete_rows`: one semi-join scan of the
-    table grouped by ``input_file_name`` finds the files holding
+    table grouped by each row's data file finds the files holding
     matched keys (Spark broadcasts the key set when small); only those
     files are rewritten (matched rows anti-joined away, per partition
     group); the FULL source lands as new files through the normal
@@ -1394,7 +1377,6 @@ def merge_rows(
     identity. Commit aborts with ``None`` if a concurrent writer
     dropped a planned file."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     dup = (
         source.groupBy(*key_cols)
@@ -1409,29 +1391,15 @@ def merge_rows(
             + ", ".join(f"{k}={dup[0][k]!r}" for k in key_cols)
         )
     snap0 = load_snapshot(table)
-    if _has_positional(snap0):
-        raise ValueError(
-            "pending positional delete files — their (file, row_pos) "
-            "coordinates would dangle after a rewrite; run apply_deletes first"
-        )
-    schema = StructType.fromJson(json.loads(snap0["schema_json"]))
+    _refuse_positional(snap0)
     _check_append_schema(snap0, source.schema)
-    all_paths = [os.path.join(table, f["path"]) for f in snap0["files"]]
+    schema = _schema(snap0)
+    rels = [f["path"] for f in snap0["files"]]
     keys = source.select(*key_cols).distinct()
-    # input_file_name() must bind to its single source BEFORE the join
-    # (Spark rejects it in a multi-source plan), so materialize it in a
-    # projection directly over the scan
-    tbl_with_file = spark.read.schema(schema).parquet(*all_paths).select(
-        *key_cols, F.input_file_name().alias("_f")
-    )
-    touched_rows = (
-        tbl_with_file.join(keys, key_cols, "left_semi")
-        .groupBy("_f")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    touched_rel = {_rel(table, r["_f"]) for r in touched_rows}
-    n_updated = sum(r["n"] for r in touched_rows)
+    scan = _with_row_provenance(_read_files(spark, table, schema, rels))
+    touched = _touched(scan.join(keys, key_cols, "left_semi"))
+    touched_rel = set(touched)
+    n_updated = sum(touched.values())
     new_files = _rewrite_files(
         spark, table, snap0, touched_rel,
         lambda scan: scan.join(keys, key_cols, "left_anti"),
@@ -1490,11 +1458,7 @@ def compact(
     entries. Iceberg's rewrite_data_files has the same per-partition
     grouping."""
     snap = load_snapshot(table)
-    if _has_positional(snap):
-        raise ValueError(
-            "pending positional delete files — their (file, row_pos) "
-            "coordinates would dangle after a rewrite; run apply_deletes first"
-        )
+    _refuse_positional(snap)
     groups: dict[tuple, list[dict]] = {}
     for f in snap["files"]:
         if f["rows"] < target_rows:
@@ -1807,28 +1771,22 @@ def _ref_path(table: str, name: str) -> str:
     return os.path.join(table, REFS_DIR, f"{name}.json")
 
 
-def _write_ref(table: str, name: str, ref: dict, replace: bool) -> None:
-    """Atomically persist a ref. ``replace=False`` uses the same
-    create-exclusive ``os.link`` as snapshot publishes, so two racers
-    cannot both create one name; ``replace=True`` (branch moves) uses
-    ``os.replace`` — atomic last-writer-wins, the Iceberg
-    update-a-branch contract."""
-    path = _ref_path(table, name)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = os.path.join(
-        table, REFS_DIR, f".{name}-{uuid.uuid4().hex[:8]}.tmp"
-    )
-    with open(tmp, "w") as f:
-        json.dump(ref, f)
-    if replace:
-        os.replace(tmp, path)
-        return
-    try:
-        os.link(tmp, path)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
+def _new_ref(table: str, name: str, version: int | None, kind: str) -> dict:
+    """Create ref ``name`` of ``kind`` (tag/branch) at ``version``
+    (default: latest). Creation is create-exclusive like a snapshot
+    publish, so two racers cannot both create one name."""
+    import time as _time
+
+    snap = load_snapshot(table, version)  # validates existence
+    ref = {
+        "name": name,
+        "type": kind,
+        "version": snap["version"],
+        "created_at": round(_time.time(), 3),
+    }
+    if not _write_json(_ref_path(table, name), ref, exclusive=True):
         raise FileExistsError(f"ref {name!r} already exists on {table}")
+    return ref
 
 
 def _load_ref(table: str, name: str) -> dict:
@@ -1843,40 +1801,21 @@ def create_tag(table: str, name: str, version: int | None = None) -> dict:
     """Pin an IMMUTABLE named pointer at ``version`` (default: latest).
     Tags protect their snapshot from :func:`vacuum` until dropped —
     the release-pinning half of Iceberg refs."""
-    snap = load_snapshot(table, version)  # validates existence
-    import time as _time
-
-    ref = {
-        "name": name,
-        "type": "tag",
-        "version": snap["version"],
-        "created_at": round(_time.time(), 3),
-    }
-    _write_ref(table, name, ref, replace=False)
-    return ref
+    return _new_ref(table, name, version, "tag")
 
 
 def create_branch(table: str, name: str, version: int | None = None) -> dict:
     """Create a MOVABLE named pointer at ``version`` (default: latest).
     Move it later with :func:`set_branch`; like tags it pins its
     current target against :func:`vacuum`."""
-    snap = load_snapshot(table, version)
-    import time as _time
-
-    ref = {
-        "name": name,
-        "type": "branch",
-        "version": snap["version"],
-        "created_at": round(_time.time(), 3),
-    }
-    _write_ref(table, name, ref, replace=False)
-    return ref
+    return _new_ref(table, name, version, "branch")
 
 
 def set_branch(table: str, name: str, version: int) -> dict:
     """Move branch ``name`` to ``version`` (fast-forward or rewind —
     the caller decides the policy; the primitive is an atomic
-    pointer swap). Refuses to move a tag: tags are immutable."""
+    pointer swap, last writer wins — the Iceberg update-a-branch
+    contract). Refuses to move a tag: tags are immutable."""
     ref = _load_ref(table, name)
     if ref["type"] != "branch":
         raise ValueError(f"ref {name!r} is a {ref['type']} — tags are immutable")
@@ -1884,7 +1823,7 @@ def set_branch(table: str, name: str, version: int) -> dict:
     import time as _time
 
     ref = {**ref, "version": version, "updated_at": round(_time.time(), 3)}
-    _write_ref(table, name, ref, replace=True)
+    _write_json(_ref_path(table, name), ref, exclusive=False)
     return ref
 
 
@@ -1970,14 +1909,7 @@ def stage_append(df: DataFrame, table: str, wap_id: str | None = None) -> dict:
         "files": new_files,
         "new_rows": sum(f["rows"] for f in new_files),
     }
-    tmp = os.path.join(table, SNAP_DIR, f".wap-{wap_id}-{uuid.uuid4().hex[:8]}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(staged, f)
-    try:
-        os.link(tmp, _wap_path(table, wap_id))
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
+    if not _write_json(_wap_path(table, wap_id), staged, exclusive=True):
         raise FileExistsError(f"staged write {wap_id!r} already exists on {table}")
     return staged
 
@@ -2006,14 +1938,8 @@ def read_staged(spark: SparkSession, table: str, wap_id: str) -> DataFrame:
     validation job scans ONLY the incoming rows (null-rate checks,
     dedup-against-self, PII scan) no matter how large the base table
     is. That asymmetry is the whole point of WAP at 10^12 rows."""
-    from pyspark.sql.types import StructType
-
     staged = load_staged(table, wap_id)
-    schema = StructType.fromJson(json.loads(staged["schema_json"]))
-    paths = [os.path.join(table, f["path"]) for f in staged["files"]]
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
+    return _read_files(spark, table, _schema(staged), [f["path"] for f in staged["files"]])
 
 
 def publish_staged(table: str, wap_id: str, max_retries: int = 3) -> dict:
@@ -2025,10 +1951,8 @@ def publish_staged(table: str, wap_id: str, max_retries: int = 3) -> dict:
     concurrent add-column evolution the staged data lacks aborts with a
     clear error rather than publishing rows that silently drop the
     column). On success the staging record is removed."""
-    from pyspark.sql.types import StructType
-
     staged = load_staged(table, wap_id)
-    staged_schema = StructType.fromJson(json.loads(staged["schema_json"]))
+    staged_schema = _schema(staged)
 
     def build(base):
         _check_append_schema(base, staged_schema)

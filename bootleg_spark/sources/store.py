@@ -51,5 +51,8 @@ def write_buckets(df: DataFrame, path: str, mode: str = "append") -> None:
 
 def read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFrame:
     """Partition-pruned read of only the named buckets — per-call read
-    volume is O(store × |buckets| / n_buckets), not O(store)."""
-    return spark.read.parquet(path).where(F.col(BUCKET_COL).isin(buckets))
+    volume is O(store × |buckets| / n_buckets), not O(store). The
+    store's schema is fixed, so the read declares it rather than
+    starting a job to infer it."""
+    schema = f"subj string, pred string, obj string, {BUCKET_COL} int"
+    return spark.read.schema(schema).parquet(path).where(F.col(BUCKET_COL).isin(buckets))

@@ -55,11 +55,16 @@ def test_label_mentions_popularity_scorer(pipe):
     assert out["cand_probs"][0] == [[]]
 
 
-def test_label_mentions_matches_pipeline(pipe):
+@pytest.mark.parametrize("encoder", ["default", "mlp"])
+def test_label_mentions_matches_pipeline(pipe, spark, encoder):
     """The facade's picks equal the staged pipeline's picks on the
-    corpus pages (same plan, same broadcasts)."""
-    from pyspark.sql import functions as F
+    corpus pages (same plan, same broadcasts) — with a custom encoder
+    too, whose context vectors must match its entity matrix."""
+    if encoder == "mlp":
+        from bootleg_spark import synthspec as S
+        from bootleg_spark.functions.embedding import make_mlp_encoder
 
+        pipe = KgPipeline(spark, SF_SMOKE, encoder=make_mlp_encoder(S.EMB_DIM))
     ann = SparkAnnotator(pipe)
     pages = pipe.pages().limit(5)
     texts = [r["text"] for r in pages.select("text").collect()]

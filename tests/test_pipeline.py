@@ -224,6 +224,20 @@ def test_manifest_sf_dir_mismatch_refused(pipe, tmp_path):
         materialize_triples(pipe, out, n_buckets=2)
 
 
+def test_pipeline_init_job_budget(spark, tmp_path):
+    """KgPipeline's set-up on a corpus no earlier scan has cached (a
+    private copy of the documents, so neither the scan entry nor the
+    dims are reused) stays within its Spark job budget: 11 jobs on
+    sf0.001, the count it ran at when the ceiling was set."""
+    import shutil
+
+    from tests.conftest import count_jobs
+
+    shutil.copy(os.path.join(SF_SMOKE, "documents.parquet"), tmp_path)
+    _, n_jobs = count_jobs(spark, lambda: KgPipeline(spark, str(tmp_path)))
+    assert n_jobs <= 11
+
+
 def test_submit_sequence_links_once(pipe, tmp_path):
     """scripts/submit_pipeline.py's sequence: materialize the bucket
     store, then publish it. Publishing links nothing, so the whole
@@ -242,7 +256,7 @@ def test_submit_sequence_links_once(pipe, tmp_path):
         return snapshot_triples(pipe, out, table, 2)
 
     snap, n_jobs = count_jobs(pipe.spark, _sequence)
-    assert n_jobs <= 4  # ceiling: materialize 1 job + publish 3 jobs
+    assert n_jobs <= 3  # ceiling: materialize 1 job + publish 2 jobs
     got = sorted(tuple(r) for r in st.read_table(pipe.spark, table).collect())
     assert got == sorted(tuple(r) for r in pipe.triples().collect())
     assert len(got) == len(set(got)) == snap["total_rows"]

@@ -1267,19 +1267,30 @@ def test_positional_delete_instance_semantics(spark, docs, tmp_path):
 
 def test_positional_and_equality_deletes_compose(spark, docs, tmp_path):
     """Both MOR flavors pending at once: the read applies the equality
-    anti-join by value AND the positional anti-join by coordinate."""
-    table = str(tmp_path / "t")
-    st.write_table(docs.repartition(2), table)
+    anti-join by value AND the positional anti-join by coordinate, and
+    plans without a Spark job (delete files are read with declared
+    schemas). apply_deletes rewrites only the files holding dead rows,
+    also under a table root whose path contains ``data/``."""
+    from tests.conftest import count_jobs
+
+    table = str(tmp_path / "mydata" / "t")
+    s0 = st.write_table(docs.repartitionByRange(4, "doc_id"), table)
     st.delete_rows_mor(
         spark, table, spark.range(0, 5).select(F.col("id").alias("doc_id"))
     )
     st.delete_rows_positional(spark, table, "doc_id >= 90")
-    out = st.read_table(spark, table)
+    out, n_jobs = count_jobs(spark, lambda: st.read_table(spark, table))
+    assert n_jobs == 0
     assert out.count() == 85
     assert out.where("doc_id < 5 OR doc_id >= 90").count() == 0
     # positional tombstones skipped rows already dead by equality
     applied = st.apply_deletes(spark, table)
     assert applied is not None and st.read_table(spark, table).count() == 85
+    hit = sorted(
+        f["path"] for f in s0["files"]
+        if f["stats"]["doc_id"][0] < 5 or f["stats"]["doc_id"][1] >= 90
+    )
+    assert applied["rewritten"] == hit and len(hit) < len(s0["files"])
 
 
 def test_partitions_metadata_table(spark, docs, tmp_path):
