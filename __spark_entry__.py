@@ -407,7 +407,7 @@ def _q_mentions_ner(spark, sf_dir):
 
 def _q_linked_neural(spark, sf_dir):
     pipe = _pipe(spark, sf_dir)
-    linked = pipe.linked(extractor="ngram", scorer="neural")
+    linked = pipe.linked()
     return linked.select(
         "url",
         F.col("mention_pos").cast("long").alias("mention_pos"),

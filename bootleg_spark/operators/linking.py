@@ -12,7 +12,9 @@ Two scorers, both emitting (.., qid_pred, prob):
   argmax + threshold (ned_task.py:25-46, bootleg_annotator.py:538-625).
   Runs as ONE Arrow-batched pandas UDF with the entity-embedding matrix
   broadcast (static_entity_embeddings.py:10-36 fast path) — per-mention
-  compute is embarrassingly parallel, no shuffle at all.
+  compute is embarrassingly parallel, no shuffle at all. Its one caller
+  is ``KgPipeline.link_texts``, which passes the ``(encoder, dim)`` the
+  entity matrix was built with.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from pyspark.sql.types import (
 )
 
 from bootleg_spark import synthspec as S
-from bootleg_spark.functions.embedding import featurize_texts, link_candidates
+from bootleg_spark.functions.embedding import link_candidates
 from bootleg_spark.functions.textproc import (
     EntityStringConstants,
     build_entity_string,
@@ -168,22 +170,19 @@ def entity_strings(
     )
 
 
-def build_entity_embeddings(
-    ent_strs: DataFrame, dim: int = S.EMB_DIM, encoder=None
-) -> DataFrame:
+def build_entity_embeddings(ent_strs: DataFrame, dim: int, encoder) -> DataFrame:
     """(qid, eid, emb array<double>): entity encodings — the Spark
     analogue of extract_all_entities.py:136-211 (one-time forward pass
     over all entities producing the static matrix).
 
     ``encoder`` is any ``(texts, dim) -> (B, dim) ndarray`` callable
-    (default: the feature-hash stand-in; a torch/ONNX BERT or
-    :func:`bootleg_spark.functions.embedding.make_mlp_encoder` slots in
-    with no plan change — it ships to executors via the UDF closure)."""
-    enc = encoder or featurize_texts
+    (the feature-hash ``featurize_texts``, a torch/ONNX BERT or
+    :func:`bootleg_spark.functions.embedding.make_mlp_encoder` — it
+    ships to executors via the UDF closure)."""
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _embed(texts: pd.Series) -> pd.Series:
-        mat = enc([t or "" for t in texts], dim)
+        mat = encoder([t or "" for t in texts], dim)
         return pd.Series(list(mat))
 
     return ent_strs.select("qid", "eid", _embed("ent_str").alias("emb"))
@@ -218,21 +217,21 @@ _SCORE_SCHEMA = StructType(
 def link_neural(
     mention_cands: DataFrame,
     ent_matrix_bc,
-    text_col: str = "text",
-    dim: int = S.EMB_DIM,
-    max_seq_window_len: int = S.MAX_SEQ_WINDOW_LEN,
-    threshold: float = S.PROB_THRESHOLD,
-    encoder=None,
+    *,
+    encoder,
+    dim: int,
+    text_col: str,
+    threshold: float,
 ) -> DataFrame:
     """Score candidates with the broadcast static entity matrix.
 
-    Input needs (text, char_start, char_end, cand_qids). Entire batch is
-    vectorized: context featurization + einsum dot + masked softmax
-    (link_candidates, shared with the fused kernel). Mentions whose top
-    prob ≤ threshold are dropped (bootleg_annotator.py:602-625). ``encoder`` must match the one used
-    to build the entity matrix (see :func:`build_entity_embeddings`).
+    Input needs (``text_col``, char_start, char_end, cand_qids). Entire
+    batch is vectorized: context featurization + einsum dot + masked
+    softmax (link_candidates, shared with the fused kernel). Mentions
+    whose top prob ≤ threshold are dropped
+    (bootleg_annotator.py:602-625). ``encoder`` and ``dim`` must be the
+    pair that built the entity matrix (:func:`build_entity_embeddings`).
     """
-    enc = encoder or featurize_texts
 
     @F.pandas_udf(_SCORE_SCHEMA)
     def _score(
@@ -243,11 +242,11 @@ def link_neural(
         if n == 0:
             return pd.DataFrame({"qid_pred": [], "prob": [], "cand_probs": []})
         contexts = [
-            extract_context((int(a), int(b)), t or "", max_seq_window_len)
+            extract_context((int(a), int(b)), t or "", S.MAX_SEQ_WINDOW_LEN)
             for t, a, b in zip(text, cs, ce)
         ]
         qlists = [list(c) for c in cand_qids]
-        qid_pred, top, probs = link_candidates(enc(contexts, dim), qlists, qid2row, mat)
+        qid_pred, top, probs = link_candidates(encoder(contexts, dim), qlists, qid2row, mat)
         return pd.DataFrame(
             {
                 "qid_pred": qid_pred,

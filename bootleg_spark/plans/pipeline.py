@@ -29,9 +29,8 @@ from bootleg_spark.operators.linking import (
     build_entity_embeddings,
     entity_strings,
     link_neural,
-    link_popularity,
 )
-from bootleg_spark.operators.mentions import extract_mentions_ngram, extract_mentions_word
+from bootleg_spark.operators.mentions import extract_mentions_ngram
 from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
 from bootleg_spark.sources.synth import build_dims, pages_table
 
@@ -75,11 +74,6 @@ class KgPipeline:
         # scorer (linked_relational) mirrors
         self._custom_encoder = encoder
         self.dims = build_dims(spark, sf_dir)
-        alias_rows = [r["alias"] for r in self.dims["aliases"].select("alias").collect()]
-        self.alias_set_bc = spark.sparkContext.broadcast(frozenset(alias_rows))
-        # longest alias word count: drives the fused kernel's extractor
-        # dead-pass skip; linked_relational needs it to be 1
-        self.dict_max_words = max((len(a.split()) for a in alias_rows), default=1)
         # pre-group + cache the candidate arrays once: every query joins
         # against this (the reference builds its alias trie once at init,
         # bootleg_annotator.py:240-248). ONE collect both materializes the
@@ -90,8 +84,14 @@ class KgPipeline:
         self.grouped_cands = grouped_candidates(self.dims["alias_cands"]).cache()
         cand_rows = {r["alias"]: list(r["cand_qids"]) for r in self.grouped_cands.collect()}
         self.cand_dict_bc = spark.sparkContext.broadcast(cand_rows)
+        # the fused kernel looks up cands[a] for every alias it matches,
+        # so the alias set is exactly the candidate dict's keys
+        self.alias_set_bc = spark.sparkContext.broadcast(frozenset(cand_rows))
+        # longest alias word count: drives the fused kernel's extractor
+        # dead-pass skip; linked_relational needs it to be 1
+        self.dict_max_words = max((len(a.split()) for a in cand_rows), default=1)
         self.ent_strs = entity_strings(self.dims["entities"], self.dims["kg_relations"])
-        self.emb_df = build_entity_embeddings(self.ent_strs, dim, encoder=self.encoder)
+        self.emb_df = build_entity_embeddings(self.ent_strs, dim, self.encoder)
         self.ent_matrix_bc = broadcast_entity_matrix(spark, self.emb_df)
         # subj -> [(rel, obj)] for the fused-local triple emission, grouped
         # DISTRIBUTED first so the driver receives one row per subject,
@@ -112,8 +112,8 @@ class KgPipeline:
     def pages(self) -> DataFrame:
         return pages_table(self.spark, self.sf_dir)
 
-    def linked(self, pages: DataFrame | None = None, extractor: str = "ngram", scorer: str = "neural") -> DataFrame:
-        """② + ③ + ④ on an extracted-text pages frame.
+    def linked(self, pages: DataFrame | None = None) -> DataFrame:
+        """① + the staged chain (:meth:`link_texts`) over a pages frame.
 
         Column hygiene for the Python stages: after ① the plan carries
         only (url, doc_id, text_extracted) — html/text/warc_ts must never
@@ -122,18 +122,21 @@ class KgPipeline:
         p = extract_text(pages if pages is not None else self.pages()).select(
             "url", "doc_id", "text_extracted"
         )
-        if extractor == "ngram":
-            mentions = extract_mentions_ngram(p, self.alias_set_bc, text_col="text_extracted")
-        elif extractor == "word":
-            mentions = extract_mentions_word(p, self.dims["aliases"], text_col="text_extracted")
-        else:
-            raise ValueError(extractor)
+        return self.link_texts(p, "text_extracted")
+
+    def link_texts(self, df: DataFrame, text_col: str, threshold: float = S.PROB_THRESHOLD) -> DataFrame:
+        """② + ③ + ④ as staged operators: ngram mentions of ``text_col``
+        → candidate arrays → neural scoring with this pipeline's
+        ``(encoder, dim)``, the pair that built the entity matrix. One
+        row per mention linked above ``threshold``; every input column
+        is carried through. The reference the fused kernel
+        (:meth:`_link`) is checked against, and the annotator's plan."""
+        mentions = extract_mentions_ngram(df, self.alias_set_bc, text_col=text_col)
         mc = attach_candidates(mentions, self.dims["alias_cands"], grouped=self.grouped_cands)
-        if scorer == "neural":
-            if extractor == "word":
-                raise ValueError("neural scorer needs char spans (ngram extractor)")
-            return link_neural(mc, self.ent_matrix_bc, text_col="text_extracted", encoder=self.encoder)
-        return link_popularity(mc)
+        return link_neural(
+            mc, self.ent_matrix_bc, encoder=self.encoder, dim=self.dim,
+            text_col=text_col, threshold=threshold,
+        )
 
     def _link(self, pages: DataFrame | None, cols: list[str], emit, schema: str) -> DataFrame:
         """The one fused linking kernel: ①–④ in ONE ``mapInPandas`` pass.
@@ -312,13 +315,7 @@ class KgPipeline:
         local = self._link(p, group_cols, _page_triples, schema + "subj string, pred string, obj string")
         return local.dropDuplicates(cols)
 
-    def triples(
-        self,
-        pages: DataFrame | None = None,
-        extractor: str = "ngram",
-        scorer: str = "neural",
-        fused: bool = True,
-    ) -> DataFrame:
+    def triples(self, pages: DataFrame | None = None, fused: bool = True) -> DataFrame:
         """⑤ co-occurrence pairs ⋈ relations → dedup'd (subj, pred, obj).
 
         ``fused=True`` (default) runs ①–⑤ as :meth:`triples_fused_local`,
@@ -330,12 +327,13 @@ class KgPipeline:
         O(dim·T) aggregation that cost more than the single-core numpy
         it displaces, so both were deleted. ``fused=False`` runs the
         staged :meth:`linked` plan plus the relation semi-join, the
-        reference the fused kernel is checked against.
+        reference the fused kernel is checked against. Both link with
+        the neural scorer; the word → popularity → triples chain is the
+        ``triples_popularity`` query, composed from the operators.
         """
-        if fused and extractor == "ngram" and scorer == "neural":
+        if fused:
             return self.triples_fused_local(pages)
-        linked = self.linked(pages, extractor, scorer)
-        ents = doc_entities(linked, id_col="doc_id", qid_col="qid_pred")
+        ents = doc_entities(self.linked(pages), id_col="doc_id", qid_col="qid_pred")
         return triples_from_doc_entities(ents, self.dims["kg_relations"])
 
 
@@ -536,17 +534,16 @@ def incremental_kg_update(
     pages_table: str,
     graph_table: str,
     group: str = "kg-builder",
-    extractor: str = "ngram",
-    scorer: str = "neural",
 ) -> dict | None:
     """One incremental KG-construction step over the table-as-log: the
     crawl appends pages to ``pages_table`` (snapshot-manifest table);
     this consumes ONLY the pages added since the last acknowledged run
-    (consumer-group offset), runs the full pipeline on that slice, and
-    lands the resulting triples in ``graph_table`` with edge-set
-    semantics and exactly-once effects. The north-star's "resumes
-    idempotently mid-run" at the job-chaining grain — a re-crawl cycle
-    never reprocesses the whole corpus and never double-writes an edge.
+    (consumer-group offset), runs ``pipe.triples`` (the fused kernel)
+    on that slice, and lands the resulting triples in ``graph_table``
+    with edge-set semantics and exactly-once effects. The north-star's
+    "resumes idempotently mid-run" at the job-chaining grain — a
+    re-crawl cycle never reprocesses the whole corpus and never
+    double-writes an edge.
 
     Exactly-once is belt-and-braces across the two crash seams:
 
@@ -567,7 +564,7 @@ def incremental_kg_update(
     if got is None:
         return None
     pages, v = got
-    tri = pipe.triples(pages, extractor=extractor, scorer=scorer)
+    tri = pipe.triples(pages)
     commit = insert_new_triples(tri, graph_table, batch_id=v)
     st.ack_consumed(pages_table, group, v)
     return {

@@ -86,7 +86,7 @@ def main() -> None:
         ("full pipeline (pages → triples, neural, fused)", pipe.triples()),
         (
             "relational pipeline (word mentions → popularity → triples)",
-            pipe.triples(extractor="word", scorer="popularity", fused=False),
+            entry.queries()["triples_popularity"](spark, SF),
         ),
         ("mention extraction (ngram UDF)", entry.queries()["mentions_ngram"](spark, SF)),
         (

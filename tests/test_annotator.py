@@ -46,15 +46,6 @@ def test_label_mentions_contract(pipe):
     assert out["aliases"][1] == [] and out["qids"][1] == []
 
 
-def test_label_mentions_popularity_scorer(pipe):
-    ann = SparkAnnotator(pipe, scorer="popularity")
-    a0 = _an_alias(pipe)
-    out = ann.label_mentions(f"about the {a0} of it")
-    assert len(out["qids"][0]) == 1
-    assert out["probs"][0] == [1.0]
-    assert out["cand_probs"][0] == [[]]
-
-
 @pytest.mark.parametrize("encoder", ["default", "mlp"])
 def test_label_mentions_matches_pipeline(pipe, spark, encoder):
     """The facade's picks equal the staged pipeline's picks on the

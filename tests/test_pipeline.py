@@ -24,8 +24,10 @@ def test_extract_text_byte_identical(pipe):
     assert bad == 0
 
 
-def test_popularity_triples_nonempty_and_valid(pipe):
-    tri = pipe.triples(extractor="word", scorer="popularity")
+def test_popularity_triples_nonempty_and_valid(pipe, spark):
+    import __spark_entry__ as entrymod
+
+    tri = entrymod.queries()["triples_popularity"](spark, SF_SMOKE)
     rows = tri.collect()
     assert len(rows) > 0
     kg = {
@@ -100,7 +102,7 @@ def test_semijoin_plan_equals_naive_pairs_plan(pipe, spark):
         triples_from_doc_entities,
     )
 
-    linked = pipe.linked(extractor="word", scorer="popularity")
+    linked = pipe.linked()
     ents = doc_entities(linked, id_col="doc_id", qid_col="qid_pred")
     fast = {tuple(r) for r in triples_from_doc_entities(ents, pipe.dims["kg_relations"]).collect()}
     naive = {
@@ -110,9 +112,18 @@ def test_semijoin_plan_equals_naive_pairs_plan(pipe, spark):
     assert fast == naive and len(fast) > 0
 
 
-def test_fused_equals_staged(pipe):
+@pytest.fixture(scope="module")
+def pipe_dim32(spark):
+    return KgPipeline(spark, SF_SMOKE, dim=32)
+
+
+@pytest.mark.parametrize("which", ["pipe", "pipe_dim32"])
+def test_fused_equals_staged(request, which):
     """The single-pass mapInPandas path must produce exactly the staged
-    chain's linked mentions (and therefore identical triples)."""
+    chain's linked mentions (and therefore identical triples) — also at
+    a non-default ``dim``, which both paths must take from the pipeline
+    that built the entity matrix."""
+    pipe = request.getfixturevalue(which)
     staged = {
         (r["url"], r["mention_pos"], r["alias"], r["char_start"], r["char_end"],
          r["qid_pred"], round(r["prob"], 9))
@@ -227,7 +238,7 @@ def test_manifest_sf_dir_mismatch_refused(pipe, tmp_path):
 def test_pipeline_init_job_budget(spark, tmp_path):
     """KgPipeline's set-up on a corpus no earlier scan has cached (a
     private copy of the documents, so neither the scan entry nor the
-    dims are reused) stays within its Spark job budget: 11 jobs on
+    dims are reused) stays within its Spark job budget: 10 jobs on
     sf0.001, the count it ran at when the ceiling was set."""
     import shutil
 
@@ -235,7 +246,7 @@ def test_pipeline_init_job_budget(spark, tmp_path):
 
     shutil.copy(os.path.join(SF_SMOKE, "documents.parquet"), tmp_path)
     _, n_jobs = count_jobs(spark, lambda: KgPipeline(spark, str(tmp_path)))
-    assert n_jobs <= 11
+    assert n_jobs <= 10
 
 
 def test_submit_sequence_links_once(pipe, tmp_path):
@@ -395,20 +406,18 @@ def test_incremental_kg_update_exactly_once(spark, tmp_path):
     gt = str(tmp_path / "graph")
 
     st.commit_stream_batch(pages.where("doc_id % 2 = 0"), pt, batch_id=0)
-    r1 = incremental_kg_update(pipe, pt, gt, scorer="popularity")
+    r1 = incremental_kg_update(pipe, pt, gt)
     assert r1 is not None and r1["consumed_version"] == 1
     g1 = sorted(tuple(r) for r in st.read_table(spark, gt).collect())
     # caught up: no-op
-    assert incremental_kg_update(pipe, pt, gt, scorer="popularity") is None
+    assert incremental_kg_update(pipe, pt, gt) is None
 
     # second crawl batch appends the odd pages; only they are processed
     st.commit_stream_batch(pages.where("doc_id % 2 = 1"), pt, batch_id=1)
-    r2 = incremental_kg_update(pipe, pt, gt, scorer="popularity")
+    r2 = incremental_kg_update(pipe, pt, gt)
     assert r2 is not None and r2["consumed_version"] == 2
     got = sorted(tuple(r) for r in st.read_table(spark, gt).collect())
-    want = sorted(
-        tuple(r) for r in pipe.triples(pages, scorer="popularity").collect()
-    )
+    want = sorted(tuple(r) for r in pipe.triples(pages).collect())
     assert got == want  # full-corpus parity, no duplicate edges
     assert len(g1) < len(got)
 
@@ -417,7 +426,7 @@ def test_incremental_kg_update_exactly_once(spark, tmp_path):
     import json as _json
     with open(st._offset_path(pt, "kg-builder"), "w") as f:
         _json.dump({"group": "kg-builder", "version": 1}, f)
-    r3 = incremental_kg_update(pipe, pt, gt, scorer="popularity")
+    r3 = incremental_kg_update(pipe, pt, gt)
     assert r3 is not None and r3["new_triples"] == 0
     again = sorted(tuple(r) for r in st.read_table(spark, gt).collect())
     assert again == want

@@ -72,8 +72,10 @@ def test_relational_linking_has_zero_python(spark, pipe):
     assert "BroadcastHashJoin" in p  # dict + candidate dims broadcast
 
 
-def test_staged_popularity_triples_broadcast_dims(spark, pipe):
-    p = plan_of(pipe.triples(extractor="word", scorer="popularity", fused=False))
+def test_staged_popularity_triples_broadcast_dims(spark):
+    import __spark_entry__ as entrymod
+
+    p = plan_of(entrymod.queries()["triples_popularity"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in p  # alias dict + relations stay broadcast
     assert "SortMergeJoin" not in p
     assert "CartesianProduct" not in p
@@ -84,10 +86,12 @@ def test_no_single_partition_row_funnel(spark, pipe):
     aggregates (one partial row per upstream partition), never row
     data. Every headline plan's SinglePartition must sit directly
     above a partial aggregate."""
+    import __spark_entry__ as entrymod
+
     for df in (
         pipe.triples(),
         pipe.linked_relational(),
-        pipe.triples(extractor="word", scorer="popularity", fused=False),
+        entrymod.queries()["triples_popularity"](spark, SF_SMOKE),
     ):
         p = plan_of(df)
         # formatted explain lists arguments per node; find exchanges
