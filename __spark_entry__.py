@@ -21,7 +21,7 @@ from bootleg_spark import oracle as O
 from bootleg_spark import synthspec as S
 from bootleg_spark.functions.lnrm import lnrm_ascii_sql
 from bootleg_spark.operators import dedup, similarity, stats, textclean, textstats
-from bootleg_spark.operators.candidates import attach_candidates
+from bootleg_spark.operators.candidates import attach_candidates, grouped_candidates
 from bootleg_spark.operators.linking import link_popularity
 from bootleg_spark.operators.mentions import extract_mentions_word
 from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
@@ -140,7 +140,7 @@ def _q_mentions_word(spark, sf_dir):
 
 def _linked_pop(spark, sf_dir):
     m, d = _word_mentions(spark, sf_dir)
-    mc = attach_candidates(m, d["alias_cands"])
+    mc = attach_candidates(m, grouped_candidates(d["alias_cands"]))
     return link_popularity(mc).select("doc_id", "mention_pos", "alias", F.col("qid_pred").alias("qid")), d
 
 
@@ -208,7 +208,7 @@ def _q_slice_eval(spark, sf_dir):
 
 def _q_recall_at_k(spark, sf_dir):
     m, d = _word_mentions(spark, sf_dir)
-    mc = attach_candidates(m, d["alias_cands"])
+    mc = attach_candidates(m, grouped_candidates(d["alias_cands"]))
     with_gold = mc.join(F.broadcast(d["aliases"]), "alias").withColumn("qid_gold", _gold_qid())
     return stats.recall_at_k(with_gold)
 
@@ -362,10 +362,10 @@ def _q_mentions_relational_multi(spark, sf_dir):
 
 
 def _q_linked_relational(spark, sf_dir):
-    """①–④ with zero Python (JVM extraction, relational matcher,
-    explode-aggregate feature-hash scorer). Same golden oracle as
-    linked_neural — probs agree to ~1e-15 (within the 6-digit round),
-    qids/spans exactly."""
+    """① + ② in the JVM (html strip, relational matcher), then the
+    staged broadcast candidates + ``link_neural`` scorer. Same golden
+    oracle as linked_neural: its rows equal ``KgPipeline.linked``'s
+    exactly."""
     pipe = _pipe(spark, sf_dir)
     linked = pipe.linked_relational()
     return linked.select(
@@ -536,8 +536,6 @@ def _q_candidates_with_nc(spark, sf_dir):
     """Padded candidate arrays with the NC (not-in-candidates) slot
     prepended — the train_in_candidates=False shape
     (eval_utils.py:59-114: NC→eid 0, "-1" pad→eid 1)."""
-    from bootleg_spark.operators.candidates import grouped_candidates
-
     d = _dims(spark, sf_dir)
     g = grouped_candidates(d["alias_cands"])
     nc = g.select(
@@ -1116,7 +1114,7 @@ def _q_candidates_salted(spark, sf_dir):
     from bootleg_spark.operators.candidates import attach_candidates_salted
 
     m, d = _word_mentions(spark, sf_dir)
-    mc = attach_candidates_salted(m, d["alias_cands"])
+    mc = attach_candidates_salted(m, grouped_candidates(d["alias_cands"]))
     return link_popularity(mc).select(
         "doc_id", "mention_pos", "alias", F.col("qid_pred").alias("qid")
     )
@@ -4109,10 +4107,10 @@ WITH pages AS (
 SELECT url, warc_date, CAST(strlen(html) AS BIGINT) AS n_bytes, md5(html) AS payload_md5
 FROM pages""",
     }
-    # the all-JVM paths must reproduce their Python twins row-for-row,
-    # so they share the twins' oracles verbatim (mentions: the same
-    # relational model in DuckDB SQL; linked: the same golden parquet —
-    # probs agree within the 6-digit round, qids/spans exactly)
+    # the JVM-matcher paths must reproduce their Python twins
+    # row-for-row, so they share the twins' oracles verbatim (mentions:
+    # the same relational model in DuckDB SQL; linked: the same golden
+    # parquet — linked_relational scores through the same link_neural)
     d["mentions_relational"] = d["mentions_ngram"]
     d["linked_relational"] = d["linked_neural"]
     # plan variants that must be row-identical to an existing path:

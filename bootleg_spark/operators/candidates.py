@@ -51,11 +51,9 @@ def grouped_candidates(
 
 def attach_candidates_salted(
     mentions: DataFrame,
-    alias_cands: DataFrame,
+    grouped: DataFrame,
     salt_n: int = 16,
     fact_keys: tuple[str, ...] = ("doc_id", "mention_pos"),
-    max_candidates: int = S.MAX_CANDIDATES,
-    grouped: DataFrame | None = None,
 ) -> DataFrame:
     """Shuffle-join variant of :func:`attach_candidates` for alias
     dictionaries beyond broadcast budget, salted against head-alias
@@ -71,28 +69,20 @@ def attach_candidates_salted(
     cheap, the dim is one array row per alias. Output rows identical
     to the broadcast form (pytest-pinned); BENCH.md "Head-alias skew
     evidence (round 4)" has the skew measurements."""
-    cands = grouped if grouped is not None else grouped_candidates(alias_cands, max_candidates)
     salt = F.pmod(F.hash(*[F.col(k) for k in fact_keys]), F.lit(salt_n))
     fact = mentions.withColumn("_salt", salt)
-    dim = cands.withColumn(
+    dim = grouped.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1)))
     )
     return fact.hint("shuffle_hash").join(dim, ["alias", "_salt"]).drop("_salt")
 
 
-def attach_candidates(
-    mentions: DataFrame,
-    alias_cands: DataFrame,
-    max_candidates: int = S.MAX_CANDIDATES,
-    grouped: DataFrame | None = None,
-) -> DataFrame:
-    """Broadcast-join candidate arrays onto the mention stream; mentions
-    whose alias has no candidates drop out (inner join).
-
-    Pass ``grouped`` (a cached grouped_candidates frame) to skip
-    rebuilding the aggregation on every query. The NC-slot shape
+def attach_candidates(mentions: DataFrame, grouped: DataFrame) -> DataFrame:
+    """Broadcast-join the :func:`grouped_candidates` arrays onto the
+    mention stream; mentions whose alias has no candidates drop out
+    (inner join). A long-lived caller builds ``grouped`` once and
+    caches it (``KgPipeline.grouped_cands``). The NC-slot shape
     (train_in_candidates=False) is built by the ``candidates_with_nc``
     query.
     """
-    cands = grouped if grouped is not None else grouped_candidates(alias_cands, max_candidates)
-    return mentions.join(F.broadcast(cands), "alias")
+    return mentions.join(F.broadcast(grouped), "alias")

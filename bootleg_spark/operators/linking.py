@@ -255,8 +255,12 @@ def link_neural(
             }
         )
 
+    # declared nondeterministic so the optimizer cannot push the
+    # threshold filter below this projection: inlining the UDF into the
+    # filter plans a second ArrowEvalPython, i.e. every mention scored twice
+    score = _score.asNondeterministic()
     scored = mention_cands.withColumn(
-        "_s", _score(F.col(text_col), F.col("char_start"), F.col("char_end"), F.col("cand_qids"))
+        "_s", score(F.col(text_col), F.col("char_start"), F.col("char_end"), F.col("cand_qids"))
     )
     return (
         scored.select("*", "_s.qid_pred", "_s.prob", "_s.cand_probs")

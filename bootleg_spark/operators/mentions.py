@@ -696,7 +696,6 @@ def extract_mentions_ngram_relational(
     alias_df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    keep_arr: bool = False,
 ) -> DataFrame:
     """EXACT ngram-extractor semantics as pure JVM expressions, valid
     on rows the caller guards to be single-spaced alnum words
@@ -717,11 +716,6 @@ def extract_mentions_ngram_relational(
     length. Output schema matches :func:`extract_mentions_ngram`;
     equality with the Python extractor on guarded rows is pinned by
     test_parity + the triples_neural/linked_neural golden oracles.
-
-    ``keep_arr=True`` additionally carries ``_arr`` (the word array)
-    and ``_tok_idx`` (the mention's word index) so the all-JVM scorer
-    (operators/jvm_link.py) can build context windows without
-    re-splitting the text.
     """
     stop = sorted(STOP_WORDS)
 
@@ -758,7 +752,6 @@ def extract_mentions_ngram_relational(
     from pyspark.sql import Window as _W
 
     w = _W.partitionBy(id_col).orderBy("_tok_idx")
-    extra = ["_arr", "_tok_idx"] if keep_arr else []
     return (
         hits.withColumn("char_start", char_start.cast("int"))
         .withColumn("char_end", (F.col("char_start") + F.length("_w")).cast("int"))
@@ -769,6 +762,5 @@ def extract_mentions_ngram_relational(
             F.lower(F.col("_w")).alias("alias"),
             "char_start",
             "char_end",
-            *extra,
         )
     )

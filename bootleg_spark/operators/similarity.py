@@ -149,20 +149,6 @@ def ivf_centroids(
     return cents
 
 
-def ivf_assign(
-    emb: DataFrame,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iter: int = 1,
-) -> DataFrame:
-    """IVF cell assignment against Lloyd-iterated centroids
-    (:func:`ivf_centroids`); ``n_iter=0`` reproduces the round-1
-    seed-only behavior."""
-    cents = ivf_centroids(emb, n_cells, n_iter, id_col, vec_col)
-    return _assign_to_centroids(emb, cents, id_col, vec_col)
-
-
 def ivf_topk(
     emb: DataFrame,
     n_queries: int = 10,

@@ -11,8 +11,8 @@ Scale notes (the part the reference never had to solve):
   (page, qid)) so a page mentioning "spark" 50 times contributes one
   node, bounding the pair fan-out;
 - the pair→relation join broadcasts the relation dim;
-- the final (s,p,o) dedup is a partial-agg shuffle; AQE skew-join +
-  optional salting (salted_distinct) handle head entities.
+- the final (s,p,o) dedup is a partial-agg shuffle; AQE skew-join
+  handles head entities.
 """
 
 from __future__ import annotations
@@ -81,19 +81,6 @@ def triples_from_doc_entities(
         confirmed.select(*groups, F.col("qid").alias("subj"), "pred", "obj")
         .dropDuplicates(groups + ["subj", "pred", "obj"])
     )
-
-
-def salted_distinct(df: DataFrame, cols: list[str], salt_n: int = 32) -> DataFrame:
-    """Two-stage dedup for heavily skewed keys: local dedup within a
-    salted repartition, then global dedup. Spark's dropDuplicates already
-    does map-side partial aggregation; this variant additionally breaks
-    up a hot key across ``salt_n`` reducers before the final pass
-    (SURVEY.md §4 skew row; north_rule skew requirement)."""
-    salted = df.withColumn("_salt", F.pmod(F.hash(*cols), F.lit(salt_n)))
-    local = salted.repartition(salt_n, "_salt", *[F.col(c) for c in cols]).dropDuplicates(
-        cols + ["_salt"]
-    )
-    return local.drop("_salt").dropDuplicates(cols)
 
 
 def cooccurrence_pmi(ents: DataFrame, min_pair_count: int = 2) -> DataFrame:

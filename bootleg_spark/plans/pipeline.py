@@ -70,9 +70,6 @@ class KgPipeline:
         self.sf_dir = sf_dir
         self.dim = dim
         self.encoder = encoder or featurize_texts
-        # None ⇒ default feature-hash, the only encoder the relational
-        # scorer (linked_relational) mirrors
-        self._custom_encoder = encoder
         self.dims = build_dims(spark, sf_dir)
         # pre-group + cache the candidate arrays once: every query joins
         # against this (the reference builds its alias trie once at init,
@@ -132,7 +129,14 @@ class KgPipeline:
         is carried through. The reference the fused kernel
         (:meth:`_link`) is checked against, and the annotator's plan."""
         mentions = extract_mentions_ngram(df, self.alias_set_bc, text_col=text_col)
-        mc = attach_candidates(mentions, self.dims["alias_cands"], grouped=self.grouped_cands)
+        return self._link_mentions(mentions, text_col, threshold)
+
+    def _link_mentions(self, mentions: DataFrame, text_col: str, threshold: float) -> DataFrame:
+        """③ + ④ over mention rows of ``text_col``: broadcast the cached
+        candidate arrays on, then score with this pipeline's
+        ``(encoder, dim)``. Shared by :meth:`link_texts` and
+        :meth:`linked_relational`."""
+        mc = attach_candidates(mentions, self.grouped_cands)
         return link_neural(
             mc, self.ent_matrix_bc, encoder=self.encoder, dim=self.dim,
             text_col=text_col, threshold=threshold,
@@ -209,36 +213,19 @@ class KgPipeline:
         out = self._link(pages, ["url", "doc_id"], _mention_rows, schema)
         return out.where((F.col("qid_pred") != "-1") & (F.col("prob") > F.lit(threshold)))
 
-    def _cand_embs(self):
-        """(alias, j, qid, emb) candidate-embedding dim (lazy, cached on
-        the pipeline): the broadcast side of the all-JVM scoring join."""
-        if getattr(self, "_cand_embs_df", None) is None:
-            from bootleg_spark.operators.jvm_link import flat_candidate_embs
-
-            self._cand_embs_df = flat_candidate_embs(
-                self.grouped_cands, self.emb_df
-            ).cache()
-        return self._cand_embs_df
-
     def linked_relational(
-        self,
-        pages: DataFrame | None = None,
-        threshold: float = S.PROB_THRESHOLD,
-        text_col: str | None = None,
+        self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD
     ) -> DataFrame:
-        """①–④ with ZERO Python: JVM html strip → relational mention
-        matcher → relational context windows + feature-hash scoring
-        (operators/jvm_link.py). Valid ONLY for rows passing
+        """① + ② in the JVM (the html strip and the relational mention
+        matcher, both codegen), then the staged ③ + ④ of
+        :meth:`_link_mentions`. Valid ONLY for rows passing
         ``jvm_extractable_expr`` ∧ ``clean_text_expr`` with a
-        single-token dictionary — the caller guards (tests exercise the
-        guard violations). ``text_col`` skips the html strip when the
-        caller already carries extracted text. Output matches
-        :meth:`linked_fused` exactly on qid/span columns and to ~1e-15
-        on probs (see jvm_link module docstring). It backs the
-        ``linked_relational`` query; triples always take the fused
-        kernel.
+        single-token dictionary — the caller guards. On those rows the
+        output equals :meth:`linked`'s exactly, for any encoder. It
+        backs the ``linked_relational`` query; triples always take the
+        fused kernel.
         """
-        from bootleg_spark.operators import jvm_link
+        from bootleg_spark.operators.jvm_link import html_text_expr
         from bootleg_spark.operators.mentions import extract_mentions_ngram_relational
 
         if self.dict_max_words != 1:
@@ -246,28 +233,13 @@ class KgPipeline:
                 "linked_relational needs a single-token alias dictionary "
                 f"(dict_max_words={self.dict_max_words}); use linked_fused"
             )
-        if self._custom_encoder is not None:
-            raise ValueError(
-                "linked_relational hard-codes the default feature-hash "
-                "scorer; with a custom encoder the entity embeddings and "
-                "the relational context vectors would disagree — use "
-                "linked_fused, which threads the encoder"
-            )
-        p = pages if pages is not None else self.pages()
-        if text_col is None:
-            p = p.select(
-                "url", "doc_id",
-                jvm_link.html_text_expr(F.col("html")).alias("text_extracted"),
-            )
-        else:
-            p = p.select("url", "doc_id", F.col(text_col).alias("text_extracted"))
+        p = (pages if pages is not None else self.pages()).select(
+            "url", "doc_id", html_text_expr(F.col("html")).alias("text_extracted")
+        )
         mentions = extract_mentions_ngram_relational(
-            p, self.dims["aliases"], text_col="text_extracted", keep_arr=True
+            p, self.dims["aliases"], text_col="text_extracted"
         )
-        out = jvm_link.link_neural_relational(
-            mentions, self._cand_embs(), dim=self.dim, threshold=threshold
-        )
-        return out.select(
+        return self._link_mentions(mentions, "text_extracted", threshold).select(
             "url", "doc_id", "mention_pos", "alias", "char_start", "char_end",
             "qid_pred", "prob",
         )

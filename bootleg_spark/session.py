@@ -114,10 +114,3 @@ def fan_scan(df, key_cols: tuple = ()):
             return df.repartition(target, *[F.col(c) for c in key_cols])
         return df.repartition(target)
     return df
-
-
-def stop_spark() -> None:
-    """Stop the active session if any (used by the scaling bench)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

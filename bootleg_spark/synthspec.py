@@ -40,8 +40,3 @@ MAX_ENT_TYPE_LEN = 20
 EMB_DIM = 64
 PROB_THRESHOLD = 0.0
 MAX_SEQ_WINDOW_LEN = 64
-
-
-def variant_score(alias_id: int, v: int) -> int:
-    """Deterministic candidate popularity score."""
-    return (alias_id * SCORE_MULT_ALIAS + v * SCORE_MULT_VARIANT) % SCORE_MOD

@@ -94,7 +94,7 @@ def main() -> None:
             entry.queries()["mentions_relational"](spark, SF),
         ),
         (
-            "all-JVM linking ①–④ (relational scorer)",
+            "JVM ①–② + link_neural scorer (linked_relational)",
             entry.queries()["linked_relational"](spark, SF),
         ),
         (

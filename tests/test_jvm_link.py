@@ -1,19 +1,15 @@
-"""Parity tests for the all-JVM linking path (operators/jvm_link.py).
+"""Parity tests for the JVM front half of linking (operators/jvm_link.py).
 
-Every fast-path component is pinned against the Python implementation
-it mirrors: the html strip against extract_html_text on the guarded
-class, the context-window expression against extract_context, the
-dense feature-hash vector bitwise against featurize_texts, and
-linked_relational against the fused kernel on the full synthetic
-corpus."""
+The html strip is pinned against extract_html_text on the guarded
+class, and linked_relational (JVM strip + relational matcher, then the
+shared link_neural scorer) against the staged pipeline on the full
+synthetic corpus, for the default and a custom encoder."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from bootleg_spark.functions.textproc import (
-    extract_context,
-    extract_html_text,
-)
+from bootleg_spark import synthspec as S
+from bootleg_spark.functions.textproc import extract_html_text
 from bootleg_spark.operators import jvm_link
 from bootleg_spark.plans.pipeline import KgPipeline
 from tests.conftest import SF_SMOKE
@@ -84,129 +80,23 @@ def test_clean_text_guard(spark):
 
 
 # ---------------------------------------------------------------------------
-# Context windows: JVM expr ≡ extract_context for token-aligned spans
+# End-to-end: relational and staged linking, one answer
 # ---------------------------------------------------------------------------
 
-def test_context_tokens_match_extract_context(spark):
-    # mentions at the start, middle, end, and in short docs — both
-    # branches of the budget arithmetic, clipped and unclipped
-    cases = []
-    for n_words in (1, 3, 40, 64, 65, 80, 200):
-        text = " ".join(f"w{i}" for i in range(n_words))
-        for idx in {0, 1, n_words // 2, n_words - 2, n_words - 1} & set(range(n_words)):
-            cases.append((text, idx))
-    rows = []
-    for text, idx in cases:
-        words = text.split(" ")
-        start = sum(len(w) + 1 for w in words[:idx])
-        end = start + len(words[idx])
-        expected = extract_context((start, end), text, 64)
-        rows.append((text, idx, expected))
-    df = spark.createDataFrame(rows, "text string, idx int, expected string")
-    got = df.select(
-        "expected",
-        F.concat_ws(
-            " ",
-            jvm_link.context_tokens_expr(F.split("text", " "), F.col("idx"), 64),
-        ).alias("got"),
-    ).collect()
-    for r in got:
-        assert r["got"] == r["expected"]
+@pytest.mark.parametrize("encoder", ["default", "mlp"])
+def test_linked_relational_matches_fused(spark, pipe, encoder):
+    """linked_relational swaps only ①–② for JVM expressions and scores
+    through the same link_neural step as the staged plan, so its rows
+    equal linked()'s exactly — probs included, and with a custom
+    encoder as well as the default one."""
+    if encoder == "mlp":
+        from bootleg_spark.functions.embedding import make_mlp_encoder
 
-
-def test_dense_context_vector_bitwise_matches_featurizer(spark, pipe):
-    """with_context_vector (the dense testing form) must equal
-    featurize_texts bitwise — pre-normalization entries are ±1 sums."""
-    from bootleg_spark.functions.embedding import featurize_texts
-    from bootleg_spark.operators.mentions import extract_mentions_ngram_relational
-
-    p = pipe.pages().select(
-        "doc_id", jvm_link.html_text_expr(F.col("html")).alias("te")
-    )
-    m = extract_mentions_ngram_relational(
-        p, pipe.dims["aliases"], text_col="te", keep_arr=True
-    )
-    rows = jvm_link.with_context_vector(m).select(
-        "_arr", "_tok_idx", "_ctx_vec"
-    ).limit(40).collect()
-    assert rows
-    for r in rows:
-        ctx_toks = " ".join(
-            [w for w in r["_arr"][: r["_tok_idx"]]]
-            + ["[ent_start]", r["_arr"][r["_tok_idx"]], "[ent_end]"]
-            + [w for w in r["_arr"][r["_tok_idx"] + 1 :]]
-        )
-        # reconstruct via the same window logic the expr used
-        words = r["_arr"]
-        start = sum(len(w) + 1 for w in words[: r["_tok_idx"]])
-        end = start + len(words[r["_tok_idx"]])
-        expected_ctx = extract_context((start, end), " ".join(words), 64)
-        vec = featurize_texts([expected_ctx], 64)[0]
-        assert list(r["_ctx_vec"]) == list(vec)
-
-
-# ---------------------------------------------------------------------------
-# End-to-end: relational and fused linking, one answer
-# ---------------------------------------------------------------------------
-
-def test_linked_relational_matches_fused(spark, pipe):
-    fused = {(r["url"], r["mention_pos"]): r for r in pipe.linked_fused().collect()}
-    rel = {(r["url"], r["mention_pos"]): r for r in pipe.linked_relational().collect()}
-    assert set(fused) == set(rel) and len(fused) > 0
-    for k in fused:
-        a, b = fused[k], rel[k]
-        assert (a["alias"], a["char_start"], a["char_end"], a["qid_pred"]) == (
-            b["alias"], b["char_start"], b["char_end"], b["qid_pred"],
-        )
-        assert abs(a["prob"] - b["prob"]) < 1e-12
-
-
-def test_argmax_margins_dwarf_float_noise(spark, pipe):
-    """The relational dots differ from numpy's einsum by ~1e-15
-    (summation grouping); argmax stability needs top-2 gaps far above
-    that. Pin the minimum observed gap on the full smoke corpus."""
-    from bootleg_spark.operators.mentions import extract_mentions_ngram_relational
-
-    p = pipe.pages().select(
-        "doc_id", jvm_link.html_text_expr(F.col("html")).alias("te")
-    )
-    m = extract_mentions_ngram_relational(
-        p, pipe.dims["aliases"], text_col="te", keep_arr=True
-    )
-    toks = m.select(
-        "doc_id", "mention_pos", "alias",
-        jvm_link.context_tokens_expr(F.col("_arr"), F.col("_tok_idx"), 64).alias("ct"),
-    ).collect()
-    import numpy as np
-
-    from bootleg_spark.functions.embedding import featurize_tokens
-
-    qid2row, mat = pipe.ent_matrix_bc.value
-    cands = pipe.cand_dict_bc.value
-    min_nonzero_gap = float("inf")
-    n_ties = 0
-    for r in toks:
-        v = featurize_tokens(list(r["ct"]), 64)
-        dots = sorted(
-            (
-                float(v @ mat[qid2row[q]])
-                for q in cands[r["alias"]]
-                if q in qid2row
-            ),
-            reverse=True,
-        )
-        if len(dots) >= 2:
-            gap = dots[0] - dots[1]
-            if gap == 0.0:
-                # exact ties occur (one on this corpus): both paths
-                # break them identically by candidate rank order —
-                # the first-max rule, pinned by the e2e parity tests
-                n_ties += 1
-            else:
-                min_nonzero_gap = min(min_nonzero_gap, gap)
-    # observed ≥4.9e-4; ~1e-15 summation-order noise is 11 orders below
-    assert min_nonzero_gap > 1e-9, min_nonzero_gap
-    assert n_ties <= len(toks) * 0.05  # ties must stay rare
+        pipe = KgPipeline(spark, SF_SMOKE, encoder=make_mlp_encoder(S.EMB_DIM))
+    cols = ["url", "mention_pos", "alias", "char_start", "char_end", "qid_pred", "prob"]
+    staged = sorted(tuple(r) for r in pipe.linked().select(*cols).collect())
+    rel = sorted(tuple(r) for r in pipe.linked_relational().select(*cols).collect())
+    assert rel == staged and len(staged) > 0
 
 
 def test_fused_triples_match_staged_on_dirty_corpus(spark, pipe):
@@ -253,25 +143,11 @@ def test_salted_candidate_join_matches_broadcast(spark, pipe):
     docs = pipe.dims["documents"].select("doc_id", "text")
     m = extract_mentions_word(docs, pipe.dims["aliases"], text_col="text")
     cols = ["doc_id", "mention_pos", "alias", "cand_qids", "cand_eids"]
-    bc = attach_candidates(m, pipe.dims["alias_cands"], grouped=pipe.grouped_cands)
-    salted = attach_candidates_salted(
-        m, pipe.dims["alias_cands"], salt_n=8, grouped=pipe.grouped_cands
-    )
+    bc = attach_candidates(m, pipe.grouped_cands)
+    salted = attach_candidates_salted(m, pipe.grouped_cands, salt_n=8)
     a = {tuple(map(str, r)) for r in bc.select(*cols).collect()}
     b = {tuple(map(str, r)) for r in salted.select(*cols).collect()}
     assert a == b and len(a) > 0
-
-
-def test_linked_relational_refuses_custom_encoder(spark):
-    """Review regression: the relational scorer hard-codes feature-hash
-    context vectors, so a custom-encoder pipeline must NOT mix them
-    with custom-encoded entity embeddings — linked_relational refuses
-    loudly."""
-    from bootleg_spark.functions.embedding import make_mlp_encoder
-
-    mlp_pipe = KgPipeline(spark, SF_SMOKE, encoder=make_mlp_encoder(64))
-    with pytest.raises(ValueError, match="custom encoder"):
-        mlp_pipe.linked_relational()
 
 
 def test_multiword_extractor_short_docs_no_crash(spark):
@@ -293,33 +169,6 @@ def test_multiword_extractor_short_docs_no_crash(spark):
         ).collect()
     }
     assert got == {(2, "new york")}  # 1-word docs yield nothing, no crash
-
-
-def test_context_tokens_fuzz_against_python(spark):
-    """Randomized differential check of the context-window expression
-    against extract_context over many (length, index) shapes — the
-    fixed-case test covers the branch boundaries, this sweeps the
-    interior."""
-    import random
-
-    rng = random.Random(99)
-    rows = []
-    for _ in range(250):
-        n_words = rng.randint(1, 150)
-        words = [f"t{rng.randint(0, 30)}" for _ in range(n_words)]
-        text = " ".join(words)
-        idx = rng.randrange(n_words)
-        start = sum(len(w) + 1 for w in words[:idx])
-        end = start + len(words[idx])
-        rows.append((text, idx, extract_context((start, end), text, 64)))
-    df = spark.createDataFrame(rows, "text string, idx int, expected string")
-    got = df.select(
-        "expected",
-        F.concat_ws(
-            " ", jvm_link.context_tokens_expr(F.split("text", " "), F.col("idx"), 64)
-        ).alias("got"),
-    ).collect()
-    assert all(r["got"] == r["expected"] for r in got)
 
 
 def test_jvm_html_extraction_fuzz_against_python(spark):

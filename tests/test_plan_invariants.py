@@ -44,32 +44,17 @@ def test_fused_pipeline_is_one_python_pass(spark, pipe):
     assert "CartesianProduct" not in p
 
 
-def test_relational_linking_has_zero_python(spark, pipe):
-    """The all-JVM fact path (extract → match → score) must introduce
-    no Python nodes. The candidate-embedding DIM build legitimately
-    runs the encoder UDF once (and is cached in the pipeline); here
-    the dim is pre-materialized into a literal frame so the plan under
-    test is exactly the per-page fact path."""
-    from pyspark.sql import functions as F
-
-    from bootleg_spark.operators import jvm_link
-    from bootleg_spark.operators.mentions import extract_mentions_ngram_relational
-
-    flat = pipe._cand_embs()
-    flat_local = spark.createDataFrame(flat.collect(), flat.schema)
-    pages = pipe.pages().select(
-        "url", "doc_id", jvm_link.html_text_expr(F.col("html")).alias("te")
-    )
-    mentions = extract_mentions_ngram_relational(
-        pages, pipe.dims["aliases"], text_col="te", keep_arr=True
-    )
-    scored = jvm_link.score_mentions_relational(mentions, flat_local)
-    p = plan_of(scored)
+def test_relational_linking_scores_in_one_python_node(spark, pipe):
+    """linked_relational keeps ①–② in the JVM (html strip, relational
+    matcher, broadcast dictionary join) and runs Python only in the one
+    link_neural scorer — once, not re-planned under the threshold
+    filter."""
+    p = plan_of(pipe.linked_relational())
+    assert n_nodes(p, "ArrowEvalPython") == 1
     assert "MapInPandas" not in p
-    assert "ArrowEvalPython" not in p
     assert "BatchEvalPython" not in p
     assert "SortMergeJoin" not in p
-    assert "BroadcastHashJoin" in p  # dict + candidate dims broadcast
+    assert "BroadcastHashJoin" in p  # dictionary + candidate dims broadcast
 
 
 def test_staged_popularity_triples_broadcast_dims(spark):
@@ -81,6 +66,37 @@ def test_staged_popularity_triples_broadcast_dims(spark):
     assert "CartesianProduct" not in p
 
 
+def single_partition_feeders(plan: str) -> list[str]:
+    """Detail block of the node feeding each ``SinglePartition``
+    exchange. Formatted explain prints the tree, two blank lines, then
+    one ``(N) Name`` block per node; an exchange is unary, so its child
+    is the next node line of the tree."""
+    tree, _, details = plan.partition("\n\n\n")
+    blocks = {}
+    for b in details.strip().split("\n\n"):
+        m = re.match(r"\((\d+)\) ", b)
+        if m:
+            blocks.setdefault(m.group(1), b)
+    ids = re.findall(r"\((\d+)\)$", tree, re.M)
+    return [
+        blocks.get(child, f"({child})")
+        for node, child in zip(ids, ids[1:])
+        if "Arguments: SinglePartition" in blocks.get(node, "")
+    ]
+
+
+def is_partial_scalar_agg(block: str) -> bool:
+    """A keyless HashAggregate whose functions are all ``partial_…``:
+    it emits one row per upstream partition, whatever the row count."""
+    funcs = re.search(r"^Functions \[(\d+)\]: \[(.*)\]$", block, re.M)
+    return (
+        re.match(r"\(\d+\) HashAggregate\b", block) is not None
+        and re.search(r"^Keys: \[\]$", block, re.M) is not None
+        and funcs is not None
+        and len(re.findall(r"(?:^|, )partial_\w+\(", funcs.group(2))) == int(funcs.group(1))
+    )
+
+
 def test_no_single_partition_row_funnel(spark, pipe):
     """SinglePartition exchanges may only merge global scalar
     aggregates (one partial row per upstream partition), never row
@@ -88,18 +104,20 @@ def test_no_single_partition_row_funnel(spark, pipe):
     above a partial aggregate."""
     import __spark_entry__ as entrymod
 
-    for df in (
-        pipe.triples(),
-        pipe.linked_relational(),
-        entrymod.queries()["triples_popularity"](spark, SF_SMOKE),
-    ):
-        p = plan_of(df)
-        # formatted explain lists arguments per node; find exchanges
-        for block in p.split("\n\n"):
-            if "Arguments: SinglePartition" in block:
-                # the only producer feeding a SinglePartition exchange
-                # in these plans is a partial count aggregation
-                assert "count" in p.lower(), block
+    feeders = [
+        f
+        for df in (
+            pipe.triples(),
+            pipe.linked_relational(),
+            entrymod.queries()["triples_popularity"](spark, SF_SMOKE),
+        )
+        for f in single_partition_feeders(plan_of(df))
+    ]
+    assert feeders  # triples_popularity's global distinct-alias count
+    assert all(is_partial_scalar_agg(f) for f in feeders), feeders
+    # the check must flag a real funnel: row data into one partition
+    funnel = single_partition_feeders(plan_of(pipe.pages().select("url").repartition(1)))
+    assert funnel and not any(is_partial_scalar_agg(f) for f in funnel), funnel
 
 
 def test_hygiene_ops_are_codegen_projections(spark):

@@ -104,7 +104,7 @@ def test_user_journey_profile_plus_sentences_jsonl(spark, tmp_path):
     linked predictions out — no reference code, all relational."""
     import json
 
-    from bootleg_spark.operators.candidates import attach_candidates
+    from bootleg_spark.operators.candidates import attach_candidates, grouped_candidates
     from bootleg_spark.operators.linking import link_popularity
     from bootleg_spark.sources.profile import (
         assert_valid_profile,
@@ -132,7 +132,7 @@ def test_user_journey_profile_plus_sentences_jsonl(spark, tmp_path):
     mentions = sentences.sentences_to_mentions(
         sentences.read_sentences_jsonl(spark, REF_JSONL)
     )
-    linked = link_popularity(attach_candidates(mentions, alias_cands))
+    linked = link_popularity(attach_candidates(mentions, grouped_candidates(alias_cands)))
     got = {
         (r["alias"], r["qid_pred"])
         for r in linked.where(F.col("sent_idx") == 0).collect()
