@@ -74,19 +74,11 @@ def _dims(spark, sf_dir):
 
 
 def _events(spark, sf_dir):
-    from bootleg_spark.session import fan_scan
-
-    return fan_scan(
-        spark.read.parquet(f"{sf_dir}/events.parquet"), key_cols=("event_id",)
-    )
+    return synth._scan_entry(spark, sf_dir, "events.parquet")["scan"]
 
 
 def _emb(spark, sf_dir):
-    from bootleg_spark.session import fan_scan
-
-    return fan_scan(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), key_cols=("vec_id",)
-    )
+    return synth._scan_entry(spark, sf_dir, "embeddings.parquet")["scan"]
 
 
 # --------------------------------------------------------------------------

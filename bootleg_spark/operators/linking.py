@@ -19,9 +19,8 @@ Two scorers, both emitting (.., qid_pred, prob):
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -116,15 +115,8 @@ def entity_strings(
             spans.append([int(x) for x in sp])
         return strs, spans
 
-    @F.pandas_udf(StringType())
-    def _ent_str(
-        title: pd.Series, descr: pd.Series, typenames: pd.Series, kg: pd.Series
-    ) -> pd.Series:
-        strs, _ = _build(title, descr, typenames, kg)
-        return pd.Series(strs)
-
     @F.pandas_udf(_STR_SPANS)
-    def _ent_str_spans(
+    def _ent_str(
         title: pd.Series, descr: pd.Series, typenames: pd.Series, kg: pd.Series
     ) -> pd.DataFrame:
         strs, spans = _build(title, descr, typenames, kg)
@@ -154,20 +146,12 @@ def entity_strings(
         ).withColumn("typenames", F.coalesce("typenames", F.array().cast("array<string>")))
     else:
         joined = joined.withColumn("typenames", F.array(F.col("type_name")))
+    out = ["qid", "eid", "alias", F.col("_s.ent_str").alias("ent_str")]
     if with_title_spans:
-        return joined.select(
-            "qid", "eid", "alias",
-            _ent_str_spans("title", "descr", "typenames", "kg_items").alias("_s"),
-        ).select(
-            "qid", "eid", "alias", F.col("_s.ent_str").alias("ent_str"),
-            F.col("_s.title_spans").alias("title_spans"),
-        )
+        out.append(F.col("_s.title_spans").alias("title_spans"))
     return joined.select(
-        "qid",
-        "eid",
-        "alias",
-        _ent_str("title", "descr", "typenames", "kg_items").alias("ent_str"),
-    )
+        "qid", "eid", "alias", _ent_str("title", "descr", "typenames", "kg_items").alias("_s")
+    ).select(*out)
 
 
 def build_entity_embeddings(ent_strs: DataFrame, dim: int, encoder) -> DataFrame:
@@ -186,19 +170,6 @@ def build_entity_embeddings(ent_strs: DataFrame, dim: int, encoder) -> DataFrame
         return pd.Series(list(mat))
 
     return ent_strs.select("qid", "eid", _embed("ent_str").alias("emb"))
-
-
-def broadcast_entity_matrix(spark: SparkSession, emb_df: DataFrame):
-    """Collect the (small-dim) embedding table and broadcast it as
-    (qid→row, matrix) — the reference mmaps this across pool workers
-    (static_entity_embeddings.py:10-36); broadcast is Spark's equivalent.
-    At 5.8M × 64 float32 (~1.5 GB) this still broadcasts; beyond that,
-    ship the matrix via ``spark-submit --files`` + executor-local mmap.
-    """
-    rows = emb_df.select("qid", "emb").collect()
-    qid2row = {r["qid"]: i for i, r in enumerate(rows)}
-    mat = np.array([r["emb"] for r in rows], dtype=np.float64)
-    return spark.sparkContext.broadcast((qid2row, mat))
 
 
 # ---------------------------------------------------------------------------

@@ -282,19 +282,24 @@ def _explode_mentions(df: DataFrame, col: str, make_spans) -> DataFrame:
     )
 
 
+def max_alias_words(aliases) -> int:
+    """The longest alias's word count: the ``dict_max_words`` bound of
+    :func:`ngram_extract_aliases`' dead-pass skip."""
+    return max((len(a.split()) for a in aliases), default=1)
+
+
 def _ngram_spans(alias_set_bc, min_alias_len: int, max_alias_len: int):
-    """``text -> [(alias, start, end)]`` over the broadcast alias set
-    (executor side)."""
-    aliases = alias_set_bc.value
-    # dict_max_words feeds the per-text dead-pass skip inside
-    # ngram_extract_aliases: on pure-alnum text every pass with
-    # n > longest-alias-words is provably matchless; on punctuated
-    # text lnrm can shrink a gram's word count, so all passes run
-    # (the reference hardcodes max_alias_len=6)
-    dict_w = max((len(a.split()) for a in aliases), default=1)
-    return lambda t: ngram_extract_aliases(
-        t, aliases, min_alias_len, max_alias_len, dict_max_words=dict_w
-    )
+    """``make_spans`` over the broadcast alias set. The word bound is
+    taken here, once, on the driver; a batch only reads the broadcast."""
+    dict_w = max_alias_words(alias_set_bc.value)
+
+    def make_spans():
+        aliases = alias_set_bc.value
+        return lambda t: ngram_extract_aliases(
+            t, aliases, min_alias_len, max_alias_len, dict_max_words=dict_w
+        )
+
+    return make_spans
 
 
 def extract_mentions_ngram(
@@ -310,9 +315,7 @@ def extract_mentions_ngram(
     Spark's shared read-only memory, replacing the reference's mmap'd
     marisa trie shared across pool workers (extract_mentions.py:130).
     """
-    return _explode_mentions(
-        df, text_col, lambda: _ngram_spans(alias_set_bc, min_alias_len, max_alias_len)
-    )
+    return _explode_mentions(df, text_col, _ngram_spans(alias_set_bc, min_alias_len, max_alias_len))
 
 
 def extract_mentions_ngram_from_html(
@@ -330,8 +333,10 @@ def extract_mentions_ngram_from_html(
     is deterministic and is exactly what the staged plan ran first."""
     from bootleg_spark.functions.textproc import extract_html_text
 
+    ngram_spans = _ngram_spans(alias_set_bc, min_alias_len, max_alias_len)
+
     def make_spans():
-        spans = _ngram_spans(alias_set_bc, min_alias_len, max_alias_len)
+        spans = ngram_spans()
         return lambda h: spans(extract_html_text(bytes(h)))
 
     return _explode_mentions(df, html_col, make_spans)

@@ -23,14 +23,9 @@ from pyspark.sql.types import StringType
 
 from bootleg_spark import synthspec as S
 from bootleg_spark.functions.textproc import extract_html_text
-from bootleg_spark.operators.candidates import attach_candidates
-from bootleg_spark.operators.linking import (
-    broadcast_entity_matrix,
-    build_entity_embeddings,
-    entity_strings,
-    link_neural,
-)
-from bootleg_spark.operators.mentions import extract_mentions_ngram
+from bootleg_spark.operators.candidates import attach_candidates, grouped_candidates
+from bootleg_spark.operators.linking import build_entity_embeddings, entity_strings, link_neural
+from bootleg_spark.operators.mentions import extract_mentions_ngram, max_alias_words
 from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
 from bootleg_spark.sources.synth import build_dims, pages_table
 
@@ -48,8 +43,21 @@ def extract_text(pages: DataFrame) -> DataFrame:
 
 
 class KgPipeline:
-    """Holds the broadcast artifacts (alias set, entity matrix) that the
-    reference builds in BootlegAnnotator.__init__ (SURVEY.md §3.1 step 1)."""
+    """The entity profile a linking run needs, built once (the reference
+    builds its entity symbols once and loads them as one artifact,
+    entity_symbols.py:200-303). ONE Arrow collect of an entity-grain
+    frame gives the four driver-side broadcasts: ``cand_dict_bc`` (alias
+    → qids by rank, "-1"-padded to MAX_CANDIDATES: the rows of
+    ``grouped_cands``), ``alias_set_bc`` (its keys), ``ent_matrix_bc``
+    ((qid → row, (n, dim) float64 matrix)) and ``rel_dict_bc`` (subj →
+    [(rel, obj)]). The entity encode stays distributed (``emb_df``).
+
+    Scale: 5.8M entities × 64 dims of float64 (~3.0 GB) still
+    broadcasts; beyond that, ship the matrix via ``spark-submit
+    --files`` + an executor-local mmap (static_entity_embeddings.py:
+    10-36). At full Wikidata scale the relation dict can exceed
+    broadcast budgets — the semi-join path (triples_from_doc_entities)
+    is the general fallback."""
 
     def __init__(
         self,
@@ -71,40 +79,43 @@ class KgPipeline:
         self.dim = dim
         self.encoder = encoder or featurize_texts
         self.dims = build_dims(spark, sf_dir)
-        # pre-group + cache the candidate arrays once: every query joins
-        # against this (the reference builds its alias trie once at init,
-        # bootleg_annotator.py:240-248). ONE collect both materializes the
-        # cache and feeds the fused path's broadcast dict (the annotator's
-        # in-memory alias map) — no separate count() action.
-        from bootleg_spark.operators.candidates import grouped_candidates
-
+        sc = spark.sparkContext
+        # every staged query broadcast-joins these candidate arrays (the
+        # reference builds its alias trie once, bootleg_annotator.py:240-248)
         self.grouped_cands = grouped_candidates(self.dims["alias_cands"]).cache()
-        cand_rows = {r["alias"]: list(r["cand_qids"]) for r in self.grouped_cands.collect()}
-        self.cand_dict_bc = spark.sparkContext.broadcast(cand_rows)
-        # the fused kernel looks up cands[a] for every alias it matches,
-        # so the alias set is exactly the candidate dict's keys
-        self.alias_set_bc = spark.sparkContext.broadcast(frozenset(cand_rows))
-        # longest alias word count: drives the fused kernel's extractor
-        # dead-pass skip; linked_relational needs it to be 1
-        self.dict_max_words = max((len(a.split()) for a in cand_rows), default=1)
         self.ent_strs = entity_strings(self.dims["entities"], self.dims["kg_relations"])
         self.emb_df = build_entity_embeddings(self.ent_strs, dim, self.encoder)
-        self.ent_matrix_bc = broadcast_entity_matrix(spark, self.emb_df)
-        # subj -> [(rel, obj)] for the fused-local triple emission, grouped
-        # DISTRIBUTED first so the driver receives one row per subject,
-        # not one per relation. At full Wikidata scale this dict can exceed
-        # broadcast budgets — the semi-join path (triples_from_doc_entities)
-        # is the general fallback.
-        rel_grouped = (
-            self.dims["kg_relations"]
-            .groupBy("subj_qid")
-            .agg(F.collect_list(F.struct("rel", "obj_qid")).alias("ro"))
-            .collect()
+        # one action: emb_df (one row per qid) with the qid's candidate
+        # memberships and relations as arrays, so an entity under two
+        # aliases is still one matrix row (alias_cands is built from the
+        # entity dim, so every candidate qid has a row)
+        cands = self.dims["alias_cands"].groupBy("qid").agg(
+            F.collect_list(F.struct("alias", "rank")).alias("cands")
         )
-        rel_rows = {
-            r["subj_qid"]: [(x["rel"], x["obj_qid"]) for x in r["ro"]] for r in rel_grouped
-        }
-        self.rel_dict_bc = spark.sparkContext.broadcast(rel_rows)
+        rels = self.dims["kg_relations"].groupBy(F.col("subj_qid").alias("qid")).agg(
+            F.collect_list(F.struct("rel", "obj_qid")).alias("rels")
+        )
+        tbl = self.emb_df.select("qid", "emb").join(cands, "qid", "left").join(rels, "qid", "left").toArrow()
+        qids = tbl.column("qid").to_pylist()
+        mat = tbl.column("emb").combine_chunks().flatten().to_numpy().reshape(len(qids), dim)
+        self.ent_matrix_bc = sc.broadcast(({q: i for i, q in enumerate(qids)}, mat))
+        ranked: dict[str, list] = {}
+        rel_rows = {}
+        for q, cs, rs in zip(qids, tbl.column("cands").to_pylist(), tbl.column("rels").to_pylist()):
+            for c in cs or ():
+                ranked.setdefault(c["alias"], []).append((c["rank"], q))
+            if rs:
+                rel_rows[q] = [(r["rel"], r["obj_qid"]) for r in rs]
+        k = S.MAX_CANDIDATES
+        cand_rows = {a: ([q for _, q in sorted(rq)] + ["-1"] * k)[:k] for a, rq in ranked.items()}
+        self.cand_dict_bc = sc.broadcast(cand_rows)
+        # the fused kernel looks up cands[a] for every alias it matches,
+        # so the alias set is exactly the candidate dict's keys
+        self.alias_set_bc = sc.broadcast(frozenset(cand_rows))
+        # longest alias word count: drives the fused kernel's extractor
+        # dead-pass skip; linked_relational needs it to be 1
+        self.dict_max_words = max_alias_words(cand_rows)
+        self.rel_dict_bc = sc.broadcast(rel_rows)
 
     def pages(self) -> DataFrame:
         return pages_table(self.spark, self.sf_dir)

@@ -24,38 +24,42 @@ from bootleg_spark import synthspec as S
 from bootleg_spark.functions.textproc import STOP_WORDS
 
 
-# One entry per (session, sf_dir): the fanned documents scan (fan_scan's
-# partition probe plans it once, not on every query build) and, once
-# built, its dims (and the driver contract's KgPipeline, under "pipe");
-# valid while documents.parquet keeps its modification time
-_SCANS: dict[tuple[int, str], dict] = {}
+# One entry per (session, sf_dir, file): the fanned scan (fan_scan's
+# partition probe plans it once, not on every query build); the
+# documents entry also holds its dims once built (and the driver
+# contract's KgPipeline, under "pipe"). Valid while the file keeps its
+# modification time
+_SCANS: dict[tuple[int, str, str], dict] = {}
+
+# fan_scan's hash key (a stable high-cardinality id) per scanned file
+_SCAN_KEYS = {"documents.parquet": "doc_id", "events.parquet": "event_id", "embeddings.parquet": "vec_id"}
 
 
-def _scan_entry(spark: SparkSession, sf_dir: str) -> dict:
-    """The cache entry for (session, sf_dir), rebuilt when
-    ``documents.parquet`` was rewritten since it was cached. The stamp
-    is the path's modification time read through the Hadoop FS, so any
-    URI scheme works (``os.path`` would see only local paths); the
-    replaced entry's cached dims are unpersisted."""
+def _scan_entry(spark: SparkSession, sf_dir: str, name: str = "documents.parquet") -> dict:
+    """The cache entry for (session, sf_dir, name), rebuilt when the file
+    was rewritten since it was cached. The stamp is the path's
+    modification time read through the Hadoop FS, so any URI scheme
+    works (``os.path`` would see only local paths); the replaced entry's
+    cached dims are unpersisted."""
     from bootleg_spark.session import fan_scan
 
-    path = f"{sf_dir}/documents.parquet"
+    path = f"{sf_dir}/{name}"
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     stamp = fs.getFileStatus(p).getModificationTime() if fs.exists(p) else None
-    key = (id(spark), sf_dir)
+    key = (id(spark), sf_dir, name)
     entry = _SCANS.get(key)
     if entry is None or entry["stamp"] != stamp:
         if entry is not None:
             for df in (entry["dims"] or {}).values():
                 df.unpersist()
-        docs = fan_scan(spark.read.parquet(path), key_cols=("doc_id",))
-        entry = _SCANS[key] = {"stamp": stamp, "docs": docs, "dims": None}
+        scan = fan_scan(spark.read.parquet(path), key_cols=(_SCAN_KEYS[name],))
+        entry = _SCANS[key] = {"stamp": stamp, "scan": scan, "dims": None}
     return entry
 
 
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scan_entry(spark, sf_dir)["docs"]
+    return _scan_entry(spark, sf_dir)["scan"]
 
 
 def pages_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -270,7 +274,7 @@ def build_dims(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     them once per worker; we ``.cache()`` once per executor)."""
     entry = _scan_entry(spark, sf_dir)
     if entry["dims"] is None:
-        docs = entry["docs"]
+        docs = entry["scan"]
         aliases = alias_vocab(docs).cache()
         ents = entities_dim(aliases).cache()
         entry["dims"] = {

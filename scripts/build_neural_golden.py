@@ -38,7 +38,7 @@ from bootleg_spark import oracle as O  # noqa: E402
 from bootleg_spark import synthspec as S  # noqa: E402
 from bootleg_spark.functions.embedding import featurize_texts, score_batch  # noqa: E402
 from bootleg_spark.functions.textproc import extract_context  # noqa: E402
-from bootleg_spark.operators.mentions import ngram_extract_aliases  # noqa: E402
+from bootleg_spark.operators.mentions import max_alias_words, ngram_extract_aliases  # noqa: E402
 
 GOLDEN_DIR = "/root/repo/goldens"
 DEFAULT_SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
@@ -77,7 +77,7 @@ def reference_outputs(sf_dir: str) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataF
     for s_, r_, o_ in rel_rows:
         rels.setdefault(s_, []).append((r_, o_))
 
-    dict_w = max((len(a.split()) for a in alias_set), default=1)
+    dict_w = max_alias_words(alias_set)
     linked_rows = []
     triples = set()
     for doc_id, lang, text in docs:

@@ -114,6 +114,21 @@ def test_dedup_keep_singletons_and_clusters(spark):
     }
 
 
+def test_dedup_keep_job_budget(spark):
+    """dedup_keep over a small pair graph (a 9-node chain, a triangle and
+    a pair) plus its collect stays within its Spark job budget: 17 jobs,
+    the count it ran at when the ceiling was set (min-label propagation
+    runs a checkpoint and a changed-count action every round)."""
+    from tests.conftest import count_jobs
+
+    edges = [(i, i + 1) for i in range(1, 9)] + [(20, 21), (21, 22), (20, 22), (30, 31)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
+    rows, n_jobs = count_jobs(spark, lambda: dedup.dedup_keep(docs, pairs).collect())
+    assert sum(r["keep"] for r in rows) == 40 - 8 - 2 - 1
+    assert n_jobs <= 17
+
+
 def _emb_df(spark, n=60, d=8, seed=11):
     rng = np.random.RandomState(seed)
     vecs = rng.randn(n, d).astype("float32")

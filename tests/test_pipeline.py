@@ -238,15 +238,58 @@ def test_manifest_sf_dir_mismatch_refused(pipe, tmp_path):
 def test_pipeline_init_job_budget(spark, tmp_path):
     """KgPipeline's set-up on a corpus no earlier scan has cached (a
     private copy of the documents, so neither the scan entry nor the
-    dims are reused) stays within its Spark job budget: 10 jobs on
-    sf0.001, the count it ran at when the ceiling was set."""
+    dims are reused) stays within its Spark job budget: 8 jobs on
+    sf0.001, the count it ran at once its four broadcasts came from one
+    entity-profile collect."""
     import shutil
 
     from tests.conftest import count_jobs
 
     shutil.copy(os.path.join(SF_SMOKE, "documents.parquet"), tmp_path)
     _, n_jobs = count_jobs(spark, lambda: KgPipeline(spark, str(tmp_path)))
-    assert n_jobs <= 10
+    assert n_jobs <= 8
+
+
+@pytest.mark.parametrize("variant", ["default", "dim32", "mlp"])
+def test_broadcasts_equal_spark_frames(pipe, spark, variant):
+    """The four broadcast values, built on the driver from one collect,
+    equal a reference taken from the Spark frames they stand for: the
+    grouped candidate arrays, the entity embeddings and the relation
+    dim. The mlp encoder is compared to 1e-12, since BLAS may round a
+    row differently for another batch shape."""
+    import numpy as np
+
+    from bootleg_spark import synthspec as S
+    from bootleg_spark.functions.embedding import make_mlp_encoder
+    from bootleg_spark.operators.candidates import grouped_candidates
+
+    if variant == "dim32":
+        pipe = KgPipeline(spark, SF_SMOKE, dim=32)
+    elif variant == "mlp":
+        pipe = KgPipeline(spark, SF_SMOKE, encoder=make_mlp_encoder(S.EMB_DIM))
+    cands = {
+        r["alias"]: list(r["cand_qids"])
+        for r in grouped_candidates(pipe.dims["alias_cands"]).collect()
+    }
+    assert pipe.cand_dict_bc.value == cands
+    assert pipe.alias_set_bc.value == frozenset(cands)
+    assert pipe.dict_max_words == max(len(a.split()) for a in cands)
+
+    embs = {r["qid"]: np.array(r["emb"]) for r in pipe.emb_df.select("qid", "emb").collect()}
+    qid2row, mat = pipe.ent_matrix_bc.value
+    assert mat.dtype == np.float64 and mat.shape == (len(embs), pipe.dim)
+    assert set(qid2row) == set(embs)
+    for q, v in embs.items():
+        if variant == "mlp":
+            assert np.allclose(mat[qid2row[q]], v, rtol=0, atol=1e-12)
+        else:
+            assert np.array_equal(mat[qid2row[q]], v)
+
+    rels: dict[str, list] = {}
+    for r in pipe.dims["kg_relations"].collect():
+        rels.setdefault(r["subj_qid"], []).append((r["rel"], r["obj_qid"]))
+    got = {s: sorted(ro) for s, ro in pipe.rel_dict_bc.value.items()}
+    assert got == {s: sorted(ro) for s, ro in rels.items()}
 
 
 def test_submit_sequence_links_once(pipe, tmp_path):

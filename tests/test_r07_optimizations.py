@@ -85,6 +85,32 @@ def test_rewritten_documents_rebuild_entry_pipeline(spark, tmp_path):
     assert entrymod._pipe(spark, sf_dir).alias_set_bc.value == {"delta", "echo"}
 
 
+def test_events_and_embeddings_scans_are_cached(spark, tmp_path):
+    """The driver contract's events and embeddings scans come from the
+    same mtime-stamped cache as the documents scan: a second call
+    returns the cached frame (no second partition probe), and an
+    events.parquet rewritten in the same session is re-read while the
+    untouched embeddings entry stays."""
+    import shutil
+
+    import __spark_entry__ as entrymod
+
+    sf_dir = str(tmp_path)
+    for name in ("events.parquet", "embeddings.parquet"):
+        shutil.copyfile(f"{SF}/{name}", f"{sf_dir}/{name}")
+    ev, emb = entrymod._events(spark, sf_dir), entrymod._emb(spark, sf_dir)
+    assert entrymod._events(spark, sf_dir) is ev
+    assert entrymod._emb(spark, sf_dir) is emb
+    rows = ev.orderBy("event_id").limit(3).collect()
+    spark.createDataFrame(rows, ev.schema).write.mode("overwrite").parquet(
+        f"{sf_dir}/events.parquet"
+    )
+    fresh = entrymod._events(spark, sf_dir)
+    assert fresh is not ev
+    assert sorted(r["event_id"] for r in fresh.collect()) == [r["event_id"] for r in rows]
+    assert entrymod._emb(spark, sf_dir) is emb
+
+
 def test_doc_shingle_arrays_match_word_shingles(docs):
     """explode(doc_shingle_arrays) ≡ word_shingles — the in-row form
     must reproduce the exploded+distinct r06 frame row-for-row."""
