@@ -105,7 +105,7 @@ def entity_strings(
         ]
     )
 
-    def _build(title, descr, typenames, kg):
+    def _ent_str(title, descr, typenames, kg):
         strs, spans = [], []
         for t, d, tys, k in zip(title, descr, typenames, kg):
             items = list(k) if k is not None else []
@@ -113,14 +113,14 @@ def entity_strings(
             s, sp, _, _ = build_entity_string(t or "", d, tylist, items, consts)
             strs.append(s)
             spans.append([int(x) for x in sp])
-        return strs, spans
+        if with_title_spans:
+            return pd.DataFrame({"ent_str": strs, "title_spans": spans})
+        return pd.Series(strs)
 
-    @F.pandas_udf(_STR_SPANS)
-    def _ent_str(
-        title: pd.Series, descr: pd.Series, typenames: pd.Series, kg: pd.Series
-    ) -> pd.DataFrame:
-        strs, spans = _build(title, descr, typenames, kg)
-        return pd.DataFrame({"ent_str": strs, "title_spans": spans})
+    # a plain string UDF when spans are not asked for: an encoder UDF
+    # over its output then chains into the same Python node (emb_df),
+    # which a struct field between the two would split into two
+    ent_str_udf = F.pandas_udf(_ent_str, _STR_SPANS if with_title_spans else StringType())
 
     joined = entities.join(F.broadcast(kg_items), "qid", "left").withColumn(
         "kg_items", F.coalesce("kg_items", F.array())
@@ -146,12 +146,13 @@ def entity_strings(
         ).withColumn("typenames", F.coalesce("typenames", F.array().cast("array<string>")))
     else:
         joined = joined.withColumn("typenames", F.array(F.col("type_name")))
-    out = ["qid", "eid", "alias", F.col("_s.ent_str").alias("ent_str")]
-    if with_title_spans:
-        out.append(F.col("_s.title_spans").alias("title_spans"))
-    return joined.select(
-        "qid", "eid", "alias", _ent_str("title", "descr", "typenames", "kg_items").alias("_s")
-    ).select(*out)
+    out = joined.select(
+        "qid", "eid", "alias",
+        ent_str_udf("title", "descr", "typenames", "kg_items").alias(
+            "_s" if with_title_spans else "ent_str"
+        ),
+    )
+    return out.select("qid", "eid", "alias", "_s.*") if with_title_spans else out
 
 
 def build_entity_embeddings(ent_strs: DataFrame, dim: int, encoder) -> DataFrame:

@@ -229,14 +229,16 @@ class KgPipeline:
     ) -> DataFrame:
         """① + ② in the JVM (the html strip and the relational mention
         matcher, both codegen), then the staged ③ + ④ of
-        :meth:`_link_mentions`. Valid ONLY for rows passing
+        :meth:`_link_mentions`. Exact ONLY on pages passing
         ``jvm_extractable_expr`` ∧ ``clean_text_expr`` with a
-        single-token dictionary — the caller guards. On those rows the
-        output equals :meth:`linked`'s exactly, for any encoder. It
-        backs the ``linked_relational`` query; triples always take the
-        fused kernel.
+        single-token dictionary, so a page outside that guard fails the
+        query (``raise_error`` in the strip's projection) instead of
+        yielding wrong rows. On guarded pages the output equals
+        :meth:`linked`'s exactly, for any encoder. It backs the
+        ``linked_relational`` query; triples always take the fused
+        kernel.
         """
-        from bootleg_spark.operators.jvm_link import html_text_expr
+        from bootleg_spark.operators.jvm_link import clean_text_expr, html_text_expr, jvm_extractable_expr
         from bootleg_spark.operators.mentions import extract_mentions_ngram_relational
 
         if self.dict_max_words != 1:
@@ -244,9 +246,15 @@ class KgPipeline:
                 "linked_relational needs a single-token alias dictionary "
                 f"(dict_max_words={self.dict_max_words}); use linked_fused"
             )
+        # the guard reads the stripped text as a column of a second
+        # projection, so the regex chain runs once per row
+        text = F.col("text_extracted")
         p = (pages if pages is not None else self.pages()).select(
-            "url", "doc_id", html_text_expr(F.col("html")).alias("text_extracted")
-        )
+            "url", "doc_id", jvm_extractable_expr(F.col("html")).alias("ok"),
+            html_text_expr(F.col("html")).alias("text_extracted"),
+        ).select("url", "doc_id", F.when(F.col("ok") & clean_text_expr(text), text).otherwise(
+            F.raise_error(F.concat(F.lit("linked_relational: page outside the JVM guard: "), "url"))
+        ).alias("text_extracted"))
         mentions = extract_mentions_ngram_relational(
             p, self.dims["aliases"], text_col="text_extracted"
         )

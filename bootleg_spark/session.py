@@ -1,9 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
 Centralizes the config we rely on everywhere:
-- AQE on (runtime coalescing + skew-join splitting — our answer to the
-  reference's hand-rolled ``dump_preds_num_data_splits`` chunking,
-  bootleg/run.py:344-374);
+- AQE off (its per-stage driver replanning dominates the short local
+  jobs here; a cluster run turns it on through ``spark-submit --conf``);
 - Arrow on (every Python-side stage in this repo is a pandas/Arrow UDF,
   never per-row Python);
 - shuffle partitions sized to the local core count: 2 per core, with
@@ -27,7 +26,6 @@ def get_spark(
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
-    aqe: bool | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession.
 
@@ -43,32 +41,29 @@ def get_spark(
     ``spark-submit --py-files bootleg_spark.zip`` — only ``master`` and
     memory sizing move to submit-time config.
 
-    AQE default: **off locally, on for cluster runs** (``aqe`` param or
-    ``$SPARK_GRAFT_AQE=true``). Measured on this pipeline at sandbox
-    scale, AQE's per-stage driver replanning loop adds ~10 s of SERIAL
-    latency per query (14.3 s vs 4.8 s wall for the full pipeline at 32
-    cores) — it dominates second-long jobs and wrecks scaling ratios.
-    On an hours-long 100 TB job the same fixed latency is noise and the
-    skew-join splitting + runtime coalescing pay for themselves, so a
-    spark-submit deployment should pass ``aqe=True`` (the configs set
-    below are exactly the ones to flip).
+    AQE is off. Measured on this pipeline at sandbox scale, AQE's
+    per-stage driver replanning loop adds ~10 s of SERIAL latency per
+    query (14.3 s vs 4.8 s wall for the full pipeline at 32 cores) — it
+    dominates second-long jobs and wrecks scaling ratios. On an
+    hours-long 100 TB job the same fixed latency is noise and skew-join
+    splitting + runtime coalescing pay for themselves: a spark-submit
+    deployment sets the three ``spark.sql.adaptive.*`` configs below to
+    true with ``--conf`` (DEPLOYMENT.md), and a local caller can pass
+    them in ``extra_conf``.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     cores = int(cores)
     if shuffle_partitions is None:
         shuffle_partitions = 2 * cores
-    if aqe is None:
-        aqe = os.environ.get("SPARK_GRAFT_AQE", "false").lower() == "true"
-    aqe_s = "true" if aqe else "false"
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", aqe_s)
-        .config("spark.sql.adaptive.coalescePartitions.enabled", aqe_s)
-        .config("spark.sql.adaptive.skewJoin.enabled", aqe_s)
+        .config("spark.sql.adaptive.enabled", "false")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        .config("spark.sql.adaptive.skewJoin.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
@@ -86,7 +81,7 @@ def fan_scan(df, key_cols: tuple = ()):
     Parquet split planning is row-group-bound: a small input that is one
     file with one row group yields ONE scan partition no matter what
     ``maxPartitionBytes``/``minPartitionNum`` say, so every pre-exchange
-    operator (per-row md5/regex work, Arrow UDF workers, mapInPandas)
+    operator (per-row md5/regex work, Arrow UDF and map-in-pandas workers)
     runs on 1-2 of the session's cores. Measured at sf1.0: the
     zero-exchange ``doc_fingerprints`` plan spent 18 s on one core.
 

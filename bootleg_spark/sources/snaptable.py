@@ -12,7 +12,7 @@ What it reproduces, and how it maps onto the real thing:
   contains plus per-file column stats. Readers NEVER glob ``data/`` —
   at crawl scale a directory listing of an object store is both slow
   and racy; the manifest is one small read. Above
-  ``SNAPTABLE_INLINE_FILES_MAX`` entries the file list moves to a
+  ``INLINE_FILES_MAX`` (2000) entries the file list moves to a
   write-once SIDE manifest and the snapshot JSON holds a pointer
   (Iceberg's metadata-file / manifest-list split), so version
   resolution stays O(1) no matter how many files a snapshot holds.
@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 SNAP_DIR = "_snapshots"
 FORMAT_VERSION = 1
+INLINE_FILES_MAX = 2000  # file entries a snapshot JSON holds inline
 
 
 class CommitConflict(RuntimeError):
@@ -92,16 +93,15 @@ def _try_publish(table: str, snap: dict) -> bool:
     import time as _time
 
     snap["committed_at"] = round(_time.time(), 3)
-    # metadata scaling: above SNAPTABLE_INLINE_FILES_MAX entries the
+    # metadata scaling: above INLINE_FILES_MAX entries the
     # file list moves to a write-once SIDE manifest and the snapshot
     # JSON holds only a pointer — the module docstring's "chunk the
     # file list into side manifests exactly as Iceberg does". Readers
     # inline it back in load_snapshot; at 10^6 files the snapshot
     # file itself stays tiny and O(1) to read/parse for version
     # resolution (latest_version, version_as_of).
-    inline_max = int(os.environ.get("SNAPTABLE_INLINE_FILES_MAX", "2000"))
     to_write = snap
-    if len(snap.get("files", [])) + len(snap.get("delete_files", [])) > inline_max:
+    if len(snap.get("files", [])) + len(snap.get("delete_files", [])) > INLINE_FILES_MAX:
         ref = f"m-{snap['version']}-{uuid.uuid4().hex[:8]}.json"
         side = {"files": snap["files"]}
         if snap.get("delete_files"):
@@ -434,51 +434,18 @@ def _parse_part_dir(name: str):
         return key, unquote(raw)
 
 
-def _lift_stats(spark: SparkSession | None, finals: list[str]) -> list[dict]:
-    """Footer row-count + min/max stats for every final data file.
-
-    Small commits (≤ ``SNAPTABLE_DRIVER_STATS_MAX`` files, default 32)
-    use a driver thread pool — footer reads are tiny metadata fetches
-    and a Spark job would cost more in task launch than it saves. Large
-    commits go EXECUTOR-side: one ``mapInPandas`` pass over the path
-    list, each task reading the footers of its slice locally (same
-    shared-FS contract as the data write itself) and returning the
-    stats as JSON rows; the driver only assembles the manifest. That
-    keeps driver wall-time flat in file count — at 10^4–10^5 files per
-    commit (a day of micro-batches, a big backfill) the old threaded
-    driver loop serialized on one machine's NIC (VERDICT r05 ask #7;
-    Iceberg lifts stats in its writer tasks for the same reason).
-    Measured flat: see BENCH.md "stats-lift" appendix (64 vs 512
-    files)."""
+def _lift_stats(finals: list[str]) -> list[dict]:
+    """Footer row-count + min/max stats for every final data file, read
+    by a driver thread pool: footer reads are tiny metadata fetches on
+    the shared POSIX filesystem this layer targets. An executor-side
+    lift (one Spark job over the path list) lost at every file count
+    measured, 64 to 2048 (BENCH.md "Snapshot-commit stats lift")."""
     if not finals:
         return []
-    driver_max = int(os.environ.get("SNAPTABLE_DRIVER_STATS_MAX", "32"))
-    if spark is None or len(finals) <= driver_max:
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=min(16, len(finals))) as ex:
-            return list(ex.map(_file_stats, finals))
-
-    def lift(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "payload": [json.dumps(_file_stats(p)) for p in pdf["path"]],
-                }
-            )
-
-    n_tasks = min(len(finals), max(1, spark.sparkContext.defaultParallelism))
-    rows = (
-        spark.createDataFrame([(p,) for p in finals], "path string")
-        .repartition(n_tasks)
-        .mapInPandas(lift, "path string, payload string")
-        .collect()
-    )
-    by_path = {r["path"]: json.loads(r["payload"]) for r in rows}
-    return [by_path[p] for p in finals]
+    with ThreadPoolExecutor(max_workers=min(16, len(finals))) as ex:
+        return list(ex.map(_file_stats, finals))
 
 
 def _write_data_files(
@@ -497,10 +464,10 @@ def _write_data_files(
     the layout is invisible to readers except through
     :func:`plan_files` pruning.
 
-    Remaining driver-side step (stats lift moved executor-side in r06,
-    see :func:`_lift_stats`): the staging→``data/`` renames run in a
-    driver loop. On POSIX a rename is a ~10 µs metadata op, so this is
-    ~1 s even at 10^5 files; on an object store a "rename" is a copy
+    Driver-side steps: :func:`_lift_stats` reads the footers in a
+    driver thread pool, and the staging→``data/`` renames run in a
+    driver loop. On POSIX a rename is a ~10 µs metadata op, so the loop
+    is ~1 s even at 10^5 files; on an object store a "rename" is a copy
     and the honest fix is different — have executor tasks write final
     unique names directly (foreachPartition writer emitting (path,
     rows) instead of Spark's committer staging), which removes the
@@ -536,7 +503,7 @@ def _write_data_files(
                 partitions.append(values or None)
 
     _walk(staging, {})
-    stats = _lift_stats(df.sparkSession, finals)
+    stats = _lift_stats(finals)
     new_files = []
     for final, st, pv in zip(finals, stats, partitions):
         entry = {"path": os.path.relpath(final, table), **st}

@@ -20,6 +20,15 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="session")
+def pipe(spark):
+    """The default ``KgPipeline`` on the smoke corpus, built once; a
+    test needing another encoder, dim or corpus builds its own."""
+    from bootleg_spark.plans.pipeline import KgPipeline
+
+    return KgPipeline(spark, SF_SMOKE)
+
+
 def count_jobs(spark, fn):
     """Run ``fn()`` under a fresh Spark job group; return ``(result,
     n_jobs)`` read from the status tracker (starts no job of its own)."""

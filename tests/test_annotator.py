@@ -11,11 +11,6 @@ from bootleg_spark.plans.pipeline import KgPipeline
 from tests.conftest import SF_SMOKE
 
 
-@pytest.fixture(scope="module")
-def pipe(spark):
-    return KgPipeline(spark, SF_SMOKE)
-
-
 def _an_alias(pipe):
     return sorted(pipe.alias_set_bc.value)[0]
 

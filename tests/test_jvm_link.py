@@ -15,11 +15,6 @@ from bootleg_spark.plans.pipeline import KgPipeline
 from tests.conftest import SF_SMOKE
 
 
-@pytest.fixture(scope="module")
-def pipe(spark):
-    return KgPipeline(spark, SF_SMOKE)
-
-
 # ---------------------------------------------------------------------------
 # HTML extraction: JVM expr ≡ Python on the guarded class
 # ---------------------------------------------------------------------------
@@ -97,6 +92,22 @@ def test_linked_relational_matches_fused(spark, pipe, encoder):
     staged = sorted(tuple(r) for r in pipe.linked().select(*cols).collect())
     rel = sorted(tuple(r) for r in pipe.linked_relational().select(*cols).collect())
     assert rel == staged and len(staged) > 0
+
+
+def test_linked_relational_raises_outside_guard(spark, pipe):
+    """A page outside the JVM guard (here an html entity, which fails
+    ``jvm_extractable_expr``) fails the query, naming the page, instead
+    of yielding wrong rows."""
+    from bootleg_spark.functions.textproc import render_page_html
+
+    text = pipe.pages().select("text").first()["text"]
+    dirty = spark.createDataFrame(
+        [("https://x/dirty", render_page_html(900001, text + " &amp; extra"), 900001)],
+        "url string, html binary, doc_id long",
+    )
+    mixed = pipe.pages().select("url", "html", "doc_id").unionByName(dirty)
+    with pytest.raises(Exception, match="page outside the JVM guard: https://x/dirty"):
+        pipe.linked_relational(mixed).collect()
 
 
 def test_fused_triples_match_staged_on_dirty_corpus(spark, pipe):

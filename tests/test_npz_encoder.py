@@ -54,7 +54,7 @@ def test_export_is_deterministic_and_loads(spark, npz_path, tmp_path):
         NpzEncoder.from_file(spark, npz_path, S.EMB_DIM + 1)
 
 
-def test_npz_encoder_through_fused_kernel(spark, npz_path):
+def test_npz_encoder_through_fused_kernel(spark, pipe, npz_path):
     """The whole point: a file-exported model slots into the pipeline
     with NO Spark-plan change — same single-MapInPandas fused plan,
     same fused-triples plan shape — and the outputs are internally consistent
@@ -63,10 +63,8 @@ def test_npz_encoder_through_fused_kernel(spark, npz_path):
     pipe_npz = KgPipeline(
         spark, SF_SMOKE, encoder=NpzEncoder.from_file(spark, npz_path, S.EMB_DIM)
     )
-    pipe_def = KgPipeline(spark, SF_SMOKE)
-
     fused_npz = pipe_npz.linked_fused()
-    fused_def = pipe_def.linked_fused()
+    fused_def = pipe.linked_fused()
     # plan invariance: the encoder is a closure detail, not a plan node
     for name in ("MapInPandas", "Exchange", "BroadcastExchange"):
         assert n_nodes(plan_of(fused_npz), name) == n_nodes(plan_of(fused_def), name)
@@ -105,7 +103,7 @@ def test_npz_encoder_through_fused_kernel(spark, npz_path):
     # fused triples: plan shape unchanged vs the default encoder, and
     # equal to the staged triples under the SAME encoder
     tri_npz = pipe_npz.triples()
-    tri_def = pipe_def.triples()
+    tri_def = pipe.triples()
     for name in ("MapInPandas", "ArrowEvalPython", "Exchange"):
         assert n_nodes(plan_of(tri_npz), name) == n_nodes(plan_of(tri_def), name)
     got = {tuple(r) for r in tri_npz.collect()}

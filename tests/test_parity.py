@@ -60,8 +60,7 @@ def single_process_annotator(
     return triples
 
 
-def test_triple_precision_recall_vs_sequential_reference(spark):
-    pipe = KgPipeline(spark, SF_SMOKE)
+def test_triple_precision_recall_vs_sequential_reference(pipe):
     pages_rows = pipe.pages().select("html").collect()
     expected = single_process_annotator(
         pages_rows,

@@ -11,11 +11,6 @@ from bootleg_spark.plans.pipeline import KgPipeline, extract_text, materialize_t
 from tests.conftest import SF_SMOKE
 
 
-@pytest.fixture(scope="module")
-def pipe(spark):
-    return KgPipeline(spark, SF_SMOKE)
-
-
 def test_extract_text_byte_identical(pipe):
     """north_rule per-row invariant: extracted text == pre-extracted text
     for every url."""
@@ -435,15 +430,35 @@ def test_manifest_partial_resume(pipe, tmp_path):
     assert got == full
 
 
-def test_incremental_kg_update_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("n_files,budget", [(3, 2), (40, 3)])
+def test_incremental_kg_update_job_budget(spark, pipe, tmp_path, n_files, budget):
+    """One incremental batch stays within its Spark job budget: 2 jobs
+    (the graph's broadcast for the anti-join, the commit's write) on a
+    3-file graph, 3 on a 40-file one, whose scan adds a listing job. The
+    graph is one write of the even pages' triples plus padding subjects,
+    so every file is non-empty."""
+    from bootleg_spark.plans.pipeline import incremental_kg_update
+    from bootleg_spark.sources import snaptable as st
+    from tests.conftest import count_jobs
+
+    pt, gt = str(tmp_path / "pages"), str(tmp_path / "graph")
+    st.commit_stream_batch(pipe.pages(), pt, batch_id=0)
+    pad = spark.range(200).select(
+        F.format_string("pad%d", "id").alias("subj"), F.lit("p").alias("pred"), F.lit("o").alias("obj")
+    )
+    graph = pipe.triples(pipe.pages().where("doc_id % 2 = 0")).unionByName(pad)
+    assert len(st.write_table(graph.repartition(n_files, "subj"), gt)["files"]) == n_files
+    r, n_jobs = count_jobs(spark, lambda: incremental_kg_update(pipe, pt, gt))
+    assert r["new_triples"] > 0 and n_jobs <= budget
+
+
+def test_incremental_kg_update_exactly_once(spark, pipe, tmp_path):
     """Incremental KG construction over the table-as-log: each run
     processes only newly appended pages; edges land exactly once across
     batches AND across crash-replay at the ack seam."""
-    from bootleg_spark.plans.pipeline import KgPipeline, incremental_kg_update
+    from bootleg_spark.plans.pipeline import incremental_kg_update
     from bootleg_spark.sources import snaptable as st
-    from tests.conftest import SF_SMOKE
 
-    pipe = KgPipeline(spark, SF_SMOKE)
     pages = pipe.pages().cache()
     pt = str(tmp_path / "pages")
     gt = str(tmp_path / "graph")

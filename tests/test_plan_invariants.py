@@ -12,9 +12,6 @@ import contextlib
 import io
 import re
 
-import pytest
-
-from bootleg_spark.plans.pipeline import KgPipeline
 from tests.conftest import SF_SMOKE
 
 
@@ -29,11 +26,6 @@ def n_nodes(plan: str, name: str) -> int:
     """Count physical nodes by their detail headers — formatted explain
     prints every node twice (tree line + '(N) Name' detail block)."""
     return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
-
-
-@pytest.fixture(scope="module")
-def pipe(spark):
-    return KgPipeline(spark, SF_SMOKE)
 
 
 def test_fused_pipeline_is_one_python_pass(spark, pipe):
@@ -55,6 +47,13 @@ def test_relational_linking_scores_in_one_python_node(spark, pipe):
     assert "BatchEvalPython" not in p
     assert "SortMergeJoin" not in p
     assert "BroadcastHashJoin" in p  # dictionary + candidate dims broadcast
+
+
+def test_entity_encode_is_one_python_node(pipe):
+    """emb_df chains the entity-string UDF into the encoder UDF: one
+    Python node, so each task starts one worker and ships the entity
+    strings through Arrow once."""
+    assert n_nodes(plan_of(pipe.emb_df), "ArrowEvalPython") == 1
 
 
 def test_staged_popularity_triples_broadcast_dims(spark):

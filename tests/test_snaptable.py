@@ -129,15 +129,13 @@ def test_vacuum_expires_snapshots(spark, docs, tmp_path):
         assert not os.path.exists(os.path.join(table, rel))
 
 
-def test_snapshot_triples_graph_table(spark, tmp_path):
+def test_snapshot_triples_graph_table(spark, pipe, tmp_path):
     """The published graph-table shape: each pipeline run commits a
     version; subj-range data files make entity-centric reads open a
     strict subset of files; overwrite keeps the prior graph
     time-travelable."""
-    from bootleg_spark.plans.pipeline import KgPipeline, materialize_triples, snapshot_triples
-    from tests.conftest import SF_SMOKE
+    from bootleg_spark.plans.pipeline import materialize_triples, snapshot_triples
 
-    pipe = KgPipeline(spark, SF_SMOKE)
     out, table = str(tmp_path / "kg_out"), str(tmp_path / "graph")
     materialize_triples(pipe, out, n_buckets=2)
     s1 = snapshot_triples(pipe, out, table, 2, n_files=4)
@@ -247,11 +245,11 @@ def test_random_op_sequences_match_model(spark, tmp_path):
                 assert got == want, (seed, _step, op, v, len(got), len(want))
 
 
-def test_snapshot_carries_lineage_and_metrics(spark, tmp_path):
+def test_snapshot_carries_lineage_and_metrics(spark, pipe, tmp_path):
     """North-rule: lineage + throughput metrics live in the manifest.
     Every committed snapshot stamps write_seconds / new_rows /
     rows_per_sec, and snapshot_triples adds run provenance."""
-    from bootleg_spark.plans.pipeline import KgPipeline, materialize_triples, snapshot_triples
+    from bootleg_spark.plans.pipeline import materialize_triples, snapshot_triples
     from bootleg_spark.sources import store
     from tests.conftest import SF_SMOKE
 
@@ -263,7 +261,6 @@ def test_snapshot_carries_lineage_and_metrics(spark, tmp_path):
     assert s["write_seconds"] > 0 and s["new_rows"] == 50
     assert s["rows_per_sec"] > 0
 
-    pipe = KgPipeline(spark, SF_SMOKE)
     out = str(tmp_path / "kg_out")
     materialize_triples(pipe, out, n_buckets=2)
     g = snapshot_triples(pipe, out, str(tmp_path / "graph"), 2)
@@ -335,28 +332,6 @@ def test_json_unsafe_footer_stats_skipped(spark, tmp_path):
     _, files = st.plan_files(table, prune=("ts", ">=", "2099-01-01"))
     assert len(files) == len(snap["files"])
     assert st.read_table(spark, table).count() == 10
-
-
-def test_executor_side_stats_lift_matches_driver(spark, docs, tmp_path, monkeypatch):
-    """A many-file commit lifts footer stats executor-side
-    (mapInPandas); the manifest must be identical to the driver-thread
-    path's (same stats, same order)."""
-    many = docs.repartition(40, "doc_id")  # > default driver max of 32
-    monkeypatch.setenv("SNAPTABLE_DRIVER_STATS_MAX", "32")
-    t_exec = str(tmp_path / "t_exec")
-    s_exec = st.write_table(many, t_exec)
-    monkeypatch.setenv("SNAPTABLE_DRIVER_STATS_MAX", "100000")
-    t_drv = str(tmp_path / "t_drv")
-    s_drv = st.write_table(many, t_drv)
-    assert len(s_exec["files"]) == len(s_drv["files"]) > 32
-    # file names are uuids — compare the lifted stats content pairwise
-    # after aligning by the (deterministic) per-file min doc_id
-    key = lambda e: e["stats"].get("doc_id", [None])[0]
-    for a, b in zip(
-        sorted(s_exec["files"], key=key), sorted(s_drv["files"], key=key)
-    ):
-        assert a["rows"] == b["rows"] and a["stats"] == b["stats"]
-    assert _rows(st.read_table(spark, t_exec)) == _rows(docs)
 
 
 def test_delete_rows_copy_on_write(spark, docs, tmp_path):
@@ -941,7 +916,7 @@ def test_side_manifest_for_large_file_lists(spark, docs, tmp_path, monkeypatch):
     to a write-once side manifest; the snapshot JSON stays tiny, reads
     and time travel are unchanged, and vacuum reclaims the side file
     with its snapshot."""
-    monkeypatch.setenv("SNAPTABLE_INLINE_FILES_MAX", "5")
+    monkeypatch.setattr(st, "INLINE_FILES_MAX", 5)
     table = str(tmp_path / "t")
     s1 = st.write_table(docs.repartition(10), table)       # 10 files > 5
     assert "files_ref" in s1

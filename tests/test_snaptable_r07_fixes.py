@@ -101,37 +101,34 @@ def test_zorder_carries_partition_spec_and_watermark(spark, tmp_path):
     assert st.commit_stream_batch(_docs(spark).where("doc_id < 5"), table, batch_id=3) is None
 
 
-def test_vacuum_sweeps_orphan_side_manifests(spark, tmp_path):
+def test_vacuum_sweeps_orphan_side_manifests(spark, tmp_path, monkeypatch):
     """A crash between writing m-*.json and the os.link publish leaves
     an unreferenced side manifest (and .tmp) in _snapshots/ forever;
     vacuum now sweeps them under the same mtime grace, while REFERENCED
     side manifests survive (ADVICE r06 low)."""
     table = str(tmp_path / "t")
-    os.environ["SNAPTABLE_INLINE_FILES_MAX"] = "0"  # force side manifests
-    try:
-        st.write_table(_docs(spark), table)
-        snap_dir = os.path.join(table, st.SNAP_DIR)
-        referenced = st.load_snapshot(table).get("files_ref")
-        assert referenced, "expected a side manifest with inline_max=0"
-        orphan = os.path.join(snap_dir, "m-99-deadbeef.json")
-        tmp = os.path.join(snap_dir, ".m-99-deadbeef.json.tmp")
-        for p in (orphan, tmp):
-            with open(p, "w") as f:
-                f.write("{}")
-            old = time.time() - 10_000
-            os.utime(p, (old, old))
-        deleted = st.vacuum(table, keep_versions=1, orphan_grace_seconds=3600)
-        names = {os.path.basename(d) for d in deleted}
-        assert "m-99-deadbeef.json" in names and ".m-99-deadbeef.json.tmp" in names
-        assert not os.path.exists(orphan) and not os.path.exists(tmp)
-        # the referenced side manifest survives and the table still reads
-        assert os.path.exists(os.path.join(snap_dir, referenced))
-        assert st.read_table(spark, table).count() == 100
-        # a FRESH orphan (inside the grace window) is protected
-        fresh = os.path.join(snap_dir, "m-98-cafebabe.json")
-        with open(fresh, "w") as f:
+    monkeypatch.setattr(st, "INLINE_FILES_MAX", 0)  # force side manifests
+    st.write_table(_docs(spark), table)
+    snap_dir = os.path.join(table, st.SNAP_DIR)
+    referenced = st.load_snapshot(table).get("files_ref")
+    assert referenced, "expected a side manifest with inline_max=0"
+    orphan = os.path.join(snap_dir, "m-99-deadbeef.json")
+    tmp = os.path.join(snap_dir, ".m-99-deadbeef.json.tmp")
+    for p in (orphan, tmp):
+        with open(p, "w") as f:
             f.write("{}")
-        st.vacuum(table, keep_versions=1, orphan_grace_seconds=3600)
-        assert os.path.exists(fresh)
-    finally:
-        os.environ.pop("SNAPTABLE_INLINE_FILES_MAX", None)
+        old = time.time() - 10_000
+        os.utime(p, (old, old))
+    deleted = st.vacuum(table, keep_versions=1, orphan_grace_seconds=3600)
+    names = {os.path.basename(d) for d in deleted}
+    assert "m-99-deadbeef.json" in names and ".m-99-deadbeef.json.tmp" in names
+    assert not os.path.exists(orphan) and not os.path.exists(tmp)
+    # the referenced side manifest survives and the table still reads
+    assert os.path.exists(os.path.join(snap_dir, referenced))
+    assert st.read_table(spark, table).count() == 100
+    # a FRESH orphan (inside the grace window) is protected
+    fresh = os.path.join(snap_dir, "m-98-cafebabe.json")
+    with open(fresh, "w") as f:
+        f.write("{}")
+    st.vacuum(table, keep_versions=1, orphan_grace_seconds=3600)
+    assert os.path.exists(fresh)

@@ -2,8 +2,6 @@
 
 import pyspark.sql.functions as F
 
-from tests.conftest import SF_SMOKE
-
 
 def test_session_windows_streaming_with_watermark(spark, tmp_path):
     """sessionize_windows runs as a Structured Streaming query: session
@@ -67,18 +65,12 @@ def test_session_windows_streaming_with_watermark(spark, tmp_path):
     assert not any(abs(tv - 100.0) < 1e-9 or tv > 99 for _, _, tv in got)
 
 
-def test_linked_pipeline_runs_as_streaming_query(spark, tmp_path):
+def test_linked_pipeline_runs_as_streaming_query(spark, pipe, tmp_path):
     """The fused KG linking plan (①–④, one stateless mapInPandas) must
     run unchanged under Structured Streaming: pages stream in as
     parquet files, linked mentions stream out, and the result matches
     the batch run row-for-row. This is the north-star ingest shape —
     a crawl feed linking continuously into the graph store."""
-    from pyspark.sql import functions as F
-
-    from bootleg_spark.plans.pipeline import KgPipeline
-    from tests.conftest import SF_SMOKE
-
-    pipe = KgPipeline(spark, SF_SMOKE)
     src = str(tmp_path / "pages_in")
     out = str(tmp_path / "linked_out")
     ckpt = str(tmp_path / "ckpt")
@@ -105,18 +97,17 @@ def test_linked_pipeline_runs_as_streaming_query(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_snapshot_stream_exactly_once(spark, tmp_path):
+def test_snapshot_stream_exactly_once(spark, pipe, tmp_path):
     """Streaming inserts into the snapshot graph table: two crawl
     arrivals, each processed by its own stream run, leave exactly the
     rows of ``pipe.triples`` over all pages — a triple both arrivals
     produce lands once. A restart with no new input commits nothing,
     and a replayed batch_id (crash between commit and checkpoint) is
     detected by the batch-id watermark and skipped."""
-    from bootleg_spark.plans.pipeline import KgPipeline, insert_new_triples
+    from bootleg_spark.plans.pipeline import insert_new_triples
     from bootleg_spark.sources import snaptable as st
     from bootleg_spark.streaming.ingest import start_snapshot_triple_stream
 
-    pipe = KgPipeline(spark, SF_SMOKE)
     pages = pipe.pages()
     src = str(tmp_path / "src")
     table = str(tmp_path / "graph")
