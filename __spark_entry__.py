@@ -756,7 +756,7 @@ def _q_ann_ivf_table(spark, sf_dir):
         os.path.basename(os.path.normpath(sf_dir)),
     )
     shutil.rmtree(table, ignore_errors=True)
-    build_ivf_table(spark, _emb(spark, sf_dir), table, n_cells=8)
+    build_ivf_table(_emb(spark, sf_dir), table, n_cells=8)
     return ivf_table_topk(spark, table, n_probe=8)
 
 

@@ -3,16 +3,22 @@
 Engine extension beyond the reference (its nearest analogue is the
 faiss IndexFlatIP top-k retrieval in cand_gen/eval.py:291-356):
 
-- :func:`cosine_topk_bruteforce` — exact top-k cosine neighbors via a
-  broadcast join of the (small) query set against the full table. At
-  cluster scale the query side stays broadcast and the big side is
-  scanned once — embarrassingly parallel, no shuffle until the
+- :func:`cosine_topk_bruteforce` — exact top-k: the (small) query set
+  broadcast against one scan of the full table, no shuffle until the
   per-query top-k window.
-- :func:`signbit_lsh_topk` — LSH-bucketed variant: bucket on the sign
-  bits of the leading dimensions, search within bucket only (the scale
-  path: turns O(Q·N) into O(Q·N/2^bits) with recall traded off).
+- :func:`ivf_topk` — IVF: each query searches its ``n_probe`` closest
+  k-means cells (:func:`ivf_centroids`).
+- :func:`signbit_lsh_topk` — search within the query's sign-bit
+  bucket: O(Q·N) becomes O(Q·N/2^bits), recall traded off.
+- :func:`build_ivf_table` / :func:`ivf_table_topk` — the IVF index as
+  a snapshot-table layout: a query opens only its probe cells' files.
+- :func:`embedding_near_pairs` — cosine near-duplicate pairs within
+  sign-bit buckets.
 
-All vector math is JVM-side (zip_with/aggregate) — no Python.
+Every top-k path ends in one scorer (:func:`_topk`): one rounded
+cosine, rank and tie rule, so ``n_probe = n_cells`` reproduces the
+brute force exactly. The vector math is JVM-side (zip_with/aggregate);
+only the IVF table's probe pick runs in numpy, on the executors.
 """
 
 from __future__ import annotations
@@ -35,6 +41,43 @@ def _norm(a):
     )
 
 
+def _side(df: DataFrame, id_col: str, vec_col: str, role: str, *keep) -> DataFrame:
+    """``{role}_id``, ``{role}_v`` and ``{role}_n`` (the L2 norm) plus
+    ``keep``. The norm is computed here, once per row BEFORE any fan-out
+    join, not once per (query, candidate) pair (guide §1.2 per-task
+    work)."""
+    return df.select(
+        F.col(id_col).alias(f"{role}_id"),
+        F.col(vec_col).alias(f"{role}_v"),
+        _norm(F.col(vec_col)).alias(f"{role}_n"),
+        *keep,
+    )
+
+
+def _cos(a: str, b: str):
+    """Cosine of sides ``a`` and ``b``, rounded to 6 dp (engine-stable)."""
+    return F.round(
+        _dot(F.col(f"{a}_v"), F.col(f"{b}_v")) / (F.col(f"{a}_n") * F.col(f"{b}_n")), 6
+    )
+
+
+def _topk(queries: DataFrame, cands: DataFrame, k: int, on: str | None = None) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos_sim): the broadcast ``query``
+    side joined to the ``neighbor`` side on ``on`` (every candidate when
+    ``None``), self-pairs dropped, the top ``k`` per query by ``cos_sim``
+    desc then ``neighbor_id`` asc (deterministic ties)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        F.broadcast(queries)
+        .join(cands, on)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos_sim", _cos("query", "neighbor"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cos_sim")
+    )
+
+
 def cosine_topk_bruteforce(
     emb: DataFrame,
     n_queries: int = 10,
@@ -42,41 +85,9 @@ def cosine_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for the first ``n_queries`` ids.
-
-    Output (query_id, neighbor_id, rank, cos_sim) with cos_sim rounded
-    to 6 dp (stable across engines); rank windows order by the rounded
-    score then neighbor id for deterministic ties.
-    """
-    # norms precomputed once per row on each side BEFORE the fan-out
-    # join (guide §1.2 per-task work): computed inside the pair
-    # projection they re-ran per (query, candidate) row — |Q|× per
-    # candidate and |N|× per query. Same expression, same float ops,
-    # identical rounded values.
-    q = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cos_sim")
-    )
+    """Exact top-k cosine neighbors for the first ``n_queries`` ids."""
+    queries = _side(emb.where(F.col(id_col) < n_queries), id_col, vec_col, "query")
+    return _topk(queries, _side(emb, id_col, vec_col, "neighbor"), k)
 
 
 def signbit_bucket(vec_col, bits: int = 8):
@@ -96,19 +107,16 @@ def _assign_to_centroids(
     the assignment and probe tie rules can never diverge (ivf_topk's
     full-probe ≡ brute-force claim depends on that). One scan of the
     big side, per-id window."""
-    cents_n = cents.select("cell", "cv", _norm(F.col("cv")).alias("_cn"))
-    scored = (
-        emb.withColumn("_vn", _norm(F.col(vec_col)))
-        .crossJoin(F.broadcast(cents_n))
-        .withColumn(
-            "sim", F.round(_dot(F.col(vec_col), F.col("cv")) / (F.col("_vn") * F.col("_cn")), 6)
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("sim"), F.asc("cell"))
+    w = Window.partitionBy("v_id").orderBy(F.desc("sim"), F.asc("c_id"))
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        _side(emb, id_col, vec_col, "v")
+        .crossJoin(F.broadcast(_side(cents, "cell", "cv", "c")))
+        .withColumn("sim", _cos("v", "c"))
+        .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= top_n)
-        .select(F.col(id_col), F.col(vec_col), F.col("cell"))
+        .select(
+            F.col("v_id").alias(id_col), F.col("v_v").alias(vec_col), F.col("c_id").alias("cell")
+        )
     )
 
 
@@ -149,6 +157,16 @@ def ivf_centroids(
     return cents
 
 
+def _probe_topk(probes: DataFrame, assigned: DataFrame, k: int, id_col: str, vec_col: str):
+    """Top-k inside the probe cells: ``probes`` holds one (id, vector,
+    cell) row per probed cell of each query, ``assigned`` every
+    candidate with its cell. No dedup: every vector lives in exactly one
+    cell and a query's probe cells are distinct, so (query, neighbor)
+    pairs are unique by construction."""
+    queries = _side(probes, id_col, vec_col, "query", "cell")
+    return _topk(queries, _side(assigned, id_col, vec_col, "neighbor", "cell"), k, on="cell")
+
+
 def ivf_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -164,42 +182,13 @@ def ivf_topk(
     index in cand_gen/eval.py). Turns O(Q·N) into O(Q·N·n_probe/cells)
     at a recall tradeoff; ``n_probe = n_cells`` scans every cell and
     reproduces :func:`cosine_topk_bruteforce` exactly (same rounding
-    and tie rules — pinned by tests/test_dedup_similarity.py).
-
-    ``n_probe=1`` keeps the original single-cell behavior: the query's
-    closest centroid is its own assignment cell, so the oracle-checked
-    output is unchanged."""
+    and tie rules — pinned by tests/test_dedup_similarity.py). At
+    ``n_probe=1`` a query searches its own assignment cell."""
     cents = ivf_centroids(emb, n_cells, n_iter, id_col, vec_col)
+    queries = emb.where(F.col(id_col) < n_queries)
+    probes = _assign_to_centroids(queries, cents, id_col, vec_col, top_n=n_probe)
     assigned = _assign_to_centroids(emb, cents, id_col, vec_col)
-    qv = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    probes = _assign_to_centroids(qv, cents, "query_id", "qv", top_n=n_probe)
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "cell",
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    probes_n = probes.withColumn("qn", _norm(F.col("qv")))
-    scored = (
-        F.broadcast(probes_n)
-        .join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        # no dedup needed: every vector lives in exactly one cell and a
-        # query's probe cells are distinct, so (query, neighbor) pairs
-        # are unique by construction
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cos_sim")
-    )
+    return _probe_topk(probes, assigned, k, id_col, vec_col)
 
 
 def signbit_lsh_topk(
@@ -213,32 +202,12 @@ def signbit_lsh_topk(
     """Approximate top-k: candidates restricted to the query's sign-bit
     bucket (equi-join on bucket instead of a broadcast fan-out)."""
     with_bucket = emb.withColumn("bucket", signbit_bucket(F.col(vec_col), bits))
-    q = with_bucket.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        "bucket",
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "bucket",
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cos_sim")
+    queries = with_bucket.where(F.col(id_col) < n_queries)
+    return _topk(
+        _side(queries, id_col, vec_col, "query", "bucket"),
+        _side(with_bucket, id_col, vec_col, "neighbor", "bucket"),
+        k,
+        on="bucket",
     )
 
 
@@ -255,28 +224,17 @@ def embedding_near_pairs(
     proposes, exact cosine verifies; never all-pairs). Output feeds
     dedup.dup_clusters for keep-one-per-cluster semantics."""
     with_bucket = emb.withColumn("bucket", signbit_bucket(F.col(vec_col), bits))
-    a = with_bucket.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket",
-        _norm(F.col(vec_col)).alias("na"),
-    )
-    b = with_bucket.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket",
-        _norm(F.col(vec_col)).alias("nb"),
-    )
-    scored = (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
+    return (
+        _side(with_bucket, id_col, vec_col, "a", "bucket")
+        .join(_side(with_bucket, id_col, vec_col, "b", "bucket"), "bucket")
+        .where(F.col("a_id") < F.col("b_id"))
+        .withColumn("cos_sim", _cos("a", "b"))
         .where(F.col("cos_sim") >= threshold)
+        .select(F.col("a_id").alias("id_a"), F.col("b_id").alias("id_b"), "cos_sim")
     )
-    return scored.select("id_a", "id_b", "cos_sim")
 
 
 def build_ivf_table(
-    spark,
     emb: DataFrame,
     table: str,
     n_cells: int = 8,
@@ -289,24 +247,21 @@ def build_ivf_table(
     and written as a snapshot-manifest table range-partitioned on
     ``cell`` — each data file then carries a tight cell [min, max] in
     the manifest, and the centroids themselves ride in the snapshot
-    metadata. A top-k query (:func:`ivf_table_topk`) picks its probe
-    cells from the broadcast-small centroid list and opens ONLY the
-    files whose cell range intersects, via metadata — the
-    LanceDB/Iceberg-vector access pattern: at 10^9 vectors a 1-probe
-    query reads ~1/n_cells of the data and ZERO bytes of the rest,
-    without any serving infrastructure beyond the table."""
+    metadata (every later commit but an overwrite carries them). A
+    top-k query (:func:`ivf_table_topk`) picks its probe cells from the
+    broadcast-small centroid list and opens ONLY the files whose cell
+    range intersects, via metadata — the LanceDB/Iceberg-vector access
+    pattern: at 10^9 vectors a 1-probe query reads ~1/n_cells of the
+    data and ZERO bytes of the rest, without any serving infrastructure
+    beyond the table."""
     from bootleg_spark.sources import snaptable as st
 
     cents = ivf_centroids(emb, n_cells, n_iter, id_col, vec_col)
     assigned = _assign_to_centroids(emb, cents, id_col, vec_col)
-    cent_rows = sorted(
-        (int(r["cell"]), [float(x) for x in r["cv"]]) for r in cents.collect()
-    )
-    df = assigned.select(
-        F.col(id_col), F.col(vec_col), F.col("cell").cast("long")
-    ).repartitionByRange(n_cells, "cell", id_col)
+    cent_rows = sorted((int(r["cell"]), [float(x) for x in r["cv"]]) for r in cents.collect())
+    df = assigned.withColumn("cell", F.col("cell").cast("long"))
     return st.write_table(
-        df,
+        df.repartitionByRange(n_cells, "cell", id_col),
         table,
         extra={"ivf": {"n_cells": n_cells, "centroids": cent_rows}},
     )
@@ -323,87 +278,54 @@ def ivf_table_topk(
 ) -> DataFrame:
     """Top-k cosine neighbors over a :func:`build_ivf_table` table,
     reading only probed cells' files. Query vectors are the ids <
-    ``n_queries`` (the suite's fixed protocol); their probe cells come
-    from the snapshot's centroid metadata, scored DRIVER-side in numpy
-    (queries are few by definition; the centroid list is
-    broadcast-small by construction). ``n_probe = n_cells`` reads
-    everything and reproduces :func:`cosine_topk_bruteforce` exactly
-    (same rounding and tie rules — pytest + the shared driver oracle
-    pin it); smaller ``n_probe`` trades recall for opening
-    ~``n_probe/n_cells`` of the files."""
+    ``n_queries`` (the suite's fixed protocol). Queries and candidates
+    are read at the one snapshot version whose centroids pick the
+    probes, with that snapshot's pending deletes applied.
+    ``n_probe = n_cells`` reads everything and reproduces
+    :func:`cosine_topk_bruteforce` exactly (same rounding and tie rules
+    — pytest + the shared driver oracle pin it); smaller ``n_probe``
+    trades recall for opening ~``n_probe/n_cells`` of the files."""
     from bootleg_spark.sources import snaptable as st
 
     snap = st.load_snapshot(table)
-    meta = snap["ivf"]
-    centroids = [(int(c), [float(x) for x in v]) for c, v in meta["centroids"]]
+    if snap.get("ivf") is None:
+        raise ValueError(
+            f"{table} v{snap['version']} carries no IVF centroids — an overwrite "
+            "drops them; rebuild the index with build_ivf_table"
+        )
+    centroids = snap["ivf"]["centroids"]  # [(cell, vector)], cell-sorted
 
-    # probe selection runs EXECUTOR-side (r07 / VERDICT r06 #7): the
-    # query vectors are scored against the (broadcast-small) centroid
-    # list inside a mapInPandas pass instead of a driver loop over
-    # collect()ed rows — at production query volumes the driver never
-    # touches a vector. Only the probed CELL IDS come back to the
-    # driver (bounded by n_cells), because file pruning is inherently a
-    # driver decision. Same numerics and tie rule as before (numpy
-    # round, cosine desc, cell asc).
+    # probes are picked EXECUTOR-side against the broadcast-small
+    # centroid list in one mapInPandas pass; only the probed cell ids
+    # (at most n_cells) reach the driver, which prunes the files. Same
+    # tie rule as _assign_to_centroids: rounded-6 cosine desc, cell asc.
     def _score_probes(batches):
         import numpy as np
         import pandas as pd
 
-        cells = [c for c, _ in centroids]
+        cells = np.array([c for c, _ in centroids])
         C = np.array([v for _, v in centroids], dtype=float)
         cn = np.linalg.norm(C, axis=1)
         for pdf in batches:
-            q_o, v_o, c_o = [], [], []
+            rows = []
             for qid, vec in zip(pdf[id_col], pdf[vec_col]):
-                qv = np.asarray(list(vec), dtype=float)
-                # same formula + tie rule as _assign_to_centroids:
-                # rounded-6 cosine desc, cell asc
+                qv = np.asarray(vec, dtype=float)
                 sims = np.round(C @ qv / (cn * np.linalg.norm(qv)), 6)
-                order = sorted(range(len(cells)), key=lambda i: (-sims[i], cells[i]))
-                for c in (int(cells[i]) for i in order[:n_probe]):
-                    q_o.append(int(qid))
-                    v_o.append([float(x) for x in qv])
-                    c_o.append(c)
-            yield pd.DataFrame({"query_id": q_o, "qv": v_o, "cell": c_o})
+                for i in np.lexsort((cells, -sims))[:n_probe]:
+                    rows.append((int(qid), qv.tolist(), int(cells[i])))
+            yield pd.DataFrame(rows, columns=[id_col, vec_col, "cell"])
 
     # lazy localCheckpoint: the cells collect below materializes the
     # probes once and the returned plan reads those blocks, instead of
     # re-running the scoring pass inside the join
     probes = (
-        st.read_table(spark, table)
+        st.read_table(spark, table, version=snap["version"])
         .where(F.col(id_col) < n_queries)
         .select(id_col, vec_col)
-        .mapInPandas(_score_probes, "query_id long, qv array<double>, cell long")
+        .mapInPandas(_score_probes, f"{id_col} long, {vec_col} array<double>, cell long")
         .localCheckpoint(eager=False)
     )
-    probe_cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
-
-    if not probe_cells:
-        # no query vectors (no id < n_queries) → every file would be
-        # pruned and spark.read.parquet(*[]) errors; the correct result
-        # is simply empty (ADVICE r05)
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank long, cos_sim double"
-        )
-    _, files = st.plan_files(table, prune=("cell", "in", probe_cells))
-    cand = spark.read.parquet(*files).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "cell",
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = (
-        F.broadcast(probes.withColumn("qn", _norm(F.col("qv"))))
-        .join(cand, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cos_sim")
-    )
+    cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
+    # no probes (no id < n_queries) prunes every file: an empty frame
+    cands = st.read_table(spark, table, version=snap["version"], prune=("cell", "in", cells))
+    return _probe_topk(probes, cands, k, id_col, vec_col)

@@ -24,18 +24,19 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "bootleg-spark",
     cores: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession.
 
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
-    ``shuffle_partitions`` defaults to ``2 * cores``, with no floor: two
-    waves of tasks per exchange absorb uneven task times, and every task
-    beyond that is fixed cost on the small exchanges this pipeline is
-    full of. A floor of 32 ran ~10 tasks per core on a 3-core session
-    and cut incremental-crawl throughput by ~1.7x (BENCH.md "Shuffle
-    width").
+    Shuffle partitions are ``2 * cores``, with no floor: two waves of
+    tasks per exchange absorb uneven task times, and every task beyond
+    that is fixed cost on the small exchanges this pipeline is full of.
+    A floor of 32 ran ~10 tasks per core on a 3-core session and cut
+    incremental-crawl throughput by ~1.7x (BENCH.md "Shuffle width");
+    ``extra_conf`` overrides it like any other conf. A running session
+    under another master or app name raises ``ValueError``: Spark would
+    silently hand it back with its own cores and name.
 
     On a real cluster the same code runs unchanged under
     ``spark-submit --py-files bootleg_spark.zip`` — only ``master`` and
@@ -54,13 +55,20 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     cores = int(cores)
-    if shuffle_partitions is None:
-        shuffle_partitions = 2 * cores
+    master = f"local[{cores}]"
+    running = SparkSession.getActiveSession()
+    if running is not None:
+        sc = running.sparkContext
+        if (sc.master, sc.appName) != (master, app_name):
+            raise ValueError(
+                f"a Spark session is already running as {sc.master} {sc.appName!r}; "
+                f"stop it before asking for {master} {app_name!r}"
+            )
 
     builder = (
-        SparkSession.builder.master(f"local[{cores}]")
+        SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(2 * cores))
         .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "false")

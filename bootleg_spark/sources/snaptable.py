@@ -22,8 +22,8 @@ What it reproduces, and how it maps onto the real thing:
   files no retained snapshot references.
 - **Optimistic commit.** Every writer commits through one
   :func:`_commit`: it reloads the latest snapshot as the base, carries
-  ``schema``/``schema_json``/``partition_spec``/``delete_files`` and
-  the monotone ``stream_batch_id`` replay watermark from it, and
+  ``schema``/``schema_json``/``partition_spec``/``delete_files``/``ivf``
+  and the monotone ``stream_batch_id`` replay watermark from it, and
   publishes with ``os.link`` (create-exclusive) — two writers racing
   to version N+1 get one winner, and the loser retries on the new
   base, Iceberg's atomic-swap contract. Same shared-POSIX-filesystem
@@ -147,7 +147,8 @@ def _write_json(path: str, obj, exclusive: bool) -> bool:
 
 
 # base fields every commit inherits unless its builder overrides them
-_CARRIED = ("schema", "schema_json", "partition_spec", "delete_files")
+# (``ivf``: the centroids of similarity.build_ivf_table's index layout)
+_CARRIED = ("schema", "schema_json", "partition_spec", "delete_files", "ivf")
 
 
 def _commit(table: str, mode: str, build, max_retries: int = 3) -> dict | None:
@@ -180,7 +181,7 @@ def _commit(table: str, mode: str, build, max_retries: int = 3) -> dict | None:
         }
         marks = {(base or {}).get("stream_batch_id"), fields.get("stream_batch_id")}
         snap["stream_batch_id"] = max(marks - {None}, default=None)
-        for k in ("partition_spec", "delete_files", "stream_batch_id"):
+        for k in ("partition_spec", "delete_files", "ivf", "stream_batch_id"):
             if snap.get(k) is None or snap[k] == []:
                 snap.pop(k, None)
         snap["total_rows"] = sum(f["rows"] for f in snap["files"])
@@ -655,13 +656,15 @@ def write_table(
             # rows match them only if genuinely re-inserting a deleted
             # key, Iceberg's own value-equality semantics)
             "delete_files": None,
+            # an overwrite's new rows carry no IVF cell assignment
+            "ivf": None,
             **metrics,
             **(extra or {}),
         }
         if mode == "append" and base is not None:
             _check_append_schema(base, df.schema)
             fields["files"] = base["files"] + new_files
-            del fields["delete_files"]
+            del fields["delete_files"], fields["ivf"]
         return fields
 
     return _commit(table, mode, build, max_retries)

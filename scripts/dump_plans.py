@@ -77,7 +77,9 @@ def main() -> None:
     import __spark_entry__ as entry
     from bootleg_spark.session import get_spark
 
-    spark = get_spark(app_name="dump-plans", cores=4, shuffle_partitions=4)
+    spark = get_spark(
+        app_name="dump-plans", cores=4, extra_conf={"spark.sql.shuffle.partitions": "4"}
+    )
     pipe = KgPipeline(spark, SF)
     docs = synth.read_documents(spark, SF)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")

@@ -15,7 +15,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="bootleg-spark-tests", cores=4, shuffle_partitions=4)
+    s = get_spark(
+        app_name="bootleg-spark-tests",
+        cores=4,
+        extra_conf={"spark.sql.shuffle.partitions": "4"},
+    )
     yield s
     s.stop()
 

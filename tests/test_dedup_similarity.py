@@ -137,15 +137,23 @@ def _emb_df(spark, n=60, d=8, seed=11):
     )
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _ivf_table(spark, tmp_path):
+    """(vectors, table path, build snapshot) of a 4-cell IVF table."""
+    df = _emb_df(spark)
+    table = str(tmp_path / "vecs")
+    return df, table, similarity.build_ivf_table(df, table, n_cells=4)
+
+
 def test_ivf_full_probe_equals_bruteforce(spark):
     # n_probe = n_cells scans every cell: identical result set, scores,
     # ranks, and tie order as the exact path
     df = _emb_df(spark)
-    exact = sorted(map(tuple, similarity.cosine_topk_bruteforce(df, n_queries=4, k=5).collect()))
-    ivf = sorted(
-        map(tuple, similarity.ivf_topk(df, n_queries=4, k=5, n_cells=4, n_probe=4).collect())
-    )
-    assert ivf == exact
+    exact = _rows(similarity.cosine_topk_bruteforce(df, n_queries=4, k=5))
+    assert _rows(similarity.ivf_topk(df, n_queries=4, k=5, n_cells=4, n_probe=4)) == exact
 
 
 def test_ivf_recall_improves_with_probes(spark):
@@ -192,23 +200,13 @@ def test_ivf_table_layout_prunes_and_matches(spark, tmp_path):
     returns neighbors from probed cells."""
     from bootleg_spark.sources import snaptable as st
 
-    df = _emb_df(spark)
-    table = str(tmp_path / "vecs")
-    snap = similarity.build_ivf_table(spark, df, table, n_cells=4)
+    df, table, snap = _ivf_table(spark, tmp_path)
     assert snap["ivf"]["n_cells"] == 4 and len(snap["ivf"]["centroids"]) <= 4
     n_files = len(snap["files"])
     assert n_files >= 2  # range partitioning really split the cells
 
-    exact = sorted(
-        map(tuple, similarity.cosine_topk_bruteforce(df, n_queries=4, k=5).collect())
-    )
-    full = sorted(
-        map(
-            tuple,
-            similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=4).collect(),
-        )
-    )
-    assert full == exact
+    exact = _rows(similarity.cosine_topk_bruteforce(df, n_queries=4, k=5))
+    assert _rows(similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=4)) == exact
 
     # 1-probe: fewer files opened than the table holds
     one = similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=1)
@@ -230,24 +228,49 @@ def test_ivf_table_layout_prunes_and_matches(spark, tmp_path):
 
 def test_ivf_table_topk_scores_probes_once(spark, tmp_path):
     """The probe-scoring mapInPandas runs once, for the probe-cell
-    collect; the returned plan reads the checkpointed probes instead of
-    scoring them again inside the join."""
-    df = _emb_df(spark)
-    table = str(tmp_path / "vecs")
-    similarity.build_ivf_table(spark, df, table, n_cells=4)
-    out = similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=1)
+    collect — the frame build's only Spark job (the candidate read has a
+    declared schema, so no inference job); the returned plan reads the
+    checkpointed probes instead of scoring them again inside the join."""
+    from tests.conftest import count_jobs
+
+    _, table, _ = _ivf_table(spark, tmp_path)
+    out, n_jobs = count_jobs(
+        spark, lambda: similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=1)
+    )
+    assert n_jobs <= 1
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan
     assert out.count() > 0
 
 
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_ivf_table_survives_deletes(spark, tmp_path, mode):
+    """The centroids ride every later commit: after a merge-on-read or
+    copy-on-write delete of one vector, the full probe equals the brute
+    force over the remaining vectors. A plain overwrite drops them, and
+    the read then names the table instead of failing on a missing key."""
+    import re
+
+    from bootleg_spark.sources import snaptable as st
+
+    df, table, _ = _ivf_table(spark, tmp_path)
+    if mode == "mor":
+        st.delete_rows_mor(spark, table, spark.createDataFrame([(2,)], "vec_id long"))
+    else:
+        st.delete_rows(spark, table, "vec_id = 2")
+    exact = _rows(similarity.cosine_topk_bruteforce(df.where("vec_id != 2"), n_queries=4, k=5))
+    assert _rows(similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=4)) == exact
+
+    st.write_table(df, table)
+    with pytest.raises(ValueError, match=re.escape(table)):
+        similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=4)
+
+
 def test_ivf_table_topk_no_queries_returns_empty(spark, tmp_path):
     """ADVICE r05 low: with no row satisfying id < n_queries the probe
-    set is empty — must return an empty typed frame, not crash on
-    spark.read.parquet() with zero paths."""
-    df = _emb_df(spark)
-    table = str(tmp_path / "vecs")
-    similarity.build_ivf_table(spark, df, table, n_cells=4)
+    set is empty and every file is pruned — an empty typed frame comes
+    back, not an error."""
+    _, table, _ = _ivf_table(spark, tmp_path)
     out = similarity.ivf_table_topk(spark, table, n_queries=0, k=5, n_probe=1)
     assert out.columns == ["query_id", "neighbor_id", "rank", "cos_sim"]
     assert out.count() == 0

@@ -19,7 +19,6 @@ PKG = Path(__file__).resolve().parents[1] / "bootleg_spark"
 # (module path under bootleg_spark/, function, parameter) -> why unread
 ALLOWED = {
     ("operators/multimodal.py", "decode_image_stub", "payload"): "stub that raises",
-    ("operators/similarity.py", "build_ivf_table", "spark"): "same call shape as its sibling functions",
     ("sources/snaptable.py", "delete_rows_mor", "spark"): "same call shape as its sibling functions",
 }
 

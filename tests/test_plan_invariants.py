@@ -177,3 +177,17 @@ def test_curation_plan_shapes(spark):
     assert n_nodes(p, "BroadcastExchange") >= 1  # the N scalar (+ maybe dim)
     assert "partial_count" in p or "HashAggregate" in p
     assert "MapInPandas" not in p and "ArrowEvalPython" not in p
+
+
+def test_dense_ids_leaves_no_cached_frame(spark):
+    """dense_ids reads its ranged frame twice through a lazy local
+    checkpoint, not a persist that no one unpersists: the returned plan
+    holds no cached relation, and the ids are still 0..n-1 in key order."""
+    from bootleg_spark.operators.ids import dense_ids
+
+    keys = spark.createDataFrame([(k,) for k in "dbca"], "k string")
+    out = dense_ids(keys, "k")
+    assert "InMemoryRelation" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted((r["k"], r["dense_id"]) for r in out.collect()) == [
+        ("a", 0), ("b", 1), ("c", 2), ("d", 3)
+    ]
