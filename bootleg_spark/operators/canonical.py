@@ -15,9 +15,9 @@ Scale shape:
   doubling the resolved chain depth, so a maximum chain of length L
   needs ceil(log2 L) rounds — at Wikidata scale (~10M redirects,
   chains almost always ≤ 3) that is 2 rounds of an O(|redirects|)
-  self-join, never a driver-side walk. Each round is one self-join +
-  one lazy ``localCheckpoint`` whose materializing count doubles as
-  the convergence check (one Spark job per round — the k-hop lesson).
+  self-join, never a driver-side walk. Each round is one self-join and
+  one Spark job through :func:`ids.fixpoint` (lineage rule and
+  convergence check live there).
 - :func:`canonicalize_triples` is two LEFT joins against the resolved
   map (a dim ≪ the triple set — broadcastable) + self-loop filter +
   one distinct shuffle on the rewritten triple key.
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bootleg_spark.operators.ids import fixpoint
 
 
 def resolve_redirects(
@@ -50,28 +52,16 @@ def resolve_redirects(
         .where(F.col(src_col) != F.col(dst_col))
         .distinct()
     )
-    for _ in range(max_iter):
-        hop = m.select(
-            F.col("qid").alias("canonical"), F.col("canonical").alias("_next")
+
+    def step(m: DataFrame) -> DataFrame:
+        hop = m.select(F.col("qid").alias("canonical"), F.col("canonical").alias("_next"))
+        return m.join(hop, "canonical", "left").select(
+            "qid",
+            F.coalesce("_next", "canonical").alias("canonical"),
+            F.col("_next").isNotNull().alias("_changed"),
         )
-        cp = (
-            m.join(hop, "canonical", "left")
-            .select("qid", "canonical", "_next")
-            # lazy checkpoint: the count below is the single action that
-            # materializes the round (plan stays O(1) per round) AND
-            # answers convergence
-            .localCheckpoint(eager=False)
-        )
-        unresolved = cp.where(F.col("_next").isNotNull()).count()
-        m = cp.select(
-            "qid", F.coalesce("_next", "canonical").alias("canonical")
-        )
-        if unresolved == 0:
-            return m
-    raise ValueError(
-        f"redirect map did not converge after {max_iter} pointer-jumping "
-        "rounds — cycle or pathological chain depth"
-    )
+
+    return fixpoint(m, step, max_iter, "resolve_redirects")
 
 
 def canonicalize_triples(

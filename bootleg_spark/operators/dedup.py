@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from bootleg_spark.operators.ids import fixpoint
+
 
 def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: (content_hash, keep_id, dup_count). keep_id = min id."""
@@ -411,60 +413,41 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     defined and ≤ label). The compression step turns the O(diameter)
     propagation into O(log n) rounds — the same doubling idea as the
     large-star/small-star contraction. Each round is two shuffle joins
-    + one groupBy over the LABEL table (O(V) rows, not O(E)); each
-    round's labels are ``localCheckpoint``-ed — caching alone is NOT
-    enough for iterative plans, because the logical plan still embeds
-    the whole lineage and driver-side analysis time grows ~4× per
-    round (measured); the checkpoint truncates the plan to the
-    materialized blocks. (``localCheckpoint`` trades executor-loss
-    resilience for speed — on a long cluster run with preemptible
-    executors, set a checkpoint dir and use ``.checkpoint()`` instead.)
-
-    Raises ``ValueError`` if a label still changed in round ``max_iter``
-    (the round that sees no change is the one that proves convergence).
+    + one groupBy over the LABEL table (O(V) rows, not O(E)) and runs
+    as one Spark job through :func:`ids.fixpoint`, which holds the
+    lineage rule and raises ``ValueError`` if a label still changed in
+    round ``max_iter``.
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)  # read by every round
     )
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).persist()
-    labels.count()
-    for _ in range(max_iter):
-        # (a) per-node min of neighbors' labels
+
+    def step(labels: DataFrame) -> DataFrame:
+        # (a) per-node min of neighbors' labels; _old is the round's start
         prop = (
             edges.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("label").alias("nbr_label"))
         )
         merged = labels.join(prop, "id", "left").select(
-            "id", F.least("label", F.coalesce("nbr_label", "label")).alias("label")
+            "id",
+            F.col("label").alias("_old"),
+            F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
         )
         # (b) pointer jump: label <- label[label]
         lookup = merged.select(F.col("id").alias("label"), F.col("label").alias("_ll"))
-        new_labels = (
+        return (
             merged.join(lookup, "label", "left")
-            .select("id", F.least("label", F.coalesce("_ll", "label")).alias("label"))
-            .localCheckpoint()  # truncate lineage: see docstring
+            .withColumn("label", F.least("label", F.coalesce("_ll", "label")))
+            .select("id", "label", (F.col("label") != F.col("_old")).alias("_changed"))
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            edges.unpersist()
-            return labels.select("id", F.col("label").alias("cluster_id"))
-    edges.unpersist()
-    raise ValueError(
-        f"dup_clusters did not converge after {max_iter} rounds — "
-        "labels would split components; raise max_iter"
+
+    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
+    return fixpoint(labels, step, max_iter, "dup_clusters").select(
+        "id", F.col("label").alias("cluster_id")
     )
 
 

@@ -245,7 +245,7 @@ def source_trust(
     window over all rows, no collect. The trust frame (|sources| rows —
     registered domains at web scale, ≪ claims) is lazily
     localCheckpoint-ed per round so the logical plan stays O(1) per
-    iteration (the round-2 lineage lesson)."""
+    iteration (the lineage rule of :func:`ids.fixpoint`)."""
     keys = list(claim_cols)
     # the claim set is re-joined twice per round — materialize it once
     # (its upstream is the whole extraction pipeline; without this the

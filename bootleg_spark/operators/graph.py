@@ -9,10 +9,9 @@ from exactly these access patterns):
   returning every reached entity with its minimum hop distance. The
   iterative frontier form (k driver rounds of join + anti-join) is the
   scalable shape: per round one broadcast-or-shuffle join at frontier
-  grain, `localCheckpoint` per round so the logical plan stays O(1)
-  instead of O(k) (driver-side analysis grew ~4×/round without it —
-  round-2 lesson in dup_clusters). Walk enumeration (the oracle's
-  recursive CTE) would be exponential in k at graph scale.
+  grain and one lazy ``localCheckpoint`` (the lineage rule of
+  :func:`ids.fixpoint`). Walk enumeration (the oracle's recursive CTE)
+  would be exponential in k at graph scale.
 - :func:`degree_stats` — per-entity out/in/total degree, the first
   screen for hub entities (which are also the skew keys every
   downstream join must respect).
@@ -56,11 +55,8 @@ def khop_neighborhood(
             .distinct()
             .join(visited.select("qid"), "qid", "left_anti")
             .withColumn("hop", F.lit(h).cast("long"))
-            # LAZY checkpoint: the count() below is the single action
-            # that both materializes the round (cutting lineage — plan
-            # stays O(1) per round) and answers the emptiness check.
-            # The previous eager-checkpoint + isEmpty shape ran two
-            # Spark jobs per hop (VERDICT r05 nit).
+            # the count() below materializes the round and answers the
+            # emptiness check: one Spark job per hop
             .localCheckpoint(eager=False)
         )
         if nxt.count() == 0:
@@ -111,58 +107,46 @@ def pagerank(
     mass is NOT redistributed (the simple formulation — deterministic
     and engine-portable); ranks rounded to 6 at the end only.
 
-    Scale shape: per iteration one join of the O(V) rank table to the
-    edge list + one map-side-combined aggregation at node grain —
-    never materializing anything at path grain; each iteration's ranks
-    are eagerly ``localCheckpoint``-ed so the plan stays O(1) per
-    round (the round-2 lineage lesson). The DuckDB oracle mirrors the
-    same recurrence with the iterations UNROLLED as chained CTEs
-    (recursive CTEs cannot aggregate over their own reference)."""
+    Scale shape: out-degrees join the distinct edges once; each
+    iteration is one join of the O(V) rank table to them + one
+    map-side-combined aggregation at node grain (a 0.0 row per node
+    keeps nodes without in-edges) — nothing at path grain — lazily
+    ``localCheckpoint``-ed (the lineage rule of :func:`ids.fixpoint`).
+    The DuckDB oracle mirrors the recurrence with the iterations
+    UNROLLED as chained CTEs (recursive CTEs cannot aggregate over
+    their own reference)."""
     edges = (
         triples.select(F.col(subj_col).alias("_s"), F.col(obj_col).alias("_o"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     nodes = (
         edges.select(F.col("_s").alias("qid"))
         .unionByName(edges.select(F.col("_o").alias("qid")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    try:
-        n = nodes.count()
-        if n == 0:
-            # empty graph: 1.0/n below would raise; the correct result
-            # is simply an empty (qid, rank) frame (ADVICE r06)
-            spark = triples.sparkSession
-            return spark.createDataFrame([], "qid string, rank double")
-        out_deg = edges.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-        for _ in range(n_iter):
-            contribs = (
-                edges.join(ranks.withColumnRenamed("qid", "_s"), "_s")
-                .join(out_deg, "_s")
-                .groupBy(F.col("_o").alias("qid"))
-                .agg(F.sum(F.col("rank") / F.col("_deg")).alias("_in"))
+    n = nodes.count()
+    if n == 0:
+        # empty graph: 1.0/n below would raise; the correct result is
+        # simply an empty (qid, rank) frame (ADVICE r06)
+        return triples.sparkSession.createDataFrame([], "qid string, rank double")
+    out_deg = edges.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
+    edges = edges.join(out_deg, "_s").localCheckpoint(eager=False)
+    zero = nodes.select("qid", F.lit(0.0).alias("_c"))
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    for _ in range(n_iter):
+        ranks = (
+            edges.join(ranks.withColumnRenamed("qid", "_s"), "_s")
+            .select(F.col("_o").alias("qid"), (F.col("rank") / F.col("_deg")).alias("_c"))
+            .unionByName(zero)
+            .groupBy("qid")
+            .agg(
+                (F.lit((1.0 - damping) / n) + F.lit(damping) * F.sum("_c")).alias("rank")
             )
-            ranks = (
-                nodes.join(contribs, "qid", "left")
-                .select(
-                    "qid",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-                .localCheckpoint()
-            )
-        return ranks.select("qid", F.round("rank", 6).alias("rank"))
-    finally:
-        # the returned frame is checkpoint-backed, so the inputs can be
-        # released here: without this a long-lived session leaks one
-        # cached edge+node set per call (ADVICE r06 / VERDICT r06 #5)
-        edges.unpersist()
-        nodes.unpersist()
+            .localCheckpoint(eager=False)
+        )
+    return ranks.select("qid", F.round("rank", 6).alias("rank"))
 
 
 def connected_components(

@@ -71,3 +71,27 @@ def dense_ids(
         # jobs without it, 7 with it)
         .localCheckpoint(eager=False)
     )
+
+
+def fixpoint(state: DataFrame, step, max_iter: int, what: str) -> DataFrame:
+    """Apply ``step`` (state → next state + a boolean ``_changed``
+    column) until a round changes no row; return the settled state.
+    Raises ``ValueError`` if a row still changed in round ``max_iter``.
+
+    One Spark job per round: the round's frame is lazily
+    ``localCheckpoint``-ed, and the count of its changed rows is the one
+    action that materializes it and answers convergence. The checkpoint
+    is the lineage rule of every iterative plan here: caching alone is
+    NOT enough, because the logical plan still embeds every earlier
+    round and driver-side analysis time grows ~4× per round (measured).
+    (``localCheckpoint`` trades executor-loss resilience for speed; with
+    preemptible executors set a checkpoint dir and use ``.checkpoint()``.)
+    ``pagerank``, ``source_trust``, ``bootstrap_patterns`` (fixed rounds)
+    and ``khop_neighborhood`` (its hop bound is part of the answer) take
+    the same lazy checkpoint per round without this helper."""
+    for _ in range(max_iter):
+        cp = step(state).localCheckpoint(eager=False)
+        state = cp.drop("_changed")
+        if cp.where("_changed").count() == 0:
+            return state
+    raise ValueError(f"{what} did not converge after {max_iter} rounds")

@@ -319,7 +319,7 @@ def ivf_table_topk(
     # probes once and the returned plan reads those blocks, instead of
     # re-running the scoring pass inside the join
     probes = (
-        st.read_table(spark, table, version=snap["version"])
+        st.read_snapshot(spark, table, snap)
         .where(F.col(id_col) < n_queries)
         .select(id_col, vec_col)
         .mapInPandas(_score_probes, f"{id_col} long, {vec_col} array<double>, cell long")
@@ -327,5 +327,5 @@ def ivf_table_topk(
     )
     cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
     # no probes (no id < n_queries) prunes every file: an empty frame
-    cands = st.read_table(spark, table, version=snap["version"], prune=("cell", "in", cells))
+    cands = st.read_snapshot(spark, table, snap, prune=("cell", "in", cells))
     return _probe_topk(probes, cands, k, id_col, vec_col)

@@ -321,22 +321,6 @@ def profile_kg_relations(
     return out.select("subj_qid", "rel", "obj_qid")
 
 
-def profile_dims(
-    profile: DataFrame,
-    max_candidates: int = 30,
-    max_types: int = 10,
-    max_kg_connections: int = 100,
-) -> dict[str, DataFrame]:
-    """All four dim tables from one profile frame — the Spark analogue
-    of EntityProfile.load_from_jsonl (entity_profile.py:146-204)."""
-    return {
-        "entities": profile_entities(profile),
-        "alias_cands": profile_alias_candidates(profile, max_candidates),
-        "entity_types": profile_entity_types(profile, max_types),
-        "kg_relations": profile_kg_relations(profile, max_kg_connections),
-    }
-
-
 def profile_jsonl_lines(profile: DataFrame, order: str = "qid") -> DataFrame:
     """(``_key``, ``line``): serialized profile lines mirroring the
     reference's ``EntityProfile.save_to_jsonl``

@@ -1204,7 +1204,15 @@ def read_table(
         if version is not None:
             raise ValueError("pass version= or ref=, not both")
         version = resolve_ref(table, ref)
-    snap = load_snapshot(table, version)
+    return read_snapshot(spark, table, load_snapshot(table, version), prune)
+
+
+def read_snapshot(
+    spark: SparkSession, table: str, snap: dict, prune: tuple[str, str, object] | None = None
+) -> DataFrame:
+    """:func:`read_table` of a snapshot the caller already loaded — a
+    reader that needs the snapshot's own fields (centroids, version)
+    reads it without loading its JSON again."""
     df = _read_files(spark, table, _schema(snap), _pruned(snap, prune))
     return _apply_mor_deletes(spark, table, df, snap)
 
@@ -1491,7 +1499,7 @@ def zorder_table(
         raise ValueError(f"bits*len(cols) = {bits * len(cols)} exceeds 63")
     base_snap = load_snapshot(table)
     planned = base_snap["version"]
-    df = read_table(spark, table, version=planned)
+    df = read_snapshot(spark, table, base_snap)
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]

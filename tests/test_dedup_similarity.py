@@ -78,10 +78,13 @@ def test_dup_clusters_chain_and_components(spark):
     chain = [(i, i + 1) for i in range(1, 30)]  # path 1-2-...-30
     other = [(100, 101), (101, 102), (100, 102)]  # triangle
     pairs = spark.createDataFrame(chain + other, "id_a long, id_b long")
-    got = {r["id"]: r["cluster_id"] for r in dup_clusters(pairs, max_iter=10).collect()}
+    # the chain settles in round 5, so 4 rounds must raise
+    got = {r["id"]: r["cluster_id"] for r in dup_clusters(pairs, max_iter=5).collect()}
     assert all(got[i] == 1 for i in range(1, 31))
     assert all(got[i] == 100 for i in (100, 101, 102))
     assert len(got) == 33
+    with pytest.raises(ValueError, match="converge"):
+        dup_clusters(pairs, max_iter=4)
 
 
 def test_dup_clusters_raises_when_not_converged(spark):
@@ -116,9 +119,9 @@ def test_dedup_keep_singletons_and_clusters(spark):
 
 def test_dedup_keep_job_budget(spark):
     """dedup_keep over a small pair graph (a 9-node chain, a triangle and
-    a pair) plus its collect stays within its Spark job budget: 17 jobs,
-    the count it ran at when the ceiling was set (min-label propagation
-    runs a checkpoint and a changed-count action every round)."""
+    a pair) plus its collect stays within its Spark job budget: 5 jobs,
+    the count it ran at when the ceiling was set (one changed-count
+    action per min-label propagation round, then the collect)."""
     from tests.conftest import count_jobs
 
     edges = [(i, i + 1) for i in range(1, 9)] + [(20, 21), (21, 22), (20, 22), (30, 31)]
@@ -126,7 +129,7 @@ def test_dedup_keep_job_budget(spark):
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
     rows, n_jobs = count_jobs(spark, lambda: dedup.dedup_keep(docs, pairs).collect())
     assert sum(r["keep"] for r in rows) == 40 - 8 - 2 - 1
-    assert n_jobs <= 17
+    assert n_jobs <= 5
 
 
 def _emb_df(spark, n=60, d=8, seed=11):
@@ -226,18 +229,23 @@ def test_ivf_table_layout_prunes_and_matches(spark, tmp_path):
     assert len(pruned) < n_files
 
 
-def test_ivf_table_topk_scores_probes_once(spark, tmp_path):
+def test_ivf_table_topk_scores_probes_once(spark, tmp_path, monkeypatch):
     """The probe-scoring mapInPandas runs once, for the probe-cell
     collect — the frame build's only Spark job (the candidate read has a
     declared schema, so no inference job); the returned plan reads the
-    checkpointed probes instead of scoring them again inside the join."""
+    checkpointed probes instead of scoring them again inside the join.
+    The snapshot JSON is loaded once: both reads reuse the snapshot that
+    holds the centroids."""
+    from bootleg_spark.sources import snaptable as st
     from tests.conftest import count_jobs
 
     _, table, _ = _ivf_table(spark, tmp_path)
+    real_load, loads = st.load_snapshot, []
+    monkeypatch.setattr(st, "load_snapshot", lambda *a: loads.append(a) or real_load(*a))
     out, n_jobs = count_jobs(
         spark, lambda: similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=1)
     )
-    assert n_jobs <= 1
+    assert n_jobs <= 1 and len(loads) == 1
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan
     assert out.count() > 0

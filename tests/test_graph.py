@@ -60,15 +60,20 @@ def test_degree_stats(spark, kg):
 def test_pagerank_matches_numpy_model(spark):
     """Fixed-iteration PageRank vs an independent dense numpy power
     iteration on a small graph (same variant: no dangling
-    redistribution, rank0 = 1/N)."""
+    redistribution, rank0 = 1/N), within its Spark job budget: 2 jobs,
+    the count it ran at when the ceiling was set (the node count, then
+    the collect, which runs all 10 lazily checkpointed rounds)."""
     import numpy as np
     from bootleg_spark.operators.graph import pagerank
+    from tests.conftest import count_jobs
 
     edges = [("A", "B"), ("A", "C"), ("B", "C"), ("C", "A"), ("D", "A")]
     tri = spark.createDataFrame(
         [(s, "rel", o) for s, o in edges], "subj_qid string, pred string, obj_qid string"
     )
-    got = {r["qid"]: r["rank"] for r in pagerank(tri, n_iter=10).collect()}
+    rows, n_jobs = count_jobs(spark, lambda: pagerank(tri, n_iter=10).collect())
+    assert n_jobs <= 2
+    got = {r["qid"]: r["rank"] for r in rows}
 
     nodes = sorted({n for e in edges for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
