@@ -24,7 +24,7 @@ import hashlib
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from bootleg_spark.operators.ids import fixpoint
 
@@ -195,11 +195,7 @@ def minhash_band_buckets(
     )
 
 
-def _bucket_pairs(
-    buckets: DataFrame,
-    key_cols: tuple = ("band", "min_hash"),
-    distinct: bool = True,
-) -> DataFrame:
+def _bucket_pairs(buckets: DataFrame, key_cols: tuple = ("band", "min_hash")) -> DataFrame:
     """Distinct (id_a < id_b) doc pairs sharing a (band, min_hash) bucket.
 
     r06 formed these with a bucket self-join, which (a) executed the
@@ -236,11 +232,7 @@ def _bucket_pairs(
             F.slice("ids", F.col("_i") + F.lit(2), F.size("ids"))
         ).alias("id_b"),
     )
-    # distinct=False lets a caller that deduplicates LATER (on a much
-    # smaller post-filter set) skip this full-width exchange; the raw
-    # stream repeats a pair once per shared bucket (dup factor 1.045
-    # measured at sf1.0)
-    return out.distinct() if distinct else out
+    return out.distinct()
 
 
 def minhash_lsh_pairs(
@@ -280,7 +272,13 @@ def minhash_verified_pairs(
     doc-set dim when its estimate allows — at corpus scale the same
     plan degrades gracefully to a shuffle join on id), and
     ``size(array_intersect(...))`` computes n_inter inside the row.
-    Shuffled rows: the candidate distinct only. Same output: n_inter
+    The candidates are distinct pairs before the joins, so each pair is
+    verified once: on the near_dup benchmark input (seed 1) the raw
+    bucket stream holds 251,487 rows for 45,566 pairs, and verifying it
+    before deduplicating ran ``array_intersect`` ~5.5× per pair
+    (``dedup.minhash_verified_s`` 2.04 s then, 1.35 s now: median of six
+    traced runs, 3 task cores). On sf0.1 (87,781 rows for 82,377 pairs)
+    the order does not matter. Same output: n_inter
     counts distinct shared shingles exactly as the oracle's join-count
     over distinct (id, shingle) rows, still modulo the documented
     ~2⁻⁶⁴ xxhash64 collision tolerance the r06 verify join had."""
@@ -293,11 +291,7 @@ def minhash_verified_pairs(
         eager=False
     )
     buckets = _band_minima_arrays(dshf, n_bands)
-    # distinct deferred: the raw bucket-pair stream repeats a pair only
-    # once per extra shared band (×1.045 measured), so verifying the raw
-    # stream and deduplicating the ~3% of pairs that survive the
-    # threshold replaces a full 8M-row exchange with a tiny one
-    cand = _bucket_pairs(buckets, distinct=False)
+    cand = _bucket_pairs(buckets)
     sets = dshf.select(
         "id",
         F.transform(F.col("dsh"), lambda s: F.xxhash64(s)).alias("sh64s"),
@@ -332,7 +326,9 @@ def minhash_verified_pairs(
         "jaccard",
         F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
     ).where(F.col("jaccard") >= threshold)
-    return out.select("id_a", "id_b", "jaccard").distinct()
+    # no final distinct: the candidates are already distinct pairs and
+    # jaccard is a function of the pair
+    return out.select("id_a", "id_b", "jaccard")
 
 
 def simhash_signatures(
@@ -399,6 +395,39 @@ def simhash_near_pairs(docs: DataFrame, band_bits: int = 16, **kw) -> DataFrame:
     return _bucket_pairs(bands, key_cols=("band", "band_key"))
 
 
+def _local_roots(batches):
+    """mapInArrow body: star edges (src, dst) both ways between every
+    node of one partition's (id_a, id_b) pairs and its root, the
+    smallest id of its local component (a root keeps a self-edge).
+    ``np.unique`` relabels ids to sorted indices (str in code point
+    order, which is Spark's UTF-8 byte order), then min-label
+    propagation with pointer jumping runs until no label moves."""
+    import numpy as np
+    import pyarrow as pa
+
+    batches = list(batches)
+    if not batches:
+        return
+    typ = batches[0].schema.field(0).type
+    ids = pa.concat_arrays(
+        [b.column(0) for b in batches] + [b.column(1) for b in batches]
+    ).to_numpy(zero_copy_only=False)
+    nodes, inv = np.unique(ids, return_inverse=True)
+    src, dst = np.split(inv, 2)
+    label = np.arange(len(nodes))
+    while True:
+        nxt = label.copy()
+        np.minimum.at(nxt, src, label[dst])
+        np.minimum.at(nxt, dst, label[src])
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, label):
+            break
+        label = nxt
+    roots = nodes[label]
+    cols = [np.concatenate([nodes, roots]), np.concatenate([roots, nodes])]
+    yield pa.RecordBatch.from_arrays([pa.array(c, typ) for c in cols], ["src", "dst"])
+
+
 def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """(id, cluster_id): connected components over near-dup pairs —
     cluster_id = the smallest doc id reachable through the pair graph.
@@ -406,21 +435,28 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     (keep = rows where id == cluster_id; singletons are their own
     cluster after a left join back to the corpus).
 
-    Iterative min-label propagation WITH pointer jumping: each round
-    (a) takes the per-node min of neighbor labels across the undirected
-    edges, then (b) compresses label chains by replacing each label
-    with its own label (labels only ever decrease, so label[label] is
-    defined and ≤ label). The compression step turns the O(diameter)
-    propagation into O(log n) rounds — the same doubling idea as the
-    large-star/small-star contraction. Each round is two shuffle joins
-    + one groupBy over the LABEL table (O(V) rows, not O(E)) and runs
-    as one Spark job through :func:`ids.fixpoint`, which holds the
-    lineage rule and raises ``ValueError`` if a label still changed in
-    round ``max_iter``.
+    Pre-contraction first (Kiveris et al., SoCC 2014): one
+    ``mapInArrow`` runs :func:`_local_roots` over each partition's
+    pairs, with a working set of O(edges in one partition), and emits
+    (id, local root) star edges. The star graph has the pair graph's
+    components; labels are seeded with each id's smallest root, so a
+    component one partition's edges connect arrives settled.
+
+    Then iterative min-label propagation WITH pointer jumping over the
+    star edges: each round (a) takes the per-node min of neighbor labels
+    across the undirected edges, then (b) compresses label chains by
+    replacing each label with its own label (labels only ever decrease,
+    so label[label] is defined and ≤ label): O(log n) rounds, not
+    O(diameter). Each round is two shuffle joins + one groupBy over the
+    LABEL table (O(V) rows) and runs as one Spark job through
+    :func:`ids.fixpoint`, which holds the lineage rule and raises
+    ``ValueError`` if a label still changed in round ``max_iter``.
     """
+    t = pairs.schema["id_a"].dataType
     edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        pairs.select("id_a", F.col("id_b").cast(t))
+        .dropna()
+        .mapInArrow(_local_roots, StructType([StructField("src", t), StructField("dst", t)]))
         .distinct()
         .localCheckpoint(eager=False)  # read by every round
     )
@@ -445,7 +481,8 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
             .select("id", "label", (F.col("label") != F.col("_old")).alias("_changed"))
         )
 
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
+    # every node is a src, and its smallest dst is its smallest root
+    labels = edges.groupBy(F.col("src").alias("id")).agg(F.min("dst").alias("label"))
     return fixpoint(labels, step, max_iter, "dup_clusters").select(
         "id", F.col("label").alias("cluster_id")
     )
@@ -459,9 +496,10 @@ def dedup_keep(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> Dat
 
     One left join of the corpus against the cluster table, which holds
     only ids that appear in a pair (O(duplicates) rows, typically a
-    small fraction of the corpus) — the corpus side never shuffles more
-    than the join requires, and AQE turns the join into a broadcast when
-    the cluster table fits."""
+    small fraction of the corpus). It plans as a sort-merge join with
+    both sides shuffled on id: the cluster table is a checkpointed RDD
+    with no size estimate, so the planner never broadcasts it (local
+    sessions run with AQE off)."""
     clusters = dup_clusters(pairs)
     labeled = docs.select(F.col(id_col).cast("long").alias("id")).join(
         clusters, "id", "left"

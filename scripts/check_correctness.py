@@ -10,6 +10,7 @@ Usage: python scripts/check_correctness.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 from pathlib import Path
@@ -117,6 +118,8 @@ def digest(rows, colnames) -> str:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
+    # the iterative-family oracles on sf0.1 grew an uncapped JVM to 7.6 GB
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     spark = get_spark(cores=8, extra_conf={"spark.sql.shuffle.partitions": "8"})
     con = duckdb.connect()
     for t in TABLES:

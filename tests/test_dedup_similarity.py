@@ -78,13 +78,80 @@ def test_dup_clusters_chain_and_components(spark):
     chain = [(i, i + 1) for i in range(1, 30)]  # path 1-2-...-30
     other = [(100, 101), (101, 102), (100, 102)]  # triangle
     pairs = spark.createDataFrame(chain + other, "id_a long, id_b long")
-    # the chain settles in round 5, so 4 rounds must raise
-    got = {r["id"]: r["cluster_id"] for r in dup_clusters(pairs, max_iter=5).collect()}
+    # each partition's contiguous run of the chain contracts to one star,
+    # so the chain settles in round 2 (5 without the contraction)
+    got = {r["id"]: r["cluster_id"] for r in dup_clusters(pairs, max_iter=2).collect()}
     assert all(got[i] == 1 for i in range(1, 31))
     assert all(got[i] == 100 for i in (100, 101, 102))
     assert len(got) == 33
     with pytest.raises(ValueError, match="converge"):
-        dup_clusters(pairs, max_iter=4)
+        dup_clusters(pairs, max_iter=1)
+
+
+def test_dup_clusters_chain_spread_over_partitions(spark):
+    """A chain dealt round-robin over 6 partitions leaves each partition
+    few adjacent edges, so the contraction settles little: the chain
+    still takes 5 propagation rounds (as many as without the
+    contraction, never more) and one round must still raise."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 30)], "id_a long, id_b long"
+    ).repartition(6)
+    got = {r["id"]: r["cluster_id"] for r in dedup.dup_clusters(pairs, max_iter=5).collect()}
+    assert got == {i: 1 for i in range(1, 31)}
+    with pytest.raises(ValueError, match="converge"):
+        dedup.dup_clusters(pairs, max_iter=1)
+
+
+def test_connected_components_string_qids_order_like_spark(spark):
+    """The per-partition contraction orders string ids in numpy; its
+    roots must be Spark's ``min``: UTF-8 byte order, which is code point
+    order (U+FF21 sorts before the astral U+1D538, the reverse of UTF-16
+    order)."""
+    from bootleg_spark.operators.graph import connected_components
+
+    edges = [("Q9", "Q10"), ("Q10", "Zürich"), ("\U0001d538", "\uff21")]
+    # one partition, so the contraction alone picks each component's root
+    triples = spark.createDataFrame(edges, "subj_qid string, obj_qid string").coalesce(1)
+    got = {r["qid"]: r["component"] for r in connected_components(triples).collect()}
+    assert got == {
+        "Q9": "Q10", "Q10": "Q10", "Zürich": "Q10", "\U0001d538": "\uff21", "\uff21": "\uff21",
+    }
+
+
+def test_local_roots_match_union_find():
+    """The vectorized per-partition contraction emits exactly the star
+    edges, both ways, of a plain union-find (smallest id as root) on
+    random graphs split over several Arrow batches."""
+    import pyarrow as pa
+
+    rng = np.random.RandomState(5)
+    for n_nodes, n_edges in ((1, 1), (40, 25), (300, 280), (300, 2000)):
+        ids = rng.choice(10_000, n_nodes, replace=False)
+        e = ids[rng.randint(0, n_nodes, (n_edges, 2))]
+        parent = {int(v): int(v) for v in e.ravel()}
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in e.tolist():
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        batches = [
+            pa.RecordBatch.from_arrays([pa.array(c[:, 0]), pa.array(c[:, 1])], ["id_a", "id_b"])
+            for c in np.array_split(e, 3)
+        ]
+        (out,) = dedup._local_roots(iter(batches))
+        star = set(zip(out.column(0).to_pylist(), out.column(1).to_pylist()))
+        want = {(v, find(v)) for v in parent}
+        assert star == want | {(r, v) for v, r in want}
+    assert list(dedup._local_roots(iter([]))) == []
+
+
+def test_dup_clusters_empty_pairs(spark):
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    assert dedup.dup_clusters(pairs).collect() == []
 
 
 def test_dup_clusters_raises_when_not_converged(spark):
@@ -119,9 +186,10 @@ def test_dedup_keep_singletons_and_clusters(spark):
 
 def test_dedup_keep_job_budget(spark):
     """dedup_keep over a small pair graph (a 9-node chain, a triangle and
-    a pair) plus its collect stays within its Spark job budget: 5 jobs,
+    a pair) plus its collect stays within its Spark job budget: 3 jobs,
     the count it ran at when the ceiling was set (one changed-count
-    action per min-label propagation round, then the collect)."""
+    action per min-label propagation round, 2 here after the
+    per-partition contraction, then the collect)."""
     from tests.conftest import count_jobs
 
     edges = [(i, i + 1) for i in range(1, 9)] + [(20, 21), (21, 22), (20, 22), (30, 31)]
@@ -129,7 +197,7 @@ def test_dedup_keep_job_budget(spark):
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
     rows, n_jobs = count_jobs(spark, lambda: dedup.dedup_keep(docs, pairs).collect())
     assert sum(r["keep"] for r in rows) == 40 - 8 - 2 - 1
-    assert n_jobs <= 5
+    assert n_jobs <= 3
 
 
 def _emb_df(spark, n=60, d=8, seed=11):
