@@ -23,7 +23,7 @@ from functools import lru_cache
 
 import numpy as np
 
-NC_EID = 0  # "not in candidates" row (entity_symbols.py:43-45)
+# row 0 is "not in candidates" (entity_symbols.py:43-45)
 PAD_EID = 1  # padding row (eval_utils.py:90-114 maps "-1" -> 1)
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import html as _html
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # NLTK English stopwords, as embedded by the reference
 # (bootleg/symbols/constants.py:50-230).
@@ -46,10 +46,7 @@ STOP_WORDS = frozenset(
 # Punctuation set used by the mention-boundary filter
 # (mention_extractor_utils.py:35 ``PUNC = string.punctuation``).
 PUNC = set("!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~")
-PLURAL = {"s", "'s"}
 _PUNC_TABLE = str.maketrans(dict.fromkeys("".join(PUNC)))
-
-SPECIAL_TOKENS = ["[ent_start]", "[ent_end]", "[ent_desc]", "[ent_kg]", "[ent_type]"]
 
 
 @dataclass

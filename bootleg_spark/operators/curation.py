@@ -161,11 +161,7 @@ def quality_percentile_filter(
 
     Scale note: percent_rank needs a full per-stratum sort — fine when
     strata are languages (dozens of partitions, each sortable), wrong
-    when strata are fine-grained. The 100-TB variant computes each
-    stratum's quality THRESHOLD with ``percentile_approx`` in one
-    aggregation (a rows-per-stratum dim), broadcasts it, and filters
-    with a scan-level comparison — no global sort; this exact form is
-    the oracle-checkable twin."""
+    when strata are fine-grained."""
     from bootleg_spark.operators.textstats import quality_exprs
 
     if not (0.0 < keep_frac <= 1.0):
@@ -186,49 +182,6 @@ def quality_percentile_filter(
             F.round("_q", 6).alias("quality"),
             F.round("pr", 6).alias("pr"),
         )
-    )
-
-
-def quality_threshold_filter(
-    docs: DataFrame,
-    keep_frac: float,
-    strata_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    accuracy: int = 10000,
-) -> DataFrame:
-    """The 100-TB execution of :func:`quality_percentile_filter`: keep
-    documents whose quality clears their stratum's approximate
-    ``(1 − keep_frac)`` quantile. ONE aggregation computes a
-    per-stratum threshold dim (rows = number of strata), which
-    broadcast-joins back for a scan-level ``>=`` comparison — no
-    per-stratum sort anywhere, so the plan survives strata of any
-    size.
-
-    Semantics versus the exact twin: a threshold cut keeps EVERY row
-    tied at the boundary (the exact percent_rank form truncates ties
-    at the fraction), and ``percentile_approx`` carries bounded rank
-    error (1/accuracy) — so the keep-set is a SUPERSET of the exact
-    form's, with all dropped rows dominated by every kept row
-    (pytest-pinned, tests/test_curation.py). Approximate by design →
-    no DuckDB oracle; the exact twin carries the driver row."""
-    from bootleg_spark.operators.textstats import quality_exprs
-
-    if not (0.0 < keep_frac <= 1.0):
-        raise ValueError("keep_frac must be in (0, 1]")
-    q = quality_exprs(text_col)
-    d = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(strata_col).alias("stratum"),
-        q["quality"].alias("_q"),
-    )
-    thr = d.groupBy("stratum").agg(
-        F.percentile_approx("_q", 1.0 - keep_frac, accuracy).alias("_thr")
-    )
-    return (
-        d.join(F.broadcast(thr), "stratum")
-        .where(F.col("_q") >= F.col("_thr"))
-        .select("id", "stratum", F.round("_q", 6).alias("quality"))
     )
 
 

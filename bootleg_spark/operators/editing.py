@@ -1,39 +1,25 @@
-"""Edit-mode mutation API over the entity-profile dim tables.
+"""Edit-mode mention mutations over the alias-candidate dim table.
 
 The reference's EntityProfile edit mode mutates in-memory dicts
-(entity_profile.py:545-796, entity_symbols.py:543-826,
-type_symbols.py:186-306, kg_symbols.py:231-379). The Spark-native form:
-every mutation is a PURE TRANSFORMATION from dim frames to dim frames —
-an edit session folds mutations into a lazy plan and materializes once
-(checkpoint/write), which is also how you'd batch thousands of edits at
-5.8M-entity scale without 5.8M point-updates.
+(entity_symbols.py:592-688). The Spark-native form: every mutation is a
+PURE TRANSFORMATION from dim frame to dim frame — an edit session folds
+mutations into a lazy plan and materializes once (checkpoint/write),
+which is also how you'd batch thousands of edits at 5.8M-entity scale
+without 5.8M point-updates.
 
-Dim-frame shapes (as produced by ``bootleg_spark.sources.profile``):
-- entities:     (qid, eid, title, descr)
+Dim-frame shape (as produced by ``bootleg_spark.sources.profile``):
 - alias_cands:  (alias, qid, score, rank)      rank 1-based by (score desc, qid desc)
-- entity_types: (qid, type_system, typenames)  ordered array per NAMED system
-- kg_relations: (subj_qid, rel, obj_qid, pos)  pos = order of appearance per (subj, rel)
 
 Semantics matched to the reference:
 - add_mention: existing (alias, qid) pair -> no-op; full candidate list
   -> the LAST (lowest-ranked) candidate is evicted so the new pair
   always lands (entity_symbols.py:592-646);
 - remove_mention: aliases left with zero candidates disappear
-  (entity_symbols.py:649-688);
-- add_type: appends at the END of the qid's list, evicting the current
-  last if the list is at max_types (type_symbols.py:201-224);
-- add_relation: appends to the (qid, relation) list, evicting the
-  current last if at max_connections; existing pair -> no-op
-  (kg_symbols.py:232-262);
-- reidentify_entity: renames the qid across all four dims — projection
-  only, NO shuffle (entity_profile.py:608-626);
-- add_entity: rejects existing qids and unknown type systems
-  (entity_profile.py:545-605); new eid = max(eid) + 1.
+  (entity_symbols.py:649-688).
 
-Plan-depth note: each mutation stacks one narrow plan layer (plus one
-per-alias window for mention edits). Long edit scripts should
-``.localCheckpoint()`` every few hundred mutations or replay through a
-profile rebuild.
+Plan-depth note: each mutation stacks one narrow plan layer plus one
+per-alias window. Long edit scripts should ``.localCheckpoint()`` every
+few hundred mutations or replay through a profile rebuild.
 """
 
 from __future__ import annotations
@@ -89,172 +75,3 @@ def remove_mention(alias_cands: DataFrame, qid: str, mention: str) -> DataFrame:
     )
     return alias_cands.where(F.col("alias") != alias).unionByName(_rerank(aff))
 
-
-def add_type(
-    entity_types: DataFrame,
-    qid: str,
-    typename: str,
-    type_system: str,
-    max_types: int = 10,
-) -> DataFrame:
-    """type_symbols.add_type (type_symbols.py:201-224): append at the
-    end; if already at max_types, the current LAST type is evicted."""
-    hit = (F.col("qid") == qid) & (F.col("type_system") == type_system)
-    present = F.array_contains(F.col("typenames"), typename)
-    room = F.size("typenames") < max_types
-    new_list = (
-        F.when(present, F.col("typenames"))
-        .when(room, F.concat("typenames", F.array(F.lit(typename))))
-        .otherwise(
-            F.concat(
-                F.slice("typenames", 1, max_types - 1), F.array(F.lit(typename))
-            )
-        )
-    )
-    return entity_types.withColumn(
-        "typenames", F.when(hit, new_list).otherwise(F.col("typenames"))
-    )
-
-
-def remove_type(entity_types: DataFrame, qid: str, typename: str, type_system: str) -> DataFrame:
-    """type_symbols.remove_type (type_symbols.py:226-247)."""
-    hit = (F.col("qid") == qid) & (F.col("type_system") == type_system)
-    return entity_types.withColumn(
-        "typenames",
-        F.when(hit, F.array_remove("typenames", typename)).otherwise(F.col("typenames")),
-    )
-
-
-def add_relation(
-    kg: DataFrame, qid: str, relation: str, qid2: str, max_connections: int = 100
-) -> DataFrame:
-    """kg_symbols.add_relation (kg_symbols.py:232-262). ``kg`` must
-    carry (subj_qid, rel, obj_qid, pos)."""
-    spark = kg.sparkSession
-    grp = (F.col("subj_qid") == qid) & (F.col("rel") == relation)
-    w = Window.partitionBy("subj_qid", "rel")
-    aff = kg.where(grp).withColumn(
-        "_has", F.max(F.when(F.col("obj_qid") == qid2, 1).otherwise(0)).over(w)
-    ).withColumn("_n", F.count(F.lit(1)).over(w)).withColumn(
-        "_rk", F.row_number().over(w.orderBy("pos"))
-    )
-    kept = aff.where(
-        (F.col("_has") == 1) | (F.col("_n") < max_connections) | (F.col("_rk") < max_connections)
-    ).drop("_has", "_n", "_rk")
-    new_pos = F.coalesce(F.max("pos") + 1, F.lit(0))
-    new_row = (
-        kg.where(grp)
-        .agg(new_pos.alias("pos"))
-        .select(
-            F.lit(qid).alias("subj_qid"),
-            F.lit(relation).alias("rel"),
-            F.lit(qid2).alias("obj_qid"),
-            F.col("pos").cast("long"),
-        )
-        .join(
-            # ≤1-row right side: broadcast (see add_mention)
-            F.broadcast(
-                kg.where(grp & (F.col("obj_qid") == qid2)).select("subj_qid", "rel", "obj_qid")
-            ),
-            ["subj_qid", "rel", "obj_qid"],
-            "left_anti",
-        )
-    )
-    return kg.where(~grp).unionByName(kept).unionByName(new_row)
-
-
-def remove_relation(kg: DataFrame, qid: str, relation: str, qid2: str) -> DataFrame:
-    """kg_symbols.remove_relation (kg_symbols.py:264-284)."""
-    return kg.where(
-        ~(
-            (F.col("subj_qid") == qid)
-            & (F.col("rel") == relation)
-            & (F.col("obj_qid") == qid2)
-        )
-    )
-
-
-def reidentify_entity(dims: dict[str, DataFrame], old_qid: str, new_qid: str) -> dict[str, DataFrame]:
-    """Rename old_qid -> new_qid across every dim
-    (entity_profile.py:608-626) — pure projections, no shuffle."""
-
-    def ren(c):
-        return F.when(F.col(c) == old_qid, F.lit(new_qid)).otherwise(F.col(c)).alias(c)
-
-    out = dict(dims)
-    e = dims["entities"]
-    out["entities"] = e.select(ren("qid"), *[c for c in e.columns if c != "qid"])
-    ac = dims["alias_cands"]
-    out["alias_cands"] = ac.select("alias", ren("qid"), *[c for c in ac.columns if c not in ("alias", "qid")])
-    if "entity_types" in dims:
-        t = dims["entity_types"]
-        out["entity_types"] = t.select(ren("qid"), *[c for c in t.columns if c != "qid"])
-    if "kg_relations" in dims:
-        k = dims["kg_relations"]
-        others = [c for c in k.columns if c not in ("subj_qid", "obj_qid")]
-        out["kg_relations"] = k.select(ren("subj_qid"), ren("obj_qid"), *others)
-    return out
-
-
-def add_entity(
-    dims: dict[str, DataFrame],
-    entity_obj: dict,
-    max_candidates: int = 30,
-    max_types: int = 10,
-    max_kg_connections: int = 100,
-) -> dict[str, DataFrame]:
-    """EntityProfile.add_entity (entity_profile.py:545-605): validate,
-    then fold the new entity into every dim. Existing qid or an unknown
-    type system raises (both checks are tiny dim-side actions)."""
-    qid = entity_obj.get("entity_id")
-    mentions = entity_obj.get("mentions")
-    if not isinstance(entity_obj, dict) or qid is None or mentions is None:
-        raise ValueError("add_entity needs a dict with entity_id and mentions keys")
-    ents = dims["entities"]
-    if ents.where(F.col("qid") == qid).take(1):
-        raise ValueError(f"The entity {qid} already exists. Call update_entity instead.")
-    known_systems = set()
-    if "entity_types" in dims:
-        known_systems = {
-            r["type_system"]
-            for r in dims["entity_types"].select("type_system").distinct().collect()
-        }
-        for sys_name in entity_obj.get("types", {}):
-            if sys_name not in known_systems:
-                raise ValueError(
-                    f"Unknown type system {sys_name}: new type systems are not supported"
-                )
-    out = dict(dims)
-    spark = ents.sparkSession
-    title = entity_obj.get("title", qid)
-    desc = entity_obj.get("description", "")
-    new_eid = ents.agg((F.coalesce(F.max("eid"), F.lit(0)) + 1).alias("eid"))
-    out["entities"] = ents.unionByName(
-        new_eid.select(
-            F.lit(qid).alias("qid"), F.col("eid").cast("long"),
-            F.lit(title).alias("title"), F.lit(desc).alias("descr"),
-        )
-    )
-    ac = dims["alias_cands"]
-    for m, s in mentions:
-        ac = add_mention(ac, qid, m, float(s), max_candidates)
-    out["alias_cands"] = ac
-    if "entity_types" in dims:
-        types = entity_obj.get("types", {})
-        rows = [
-            (qid, sys_name, list(types.get(sys_name, []))[:max_types])
-            for sys_name in sorted(known_systems)
-        ]
-        out["entity_types"] = dims["entity_types"].unionByName(
-            spark.createDataFrame(
-                rows, "qid string, type_system string, typenames array<string>"
-            )
-        )
-    if "kg_relations" in dims:
-        kg = dims["kg_relations"]
-        for pair in entity_obj.get("relations", []):
-            if "relation" not in pair or "object" not in pair:
-                raise ValueError("each relation needs relation and object keys")
-            kg = add_relation(kg, qid, pair["relation"], pair["object"], max_kg_connections)
-        out["kg_relations"] = kg
-    return out

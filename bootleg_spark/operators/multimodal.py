@@ -5,10 +5,10 @@ Engine extension beyond the reference (task brief): web-scale training
 pipelines carry images/audio/video as binary columns. Here the pages
 table's ``html`` binary is the resident example payload; the same
 plumbing (schema, batch shape, mapInPandas iterator) applies to any
-media column. Actual image/audio decoding libraries are not in this
-container, so :func:`decode_image_stub` is a clearly-marked stub — the
-Spark-side dataflow (partitioning, UDF signature, batched Arrow
-transfer) is real and tested.
+media column. No image/audio decoder ships with the package: a real
+one plugs into :func:`extract_media_features` through its ``decoder``
+argument, and the Spark-side dataflow (partitioning, UDF signature,
+batched Arrow transfer) is real and tested.
 """
 
 from __future__ import annotations
@@ -44,17 +44,6 @@ def media_metadata(df: DataFrame, bin_col: str = "html", id_col: str = "url") ->
         F.col(id_col).alias("id"),
         F.length(F.col(bin_col)).cast("long").alias("n_bytes"),
         kind.alias("kind"),
-    )
-
-
-def decode_image_stub(payload: bytes) -> "object":
-    """Image decode placeholder — the real pipeline plugs PIL/ffmpeg here.
-
-    Raises so no caller silently treats the stub as a real decoder.
-    """
-    raise NotImplementedError(
-        "image/audio decoding libraries are not available in this "
-        "environment; plug a real decoder into extract_media_features"
     )
 
 

@@ -62,11 +62,6 @@ def filter_weak_labels(
     return mentions.where(F.col(gold_col))
 
 
-def threshold_filter(linked: DataFrame, threshold: float, prob_col: str = "prob") -> DataFrame:
-    """Drop predictions with prob ≤ threshold (bootleg_annotator.py:602-625)."""
-    return linked.where(F.col(prob_col) > F.lit(threshold))
-
-
 def prune_to_entities(
     entities: DataFrame, keep_qids: DataFrame, qid_col: str = "qid"
 ) -> DataFrame:

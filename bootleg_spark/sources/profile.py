@@ -306,8 +306,8 @@ def profile_kg_relations(
     per-(qid, relation) order-of-appearance truncation to
     max_connections (kg_symbols.py:70-81 keeps the first
     max_connections objects of each relation's list). ``keep_pos``
-    retains the 0-based per-(qid, rel) position for the edit-mode API
-    (operators.editing.add_relation evicts by position)."""
+    retains the 0-based per-(qid, rel) position the truncation ranks
+    by."""
     r = profile.select(
         F.col("entity_id").alias("subj_qid"),
         F.posexplode("relations").alias("pos", "r"),

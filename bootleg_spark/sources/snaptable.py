@@ -85,9 +85,9 @@ def _snap_path(table: str, version: int) -> str:
 
 
 def _try_publish(table: str, snap: dict) -> bool:
-    """Stamp the commit wall-clock (``committed_at`` — what
-    :func:`version_as_of` resolves against) and atomically publish
-    snapshot ``snap['version']`` via the create-exclusive link.
+    """Stamp the commit wall-clock (``committed_at``, an audit field
+    every snapshot on disk carries) and atomically publish snapshot
+    ``snap['version']`` via the create-exclusive link.
     ``False`` = lost the race; the caller re-derives its base and
     retries."""
     import time as _time
@@ -99,7 +99,7 @@ def _try_publish(table: str, snap: dict) -> bool:
     # file list into side manifests exactly as Iceberg does". Readers
     # inline it back in load_snapshot; at 10^6 files the snapshot
     # file itself stays tiny and O(1) to read/parse for version
-    # resolution (latest_version, version_as_of).
+    # resolution (latest_version).
     to_write = snap
     if len(snap.get("files", [])) + len(snap.get("delete_files", [])) > INLINE_FILES_MAX:
         ref = f"m-{snap['version']}-{uuid.uuid4().hex[:8]}.json"
@@ -199,24 +199,6 @@ def _rebase(base: dict, replaced: set[str], new_files: list[dict]) -> list[dict]
     if not replaced <= {f["path"] for f in base["files"]}:
         return None
     return [f for f in base["files"] if f["path"] not in replaced] + new_files
-
-
-def version_as_of(table: str, ts: float) -> int:
-    """The table version visible at wall-clock ``ts`` — the largest
-    version with ``committed_at <= ts`` (Iceberg's ``FOR TIMESTAMP AS
-    OF``). Raises ValueError when ``ts`` predates the first retained
-    commit (or the retained snapshots predate timestamp stamping)."""
-    best = None
-    for v in _list_versions(table):
-        c = load_snapshot(table, v).get("committed_at")
-        if c is not None and c <= ts and (best is None or v > best):
-            best = v
-    if best is None:
-        raise ValueError(
-            f"no snapshot of {table} committed at or before {ts} "
-            "(vacuumed, or predates commit timestamps)"
-        )
-    return best
 
 
 def _list_versions(table: str) -> list[int]:
@@ -1643,78 +1625,6 @@ def vacuum(
             os.unlink(full)
             deleted.append(os.path.join(SNAP_DIR, name))
     return deleted
-
-
-def history_table(spark: SparkSession, table: str) -> DataFrame:
-    """Iceberg's ``tbl.history``/``snapshots`` metadata table: one row
-    per retained version — (version, parent, mode, committed_at,
-    total_rows, new_rows, n_files, n_delete_files, stream_batch_id).
-    Metadata only (reads the manifests, never a data file); the ops
-    surface for auditing what happened to a table and when."""
-    rows = []
-    for v in _list_versions(table):
-        s = load_snapshot(table, v)
-        rows.append(
-            (
-                v,
-                s.get("parent"),
-                s.get("mode"),
-                float(s["committed_at"]) if s.get("committed_at") is not None else None,
-                s.get("total_rows"),
-                s.get("new_rows"),
-                len(s.get("files") or []),
-                len(s.get("delete_files") or []),
-                s.get("stream_batch_id"),
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "version long, parent long, mode string, committed_at double, "
-        "total_rows long, new_rows long, n_files long, n_delete_files long, "
-        "stream_batch_id long",
-    )
-
-
-def files_table(spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
-    """Iceberg's ``tbl.files`` metadata table for one snapshot: one row
-    per data file — (path, rows, partition JSON, stats JSON). The
-    screen an operator points at a hot table to see skew, partition
-    balance, and small-file pressure without touching data."""
-    snap = load_snapshot(table, version)
-    rows = [
-        (
-            e["path"],
-            e["rows"],
-            json.dumps(e.get("partition")) if e.get("partition") else None,
-            json.dumps(e.get("stats", {}), sort_keys=True),
-        )
-        for e in snap["files"]
-    ]
-    return spark.createDataFrame(
-        rows, "path string, rows long, partition string, stats string"
-    )
-
-def partitions_table(
-    spark: SparkSession, table: str, version: int | None = None
-) -> DataFrame:
-    """Iceberg's ``tbl.partitions`` metadata table: one row per
-    partition VALUE — (partition JSON, n_files, n_rows) — aggregated
-    from the manifest alone, zero data files opened. The first screen
-    for partition skew (one day 100× the others → that day's scans and
-    rewrites are the stragglers) and small-file pressure per
-    partition (n_rows/n_files ≪ target → compact that partition).
-    Unpartitioned snapshots report one row with partition '{}'."""
-    snap = load_snapshot(table, version)
-    agg: dict[str, list[int]] = {}
-    for e in snap["files"]:
-        key = json.dumps(e.get("partition") or {}, sort_keys=True)
-        cur = agg.setdefault(key, [0, 0])
-        cur[0] += 1
-        cur[1] += e["rows"]
-    rows = [(k, f, r) for k, (f, r) in sorted(agg.items())]
-    return spark.createDataFrame(
-        rows, "partition string, n_files long, n_rows long"
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -118,8 +118,8 @@ def _gunzip_members(b: bytes) -> tuple[bytes, int]:
     drop the rest of a ~1 GB crawl segment (round-3 advice: the old
     break-on-error form lost everything *after* the corrupt point, not
     just the tail the docstring described, with no signal). The dropped
-    count makes the loss observable; :func:`warc_ingest_diagnostics`
-    surfaces it per buffer."""
+    count makes the loss observable; :func:`parse_warc_buffer` reports
+    it through its ``stats`` dict."""
     out = []
     dropped = 0
     buf = b
@@ -217,53 +217,6 @@ def parse_warc(df: DataFrame, content_col: str = "warc") -> DataFrame:
             )
 
     return df.select(content_col).mapInPandas(_parse, PARSED_SCHEMA)
-
-
-DIAG_SCHEMA = StructType(
-    [
-        StructField("n_records", LongType()),
-        StructField("dropped_gzip_members", LongType()),
-        StructField("truncated_tail", LongType()),
-        StructField("leftover_bytes", LongType()),
-    ]
-)
-
-
-def warc_ingest_diagnostics(df: DataFrame, content_col: str = "warc") -> DataFrame:
-    """One row per input buffer: parse/decompress loss counters.
-
-    Run this alongside :func:`parse_warc` over a crawl segment batch to
-    make silent data loss observable — ``dropped_gzip_members > 0`` or
-    ``truncated_tail > 0`` means records were skipped (corrupt gzip
-    member resynced past, or a mid-buffer framing break). At cluster
-    scale, aggregate it into the job's lineage manifest next to the
-    throughput metrics (SURVEY §2.10)."""
-
-    def _diag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for buf in pdf[content_col]:
-                stats: dict = {}
-                n_rec = sum(1 for _ in parse_warc_buffer(bytes(buf), stats))
-                rows.append(
-                    (
-                        n_rec,
-                        stats.get("dropped_gzip_members", 0),
-                        stats.get("truncated_tail", 0),
-                        stats.get("leftover_bytes", 0),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "n_records",
-                    "dropped_gzip_members",
-                    "truncated_tail",
-                    "leftover_bytes",
-                ],
-            )
-
-    return df.select(content_col).mapInPandas(_diag, DIAG_SCHEMA)
 
 
 MANIFEST_SCHEMA = StructType(

@@ -27,8 +27,10 @@ Usage: python scripts/build_neural_golden.py [sf_dir ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import duckdb  # noqa: E402
 import numpy as np  # noqa: E402
@@ -40,7 +42,7 @@ from bootleg_spark.functions.embedding import featurize_texts, score_batch  # no
 from bootleg_spark.functions.textproc import extract_context  # noqa: E402
 from bootleg_spark.operators.mentions import max_alias_words, ngram_extract_aliases  # noqa: E402
 
-GOLDEN_DIR = "/root/repo/goldens"
+GOLDEN_DIR = ROOT / "goldens"
 DEFAULT_SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 
@@ -135,10 +137,8 @@ def reference_outputs(sf_dir: str) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataF
 
 
 def main() -> None:
-    import os
-
     sfs = sys.argv[1:] or DEFAULT_SFS
-    os.makedirs(GOLDEN_DIR, exist_ok=True)
+    GOLDEN_DIR.mkdir(exist_ok=True)
     all_linked, all_tri, all_emb = [], [], []
     for sf in sfs:
         linked, tri, emb = reference_outputs(sf)

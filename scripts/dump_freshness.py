@@ -17,8 +17,10 @@ import json
 import os
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 WINDOW = 50
 
@@ -35,7 +37,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     rounds: list[tuple[str, dict]] = []
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(str(ROOT / "CORRECTNESS_r*.json"))):
         tag = re.search(r"CORRECTNESS_(r\d+)\.json", os.path.basename(path)).group(1)
         rounds.append((tag, json.load(open(path))))
 

@@ -121,44 +121,6 @@ def test_tfidf_matches_manual(spark):
     assert all(r["df"] >= 2 for r in out2)
 
 
-def test_threshold_filter_is_scale_twin_of_percentile(spark):
-    """The broadcast approx-threshold plan must keep a SUPERSET of the
-    exact percent_rank form's rows (boundary ties + bounded rank error
-    only widen it), and every dropped row must be quality-dominated by
-    every kept row within its stratum — the defining property of a
-    threshold cut."""
-    from bootleg_spark.operators.curation import quality_threshold_filter
-
-    # varied word counts/lengths → a spread of quality values per lang
-    rows = []
-    for i in range(60):
-        lang = ["en", "de"][i % 2]
-        words = ["the", "of", "data", "x", "engine", "spark"] * (1 + i % 7)
-        rows.append((i, lang, " ".join(words[: 5 + (i % 23)])))
-    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-
-    exact = quality_percentile_filter(df, 0.5)
-    approx = quality_threshold_filter(df, 0.5)
-    exact_ids = {r["id"] for r in exact.collect()}
-    approx_rows = approx.collect()
-    approx_ids = {r["id"] for r in approx_rows}
-    assert exact_ids <= approx_ids  # superset, never loses a row
-    # dominance: per stratum, min(kept quality) >= max(dropped quality)
-    kept_min = {}
-    for r in approx_rows:
-        kept_min[r["stratum"]] = min(kept_min.get(r["stratum"], 1e9), r["quality"])
-    from bootleg_spark.operators.textstats import quality_scores
-
-    all_q = {
-        (r["id"]): r for r in quality_scores(df.withColumnRenamed("doc_id", "doc_id")).collect()
-    }
-    for i, lang, _ in rows:
-        if i not in approx_ids:
-            assert all_q[i]["quality"] <= kept_min[lang] + 1e-9
-    with pytest.raises(ValueError):
-        quality_threshold_filter(df, 1.5)
-
-
 def test_cap_per_domain_salted_parity(spark):
     """The two-phase (salted) exact top-N returns ROW-IDENTICAL output
     to the one-window form — including ranks — on a skewed corpus

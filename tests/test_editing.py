@@ -1,12 +1,10 @@
-"""Edit-mode mutation API tests — semantics mirror the reference's
-tests/test_entity/test_entity_profile.py add/remove/reidentify suites
-(entity_symbols.py:592-688, type_symbols.py:201-247,
-kg_symbols.py:232-284, entity_profile.py:545-626)."""
+"""Edit-mode mention mutation tests — semantics mirror the reference's
+tests/test_entity/test_entity_profile.py add/remove mention suites
+(entity_symbols.py:592-688)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from bootleg_spark.operators import editing
 
@@ -62,133 +60,3 @@ def test_remove_mention_and_alias_vanishes(cands):
     assert [q for q, _, _ in got["animal"]] == ["Q123", "Q567"]
     assert [r for _, _, r in got["animal"]] == [1, 2]
 
-
-def test_add_remove_type(spark):
-    types = spark.createDataFrame(
-        [("Q1", "wiki", ["a", "b"]), ("Q1", "hyena", []), ("Q2", "wiki", ["c"])],
-        "qid string, type_system string, typenames array<string>",
-    )
-    got = {
-        (r["qid"], r["type_system"]): list(r["typenames"])
-        for r in editing.add_type(types, "Q1", "z", "wiki", max_types=10).collect()
-    }
-    assert got[("Q1", "wiki")] == ["a", "b", "z"]  # appended at end
-    got2 = {
-        (r["qid"], r["type_system"]): list(r["typenames"])
-        for r in editing.add_type(types, "Q1", "z", "wiki", max_types=2).collect()
-    }
-    assert got2[("Q1", "wiki")] == ["a", "z"]  # evicted current last
-    got3 = {
-        (r["qid"], r["type_system"]): list(r["typenames"])
-        for r in editing.remove_type(types, "Q1", "a", "wiki").collect()
-    }
-    assert got3[("Q1", "wiki")] == ["b"] and got3[("Q2", "wiki")] == ["c"]
-    # present type is a no-op
-    got4 = {
-        (r["qid"], r["type_system"]): list(r["typenames"])
-        for r in editing.add_type(types, "Q1", "a", "wiki").collect()
-    }
-    assert got4[("Q1", "wiki")] == ["a", "b"]
-
-
-@pytest.fixture()
-def kg(spark):
-    return spark.createDataFrame(
-        [
-            ("Q1", "sibling", "Q2", 0),
-            ("Q1", "sibling", "Q3", 1),
-            ("Q1", "parent", "Q4", 0),
-        ],
-        "subj_qid string, rel string, obj_qid string, pos long",
-    )
-
-
-def _kg_lists(df):
-    out = {}
-    for r in df.orderBy("subj_qid", "rel", "pos").collect():
-        out.setdefault((r["subj_qid"], r["rel"]), []).append(r["obj_qid"])
-    return out
-
-
-def test_add_relation(kg):
-    got = _kg_lists(editing.add_relation(kg, "Q1", "sibling", "Q9", max_connections=100))
-    assert got[("Q1", "sibling")] == ["Q2", "Q3", "Q9"]
-    # full group: evict last by position
-    got2 = _kg_lists(editing.add_relation(kg, "Q1", "sibling", "Q9", max_connections=2))
-    assert got2[("Q1", "sibling")] == ["Q2", "Q9"]
-    # existing pair: no-op
-    got3 = _kg_lists(editing.add_relation(kg, "Q1", "sibling", "Q2"))
-    assert got3 == _kg_lists(kg)
-    # brand-new group
-    got4 = _kg_lists(editing.add_relation(kg, "Q7", "sibling", "Q1"))
-    assert got4[("Q7", "sibling")] == ["Q1"]
-
-
-def test_remove_relation(kg):
-    got = _kg_lists(editing.remove_relation(kg, "Q1", "sibling", "Q2"))
-    assert got[("Q1", "sibling")] == ["Q3"]
-
-
-def test_reidentify_entity(spark, cands, kg):
-    dims = {
-        "entities": spark.createDataFrame(
-            [("Q123", 1, "Dog", "d"), ("Q345", 2, "Cat", "c")],
-            "qid string, eid long, title string, descr string",
-        ),
-        "alias_cands": cands,
-        "entity_types": spark.createDataFrame(
-            [("Q123", "wiki", ["t"])], "qid string, type_system string, typenames array<string>"
-        ),
-        "kg_relations": spark.createDataFrame(
-            [("Q123", "sibling", "Q345", 0)],
-            "subj_qid string, rel string, obj_qid string, pos long",
-        ),
-    }
-    out = editing.reidentify_entity(dims, "Q123", "Q911")
-    assert {r["qid"] for r in out["entities"].collect()} == {"Q911", "Q345"}
-    assert out["alias_cands"].where("qid = 'Q123'").count() == 0
-    assert out["alias_cands"].where("qid = 'Q911'").count() == 2
-    kgr = out["kg_relations"].first()
-    assert kgr["subj_qid"] == "Q911" and kgr["obj_qid"] == "Q345"
-    assert out["entity_types"].first()["qid"] == "Q911"
-
-
-def test_add_entity_end_to_end(spark, cands, kg):
-    dims = {
-        "entities": spark.createDataFrame(
-            [("Q123", 1, "Dog", "d")], "qid string, eid long, title string, descr string"
-        ),
-        "alias_cands": cands,
-        "entity_types": spark.createDataFrame(
-            [("Q123", "wiki", ["t"]), ("Q123", "hyena", [])],
-            "qid string, type_system string, typenames array<string>",
-        ),
-        "kg_relations": kg,
-    }
-    obj = {
-        "entity_id": "Q790",
-        "mentions": [["animal", 13.0], ["beast", 2.0]],
-        "title": "Beast",
-        "types": {"wiki": ["creature"]},
-        "relations": [{"relation": "sibling", "object": "Q123"}],
-    }
-    out = editing.add_entity(dims, obj)
-    ents = {r["qid"]: r for r in out["entities"].collect()}
-    assert ents["Q790"]["eid"] == 2 and ents["Q790"]["title"] == "Beast"
-    got = _by_alias(out["alias_cands"])
-    assert got["animal"][0] == ("Q790", 13.0, 1)  # tops the list
-    assert got["beast"] == [("Q790", 2.0, 1)]
-    tys = {
-        (r["qid"], r["type_system"]): list(r["typenames"])
-        for r in out["entity_types"].collect()
-    }
-    assert tys[("Q790", "wiki")] == ["creature"] and tys[("Q790", "hyena")] == []
-    assert _kg_lists(out["kg_relations"])[("Q790", "sibling")] == ["Q123"]
-    # duplicate qid rejected
-    with pytest.raises(ValueError, match="already exists"):
-        editing.add_entity(out, {"entity_id": "Q790", "mentions": [["x", 1.0]]})
-    # unknown type system rejected
-    with pytest.raises(ValueError, match="type system"):
-        editing.add_entity(
-            dims, {"entity_id": "Q999", "mentions": [["x", 1.0]], "types": {"nope": ["a"]}}
-        )

@@ -1,25 +1,68 @@
 """Every parameter a ``bootleg_spark`` function takes is read by it,
-and the package reads no environment variable beyond its contract.
+every module-level definition is reached, and the package reads no
+environment variable beyond its contract.
 
 A parameter the body never reads is silently ignored: a caller who sets
 it gets no error and no effect. This walks the package's source with
 ``ast`` (no Spark) and fails on any such parameter; the few that a
-fixed call shape forces are allowlisted with their reason. An
-environment variable is an option no signature shows, so the same walk
-pins the names the package reads.
+fixed call shape forces are allowlisted with their reason. A definition
+no query, workload or script loads is code only its own tests run, so
+the same walk fails on it. An environment variable is an option no
+signature shows, so the same walk pins the names the package reads.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parents[1] / "bootleg_spark"
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "bootleg_spark"
+
+
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), filename=str(path))
+
+
+# (module path under bootleg_spark/, parsed module), parsed once for every check
+MODULES = [(p.relative_to(PKG).as_posix(), _parse(p)) for p in sorted(PKG.rglob("*.py"))]
+
+# code outside the package that may reach it; no test counts
+CALLERS = [
+    _parse(p)
+    for p in [*(ROOT / "scripts").rglob("*.py"), *(ROOT / "perfbench").rglob("*.py"),
+              ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    if "tests" not in p.relative_to(ROOT).parts
+]
 
 # (module path under bootleg_spark/, function, parameter) -> why unread
 ALLOWED = {
-    ("operators/multimodal.py", "decode_image_stub", "payload"): "stub that raises",
     ("sources/snaptable.py", "delete_rows_mor", "spark"): "same call shape as its sibling functions",
+}
+
+# (module path under bootleg_spark/, definition) -> why it stays with no caller
+UNREACHED = {
+    ("annotator.py", "SparkAnnotator"): "documented entry point",
+    ("streaming/ingest.py", "start_snapshot_triple_stream"): "documented entry point",
+    ("functions/npz_encoder.py", "NpzEncoder"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("functions/npz_encoder.py", "export_tiny_encoder"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("functions/embedding.py", "make_mlp_encoder"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("functions/embedding.py", "featurize_tokens"): "reference a test compares the fused kernel against",
+    ("functions/textproc.py", "char_span_to_word_span"): "reference a test compares a reached function against",
+    ("operators/triples.py", "cooccurrence_pairs"): "reference a test compares a reached function against",
+    ("operators/triples.py", "emit_triples"): "reference a test compares a reached function against",
+    ("functions/textproc.py", "render_page_html"): "reference a test compares a reached function against",
+    ("sources/profile.py", "read_profile_jsonl"): "reader of the reference's profile JSONL (outside input)",
+    ("sources/profile.py", "read_profile_jsonl_ordered"): "reader of the reference's profile JSONL (outside input)",
+    ("sources/profile.py", "assert_valid_profile"): "validator of the reference's profile JSONL (outside input)",
+    ("sources/profile.py", "write_profile_jsonl"): "sink of the reference's profile JSONL format",
+    ("sources/sentences.py", "read_sentences_jsonl"): "reader of the reference's sentence JSONL (outside input)",
+    ("sources/sentences.py", "assert_valid_sentences"): "validator of the reference's sentence JSONL (outside input)",
+    ("sources/snaptable.py", "vacuum"): "table maintenance",
+    ("sources/snaptable.py", "compact"): "table maintenance",
+    ("sources/snaptable.py", "apply_deletes"): "table maintenance",
+    ("sources/snaptable.py", "drop_ref"): "table maintenance",
 }
 
 
@@ -32,9 +75,8 @@ def _params(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> list[str]:
 
 def _unread_params() -> set[tuple[str, str, str]]:
     found = set()
-    for path in sorted(PKG.rglob("*.py")):
-        rel = path.relative_to(PKG).as_posix()
-        for fn in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+    for rel, tree in MODULES:
+        for fn in ast.walk(tree):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             read = {
@@ -54,12 +96,65 @@ def test_every_parameter_is_read():
     assert sorted(set(ALLOWED) - unread) == []
 
 
+def _defined(stmt: ast.stmt) -> list[str]:
+    """Names a module-level statement defines; dunders are read by Python."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        names = [stmt.name]
+    elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    else:
+        names = []
+    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+
+
+def _loads(node: ast.AST) -> set[str]:
+    """Names ``node`` loads: ``Name``/``Attribute``/import nodes and
+    identifier string constants, docstrings excepted."""
+    # a string standing alone as a statement is a docstring or a comment
+    docs = {id(n.value) for n in ast.walk(node) if isinstance(n, ast.Expr)}
+    names = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute) and not isinstance(n.ctx, ast.Store):
+            names.add(n.attr)
+        elif isinstance(n, ast.alias):
+            names.update(n.name.split("."))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier() and id(n) not in docs:
+            names.add(n.value)
+    return names
+
+
+def _unreached() -> set[tuple[str, str]]:
+    """Module-level definitions that no code outside their own
+    statement loads, where the code is the package, the scripts,
+    ``perfbench``, ``__spark_entry__.py`` and ``bench.py``."""
+    outside = set().union(*map(_loads, CALLERS))
+    stmts = [(rel, stmt, _loads(stmt)) for rel, tree in MODULES for stmt in tree.body]
+    # statements loading each name; a definition's own statement does not count
+    times = Counter(n for _, _, loads in stmts for n in loads)
+    return {
+        (rel, name)
+        for rel, stmt, loads in stmts
+        for name in _defined(stmt)
+        if name not in outside and times[name] == (name in loads)
+    }
+
+
+def test_every_definition_is_reached():
+    unreached = _unreached()
+    assert sorted(unreached - set(UNREACHED)) == []
+    # an allowlist entry that is now reached (or gone) is stale
+    assert sorted(set(UNREACHED) - unreached) == []
+
+
 def _env_reads() -> set:
     """Names read via ``os.environ[...]``, ``os.environ.get`` or
     ``os.getenv``; a non-literal name reads as ``None``."""
     found = set()
-    for path in PKG.rglob("*.py"):
-        for n in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+    for _, tree in MODULES:
+        for n in ast.walk(tree):
             if isinstance(n, ast.Subscript) and ast.unparse(n.value) == "os.environ":
                 key = n.slice
             elif isinstance(n, ast.Call) and n.args and ast.unparse(n.func) in ("os.environ.get", "os.getenv"):
@@ -75,3 +170,4 @@ def test_env_reads_are_the_driver_contract():
     ``SPARK_DRIVER_MEM`` the deployment's driver heap; every other
     setting is a parameter or a constant."""
     assert _env_reads() == {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM"}
+

@@ -1,9 +1,6 @@
 """Prediction assembly, filters, pruning, and multimodal plumbing tests."""
 
-import pytest
-
 from bootleg_spark.operators.multimodal import (
-    decode_image_stub,
     extract_media_features,
     media_metadata,
 )
@@ -11,7 +8,6 @@ from bootleg_spark.operators.predictions import (
     filter_weak_labels,
     merge_predictions,
     prune_to_entities,
-    threshold_filter,
 )
 
 
@@ -38,7 +34,6 @@ def test_weak_label_and_threshold_filters(spark):
     )
     assert {r["id"] for r in filter_weak_labels(df).collect()} == {1, 3}
     assert filter_weak_labels(df, use_weak_label=True).count() == 3
-    assert {r["id"] for r in threshold_filter(df, 0.5).collect()} == {1, 2}
 
 
 def test_prune_reindexes_contiguously(spark):
@@ -75,11 +70,6 @@ def test_media_features_batched_and_deterministic(spark):
     # determinism across runs
     out2 = {r["id"]: r["feat"] for r in extract_media_features(df, dim=4).collect()}
     assert out == out2
-
-
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"\x89PNG")
 
 
 def test_resize_media_custom_decoder(spark):

@@ -643,26 +643,6 @@ def test_partition_spec_evolution_via_overwrite(spark, tmp_path):
     assert st.read_table(spark, table).count() == 60
 
 
-def test_version_as_of_timestamp(spark, docs, tmp_path):
-    """FOR TIMESTAMP AS OF: commits stamp committed_at; resolution
-    picks the largest version at-or-before the asked instant."""
-    import time
-
-    table = str(tmp_path / "t")
-    s1 = st.write_table(docs.where("grp = 0"), table)
-    time.sleep(0.05)
-    mid = time.time()
-    time.sleep(0.05)
-    s2 = st.write_table(docs.where("grp = 1"), table, mode="append")
-    assert s1["committed_at"] < mid < s2["committed_at"]
-    assert st.version_as_of(table, mid) == 1
-    assert st.version_as_of(table, time.time()) == 2
-    with pytest.raises(ValueError, match="no snapshot"):
-        st.version_as_of(table, s1["committed_at"] - 10)
-    v = st.version_as_of(table, mid)
-    assert st.read_table(spark, table, version=v).count() == 20
-
-
 def test_consumer_group_offsets(spark, docs, tmp_path):
     """Consumer-group incremental consumption: bootstrap reads the full
     snapshot, acks advance durably, replay-before-ack re-delivers,
@@ -1063,28 +1043,6 @@ def test_concurrent_threaded_appenders_all_land(spark, docs, tmp_path):
     assert final.where("grp = 0").count() == 40  # base + its residue copies
 
 
-def test_metadata_tables_history_and_files(spark, docs, tmp_path):
-    """The metadata-table surface: history rows mirror the commit
-    sequence (modes, counts, watermark); files rows mirror the
-    manifest (rows, partition values) — all without data I/O."""
-    table = str(tmp_path / "t")
-    st.write_table(docs, table, partition_by=[("grp", "identity")])
-    st.write_table(docs.where("grp = 0"), table, mode="append")
-    st.delete_rows(spark, table, "grp = 4")
-    hist = {r["version"]: r for r in st.history_table(spark, table).collect()}
-    assert [hist[v]["mode"] for v in (1, 2, 3)] == ["overwrite", "append", "delete"]
-    assert hist[3]["parent"] == 2 and hist[3]["total_rows"] == 100
-    assert hist[1]["committed_at"] <= hist[2]["committed_at"] <= hist[3]["committed_at"]
-    files = st.files_table(spark, table).collect()
-    assert sum(r["rows"] for r in files) == 100
-    import json as _json
-    parts = {_json.loads(r["partition"])["grp"] for r in files}
-    assert parts == {0, 1, 2, 3}  # grp=4 deleted; identity partitioning visible
-    # time travel: v1's files still include grp=4
-    f1 = st.files_table(spark, table, version=1).collect()
-    assert {_json.loads(r["partition"])["grp"] for r in f1} == {0, 1, 2, 3, 4}
-
-
 def test_tags_branches_pin_and_read(spark, docs, tmp_path):
     """Refs surface: a tag reads its pinned version forever; a branch
     moves atomically; vacuum respects both as pins; drop_ref releases
@@ -1266,34 +1224,6 @@ def test_positional_and_equality_deletes_compose(spark, docs, tmp_path):
         if f["stats"]["doc_id"][0] < 5 or f["stats"]["doc_id"][1] >= 90
     )
     assert applied["rewritten"] == hit and len(hit) < len(s0["files"])
-
-
-def test_partitions_metadata_table(spark, docs, tmp_path):
-    """tbl.partitions aggregates the manifest per partition value:
-    row totals match the data, file counts match files_table, and an
-    unpartitioned table reports the single '{}' row."""
-    import json as _json
-
-    table = str(tmp_path / "t")
-    st.write_table(docs, table, partition_by=[("grp", "identity")])
-    pt = {
-        r["partition"]: (r["n_files"], r["n_rows"])
-        for r in st.partitions_table(spark, table).collect()
-    }
-    assert set(pt) == {_json.dumps({"grp": g}) for g in range(5)}
-    assert all(n_rows == 20 for _, n_rows in pt.values())
-    snap = st.load_snapshot(table)
-    by_part = {}
-    for e in snap["files"]:
-        k = _json.dumps(e["partition"], sort_keys=True)
-        by_part[k] = by_part.get(k, 0) + 1
-    assert {k: v[0] for k, v in pt.items()} == by_part
-
-    flat = str(tmp_path / "flat")
-    st.write_table(docs, flat)
-    rows = st.partitions_table(spark, flat).collect()
-    assert len(rows) == 1 and rows[0]["partition"] == "{}"
-    assert rows[0]["n_rows"] == 100
 
 
 def _stream_batch(docs):

@@ -82,21 +82,6 @@ def test_alias_entity_pair_counts(spark):
     assert out == {"a|Q1": 2, "a|Q2": 1, "b|Q1": 1}
 
 
-def test_strip_nan_array(spark):
-    import math
-
-    from bootleg_spark.functions.arrays import strip_nan_array, strip_nan_array2
-
-    df = spark.createDataFrame(
-        [([1.0, float("nan"), 3.0],)], "xs array<double>"
-    ).select(strip_nan_array("xs").alias("xs"))
-    assert list(df.first()["xs"]) == [1.0, None, 3.0]
-    df2 = spark.createDataFrame(
-        [([[float("nan")], [2.0]],)], "xs array<array<double>>"
-    ).select(strip_nan_array2("xs").alias("xs"))
-    assert [list(a) for a in df2.first()["xs"]] == [[None], [2.0]]
-
-
 def test_profile_columns_nulls_and_cardinality(spark):
     from bootleg_spark.operators.stats import profile_columns
 

@@ -227,22 +227,6 @@ class TestWarc:
         assert len(out) == 2
         assert stats["dropped_gzip_members"] >= 1
 
-    def test_ingest_diagnostics_frame(self, spark):
-        payload = b"abc"
-        rec = (
-            b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: u\r\n"
-            b"WARC-Date: d\r\nContent-Length: 3\r\n\r\nabc\r\n\r\n"
-        )
-        clean = gzip.compress(rec, mtime=0) + gzip.compress(rec, mtime=0)
-        lossy = gzip.compress(rec, mtime=0) + b"\x00\x00GARBAGE"
-        df = spark.createDataFrame([(clean,), (lossy,)], "warc binary")
-        rows = {
-            (r["n_records"], r["dropped_gzip_members"])
-            for r in warc.warc_ingest_diagnostics(df).collect()
-        }
-        assert (2, 0) in rows  # clean buffer: 2 records, no loss
-        assert any(n == 1 and d >= 1 for n, d in rows)  # lossy buffer flagged
-
     def test_file_sink_binaryfile_roundtrip(self, spark, tmp_path):
         """Production path: per-partition .warc.gz files out, binaryFile
         ingest back; file granularity drives parallelism."""
