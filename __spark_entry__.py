@@ -143,13 +143,13 @@ def _q_linked_popularity(spark, sf_dir):
 
 def _q_triples_popularity(spark, sf_dir):
     linked, d = _linked_pop(spark, sf_dir)
-    ents = doc_entities(linked, id_col="doc_id", qid_col="qid")
+    ents = doc_entities(linked, qid_col="qid")
     return triples_from_doc_entities(ents, d["kg_relations"])
 
 
 def _q_qid_counts(spark, sf_dir):
     linked, _ = _linked_pop(spark, sf_dir)
-    return stats.qid_counts(linked, qid_col="qid")
+    return stats.qid_counts(linked)
 
 
 def _q_alias_histogram(spark, sf_dir):
@@ -180,7 +180,7 @@ def _q_qid_count_buckets(spark, sf_dir):
     linked, _ = _linked_pop(spark, sf_dir)
     # exact quantiles here: mirrors the SQL oracle bit-for-bit; the
     # operator's scale default is percentile_approx (see stats.py)
-    return stats.qid_count_buckets(stats.qid_counts(linked, qid_col="qid"), exact=True)
+    return stats.qid_count_buckets(stats.qid_counts(linked), exact=True)
 
 
 def _gold_qid():
@@ -195,7 +195,7 @@ def _q_slice_eval(spark, sf_dir):
     with_slice = with_gold.join(
         d["documents"].select("doc_id", F.col("lang").alias("slice_name")), "doc_id"
     )
-    return stats.slice_eval(with_slice, gold_col="qid_gold", pred_col="qid", slice_col="slice_name")
+    return stats.slice_eval(with_slice, pred_col="qid")
 
 
 def _q_recall_at_k(spark, sf_dir):
@@ -575,7 +575,7 @@ def _q_mentions_gold_filter(spark, sf_dir):
 def _q_media_metadata(spark, sf_dir):
     from bootleg_spark.operators.multimodal import media_metadata
 
-    return media_metadata(synth.pages_table(spark, sf_dir), bin_col="html", id_col="url")
+    return media_metadata(synth.pages_table(spark, sf_dir))
 
 
 def _q_media_features(spark, sf_dir):
@@ -909,7 +909,7 @@ def _q_ngram_contamination(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     ev = docs.where(F.col("doc_id") % 20 == 0)
     corpus = docs.where(F.col("doc_id") % 20 != 0)
-    return textclean.ngram_contamination(corpus, ev, n=3)
+    return textclean.ngram_contamination(corpus, ev)
 
 
 def _q_corpus_select(spark, sf_dir):
@@ -1171,7 +1171,7 @@ def _q_domain_caps(spark, sf_dir):
     d = _docs(spark, sf_dir).select(
         "doc_id",
         _domain_url_expr().alias("url"),
-        quality_exprs("text")["quality"].alias("quality"),
+        quality_exprs()["quality"].alias("quality"),
     )
     return cap_per_domain(d, max_per_domain=5, quality_col="quality")
 
@@ -1238,7 +1238,7 @@ def _q_char_span_convert(spark, sf_dir):
             ).alias("spans"),
         )
     )
-    out = sentences_add_char_spans(d, text_col="text", spans_col="spans")
+    out = sentences_add_char_spans(d, text_col="text")
     return out.select(
         "doc_id", F.posexplode("char_spans").alias("span_idx", "_cs")
     ).select(
@@ -1370,8 +1370,8 @@ def _q_entity_pmi(spark, sf_dir):
     from bootleg_spark.operators.triples import cooccurrence_pmi, doc_entities
 
     linked, _ = _linked_pop(spark, sf_dir)
-    ents = doc_entities(linked, id_col="doc_id", qid_col="qid")
-    return cooccurrence_pmi(ents, min_pair_count=2)
+    ents = doc_entities(linked, qid_col="qid")
+    return cooccurrence_pmi(ents)
 
 
 def _q_kg_split(spark, sf_dir):
@@ -1382,7 +1382,7 @@ def _q_kg_split(spark, sf_dir):
     identical draw + demotion in SQL."""
     from bootleg_spark.operators.graph import transductive_split
 
-    return transductive_split(_dims(spark, sf_dir)["kg_relations"], seed=13)
+    return transductive_split(_dims(spark, sf_dir)["kg_relations"])
 
 
 def _q_kg_rank_eval(spark, sf_dir):
@@ -1398,7 +1398,7 @@ def _q_kg_rank_eval(spark, sf_dir):
     )
 
     kg = _dims(spark, sf_dir)["kg_relations"]
-    return ranking_eval_popularity(kg, transductive_split(kg, seed=13))
+    return ranking_eval_popularity(kg, transductive_split(kg))
 
 
 def _q_kg_canonicalize(spark, sf_dir):
@@ -1430,7 +1430,7 @@ def _adjacent_pairs(spark, sf_dir):
 
     linked, d = _linked_pop(spark, sf_dir)
     return (
-        adjacent_linked_pairs(linked, d["documents"], min_gap=2, max_gap=4),
+        adjacent_linked_pairs(linked, d["documents"]),
         d,
     )
 
@@ -1550,7 +1550,7 @@ def _claims(spark, sf_dir):
     a source asserts a triple iff one of its pages co-mentions both
     endpoints of a KG edge."""
     linked, d = _linked_pop(spark, sf_dir)
-    ents = doc_entities(linked, id_col="doc_id", qid_col="qid")
+    ents = doc_entities(linked, qid_col="qid")
     att = triples_from_doc_entities(ents, d["kg_relations"], group_cols=["doc_id"])
     return (
         att.join(d["documents"].select("doc_id", "source"), "doc_id")
@@ -1596,7 +1596,7 @@ def _q_kg_fact_spans(spark, sf_dir):
     from bootleg_spark.sources.synth import pages_table
 
     linked, d = _linked_pop(spark, sf_dir)
-    ents = doc_entities(linked, id_col="doc_id", qid_col="qid")
+    ents = doc_entities(linked, qid_col="qid")
     att = triples_from_doc_entities(ents, d["kg_relations"], group_cols=["doc_id"])
     pages = pages_table(spark, sf_dir).select("doc_id", "warc_ts")
     out = observation_spans(att, pages)
@@ -1636,7 +1636,7 @@ def _q_entity_resolve(spark, sf_dir):
         )
     )
     blocked = block_records(recs)
-    matches = verified_pairs(candidate_pairs(blocked), min_jaccard=0.8)
+    matches = verified_pairs(candidate_pairs(blocked))
     return resolve_records(blocked, matches)
 
 
@@ -1706,7 +1706,7 @@ def _q_rel_pattern_bootstrap(spark, sf_dir):
 
     pairs, d = _adjacent_pairs(spark, sf_dir)
     return bootstrap_patterns(
-        pairs, d["kg_relations"], rounds=2, min_support=2, min_precision=0.05
+        pairs, d["kg_relations"], min_support=2, min_precision=0.05
     )
 
 
@@ -1717,7 +1717,7 @@ def _q_corpus_sample_k(spark, sf_dir):
     from bootleg_spark.operators.sampling import sample_exact_k
 
     return sample_exact_k(
-        _docs(spark, sf_dir).select("doc_id", "lang"), k=25, seed=101
+        _docs(spark, sf_dir).select("doc_id", "lang"), k=25
     )
 
 
@@ -2192,7 +2192,7 @@ def _q_domain_caps_salted(spark, sf_dir):
     d = _docs(spark, sf_dir).select(
         "doc_id",
         _domain_url_expr().alias("url"),
-        quality_exprs("text")["quality"].alias("quality"),
+        quality_exprs()["quality"].alias("quality"),
     )
     return cap_per_domain_salted(d, max_per_domain=5, quality_col="quality")
 

@@ -36,11 +36,11 @@ class SparkAnnotator:
             for r in pipe.dims["entities"].select("qid", "title").collect()
         }
 
-    def label_frame(self, texts_df, text_col: str = "text"):
+    def label_frame(self, texts_df):
         """DataFrame-in / DataFrame-out form (the scale path): one row
         per surviving mention with prediction columns; every input
         column (the text id included) is carried through."""
-        return self.pipe.link_texts(texts_df, text_col, self.threshold)
+        return self.pipe.link_texts(texts_df, "text", self.threshold)
 
     def label_mentions(self, text_list) -> dict:
         """Reference return contract: dict of parallel per-text lists

@@ -124,12 +124,7 @@ def render_page_html(doc_id: int, text: str) -> bytes:
 # Context window (reference semantics: dataset.py:173-224)
 # ---------------------------------------------------------------------------
 
-def extract_context(
-    span: tuple[int, int],
-    sentence: str,
-    max_seq_window_len: int,
-    tokenizer: WhitespaceTokenizer = DEFAULT_TOKENIZER,
-) -> str:
+def extract_context(span: tuple[int, int], sentence: str, max_seq_window_len: int) -> str:
     """Mark a char span with [ent_start]/[ent_end] and window tokens around
     it, shifting budget toward the longer side (dataset.py:173-224)."""
     start_pieces = []
@@ -144,7 +139,7 @@ def extract_context(
     end_pieces.append("[ent_end]")
     if span[1] < len(sentence) and sentence[span[1]] != " ":
         end_pieces.append(" ")
-    char_window = tokenizer.model_max_length * 20
+    char_window = DEFAULT_TOKENIZER.model_max_length * 20
     with_entity_toks = (
         f"{sentence[max(0, span[0] - char_window):span[0]]}"
         f"{''.join(start_pieces)}"
@@ -152,7 +147,7 @@ def extract_context(
         f"{''.join(end_pieces)}"
         f"{sentence[span[1]:span[1] + char_window]}"
     )
-    tokens = tokenizer.tokenize(with_entity_toks)
+    tokens = DEFAULT_TOKENIZER.tokenize(with_entity_toks)
     span_tok_l = tokens.index("[ent_start]")
     span_tok_r = tokens.index("[ent_end]") + 1
     if span_tok_l < len(tokens) - span_tok_r:
@@ -163,7 +158,7 @@ def extract_context(
         prev_context = tokens[
             max(0, span_tok_l - (max_seq_window_len - len(next_context))): span_tok_r
         ]
-    return tokenizer.convert_tokens_to_string(prev_context + next_context)
+    return DEFAULT_TOKENIZER.convert_tokens_to_string(prev_context + next_context)
 
 
 # ---------------------------------------------------------------------------

@@ -22,9 +22,7 @@ from bootleg_spark import synthspec as S
 from bootleg_spark.functions.embedding import PAD_EID
 
 
-def grouped_candidates(
-    alias_cands: DataFrame, max_candidates: int = S.MAX_CANDIDATES
-) -> DataFrame:
+def grouped_candidates(alias_cands: DataFrame) -> DataFrame:
     """alias → ordered, padded candidate arrays.
 
     Input: (alias, qid, qnum/eid, score, rank) with rank ≤ K.
@@ -32,7 +30,7 @@ def grouped_candidates(
     cand_scores array<double>[K]) — ordered by rank, padded with
     "-1"/PAD_EID/0.0 (eval_utils.py:59-114 padding semantics).
     """
-    k = max_candidates
+    k = S.MAX_CANDIDATES
     eid_col = "eid" if "eid" in alias_cands.columns else "qnum"
     g = alias_cands.groupBy("alias").agg(
         F.array_sort(
@@ -53,7 +51,6 @@ def attach_candidates_salted(
     mentions: DataFrame,
     grouped: DataFrame,
     salt_n: int = 16,
-    fact_keys: tuple[str, ...] = ("doc_id", "mention_pos"),
 ) -> DataFrame:
     """Shuffle-join variant of :func:`attach_candidates` for alias
     dictionaries beyond broadcast budget, salted against head-alias
@@ -69,7 +66,7 @@ def attach_candidates_salted(
     cheap, the dim is one array row per alias. Output rows identical
     to the broadcast form (pytest-pinned); BENCH.md "Head-alias skew
     evidence (round 4)" has the skew measurements."""
-    salt = F.pmod(F.hash(*[F.col(k) for k in fact_keys]), F.lit(salt_n))
+    salt = F.pmod(F.hash("doc_id", "mention_pos"), F.lit(salt_n))
     fact = mentions.withColumn("_salt", salt)
     dim = grouped.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1)))

@@ -35,12 +35,7 @@ from pyspark.sql import functions as F
 from bootleg_spark.operators.ids import fixpoint
 
 
-def resolve_redirects(
-    redirects: DataFrame,
-    src_col: str = "src_qid",
-    dst_col: str = "dst_qid",
-    max_iter: int = 20,
-) -> DataFrame:
+def resolve_redirects(redirects: DataFrame, max_iter: int = 20) -> DataFrame:
     """(qid, canonical): terminal target for every redirect SOURCE —
     chains followed to the first qid that is not itself redirected.
     Self-redirects (src == dst) are dropped as no-ops. Raises
@@ -48,8 +43,8 @@ def resolve_redirects(
     pointer-jumping rounds (chain longer than 2^max_iter, or a cycle).
     """
     m = (
-        redirects.select(F.col(src_col).alias("qid"), F.col(dst_col).alias("canonical"))
-        .where(F.col(src_col) != F.col(dst_col))
+        redirects.select(F.col("src_qid").alias("qid"), F.col("dst_qid").alias("canonical"))
+        .where(F.col("src_qid") != F.col("dst_qid"))
         .distinct()
     )
 
@@ -64,33 +59,27 @@ def resolve_redirects(
     return fixpoint(m, step, max_iter, "resolve_redirects")
 
 
-def canonicalize_triples(
-    triples: DataFrame,
-    resolved: DataFrame,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def canonicalize_triples(triples: DataFrame, resolved: DataFrame) -> DataFrame:
     """Rewrite subj/obj through the resolved redirect map (qids absent
     from the map stay themselves), DROP triples that collapse to
     self-loops (both sides merged into one entity — the fact says
-    nothing post-merge), and dedup the rewritten set. Output columns
-    keep the input names."""
+    nothing post-merge), and dedup the rewritten set. Columns are
+    (subj_qid, rel, obj_qid) in and out."""
     r_s = resolved.select(
-        F.col("qid").alias(subj_col), F.col("canonical").alias("_cs")
+        F.col("qid").alias("subj_qid"), F.col("canonical").alias("_cs")
     )
     r_o = resolved.select(
-        F.col("qid").alias(obj_col), F.col("canonical").alias("_co")
+        F.col("qid").alias("obj_qid"), F.col("canonical").alias("_co")
     )
     out = (
-        triples.join(F.broadcast(r_s), subj_col, "left")
-        .join(F.broadcast(r_o), obj_col, "left")
+        triples.join(F.broadcast(r_s), "subj_qid", "left")
+        .join(F.broadcast(r_o), "obj_qid", "left")
         .select(
-            F.coalesce("_cs", subj_col).alias(subj_col),
-            F.col(pred_col),
-            F.coalesce("_co", obj_col).alias(obj_col),
+            F.coalesce("_cs", "subj_qid").alias("subj_qid"),
+            F.col("rel"),
+            F.coalesce("_co", "obj_qid").alias("obj_qid"),
         )
-        .where(F.col(subj_col) != F.col(obj_col))
+        .where(F.col("subj_qid") != F.col("obj_qid"))
         .distinct()
     )
     return out

@@ -26,14 +26,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def registered_domain_expr(url_col: str = "url") -> F.Column:
+def registered_domain_expr() -> F.Column:
     """Registered domain of a URL: hostname lowercased, ``www.``
     stripped, then the last TWO labels (``example.org``,
     ``shop.example.co`` → ``example.co``). A faithful public-suffix
     list is a data file, not logic — at that point swap the final
     regex for a broadcast-joined suffix dim; the two-label fallback is
     the standard approximation and is what the oracle mirrors."""
-    host = F.lower(F.regexp_extract(F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]*)", 1))
+    host = F.lower(F.regexp_extract(F.col("url"), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]*)", 1))
     host = F.regexp_replace(host, r"^www\.", "")
     two = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
     return F.when(two == "", host).otherwise(two)
@@ -42,8 +42,6 @@ def registered_domain_expr(url_col: str = "url") -> F.Column:
 def cap_per_domain(
     docs: DataFrame,
     max_per_domain: int,
-    url_col: str = "url",
-    id_col: str = "doc_id",
     quality_col: str | None = None,
 ) -> DataFrame:
     """Keep at most ``max_per_domain`` documents per registered domain,
@@ -71,8 +69,8 @@ def cap_per_domain(
         else [F.col("id").asc()]
     )
     d = docs.select(
-        F.col(id_col).alias("id"),
-        registered_domain_expr(url_col).alias("domain"),
+        F.col("doc_id").alias("id"),
+        registered_domain_expr().alias("domain"),
         *([F.col(quality_col).alias("_q")] if quality_col is not None else []),
     )
     w = Window.partitionBy("domain").orderBy(*order)
@@ -86,8 +84,6 @@ def cap_per_domain(
 def cap_per_domain_salted(
     docs: DataFrame,
     max_per_domain: int,
-    url_col: str = "url",
-    id_col: str = "doc_id",
     quality_col: str | None = None,
     salt: int = 16,
 ) -> DataFrame:
@@ -127,8 +123,8 @@ def cap_per_domain_salted(
         else [F.col("id").asc()]
     )
     d = docs.select(
-        F.col(id_col).alias("id"),
-        registered_domain_expr(url_col).alias("domain"),
+        F.col("doc_id").alias("id"),
+        registered_domain_expr().alias("domain"),
         *([F.col(quality_col).alias("_q")] if quality_col is not None else []),
     ).withColumn("_salt", F.pmod(F.hash(F.col("id")), F.lit(salt)))
     w1 = Window.partitionBy("domain", "_salt").orderBy(*order)
@@ -145,13 +141,7 @@ def cap_per_domain_salted(
     )
 
 
-def quality_percentile_filter(
-    docs: DataFrame,
-    keep_frac: float,
-    strata_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_percentile_filter(docs: DataFrame, keep_frac: float) -> DataFrame:
     """Keep the best ``keep_frac`` of documents PER STRATUM (language)
     by the textstats quality score. Exact rule: rank documents within
     each stratum by (quality desc, id asc) and keep rows with
@@ -166,10 +156,10 @@ def quality_percentile_filter(
 
     if not (0.0 < keep_frac <= 1.0):
         raise ValueError("keep_frac must be in (0, 1]")
-    q = quality_exprs(text_col)
+    q = quality_exprs()
     d = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(strata_col).alias("stratum"),
+        F.col("doc_id").alias("id"),
+        F.col("lang").alias("stratum"),
         q["quality"].alias("_q"),
     )
     w = Window.partitionBy("stratum").orderBy(F.col("_q").desc(), F.col("id").asc())
@@ -185,13 +175,7 @@ def quality_percentile_filter(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 1,
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int, min_df: int = 1) -> DataFrame:
     """Top-``k`` terms per document by smoothed TF-IDF
     (``tf · (ln((N+1)/(df+1)) + 1)``, sklearn's smooth_idf formula).
     Terms are lowercased whitespace tokens; ties break by term asc.
@@ -210,8 +194,8 @@ def tfidf_top_terms(
     k·(rows per upstream partition), not every (doc, term) pair."""
     pairs = (
         docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
+            F.col("doc_id").alias("id"),
+            F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
         )
         .where(F.length("term") > 0)
         .groupBy("id", "term")
@@ -221,7 +205,7 @@ def tfidf_top_terms(
     if min_df > 1:
         df_dim = df_dim.where(F.col("df") >= min_df)
     n_docs = docs.select(
-        F.countDistinct(F.col(id_col)).alias("_n")
+        F.countDistinct(F.col("doc_id")).alias("_n")
     )
     scored = (
         pairs.join(df_dim, "term")

@@ -29,10 +29,10 @@ from pyspark.sql.types import LongType, StructField, StructType
 from bootleg_spark.operators.ids import fixpoint
 
 
-def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup: (content_hash, keep_id, dup_count). keep_id = min id."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col).alias("id"))
+        docs.select(F.md5(F.col("text")).alias("content_hash"), F.col("doc_id").alias("id"))
         .groupBy("content_hash")
         .agg(
             F.min("id").cast("long").alias("keep_id"),
@@ -41,42 +41,15 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def word_shingles(
-    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Distinct word n-gram shingles per doc — pure JVM expressions."""
-    w = docs.select(F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("w"))
-    shingled = w.select(
-        "id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(w) >= {n} THEN transform(sequence(0, size(w) - {n}),"
-                f" i -> concat_ws(' ', slice(w, i + 1, {n}))) ELSE array() END"
-            )
-        ).alias("shingle"),
-    )
-    return shingled.where(F.length("shingle") > 0).distinct()
-
-
-def _doc_sizes(shingles: DataFrame) -> DataFrame:
-    return shingles.groupBy("id").agg(F.count("*").cast("long").alias("n_shingles"))
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """All doc pairs with word-n-gram Jaccard ≥ threshold.
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """All doc pairs with word-3-gram Jaccard ≥ threshold.
 
     shingle equi-join → per-pair intersection count → sizes join →
     |A∩B| / (|A|+|B|-|A∩B|). The shuffle key is the shingle — joined on
     its xxhash64 (8-byte long) rather than the string, cutting shuffle
     bytes severalfold with identical output absent 64-bit collisions;
     frequent shingles are the skew risk (AQE skew-join splits them)."""
-    dshf = doc_shingle_arrays(docs, n, text_col, id_col)
+    dshf = doc_shingle_arrays(docs)
     sizes = dshf.select("id", F.size("dsh").cast("long").alias("n_shingles"))
     shh = dshf.select(
         "id", F.explode(F.transform(F.col("dsh"), lambda s: F.xxhash64(s))).alias("sh64")
@@ -101,27 +74,25 @@ def ngram_jaccard_pairs(
     return out.select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard")
 
 
-def doc_shingle_arrays(
-    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, dsh): each doc's DISTINCT word-n-gram shingles as an in-row
-    array — the zero-shuffle form of :func:`word_shingles` (guide §2.4:
-    remove shuffles outright). Shingling, the empty-shingle filter and
+def doc_shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
+    """(id, dsh): each doc's DISTINCT word-n-gram shingles (words split
+    on single spaces, joined by one space, empty shingles dropped) as an
+    in-row array — the package's one shingler, mirrored in SQL by
+    ``oracle.shingle_body_sql``. Shingling, the empty-shingle filter and
     the per-doc distinct are strictly per-document, so they compute
-    inside the row: ``word_shingles``'s global ``.distinct()`` exchange
-    of every (id, shingle) row (2.6 M rows at sf1.0) becomes
-    ``array_distinct`` in the scan projection, and every downstream
-    per-doc reduction (band minima, set sizes) follows in-row too.
-
-    Row-for-row: ``explode(dsh)`` ≡ ``word_shingles(docs, n)``. The
+    inside the row (guide §2.4: remove shuffles outright): a global
+    ``.distinct()`` exchange of every (id, shingle) row (2.6 M rows at
+    sf1.0) becomes ``array_distinct`` in the scan projection, and every
+    downstream per-doc reduction (band minima, set sizes) follows
+    in-row too. Docs with fewer than n words have no row. The
     filter runs BEFORE the projection on the cheap equivalent predicate
     ``size(split(text)) >= n`` (for n ≥ 2 every shingle contains a
     separator so the length>0 filter is vacuous; the n == 1 branch
     keeps it) — filtering on a derived array column AFTER projecting it
     lets predicate pushdown substitute the whole expression into the
     filter and every row pays it twice (see doc_fingerprints)."""
-    w = F.split(F.col(text_col), " ")
-    d0 = docs.where(F.size(w) >= n).select(F.col(id_col).alias("id"), w.alias("w"))
+    w = F.split(F.col("text"), " ")
+    d0 = docs.where(F.size(w) >= n).select(F.col("doc_id").alias("id"), w.alias("w"))
     arr = shingle_array_expr(F.col("w"), n)
     if n == 1:
         arr = F.filter(arr, lambda s: F.length(s) > 0)
@@ -170,13 +141,7 @@ def _band_minima_arrays(dshf: DataFrame, n_bands: int) -> DataFrame:
     ).select("id", F.col("band").cast("int").alias("band"), "min_hash")
 
 
-def minhash_band_buckets(
-    docs: DataFrame,
-    n_bands: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_band_buckets(docs: DataFrame) -> DataFrame:
     """Per-(doc, band) MinHash bucket keys.
 
     Each band b hashes every shingle with md5(b || ':' || shingle) and
@@ -190,9 +155,7 @@ def minhash_band_buckets(
     rows exist, where the r06 plan paid the shingle ``distinct`` and
     the groupBy(id) shuffles first.
     """
-    return _band_minima_arrays(
-        doc_shingle_arrays(docs, shingle_n, text_col, id_col), n_bands
-    )
+    return _band_minima_arrays(doc_shingle_arrays(docs), 8)
 
 
 def _bucket_pairs(buckets: DataFrame, key_cols: tuple = ("band", "min_hash")) -> DataFrame:
@@ -235,26 +198,12 @@ def _bucket_pairs(buckets: DataFrame, key_cols: tuple = ("band", "min_hash")) ->
     return out.distinct()
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n_bands: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any LSH band bucket."""
-    buckets = minhash_band_buckets(docs, n_bands, shingle_n, text_col, id_col)
-    return _bucket_pairs(buckets)
+    return _bucket_pairs(minhash_band_buckets(docs))
 
 
-def minhash_verified_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    n_bands: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_verified_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """The standard two-stage near-dup pipeline: cheap LSH banding
     proposes candidate pairs, exact Jaccard over shingle sets verifies
     them. At corpus scale the verify join touches only candidate pairs,
@@ -287,10 +236,8 @@ def minhash_verified_pairs(
     # DAG-as-tree would evaluate the scan + shingling once per branch.
     # Checkpoint blocks are GC-cleaned (ContextCleaner), unlike a
     # persist leak — the same idiom as rel_pattern_apply/bootstrap.
-    dshf = doc_shingle_arrays(docs, shingle_n, text_col, id_col).localCheckpoint(
-        eager=False
-    )
-    buckets = _band_minima_arrays(dshf, n_bands)
+    dshf = doc_shingle_arrays(docs).localCheckpoint(eager=False)
+    buckets = _band_minima_arrays(dshf, 8)
     cand = _bucket_pairs(buckets)
     sets = dshf.select(
         "id",
@@ -331,9 +278,7 @@ def minhash_verified_pairs(
     return out.select("id_a", "id_b", "jaccard")
 
 
-def simhash_signatures(
-    docs: DataFrame, bits: int = 64, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per doc (Charikar): sign of the weighted sum of
     token-hash bit vectors. md5-based bits; Arrow-batched UDF (the
     bit-vote accumulation has no good built-in expression)."""
@@ -353,14 +298,14 @@ def simhash_signatures(
             for tok in toks:
                 if tok not in vocab:
                     vocab[tok] = len(vocab)
-        shifts = np.arange(bits, dtype=np.uint64)
+        shifts = np.arange(64, dtype=np.uint64)
         if vocab:
             hs = np.empty(len(vocab), dtype=np.uint64)
             for tok, i in vocab.items():
                 hs[i] = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
             bitmat = (((hs[:, None] >> shifts) & np.uint64(1)).astype(np.int32) * 2) - 1
         else:
-            bitmat = np.zeros((0, bits), dtype=np.int32)
+            bitmat = np.zeros((0, 64), dtype=np.int32)
         out = np.zeros(len(texts), dtype=np.int64)
         powers = np.uint64(1) << shifts
         for j, toks in enumerate(tok_lists):
@@ -372,21 +317,21 @@ def simhash_signatures(
             out[j] = sig - (1 << 64) if sig >= (1 << 63) else sig
         return pd.Series(out, dtype="int64")
 
-    return docs.select(F.col(id_col).alias("id"), _simhash(F.col(text_col)).alias("simhash"))
+    return docs.select(F.col("doc_id").alias("id"), _simhash(F.col("text")).alias("simhash"))
 
 
-def simhash_near_pairs(docs: DataFrame, band_bits: int = 16, **kw) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup candidates: equal 16-bit SimHash band (standard 4-band
     trick ⇒ catches all pairs within Hamming distance 3)."""
-    sig = simhash_signatures(docs, **kw)
+    sig = simhash_signatures(docs)
     bands = sig.select(
         "id",
-        F.explode(F.array(*[F.lit(i) for i in range(64 // band_bits)])).alias("band"),
+        F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("band"),
         "simhash",
     ).withColumn(
         "band_key",
-        F.expr(f"shiftrightunsigned(simhash, band * {band_bits})").bitwiseAND(
-            F.lit((1 << band_bits) - 1)
+        F.expr("shiftrightunsigned(simhash, band * 16)").bitwiseAND(
+            F.lit((1 << 16) - 1)
         ),
     )
     # groupBy-collect pair generation (see _bucket_pairs): the r06
@@ -488,7 +433,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     )
 
 
-def dedup_keep(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def dedup_keep(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """(id, cluster_id, keep): every corpus doc labeled with its near-dup
     cluster and a keep flag — the "keep one representative per cluster"
     step every dedup pipeline ends with. Singletons (docs in no pair)
@@ -501,7 +446,7 @@ def dedup_keep(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> Dat
     with no size estimate, so the planner never broadcasts it (local
     sessions run with AQE off)."""
     clusters = dup_clusters(pairs)
-    labeled = docs.select(F.col(id_col).cast("long").alias("id")).join(
+    labeled = docs.select(F.col("doc_id").cast("long").alias("id")).join(
         clusters, "id", "left"
     )
     return labeled.select(

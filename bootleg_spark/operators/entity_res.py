@@ -34,23 +34,21 @@ from pyspark.sql import functions as F
 from bootleg_spark.functions.lnrm import lnrm_ascii_col
 
 
-def _char_ngrams(col, n: int = 3):
-    """Distinct character n-gram array of a string column (codegen:
-    sequence + transform + substring). Strings shorter than n yield
+def _char_ngrams(col):
+    """Distinct character 3-gram array of a string column (codegen:
+    sequence + transform + substring). Strings shorter than 3 yield
     the whole string as the single shingle."""
     short = F.array(col)
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.length(col) - (n - 1)),
-            lambda i: col.substr(i, F.lit(n)),
+            F.sequence(F.lit(1), F.length(col) - 2),
+            lambda i: col.substr(i, F.lit(3)),
         )
     )
-    return F.when(F.length(col) < n, short).otherwise(grams)
+    return F.when(F.length(col) < 3, short).otherwise(grams)
 
 
-def block_records(
-    records: DataFrame, id_col: str = "rec_id", name_col: str = "name", ngram: int = 3
-) -> DataFrame:
+def block_records(records: DataFrame) -> DataFrame:
     """(rec_id, name, norm, block, grams, ng): lnrm-normalize the name,
     key the record by the normalized first token, and precompute the
     record's distinct character-n-gram array ONCE here (r07 /
@@ -58,18 +56,18 @@ def block_records(
     AFTER the pair join, so a record in a b-record block paid the
     shingling b−1 times — linear-per-record work executed at pair
     grain. The pair join now ships the packed arrays instead."""
-    norm = lnrm_ascii_col(F.col(name_col))
+    norm = lnrm_ascii_col(F.col("name"))
     out = records.select(
-        id_col,
-        name_col,
+        "rec_id",
+        "name",
         norm.alias("norm"),
         F.split_part(norm, F.lit(" "), F.lit(1)).alias("block"),
     )
-    grams = _char_ngrams(F.col("norm"), ngram)
+    grams = _char_ngrams(F.col("norm"))
     return out.withColumn("grams", grams).withColumn("ng", F.size("grams"))
 
 
-def candidate_pairs(blocked: DataFrame, id_col: str = "rec_id") -> DataFrame:
+def candidate_pairs(blocked: DataFrame) -> DataFrame:
     """(id1, norm1, g1, ng1, id2, norm2, g2, ng2): within-block record
     pairs, id1 < id2 (each unordered pair once), carrying each side's
     gram array from :func:`block_records`. One self-equi-join on the
@@ -78,7 +76,7 @@ def candidate_pairs(blocked: DataFrame, id_col: str = "rec_id") -> DataFrame:
     def side(k):
         return blocked.select(
             F.col("block"),
-            F.col(id_col).alias(f"id{k}"),
+            F.col("rec_id").alias(f"id{k}"),
             F.col("norm").alias(f"norm{k}"),
             F.col("grams").alias(f"g{k}"),
             F.col("ng").alias(f"ng{k}"),
@@ -87,9 +85,9 @@ def candidate_pairs(blocked: DataFrame, id_col: str = "rec_id") -> DataFrame:
     return side(1).join(side(2), "block").where(F.col("id1") < F.col("id2")).drop("block")
 
 
-def verified_pairs(pairs: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
+def verified_pairs(pairs: DataFrame) -> DataFrame:
     """(id1, id2, jaccard): pairs whose normalized names have character-
-    n-gram Jaccard ≥ min_jaccard (rounded to 6). Intersection size via
+    3-gram Jaccard ≥ 0.8 (rounded to 6). Intersection size via
     inclusion–exclusion on distinct-gram counts — no array_intersect
     (engines disagree on its null semantics).
 
@@ -114,13 +112,11 @@ def verified_pairs(pairs: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
         (F.col("n1") + F.col("n2") - F.col("nu")) / F.col("nu"), 6
     )
     return with_sets.select("id1", "id2", jac.alias("jaccard")).where(
-        F.col("jaccard") >= min_jaccard
+        F.col("jaccard") >= 0.8
     )
 
 
-def resolve_records(
-    blocked: DataFrame, matches: DataFrame, id_col: str = "rec_id"
-) -> DataFrame:
+def resolve_records(blocked: DataFrame, matches: DataFrame) -> DataFrame:
     """(rec_id, canon): canonical record id per record — the smallest
     id in its match-graph component; unmatched records map to
     themselves. Components via the dedup suite's pointer jumping."""
@@ -128,13 +124,13 @@ def resolve_records(
 
     comp = connected_components(
         matches.select("id1", "id2"), subj_col="id1", obj_col="id2"
-    ).withColumnRenamed("qid", id_col)
+    ).withColumnRenamed("qid", "rec_id")
     return (
-        blocked.select(id_col)
+        blocked.select("rec_id")
         .distinct()
-        .join(comp, id_col, "left")
+        .join(comp, "rec_id", "left")
         .select(
-            id_col,
-            F.coalesce(F.col("component"), F.col(id_col)).alias("canon"),
+            "rec_id",
+            F.coalesce(F.col("component"), F.col("rec_id")).alias("canon"),
         )
     )

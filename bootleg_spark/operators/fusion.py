@@ -40,36 +40,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def relation_signatures(
-    kg: DataFrame,
-    types: DataFrame,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-    qid_col: str = "qid",
-    type_col: str = "type_name",
-) -> DataFrame:
+def relation_signatures(kg: DataFrame, types: DataFrame) -> DataFrame:
     """(rel, subj_type, obj_type, support, frac): every endpoint-type
     pair observed for each relation, its triple count, and its fraction
     of the relation's typed triples (round 6). Triples whose subject or
     object lacks a type row are excluded from both numerator and
     denominator (inner joins) — untyped endpoints say nothing about the
     signature."""
-    t = types.select(F.col(qid_col).alias("qid"), F.col(type_col).alias("t")).distinct()
+    t = types.select("qid", F.col("type_name").alias("t")).distinct()
     typed = (
-        kg.select(subj_col, pred_col, obj_col)
+        kg.select("subj_qid", "rel", "obj_qid")
         .distinct()
-        .join(t.withColumnRenamed("t", "subj_type"), F.col(subj_col) == F.col("qid"))
+        .join(t.withColumnRenamed("t", "subj_type"), F.col("subj_qid") == F.col("qid"))
         .drop("qid")
-        .join(t.withColumnRenamed("t", "obj_type"), F.col(obj_col) == F.col("qid"))
+        .join(t.withColumnRenamed("t", "obj_type"), F.col("obj_qid") == F.col("qid"))
         .drop("qid")
     )
-    sig = typed.groupBy(pred_col, "subj_type", "obj_type").agg(
+    sig = typed.groupBy("rel", "subj_type", "obj_type").agg(
         F.count(F.lit(1)).cast("long").alias("support")
     )
-    tot = sig.groupBy(pred_col).agg(F.sum("support").alias("n_rel"))
-    return sig.join(tot, pred_col).select(
-        pred_col,
+    tot = sig.groupBy("rel").agg(F.sum("support").alias("n_rel"))
+    return sig.join(tot, "rel").select(
+        "rel",
         "subj_type",
         "obj_type",
         "support",
@@ -77,77 +69,54 @@ def relation_signatures(
     )
 
 
-def type_violations(
-    kg: DataFrame,
-    types: DataFrame,
-    min_frac: float = 0.05,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-    qid_col: str = "qid",
-    type_col: str = "type_name",
-) -> DataFrame:
+def type_violations(kg: DataFrame, types: DataFrame, min_frac: float = 0.05) -> DataFrame:
     """(subj_qid, rel, obj_qid, subj_type, obj_type, sig_frac): triples
     whose endpoint-type pair is RARE for their relation — observed
     signature fraction < min_frac. The signature dim is learned from
     the same KG (self-supervision); a violating triple still appears in
     the signature table, which is why the screen uses a fraction
     threshold rather than absence."""
-    t = types.select(F.col(qid_col).alias("qid"), F.col(type_col).alias("t")).distinct()
+    t = types.select("qid", F.col("type_name").alias("t")).distinct()
     typed = (
-        kg.select(subj_col, pred_col, obj_col)
+        kg.select("subj_qid", "rel", "obj_qid")
         .distinct()
-        .join(t.withColumnRenamed("t", "subj_type"), F.col(subj_col) == F.col("qid"))
+        .join(t.withColumnRenamed("t", "subj_type"), F.col("subj_qid") == F.col("qid"))
         .drop("qid")
-        .join(t.withColumnRenamed("t", "obj_type"), F.col(obj_col) == F.col("qid"))
+        .join(t.withColumnRenamed("t", "obj_type"), F.col("obj_qid") == F.col("qid"))
         .drop("qid")
     )
-    sig = relation_signatures(kg, types, subj_col, pred_col, obj_col, qid_col, type_col)
+    sig = relation_signatures(kg, types)
     return typed.join(
         F.broadcast(sig.where(F.col("frac") < min_frac)),
-        [pred_col, "subj_type", "obj_type"],
+        ["rel", "subj_type", "obj_type"],
     ).select(
-        subj_col,
-        pred_col,
-        obj_col,
+        "subj_qid",
+        "rel",
+        "obj_qid",
         "subj_type",
         "obj_type",
         F.col("frac").alias("sig_frac"),
     )
 
 
-def functional_conflicts(
-    kg: DataFrame,
-    functional_rels: list[str],
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def functional_conflicts(kg: DataFrame, functional_rels: list[str]) -> DataFrame:
     """(subj_qid, rel, n_objects, objects): subjects asserting more than
     one object under a relation declared functional. ``objects`` is the
     sorted distinct object list (deterministic row content)."""
     return (
-        kg.select(subj_col, pred_col, obj_col)
-        .where(F.col(pred_col).isin(functional_rels))
+        kg.select("subj_qid", "rel", "obj_qid")
+        .where(F.col("rel").isin(functional_rels))
         .distinct()
-        .groupBy(subj_col, pred_col)
+        .groupBy("subj_qid", "rel")
         .agg(
-            F.countDistinct(obj_col).cast("long").alias("n_objects"),
-            F.array_sort(F.collect_set(obj_col)).alias("objects"),
+            F.countDistinct("obj_qid").cast("long").alias("n_objects"),
+            F.array_sort(F.collect_set("obj_qid")).alias("objects"),
         )
         .where(F.col("n_objects") > 1)
     )
 
 
-def resolve_functional(
-    kg: DataFrame,
-    evidence: DataFrame,
-    functional_rels: list[str],
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-    weight_col: str = "weight",
-) -> DataFrame:
+def resolve_functional(kg: DataFrame, evidence: DataFrame, functional_rels: list[str]) -> DataFrame:
     """(subj_qid, rel, obj_qid, weight): one object per (subj, rel) for
     functional relations — the max-evidence object, ties broken by
     smallest obj_qid (deterministic) — non-functional triples passed
@@ -159,45 +128,39 @@ def resolve_functional(
     asc), i.e. one map-side-combinable aggregation at (subj, rel)
     grain — no window sort, no skew from hub subjects."""
     e = evidence.select(
-        F.col(subj_col), F.col(pred_col), F.col(obj_col), F.col(weight_col)
+        F.col("subj_qid"), F.col("rel"), F.col("obj_qid"), F.col("weight")
     )
     weighted = (
-        kg.select(subj_col, pred_col, obj_col)
+        kg.select("subj_qid", "rel", "obj_qid")
         .distinct()
-        .join(e, [subj_col, pred_col, obj_col], "left")
-        .withColumn(weight_col, F.coalesce(F.col(weight_col), F.lit(0.0)))
+        .join(e, ["subj_qid", "rel", "obj_qid"], "left")
+        .withColumn("weight", F.coalesce(F.col("weight"), F.lit(0.0)))
     )
-    func = weighted.where(F.col(pred_col).isin(functional_rels))
+    func = weighted.where(F.col("rel").isin(functional_rels))
     # max_by with an explicit orderable struct: weight desc via negation
     # is avoided (floats) — use (weight, reversed-string) pair instead:
     # Spark's max_by keeps the row with the greatest struct, so order by
     # (weight asc → greatest = max weight, then obj desc → we need MIN
     # obj on ties). Encode tie-break by comparing on (weight, neg-obj)
     # via a second aggregation-free trick: min_by over (neg weight, obj).
-    picked = func.groupBy(subj_col, pred_col).agg(
+    picked = func.groupBy("subj_qid", "rel").agg(
         F.min_by(
-            F.struct(F.col(obj_col), F.col(weight_col)),
-            F.struct((-F.col(weight_col)).alias("nw"), F.col(obj_col).alias("o")),
+            F.struct(F.col("obj_qid"), F.col("weight")),
+            F.struct((-F.col("weight")).alias("nw"), F.col("obj_qid").alias("o")),
         ).alias("best")
     )
     resolved = picked.select(
-        subj_col,
-        pred_col,
-        F.col("best")[obj_col].alias(obj_col),
-        F.col("best")[weight_col].alias(weight_col),
+        "subj_qid",
+        "rel",
+        F.col("best")["obj_qid"].alias("obj_qid"),
+        F.col("best")["weight"].alias("weight"),
     )
-    rest = weighted.where(~F.col(pred_col).isin(functional_rels))
+    rest = weighted.where(~F.col("rel").isin(functional_rels))
     return resolved.unionByName(rest)
 
 
-def observation_spans(
-    attestations: DataFrame,
-    pages: DataFrame,
-    doc_col: str = "doc_id",
-    ts_col: str = "warc_ts",
-    claim_cols: tuple[str, ...] = ("subj", "pred", "obj"),
-) -> DataFrame:
-    """(*claim_cols, first_seen, last_seen, n_pages): temporal scoping
+def observation_spans(attestations: DataFrame, pages: DataFrame) -> DataFrame:
+    """(subj, pred, obj, first_seen, last_seen, n_pages): temporal scoping
     of extracted facts — when the crawl first and last observed each
     triple, and on how many distinct pages. ``attestations`` is
     page-grain (doc_id, triple); ``pages`` carries the crawl timestamp.
@@ -205,27 +168,22 @@ def observation_spans(
     (min/max/count are map-side combinable); at 10^12 pages the join is
     a straight co-partitionable equi-join on the page id, and the
     output is |distinct triples| rows."""
-    keys = list(claim_cols)
-    ts = pages.select(F.col(doc_col), F.col(ts_col))
+    keys = ["subj", "pred", "obj"]
+    ts = pages.select(F.col("doc_id"), F.col("warc_ts"))
     return (
-        attestations.select(doc_col, *keys)
+        attestations.select("doc_id", *keys)
         .distinct()
-        .join(ts, doc_col)
+        .join(ts, "doc_id")
         .groupBy(*keys)
         .agg(
-            F.min(ts_col).alias("first_seen"),
-            F.max(ts_col).alias("last_seen"),
-            F.countDistinct(doc_col).cast("long").alias("n_pages"),
+            F.min("warc_ts").alias("first_seen"),
+            F.max("warc_ts").alias("last_seen"),
+            F.countDistinct("doc_id").cast("long").alias("n_pages"),
         )
     )
 
 
-def source_trust(
-    claims: DataFrame,
-    iters: int = 3,
-    source_col: str = "source",
-    claim_cols: tuple[str, ...] = ("subj_qid", "rel", "obj_qid"),
-) -> tuple[DataFrame, DataFrame]:
+def source_trust(claims: DataFrame, iters: int = 3) -> tuple[DataFrame, DataFrame]:
     """Iterative source-reliability estimation over a claim bipartite
     graph (the Sums/HITS instance of truth discovery; the per-source
     prior Knowledge Vault feeds its fusion layer).
@@ -237,7 +195,7 @@ def source_trust(
     (fixed-iteration like :func:`~bootleg_spark.operators.graph.pagerank`
     so the oracle can unroll the same chain).
 
-    Returns (trust, conf): (source, trust) and (*claim_cols, conf),
+    Returns (trust, conf): (source, trust) and (subj_qid, rel, obj_qid, conf),
     both from the final round, unrounded.
 
     Scale shape: per round two keyed aggregations (claim grain, source
@@ -246,16 +204,16 @@ def source_trust(
     registered domains at web scale, ≪ claims) is lazily
     localCheckpoint-ed per round so the logical plan stays O(1) per
     iteration (the lineage rule of :func:`ids.fixpoint`)."""
-    keys = list(claim_cols)
+    keys = ["subj_qid", "rel", "obj_qid"]
     # the claim set is re-joined twice per round — materialize it once
     # (its upstream is the whole extraction pipeline; without this the
     # lineage re-executes 2×iters times: measured 13 s → ~5 s at sf0.1)
-    c = claims.select(source_col, *keys).distinct().localCheckpoint(eager=False)
-    trust = c.select(source_col).distinct().withColumn("trust", F.lit(1.0))
+    c = claims.select("source", *keys).distinct().localCheckpoint(eager=False)
+    trust = c.select("source").distinct().withColumn("trust", F.lit(1.0))
     conf = None
     for _ in range(iters):
         raw_conf = (
-            c.join(trust, source_col)
+            c.join(trust, "source")
             .groupBy(*keys)
             .agg(F.sum("trust").alias("rc"))
         )
@@ -264,12 +222,12 @@ def source_trust(
             *keys, (F.col("rc") / F.col("m")).alias("conf")
         )
         raw_trust = (
-            c.join(conf, keys).groupBy(source_col).agg(F.sum("conf").alias("rt"))
+            c.join(conf, keys).groupBy("source").agg(F.sum("conf").alias("rt"))
         )
         mt = raw_trust.agg(F.max("rt").alias("m"))
         trust = (
             raw_trust.crossJoin(F.broadcast(mt))
-            .select(source_col, (F.col("rt") / F.col("m")).alias("trust"))
+            .select("source", (F.col("rt") / F.col("m")).alias("trust"))
             .localCheckpoint(eager=False)
         )
     return trust, conf

@@ -22,14 +22,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# pagerank: the fixed iteration count and damping factor the oracle unrolls
+PAGERANK_ITERS = 10
+DAMPING = 0.85
+# transductive_split: the md5 draw's seed and its train / valid fractions
+SPLIT_SEED = 13
+TRAIN_FRAC = 0.8
+VALID_FRAC = 0.1
 
-def khop_neighborhood(
-    triples: DataFrame,
-    seeds: DataFrame,
-    k: int,
-    subj_col: str = "subj_qid",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+
+def khop_neighborhood(triples: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
     """(qid, hop): every entity reachable from ``seeds`` (a one-column
     ``qid`` frame, hop 0) following edges subj→obj in at most ``k``
     hops, labeled with its MINIMUM hop. BFS invariant: a node enters
@@ -44,7 +46,7 @@ def khop_neighborhood(
     )
     frontier = visited
     edges = triples.select(
-        F.col(subj_col).alias("_s"), F.col(obj_col).alias("_o")
+        F.col("subj_qid").alias("_s"), F.col("obj_qid").alias("_o")
     )
     for h in range(1, k + 1):
         nxt = (
@@ -66,19 +68,15 @@ def khop_neighborhood(
     return visited
 
 
-def degree_stats(
-    triples: DataFrame,
-    subj_col: str = "subj_qid",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def degree_stats(triples: DataFrame) -> DataFrame:
     """(qid, out_deg, in_deg, total_deg): per-entity edge counts —
     hub detection, and the skew map for every qid-keyed join
     downstream. Two map-side-combined aggregations + one full outer
     join at entity grain (entity cardinality ≪ edge cardinality)."""
-    out_d = triples.groupBy(F.col(subj_col).alias("qid")).agg(
+    out_d = triples.groupBy(F.col("subj_qid").alias("qid")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
-    in_d = triples.groupBy(F.col(obj_col).alias("qid")).agg(
+    in_d = triples.groupBy(F.col("obj_qid").alias("qid")).agg(
         F.count(F.lit(1)).alias("in_deg")
     )
     return (
@@ -92,13 +90,7 @@ def degree_stats(
     )
 
 
-def pagerank(
-    triples: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-    subj_col: str = "subj_qid",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def pagerank(triples: DataFrame) -> DataFrame:
     """(qid, rank): fixed-iteration PageRank over the DISTINCT edge set
     subj→obj — entity centrality, the standard importance prior for KG
     consumers (and exactly the popularity signal Bootleg's tail-slice
@@ -116,7 +108,7 @@ def pagerank(
     UNROLLED as chained CTEs (recursive CTEs cannot aggregate over
     their own reference)."""
     edges = (
-        triples.select(F.col(subj_col).alias("_s"), F.col(obj_col).alias("_o"))
+        triples.select(F.col("subj_qid").alias("_s"), F.col("obj_qid").alias("_o"))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -135,14 +127,14 @@ def pagerank(
     edges = edges.join(out_deg, "_s").localCheckpoint(eager=False)
     zero = nodes.select("qid", F.lit(0.0).alias("_c"))
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(n_iter):
+    for _ in range(PAGERANK_ITERS):
         ranks = (
             edges.join(ranks.withColumnRenamed("qid", "_s"), "_s")
             .select(F.col("_o").alias("qid"), (F.col("rank") / F.col("_deg")).alias("_c"))
             .unionByName(zero)
             .groupBy("qid")
             .agg(
-                (F.lit((1.0 - damping) / n) + F.lit(damping) * F.sum("_c")).alias("rank")
+                (F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * F.sum("_c")).alias("rank")
             )
             .localCheckpoint(eager=False)
         )
@@ -182,11 +174,19 @@ def connected_components(
     )
 
 
-def triangle_counts(
-    triples: DataFrame,
-    subj_col: str = "subj_qid",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def _undirected_edges(triples: DataFrame) -> DataFrame:
+    """(a, b), a < b: the distinct undirected simple edges of the
+    subj_qid–obj_qid graph (direction and predicates ignored, self-loops
+    dropped)."""
+    e = triples.select(F.col("subj_qid").alias("_s"), F.col("obj_qid").alias("_o"))
+    return (
+        e.where(F.col("_s") != F.col("_o"))
+        .select(F.least("_s", "_o").alias("a"), F.greatest("_s", "_o").alias("b"))
+        .distinct()
+    )
+
+
+def triangle_counts(triples: DataFrame) -> DataFrame:
     """(qid, triangles): per-entity triangle membership over the
     UNDIRECTED simple graph (edge direction and predicates ignored,
     self-loops and parallel edges collapsed) — the local-clustering
@@ -205,14 +205,7 @@ def triangle_counts(
     Σ d² blow-up of the naive neighbor join — the worst skew key is
     structurally capped, not salted after the fact. Three shuffles
     total: undirected dedup, degree join, wedge-closing equi-join."""
-    e = triples.select(F.col(subj_col).alias("_s"), F.col(obj_col).alias("_o"))
-    und = (
-        e.where(F.col("_s") != F.col("_o"))
-        .select(
-            F.least("_s", "_o").alias("a"), F.greatest("_s", "_o").alias("b")
-        )
-        .distinct()
-    )
+    und = _undirected_edges(triples)
     deg = (
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
@@ -272,9 +265,6 @@ def negative_samples(
     entities: DataFrame,
     k: int = 3,
     seed: int = 7,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
 ) -> DataFrame:
     """(subj_qid, rel, obj_qid, neg_idx, corrupted): TransE-style
     negative triples for KG-embedding training — for each DISTINCT
@@ -324,11 +314,7 @@ def negative_samples(
             "subj_qid string, rel string, obj_qid string, "
             "neg_idx long, corrupted string",
         )
-    pos = triples.select(
-        F.col(subj_col).alias("subj_qid"),
-        F.col(pred_col).alias("rel"),
-        F.col(obj_col).alias("obj_qid"),
-    ).distinct()
+    pos = triples.select("subj_qid", "rel", "obj_qid").distinct()
     key = F.concat_ws(
         ":", "subj_qid", "rel", "obj_qid", F.col("neg_idx").cast("string")
     )
@@ -373,12 +359,7 @@ def negative_samples(
     )
 
 
-def relation_cardinality(
-    triples: DataFrame,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def relation_cardinality(triples: DataFrame) -> DataFrame:
     """(rel, n_triples, n_heads, n_tails, tph, hpt, p_head_corrupt,
     cardinality): per-relation mapping statistics over the DISTINCT
     triple set — tph = triples per distinct head, hpt = triples per
@@ -397,9 +378,9 @@ def relation_cardinality(
     the edge mass aggregates map-side first; output cardinality =
     |relations| (tiny)."""
     pos = triples.select(
-        F.col(subj_col).alias("s"),
-        F.col(pred_col).alias("rel"),
-        F.col(obj_col).alias("o"),
+        F.col("subj_qid").alias("s"),
+        "rel",
+        F.col("obj_qid").alias("o"),
     ).distinct()
     agg = pos.groupBy("rel").agg(
         F.count(F.lit(1)).cast("long").alias("n_triples"),
@@ -426,12 +407,7 @@ def relation_cardinality(
     )
 
 
-def link_predict_scores(
-    triples: DataFrame,
-    max_degree: int | None = None,
-    subj_col: str = "subj_qid",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def link_predict_scores(triples: DataFrame, max_degree: int | None = None) -> DataFrame:
     """(qid_a, qid_b, common_neighbors, aa_score): common-neighbor and
     Adamic–Adar scores for every NON-edge pair of the undirected simple
     KG with at least one shared neighbor — the classical KG-completion
@@ -449,14 +425,7 @@ def link_predict_scores(
     pairs; capping is what production link-prediction does (and the
     capped run scores a strict subset of wedges, never inventing
     pairs). Uncapped remains exact for the oracle."""
-    e = triples.select(F.col(subj_col).alias("_s"), F.col(obj_col).alias("_o"))
-    und = (
-        e.where(F.col("_s") != F.col("_o"))
-        .select(
-            F.least("_s", "_o").alias("a"), F.greatest("_s", "_o").alias("b")
-        )
-        .distinct()
-    )
+    und = _undirected_edges(triples)
     adj = und.select(F.col("a").alias("m"), F.col("b").alias("v")).unionByName(
         und.select(F.col("b").alias("m"), F.col("a").alias("v"))
     )
@@ -482,22 +451,14 @@ def link_predict_scores(
     )
 
 
-def transductive_split(
-    triples: DataFrame,
-    train_frac: float = 0.8,
-    valid_frac: float = 0.1,
-    seed: int = 13,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def transductive_split(triples: DataFrame) -> DataFrame:
     """(subj_qid, rel, obj_qid, split): deterministic train/valid/test
     split of the DISTINCT triple set under the TRANSDUCTIVE contract
     KG-embedding eval requires (the FB15k/WN18 construction): every
     entity and every relation appearing in valid/test must also appear
     in train, else the model has no embedding to score with. One-pass
     demotion semantics (deterministic, engine-portable): an md5 uniform
-    draw buckets each triple at train_frac / train_frac+valid_frac;
+    draw buckets each triple at TRAIN_FRAC / TRAIN_FRAC + VALID_FRAC;
     any valid/test triple touching an entity or relation absent from
     the TENTATIVE train set is demoted to train. Demotion only ever
     grows train, so the final split still satisfies the contract
@@ -508,16 +469,10 @@ def transductive_split(
     silently reshuffle the split); the tentative-train entity and
     relation vocabularies are O(V) / O(R) dims, broadcast into three
     membership lookups; one distinct shuffle on the triple key."""
-    if not (0 < train_frac < 1 and 0 < valid_frac < 1 - train_frac):
-        raise ValueError("need 0 < train_frac, train_frac + valid_frac < 1")
-    pos = triples.select(
-        F.col(subj_col).alias("subj_qid"),
-        F.col(pred_col).alias("rel"),
-        F.col(obj_col).alias("obj_qid"),
-    ).distinct()
+    pos = triples.select("subj_qid", "rel", "obj_qid").distinct()
     hexs = F.md5(
         F.concat(
-            F.lit(f"{seed}:"),
+            F.lit(f"{SPLIT_SEED}:"),
             F.concat_ws(":", "subj_qid", "rel", "obj_qid"),
         )
     )
@@ -526,8 +481,8 @@ def transductive_split(
     )
     tent = pos.withColumn(
         "_tent",
-        F.when(u < train_frac, F.lit("train"))
-        .when(u < train_frac + valid_frac, F.lit("valid"))
+        F.when(u < TRAIN_FRAC, F.lit("train"))
+        .when(u < TRAIN_FRAC + VALID_FRAC, F.lit("valid"))
         .otherwise(F.lit("test")),
     ).localCheckpoint()  # multi-branch reuse without a leaked cache entry
     tr = tent.where(F.col("_tent") == "train")
@@ -566,14 +521,7 @@ def transductive_split(
     )
 
 
-def ranking_eval_popularity(
-    triples: DataFrame,
-    splits: DataFrame,
-    ks: tuple[int, ...] = (1, 3, 10),
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def ranking_eval_popularity(triples: DataFrame, splits: DataFrame) -> DataFrame:
     """(rel, side, n_test, mrr, hits_1, hits_3, hits_10): FILTERED
     link-prediction ranking metrics (the FB15k eval protocol, Bordes
     et al. NIPS'13 §5) of the frequency baseline — every trained
@@ -599,9 +547,9 @@ def ranking_eval_popularity(
     from bootleg_spark.operators.ids import dense_ids
 
     pos = triples.select(
-        F.col(subj_col).alias("s"),
-        F.col(pred_col).alias("rel"),
-        F.col(obj_col).alias("o"),
+        F.col("subj_qid").alias("s"),
+        "rel",
+        F.col("obj_qid").alias("o"),
     ).distinct()
     freq = (
         pos.select(F.col("s").alias("qid"))
@@ -663,17 +611,12 @@ def ranking_eval_popularity(
         F.round(
             F.avg(F.when(F.col("rank") <= k, 1.0).otherwise(0.0)), 6
         ).alias(f"hits_{k}")
-        for k in ks
+        for k in (1, 3, 10)
     ]
     return ranked.groupBy("rel", "side").agg(*aggs)
 
 
-def path_motifs(
-    triples: DataFrame,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def path_motifs(triples: DataFrame) -> DataFrame:
     """(pred1, pred2, n_paths): census of 2-hop typed paths
     s ─pred1→ m ─pred2→ o with s ≠ o — the motif profile consumers use
     to find compositional relations (works_with ∘ located_in ⇒
@@ -687,14 +630,14 @@ def path_motifs(
     skew-join-split case (both sides large, same key histogram), and
     the degree_stats screen names the offenders in advance."""
     r1 = triples.select(
-        F.col(subj_col).alias("_s"),
-        F.col(pred_col).alias("pred1"),
-        F.col(obj_col).alias("_m"),
+        F.col("subj_qid").alias("_s"),
+        F.col("rel").alias("pred1"),
+        F.col("obj_qid").alias("_m"),
     )
     r2 = triples.select(
-        F.col(subj_col).alias("_m"),
-        F.col(pred_col).alias("pred2"),
-        F.col(obj_col).alias("_o"),
+        F.col("subj_qid").alias("_m"),
+        F.col("rel").alias("pred2"),
+        F.col("obj_qid").alias("_o"),
     )
     return (
         r1.join(r2, "_m")

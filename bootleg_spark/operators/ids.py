@@ -25,18 +25,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dense_ids(
-    df: DataFrame,
-    order_col: str,
-    id_col: str = "dense_id",
-    start: int = 0,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def dense_ids(df: DataFrame, order_col: str, id_col: str = "dense_id", start: int = 0) -> DataFrame:
     """Add ``id_col`` = ``start`` + 0-based rank of ``order_col``.
 
     ``order_col`` must be unique for the ids to be deterministic.
     """
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     # lazy localCheckpoint: the ranged frame feeds two actions (counts,
     # then the final plan) — the counts materialize it once and the
     # final plan reads those blocks, so both see identical partition

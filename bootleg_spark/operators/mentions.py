@@ -288,43 +288,29 @@ def max_alias_words(aliases) -> int:
     return max((len(a.split()) for a in aliases), default=1)
 
 
-def _ngram_spans(alias_set_bc, min_alias_len: int, max_alias_len: int):
+def _ngram_spans(alias_set_bc):
     """``make_spans`` over the broadcast alias set. The word bound is
     taken here, once, on the driver; a batch only reads the broadcast."""
     dict_w = max_alias_words(alias_set_bc.value)
 
     def make_spans():
         aliases = alias_set_bc.value
-        return lambda t: ngram_extract_aliases(
-            t, aliases, min_alias_len, max_alias_len, dict_max_words=dict_w
-        )
+        return lambda t: ngram_extract_aliases(t, aliases, dict_max_words=dict_w)
 
     return make_spans
 
 
-def extract_mentions_ngram(
-    df: DataFrame,
-    alias_set_bc,
-    text_col: str = "text",
-    min_alias_len: int = 1,
-    max_alias_len: int = 6,
-) -> DataFrame:
+def extract_mentions_ngram(df: DataFrame, alias_set_bc, text_col: str = "text") -> DataFrame:
     """Explode each row into mention rows via the n-gram extractor.
 
     ``alias_set_bc`` is a ``sc.broadcast``-ed frozenset of lnrm aliases —
     Spark's shared read-only memory, replacing the reference's mmap'd
     marisa trie shared across pool workers (extract_mentions.py:130).
     """
-    return _explode_mentions(df, text_col, _ngram_spans(alias_set_bc, min_alias_len, max_alias_len))
+    return _explode_mentions(df, text_col, _ngram_spans(alias_set_bc))
 
 
-def extract_mentions_ngram_from_html(
-    df: DataFrame,
-    alias_set_bc,
-    html_col: str = "html",
-    min_alias_len: int = 1,
-    max_alias_len: int = 6,
-) -> DataFrame:
+def extract_mentions_ngram_from_html(df: DataFrame, alias_set_bc) -> DataFrame:
     """:func:`extract_mentions_ngram` with the boilerplate strip FUSED
     into the same pandas UDF (guide §4.1: each chained ArrowEvalPython
     node spawns its own Python worker per task and round-trips the page
@@ -333,20 +319,16 @@ def extract_mentions_ngram_from_html(
     is deterministic and is exactly what the staged plan ran first."""
     from bootleg_spark.functions.textproc import extract_html_text
 
-    ngram_spans = _ngram_spans(alias_set_bc, min_alias_len, max_alias_len)
+    ngram_spans = _ngram_spans(alias_set_bc)
 
     def make_spans():
         spans = ngram_spans()
         return lambda h: spans(extract_html_text(bytes(h)))
 
-    return _explode_mentions(df, html_col, make_spans)
+    return _explode_mentions(df, "html", make_spans)
 
 
-def extract_mentions_word(
-    df: DataFrame,
-    alias_df: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def extract_mentions_word(df: DataFrame, alias_df: DataFrame) -> DataFrame:
     """Relational single-token mention extraction.
 
     posexplode(split(text)) → normalize → broadcast hash join with the
@@ -364,7 +346,7 @@ def extract_mentions_word(
     fast_dim = alias_df.select(F.col("alias").alias("_fast_alias"))
     slow_dim = alias_df.select(F.col("alias").alias("_slow_alias"))
     words = df.select(
-        "*", F.posexplode(F.split(F.col(text_col), " ")).alias("mention_pos", "_word")
+        "*", F.posexplode(F.split(F.col("text"), " ")).alias("mention_pos", "_word")
     )
     j1 = words.join(
         F.broadcast(fast_dim), F.lower(F.col("_word")) == F.col("_fast_alias"), "left"
@@ -424,7 +406,7 @@ def regex_ner_spans(text: str) -> list[tuple[str, int, int, str]]:
     return spans
 
 
-def gazetteer_ner_fn(gazetteer: dict[str, str], max_len: int = 6):
+def gazetteer_ner_fn(gazetteer: dict[str, str]):
     """Build a tagger from a surface->label gazetteer (lnrm'd keys):
     greedy longest-first scan, the deterministic stand-in this
     environment uses for spaCy NER (spaCy absent — SURVEY §7.4). The
@@ -436,7 +418,7 @@ def gazetteer_ner_fn(gazetteer: dict[str, str], max_len: int = 6):
         spans: list[tuple[str, int, int, str]] = []
         n_toks = len(toks)
         taken = [False] * n_toks
-        for n in range(min(max_len, n_toks), 0, -1):
+        for n in range(min(6, n_toks), 0, -1):
             for start in range(0, n_toks - n + 1):
                 if any(taken[start : start + n]):
                     continue
@@ -455,14 +437,7 @@ def gazetteer_ner_fn(gazetteer: dict[str, str], max_len: int = 6):
     return _tag
 
 
-def ner_extract_aliases(
-    text: str,
-    all_aliases,
-    ner_fn,
-    min_alias_len: int = 1,
-    max_alias_len: int = 6,
-    ner_classes: frozenset[str] = NER_CLASSES,
-) -> list[tuple[str, int, int]]:
+def ner_extract_aliases(text: str, all_aliases, ner_fn) -> list[tuple[str, int, int]]:
     """NER-driven mention extraction (spacy_extract_aliases,
     mention_extractor_utils.py:207-268): keep tagged spans whose class
     is in NER_CLASSES, lnrm them, try the possessive merge/strip
@@ -471,11 +446,11 @@ def ner_extract_aliases(
     sort by span."""
     used: list[tuple[str, int, int]] = []
     for etext, start, end, label in ner_fn(text):
-        if label not in ner_classes:
+        if label not in NER_CLASSES:
             continue
         gram = lnrm(etext)
         n_words = len(gram.split())
-        if n_words < min_alias_len or n_words > max_alias_len:
+        if n_words < 1 or n_words > 6:
             continue
         final = None
         if gram in all_aliases:
@@ -496,14 +471,7 @@ def ner_extract_aliases(
     return sorted(used, key=lambda x: (x[1], x[2]))
 
 
-def extract_mentions_ner(
-    df: DataFrame,
-    alias_set_bc,
-    gazetteer_bc=None,
-    text_col: str = "text",
-    min_alias_len: int = 1,
-    max_alias_len: int = 6,
-) -> DataFrame:
+def extract_mentions_ner(df: DataFrame, alias_set_bc, gazetteer_bc=None) -> DataFrame:
     """Explode rows into NER-extracted mention rows — the third
     extractor strategy (MENTION_EXTRACTOR_OPTIONS['spacy'],
     extract_mentions.py:27-30). ``gazetteer_bc`` (broadcast
@@ -513,22 +481,18 @@ def extract_mentions_ner(
     def make_spans():
         aliases = alias_set_bc.value
         ner_fn = (
-            gazetteer_ner_fn(gazetteer_bc.value, max_alias_len)
+            gazetteer_ner_fn(gazetteer_bc.value)
             if gazetteer_bc is not None
             else regex_ner_spans
         )
-        return lambda t: ner_extract_aliases(
-            t, aliases, ner_fn, min_alias_len, max_alias_len
-        )
+        return lambda t: ner_extract_aliases(t, aliases, ner_fn)
 
-    return _explode_mentions(df, text_col, make_spans)
+    return _explode_mentions(df, "text", make_spans)
 
 
 def extract_mentions_ngram_relational_multi(
     df: DataFrame,
     alias_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_alias_len: int = 1,
     max_alias_len: int = 6,
 ) -> DataFrame:
@@ -584,7 +548,7 @@ def extract_mentions_ngram_relational_multi(
         return (~w.isin(*stop)) & (~w.rlike("^[0-9]+$")) & (F.length(w) > 0)
 
     base = (
-        df.withColumn("_arr", F.split(F.col(text_col), " "))
+        df.withColumn("_arr", F.split(F.col("text"), " "))
         .withColumn("_arrl", F.transform(F.col("_arr"), F.lower))
         .withColumn("_keep", F.transform(F.col("_arrl"), nounish))
         .withColumn("_len", F.size(F.col("_arr")))
@@ -655,12 +619,12 @@ def extract_mentions_ngram_relational_multi(
     # (n desc, i asc), fold keeping non-overlapping token ranges. The
     # fold is an interpreted HOF but runs over dict-MATCHED candidates
     # only (a handful per document).
-    per_doc = hits.groupBy(id_col).agg(
+    per_doc = hits.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.struct((-n).alias("negn"), i.alias("i"), n.alias("n"), F.col("_gram").alias("g")))
         ).alias("_cands"),
         F.first("_arr").alias("_arr"),
-        *[F.first(c).alias(c) for c in df.columns if c != id_col],
+        *[F.first(c).alias(c) for c in df.columns if c != "doc_id"],
     )
     empty = F.array().cast(
         "array<struct<negn:int,i:int,n:int,g:string>>"
@@ -681,7 +645,7 @@ def extract_mentions_ngram_relational_multi(
     gram_len = F.length(F.concat_ws(" ", F.slice(F.col("_arr"), mi + 1, mn)))
     from pyspark.sql import Window as _W
 
-    w = _W.partitionBy(id_col).orderBy(mi)
+    w = _W.partitionBy("doc_id").orderBy(mi)
     return (
         out.withColumn("char_start", char_start.cast("int"))
         .withColumn("char_end", (F.col("char_start") + gram_len).cast("int"))
@@ -700,7 +664,6 @@ def extract_mentions_ngram_relational(
     df: DataFrame,
     alias_df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """EXACT ngram-extractor semantics as pure JVM expressions, valid
     on rows the caller guards to be single-spaced alnum words
@@ -756,7 +719,7 @@ def extract_mentions_ngram_relational(
     )
     from pyspark.sql import Window as _W
 
-    w = _W.partitionBy(id_col).orderBy("_tok_idx")
+    w = _W.partitionBy("doc_id").orderBy("_tok_idx")
     return (
         hits.withColumn("char_start", char_start.cast("int"))
         .withColumn("char_end", (F.col("char_start") + F.length("_w")).cast("int"))

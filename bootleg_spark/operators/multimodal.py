@@ -6,7 +6,7 @@ pipelines carry images/audio/video as binary columns. Here the pages
 table's ``html`` binary is the resident example payload; the same
 plumbing (schema, batch shape, mapInPandas iterator) applies to any
 media column. No image/audio decoder ships with the package: a real
-one plugs into :func:`extract_media_features` through its ``decoder``
+one plugs into :func:`resize_media` through its ``decoder``
 argument, and the Spark-side dataflow (partitioning, UDF signature,
 batched Arrow transfer) is real and tested.
 """
@@ -30,63 +30,52 @@ _MAGIC = [
 _TEXT_MAGIC = [("<htm", "html"), ("<!do", "html")]
 
 
-def media_metadata(df: DataFrame, bin_col: str = "html", id_col: str = "url") -> DataFrame:
-    """(id, n_bytes, kind): typed metadata over an opaque binary column —
+def media_metadata(df: DataFrame) -> DataFrame:
+    """(id, n_bytes, kind): typed metadata over the opaque ``html``
+    binary column, keyed by ``url`` —
     pure JVM expressions (length + hex/text prefix compare), no Python."""
     kind = F.lit("unknown")
-    text_prefix = F.lower(F.substring(F.col(bin_col).cast("string"), 1, 4))
+    text_prefix = F.lower(F.substring(F.col("html").cast("string"), 1, 4))
     for magic, name in _TEXT_MAGIC:
         kind = F.when(text_prefix.startswith(magic), name).otherwise(kind)
     for magic, name in _MAGIC:
-        hex_prefix = F.hex(F.expr(f"substring({bin_col}, 1, {len(magic)})"))
+        hex_prefix = F.hex(F.expr(f"substring(html, 1, {len(magic)})"))
         kind = F.when(hex_prefix == magic.hex().upper(), name).otherwise(kind)
     return df.select(
-        F.col(id_col).alias("id"),
-        F.length(F.col(bin_col)).cast("long").alias("n_bytes"),
+        F.col("url").alias("id"),
+        F.length(F.col("html")).cast("long").alias("n_bytes"),
         kind.alias("kind"),
     )
 
 
-def extract_media_features(
-    df: DataFrame,
-    bin_col: str = "html",
-    id_col: str = "url",
-    dim: int = 8,
-    decoder=None,
-) -> DataFrame:
-    """Batched media feature extraction over a binary column.
+def extract_media_features(df: DataFrame, dim: int = 8) -> DataFrame:
+    """Batched media feature extraction over the ``html`` binary column.
 
-    ``mapInPandas`` iterator form: one decoder init per partition, Arrow
-    batches in/out — the shape a real (expensive) image model needs.
-    The default "decoder" is a deterministic byte-histogram feature (a
-    stand-in keeping the dataflow testable); pass ``decoder`` to use a
-    real one.
+    ``mapInPandas`` iterator form, Arrow batches in/out — the shape a
+    real (expensive) image model needs. The feature is a deterministic
+    ``dim``-bin byte histogram (a stand-in keeping the dataflow
+    testable).
     """
     schema = f"id string, feat array<double>"
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        # per-partition init happens HERE (model load in a real pipeline)
-        dec = decoder
         for pdf in batches:
             feats = []
-            for payload in pdf[bin_col]:
-                if dec is not None:
-                    feats.append(dec(payload))
-                else:
-                    # vectorized byte histogram: frombuffer+bincount
-                    # measured 13× a per-byte Python loop on 4 KB
-                    # payloads (377 → 28 µs/row; the gap widens with
-                    # payload size) and bit-identical (integer-valued
-                    # counts, same normalizing division)
-                    arr = np.frombuffer(bytes(payload or b""), dtype=np.uint8)
-                    hist = np.bincount(arr % dim, minlength=dim).astype(np.float64)
-                    total = hist.sum() or 1.0
-                    feats.append((hist / total).tolist())
-            yield pd.DataFrame({"id": pdf[id_col], "feat": feats})
+            for payload in pdf["html"]:
+                # vectorized byte histogram: frombuffer+bincount
+                # measured 13× a per-byte Python loop on 4 KB
+                # payloads (377 → 28 µs/row; the gap widens with
+                # payload size) and bit-identical (integer-valued
+                # counts, same normalizing division)
+                arr = np.frombuffer(bytes(payload or b""), dtype=np.uint8)
+                hist = np.bincount(arr % dim, minlength=dim).astype(np.float64)
+                total = hist.sum() or 1.0
+                feats.append((hist / total).tolist())
+            yield pd.DataFrame({"id": pdf["url"], "feat": feats})
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return df.select("url", "html").mapInPandas(_extract, schema=schema)
 
 
 def fake_decode_grayscale(payload: bytes):
@@ -107,8 +96,6 @@ def fake_decode_grayscale(payload: bytes):
 
 def resize_media(
     df: DataFrame,
-    bin_col: str = "html",
-    id_col: str = "url",
     out_h: int = 4,
     out_w: int = 4,
     decoder=fake_decode_grayscale,
@@ -126,7 +113,7 @@ def resize_media(
         dec = decoder  # per-partition init point (model/codec load)
         for pdf in batches:
             out = []
-            for payload in pdf[bin_col]:
+            for payload in pdf["html"]:
                 img = dec(payload)
                 h, w = img.shape[:2]
                 if h == 0 or w == 0:
@@ -136,29 +123,24 @@ def resize_media(
                 cols = (np.arange(out_w) * w) // out_w
                 small = img[np.ix_(rows, cols)].astype(np.float64) / 255.0
                 out.append([round(float(x), 6) for x in small.reshape(-1)])
-            yield pd.DataFrame({"id": pdf[id_col], "pixels": out})
+            yield pd.DataFrame({"id": pdf["url"], "pixels": out})
 
-    return df.select(id_col, bin_col).mapInPandas(_resize, schema=schema)
+    return df.select("url", "html").mapInPandas(_resize, schema=schema)
 
 
-def sample_frames(
-    df: DataFrame,
-    bin_col: str = "html",
-    id_col: str = "url",
-    frame_bytes: int = 256,
-    k: int = 4,
-) -> DataFrame:
-    """Evenly sample ``k`` fixed-size frames from a binary stream
-    (video-column analogue): frame j comes from offset
-    floor(j·n_frames/k)·frame_bytes. Pure JVM expressions — frame
-    SELECTION is offset arithmetic, so unlike decode it never needs
-    Python; emits (id, frame_idx, frame_md5) per sampled frame. Streams
-    shorter than one frame yield no rows."""
-    n_frames = (F.length(F.col(bin_col)) / F.lit(frame_bytes)).cast("long")
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Evenly sample ``k`` = 4 frames of ``frame_bytes`` = 256 bytes from
+    the ``html`` binary stream (video-column analogue): frame j comes
+    from offset floor(j·n_frames/k)·frame_bytes. Pure JVM expressions —
+    frame SELECTION is offset arithmetic, so unlike decode it never
+    needs Python; emits (id, frame_idx, frame_md5) per sampled frame.
+    Streams shorter than one frame yield no rows."""
+    k, frame_bytes = 4, 256
+    n_frames = (F.length(F.col("html")) / F.lit(frame_bytes)).cast("long")
     idx = F.sequence(F.lit(0), F.lit(k - 1))
     frames = df.select(
-        F.col(id_col).alias("id"),
-        F.col(bin_col).alias("_b"),
+        F.col("url").alias("id"),
+        F.col("html").alias("_b"),
         n_frames.alias("_n"),
         F.explode(idx).alias("frame_idx"),
     ).where(F.col("_n") > 0)

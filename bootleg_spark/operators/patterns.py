@@ -35,34 +35,26 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def adjacent_linked_pairs(
-    linked: DataFrame,
-    docs: DataFrame,
-    min_gap: int = 2,
-    max_gap: int = 4,
-    doc_col: str = "doc_id",
-    pos_col: str = "mention_pos",
-    qid_col: str = "qid",
-) -> DataFrame:
+def adjacent_linked_pairs(linked: DataFrame, docs: DataFrame) -> DataFrame:
     """(doc_id, pos1, pos2, qid1, qid2, pattern): CONSECUTIVE linked
     mentions of distinct entities in the same document whose word-gap
-    (pos2 − pos1) lies in [min_gap, max_gap]; ``pattern`` is the words
+    (pos2 − pos1) lies in [2, 4]; ``pattern`` is the words
     strictly between them, space-joined. Consecutive-only pairing (not
     all pairs in a window) keeps the candidate count linear in corpus
     size and matches how surface patterns are actually read."""
     w = Window.partitionBy("doc_id").orderBy("pos1")
     pairs = (
         linked.select(
-            F.col(doc_col).alias("doc_id"),
-            F.col(pos_col).alias("pos1"),
-            F.col(qid_col).alias("qid1"),
+            "doc_id",
+            F.col("mention_pos").alias("pos1"),
+            F.col("qid").alias("qid1"),
         )
         .withColumn("pos2", F.lead("pos1").over(w))
         .withColumn("qid2", F.lead("qid1").over(w))
         .where(
             F.col("pos2").isNotNull()
             & (F.col("qid1") != F.col("qid2"))
-            & ((F.col("pos2") - F.col("pos1")).between(min_gap, max_gap))
+            & ((F.col("pos2") - F.col("pos1")).between(2, 4))
         )
     )
     between = F.concat_ws(
@@ -74,7 +66,7 @@ def adjacent_linked_pairs(
         ),
     )
     return pairs.join(
-        docs.select(F.col(doc_col).alias("doc_id"), "text"), "doc_id"
+        docs.select("doc_id", "text"), "doc_id"
     ).select(
         "doc_id",
         F.col("pos1").cast("long").alias("pos1"),
@@ -85,13 +77,7 @@ def adjacent_linked_pairs(
     )
 
 
-def mine_patterns(
-    pairs: DataFrame,
-    kg: DataFrame,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def mine_patterns(pairs: DataFrame, kg: DataFrame) -> DataFrame:
     """(pattern, rel, support, n_pattern, precision): distant
     supervision — for every pair instance whose (qid1, rel, qid2) is a
     known KG edge, credit (pattern, rel). ``support`` counts crediting
@@ -101,9 +87,9 @@ def mine_patterns(
     several relations credits each (the standard multi-label DS
     reading)."""
     edges = kg.select(
-        F.col(subj_col).alias("qid1"),
-        F.col(pred_col).alias("rel"),
-        F.col(obj_col).alias("qid2"),
+        F.col("subj_qid").alias("qid1"),
+        "rel",
+        F.col("obj_qid").alias("qid2"),
     ).distinct()
     totals = pairs.groupBy("pattern").agg(
         F.count(F.lit(1)).cast("long").alias("n_pattern")
@@ -125,18 +111,14 @@ def mine_patterns(
 def bootstrap_patterns(
     pairs: DataFrame,
     kg: DataFrame,
-    rounds: int = 2,
     min_support: int = 2,
     min_precision: float = 0.1,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
 ) -> DataFrame:
     """(subj_qid, rel, obj_qid, accepted_round, n_evidence, confidence):
     the full DIPRE/Snowball bootstrap — each round re-mines patterns
     against the KG GROWN by the previous round's accepted proposals,
     so newly accepted facts recruit new patterns which recruit new
-    facts. Fixed ``rounds`` (convergence shows up as an empty later
+    facts. Two fixed rounds (convergence shows up as an empty later
     round, which the oracle checks too); each accepted triple is
     stamped with the round that first proposed it (rounds are disjoint
     by construction — the apply anti-join removes everything already
@@ -149,26 +131,21 @@ def bootstrap_patterns(
     round. ``pairs`` is re-joined every round — materialize it once
     upstream (same rule as the truth-discovery claims frame)."""
     pairs = pairs.localCheckpoint(eager=False)
-    known = kg.select(
-        F.col(subj_col), F.col(pred_col), F.col(obj_col)
-    ).distinct()
+    known = kg.select("subj_qid", "rel", "obj_qid").distinct()
     out = None
-    for i in range(1, rounds + 1):
-        mined = mine_patterns(pairs, known, subj_col, pred_col, obj_col)
-        props = apply_patterns(
-            pairs, mined, known, min_support, min_precision,
-            subj_col, pred_col, obj_col,
-        ).select(
-            subj_col,
-            pred_col,
-            obj_col,
+    for i in range(1, 3):
+        mined = mine_patterns(pairs, known)
+        props = apply_patterns(pairs, mined, known, min_support, min_precision).select(
+            "subj_qid",
+            "rel",
+            "obj_qid",
             F.lit(i).cast("int").alias("accepted_round"),
             "n_evidence",
             "confidence",
         ).localCheckpoint(eager=False)  # feeds both the output and the grown KG
         out = props if out is None else out.unionByName(props)
         known = (
-            known.unionByName(props.select(subj_col, pred_col, obj_col))
+            known.unionByName(props.select("subj_qid", "rel", "obj_qid"))
             .localCheckpoint(eager=False)
         )
     return out
@@ -180,9 +157,6 @@ def apply_patterns(
     kg: DataFrame,
     min_support: int = 2,
     min_precision: float = 0.1,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
 ) -> DataFrame:
     """(subj_qid, rel, obj_qid, n_evidence, confidence): triples
     PROPOSED by the kept patterns (support ≥ min_support, precision ≥
@@ -196,17 +170,15 @@ def apply_patterns(
         & (F.col("precision") >= min_precision)
     ).select("pattern", "rel", "precision")
     proposed = pairs.join(F.broadcast(kept), "pattern").select(
-        F.col("qid1").alias(subj_col),
-        F.col("rel").alias(pred_col),
-        F.col("qid2").alias(obj_col),
+        F.col("qid1").alias("subj_qid"),
+        "rel",
+        F.col("qid2").alias("obj_qid"),
         "precision",
     )
-    known = kg.select(
-        F.col(subj_col), F.col(pred_col), F.col(obj_col)
-    ).distinct()
+    known = kg.select("subj_qid", "rel", "obj_qid").distinct()
     return (
-        proposed.join(known, [subj_col, pred_col, obj_col], "left_anti")
-        .groupBy(subj_col, pred_col, obj_col)
+        proposed.join(known, ["subj_qid", "rel", "obj_qid"], "left_anti")
+        .groupBy("subj_qid", "rel", "obj_qid")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_evidence"),
             F.round(F.max("precision"), 6).alias("confidence"),

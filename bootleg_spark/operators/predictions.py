@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 
 def merge_predictions(
     linked: DataFrame,
-    id_col: str = "doc_id",
-    order_col: str = "mention_pos",
     qid_col: str = "qid_pred",
     extra_arrays: dict[str, str] | None = None,
 ) -> DataFrame:
@@ -32,10 +30,10 @@ def merge_predictions(
     parallel arrays (e.g. {"probs": "prob", "char_spans": "char_start"}).
     """
     extras = extra_arrays or {}
-    struct_cols = [F.col(order_col).alias("_o"), F.col("alias"), F.col(qid_col).alias("_q")]
+    struct_cols = [F.col("mention_pos").alias("_o"), F.col("alias"), F.col(qid_col).alias("_q")]
     for out_name, in_col in extras.items():
         struct_cols.append(F.col(in_col).alias(f"_x_{out_name}"))
-    g = linked.groupBy(F.col(id_col)).agg(
+    g = linked.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct(*struct_cols))).alias("m")
     )
     def _field(name: str):
@@ -44,7 +42,7 @@ def merge_predictions(
         return F.transform("m", lambda x: x[f"_x_{name}"]).alias(name)
 
     out = g.select(
-        id_col,
+        "doc_id",
         F.transform("m", lambda x: x["alias"]).alias("aliases"),
         F.transform("m", lambda x: x["_q"]).alias("qids"),
         *[_field(name) for name in extras],
@@ -52,19 +50,15 @@ def merge_predictions(
     return out
 
 
-def filter_weak_labels(
-    mentions: DataFrame, gold_col: str = "gold", use_weak_label: bool = False
-) -> DataFrame:
+def filter_weak_labels(mentions: DataFrame, use_weak_label: bool = False) -> DataFrame:
     """Anchor filter (dataset.py:536-541): when ``use_weak_label`` is
     False, keep only gold (anchor) mentions."""
     if use_weak_label:
         return mentions
-    return mentions.where(F.col(gold_col))
+    return mentions.where(F.col("gold"))
 
 
-def prune_to_entities(
-    entities: DataFrame, keep_qids: DataFrame, qid_col: str = "qid"
-) -> DataFrame:
+def prune_to_entities(entities: DataFrame, keep_qids: DataFrame) -> DataFrame:
     """Restrict the entity dim to a QID subset and re-assign contiguous
     eids starting at 2 (rows 0/1 stay reserved for NC/PAD) — the Spark
     form of EntityProfile.prune_to_entities (entity_symbols.py:756-796:
@@ -79,6 +73,6 @@ def prune_to_entities(
     # dim; skips the two sort passes a SortMergeJoin adds over the full
     # entity dim (triples.py precedent)
     kept = entities.join(
-        keep_qids.select(F.col(qid_col).alias("qid")).hint("shuffle_hash"), "qid", "left_semi"
+        keep_qids.select("qid").hint("shuffle_hash"), "qid", "left_semi"
     )
     return dense_ids(kept, "qnum", id_col="new_eid", start=2)

@@ -42,23 +42,13 @@ def _bindings(edges: DataFrame) -> DataFrame:
     )
 
 
-def mine_rules(
-    kg: DataFrame,
-    min_support: int = 2,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def mine_rules(kg: DataFrame, min_support: int = 2) -> DataFrame:
     """(r1, r2, r3, support, n_body, confidence): for every rule shape,
     ``n_body`` = distinct (a, c) body bindings, ``support`` = bindings
     whose head edge (a, r3, c) exists, confidence = support / n_body
     rounded to 6. Rules below min_support are dropped (AMIE's head
     coverage pruning, simplified to absolute support)."""
-    edges = kg.select(
-        F.col(subj_col).alias("subj_qid"),
-        F.col(pred_col).alias("rel"),
-        F.col(obj_col).alias("obj_qid"),
-    ).distinct()
+    edges = kg.select("subj_qid", "rel", "obj_qid").distinct()
     bindings = _bindings(edges)
     totals = bindings.groupBy("r1", "r2").agg(
         F.count(F.lit(1)).cast("long").alias("n_body")
@@ -82,42 +72,26 @@ def mine_rules(
     )
 
 
-def apply_rules(
-    kg: DataFrame,
-    mined: DataFrame,
-    min_confidence: float = 0.1,
-    subj_col: str = "subj_qid",
-    pred_col: str = "rel",
-    obj_col: str = "obj_qid",
-) -> DataFrame:
+def apply_rules(kg: DataFrame, mined: DataFrame, min_confidence: float = 0.1) -> DataFrame:
     """(subj_qid, rel, obj_qid, n_rules, confidence): triples PROPOSED
     by the kept rules (confidence ≥ min_confidence) for body bindings
     whose head edge the KG lacks. ``n_rules`` counts distinct proposing
     rule shapes; ``confidence`` is the best among them. Rule dim
     broadcast; known facts removed by one anti-join on the triple
     key."""
-    edges = kg.select(
-        F.col(subj_col).alias("subj_qid"),
-        F.col(pred_col).alias("rel"),
-        F.col(obj_col).alias("obj_qid"),
-    ).distinct()
+    edges = kg.select("subj_qid", "rel", "obj_qid").distinct()
     kept = mined.where(F.col("confidence") >= min_confidence).select(
         "r1", "r2", "r3", "confidence"
     )
     proposed = _bindings(edges).join(F.broadcast(kept), ["r1", "r2"]).select(
-        F.col("a").alias(subj_col),
-        F.col("r3").alias(pred_col),
-        F.col("c").alias(obj_col),
+        F.col("a").alias("subj_qid"),
+        F.col("r3").alias("rel"),
+        F.col("c").alias("obj_qid"),
         "confidence",
     )
-    known = edges.select(
-        F.col("subj_qid").alias(subj_col),
-        F.col("rel").alias(pred_col),
-        F.col("obj_qid").alias(obj_col),
-    )
     return (
-        proposed.join(known, [subj_col, pred_col, obj_col], "left_anti")
-        .groupBy(subj_col, pred_col, obj_col)
+        proposed.join(edges, ["subj_qid", "rel", "obj_qid"], "left_anti")
+        .groupBy("subj_qid", "rel", "obj_qid")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rules"),
             F.round(F.max("confidence"), 6).alias("confidence"),

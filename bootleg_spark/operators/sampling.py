@@ -39,13 +39,7 @@ def _uniform_draw(id_col, seed: int) -> F.Column:
     )
 
 
-def mix_corpus(
-    docs: DataFrame,
-    weights: dict[str, float],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
+def mix_corpus(docs: DataFrame, weights: dict[str, float], seed: int = 42) -> DataFrame:
     """Deterministic stratified mixture: stratum s with weight w keeps
     ``floor(w)`` copies of every row plus one more where the row's
     uniform draw < ``w - floor(w)``. Strata absent from ``weights``
@@ -59,8 +53,8 @@ def mix_corpus(
     base = F.create_map(
         *[x for k, w in weights.items() for x in (F.lit(k), F.lit(float(w)))]
     )
-    w_col = base[F.col(stratum_col)]
-    draw = _uniform_draw(F.col(id_col), seed)
+    w_col = base[F.col("lang")]
+    draw = _uniform_draw(F.col("doc_id"), seed)
     n_copies = F.floor(w_col) + F.when(draw < w_col - F.floor(w_col), 1).otherwise(0)
     out = docs.withColumn("_n_copies", n_copies.cast("int")).where(
         F.col("_n_copies") > 0
@@ -74,8 +68,6 @@ def pack_token_spans(
     docs: DataFrame,
     budget: int,
     n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     tiebreak_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(bucket, pack_id, doc_id, [tiebreaks...], doc_tok_start,
@@ -90,7 +82,7 @@ def pack_token_spans(
     and where that sub-span starts inside the pack. Every pack is
     exactly ``budget`` tokens except each bucket's last.
 
-    **Unique-key requirement**: ``(id_col, *tiebreak_cols)`` must
+    **Unique-key requirement**: ``(doc_id, *tiebreak_cols)`` must
     uniquely identify input rows, or the layout is both
     order-nondeterministic and (under the SQL-default RANGE frame)
     silently broken — tied keys are RANGE peers, so every copy's
@@ -101,10 +93,10 @@ def pack_token_spans(
     must pass ``tiebreak_cols=("_copy",)`` (tested in
     tests/test_sampling.py::test_pack_duplicate_ids). Deterministic
     given a unique key; no shuffle-order dependence otherwise."""
-    n_toks = F.size(F.split(F.col(text_col), " "))
+    n_toks = F.size(F.split(F.col("text"), " "))
     d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        (F.col(id_col) % n_buckets).cast("long").alias("bucket"),
+        "doc_id",
+        (F.col("doc_id") % n_buckets).cast("long").alias("bucket"),
         *[F.col(c) for c in tiebreak_cols],
         n_toks.cast("long").alias("_n"),
     ).where(F.col("_n") > 0)
@@ -133,13 +125,7 @@ def pack_token_spans(
     )
 
 
-def chunk_token_windows(
-    docs: DataFrame,
-    size: int,
-    stride: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_token_windows(docs: DataFrame, size: int, stride: int | None = None) -> DataFrame:
     """(id, chunk_idx, tok_start, tok_end, chunk): overlapping
     fixed-size token windows per document — the retrieval/RAG chunking
     companion to :func:`pack_token_spans` (which packs ACROSS
@@ -152,9 +138,9 @@ def chunk_token_windows(
         stride = size
     if size <= 0 or stride <= 0:
         raise ValueError("size and stride must be positive")
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     d = docs.select(
-        F.col(id_col).alias("id"), words.alias("_w"), F.size(words).alias("_n")
+        F.col("doc_id").alias("id"), words.alias("_w"), F.size(words).alias("_n")
     ).where(F.col("_n") > 0)
     n_chunks = F.floor((F.col("_n") - 1) / stride) + 1
     d = d.withColumn(
@@ -173,19 +159,13 @@ def chunk_token_windows(
     )
 
 
-def sample_exact_k(
-    df: DataFrame,
-    k: int,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: int = 101,
-) -> DataFrame:
+def sample_exact_k(df: DataFrame, k: int) -> DataFrame:
     """Exactly min(k, |stratum|) rows per stratum, chosen uniformly
     WITHOUT replacement and deterministically: keep the k smallest
     md5 draws (consistent hash sampling — the draw is a pure function
-    of (seed, id), so the sample is stable across runs, engines, task
-    retries, and even across appends that don't touch the chosen ids;
-    rerunning with the same seed on a grown corpus keeps every
+    of (seed 101, doc_id), so the sample is stable across runs,
+    engines, task retries, and even across appends that don't touch
+    the chosen ids; rerunning on a grown corpus keeps every
     still-present previous pick whose draw remains in the top k).
     Adds ``sample_rank`` (1-based within stratum, draw order,
     id tiebreak). Contrast with :func:`mix_corpus`, which takes a
@@ -199,9 +179,9 @@ def sample_exact_k(
     a full sort."""
     if k <= 0:
         raise ValueError("k must be >= 1")
-    w = Window.partitionBy(stratum_col).orderBy("_draw", id_col)
+    w = Window.partitionBy("lang").orderBy("_draw", "doc_id")
     return (
-        df.withColumn("_draw", _uniform_draw(F.col(id_col), seed))
+        df.withColumn("_draw", _uniform_draw(F.col("doc_id"), 101))
         .withColumn("sample_rank", F.row_number().over(w).cast("long"))
         .where(F.col("sample_rank") <= k)
         .drop("_draw")

@@ -12,17 +12,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """(user_id, session_id, n_events, start_epoch, end_epoch, total_value).
 
-    session_id is the per-user running count of gap-exceeding boundaries
+    session_id is the per-user running count of boundaries where the
+    gap to the user's previous event exceeds 1800 s
     (1-based). Deterministic ordering: (ts, event_id) breaks timestamp
     ties.
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     epoch = F.unix_timestamp("ts")
     prev = F.lag(epoch).over(w)
-    is_new = F.when(prev.isNull() | ((epoch - prev) > gap_seconds), 1).otherwise(0)
+    is_new = F.when(prev.isNull() | ((epoch - prev) > 1800), 1).otherwise(0)
     with_session = events.withColumn(
         "session_id", F.sum(is_new).over(w).cast("long")
     )
@@ -34,13 +35,7 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     )
 
 
-def sessionize_windows(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = None,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
+def sessionize_windows(events: DataFrame, watermark: str | None = None) -> DataFrame:
     """Sessionization via Spark's native ``session_window`` — the form
     that runs UNCHANGED as a Structured Streaming query: with
     ``watermark`` set and a streaming source, state for sessions older
@@ -49,22 +44,22 @@ def sessionize_windows(
     lag/running-sum plan, which needs a full per-user sort).
 
     Output (user_id, start_epoch, end_epoch, n_events, total_value);
-    ``end_epoch`` is the session_window end = last event + gap
-    (Spark's session_window semantics — differs from sessionize's
-    last-event timestamp by exactly the gap).
+    ``end_epoch`` is the session_window end = last event + the
+    30-minute gap (Spark's session_window semantics — differs from
+    sessionize's last-event timestamp by exactly the gap).
     """
     src = events
     if watermark is not None:
-        src = src.withWatermark(ts_col, watermark)
-    win = F.session_window(F.col(ts_col), gap)
+        src = src.withWatermark("ts", watermark)
+    win = F.session_window(F.col("ts"), "30 minutes")
     return (
-        src.groupBy(win, F.col(user_col))
+        src.groupBy(win, F.col("user_id"))
         .agg(
             F.count("*").cast("long").alias("n_events"),
             F.round(F.sum("value"), 6).alias("total_value"),
         )
         .select(
-            user_col,
+            "user_id",
             F.unix_timestamp(F.col("session_window.start")).cast("long").alias("start_epoch"),
             F.unix_timestamp(F.col("session_window.end")).cast("long").alias("end_epoch"),
             "n_events",

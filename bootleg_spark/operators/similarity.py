@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over the ``embedding`` column (array<float>) of
+``vec_id``-keyed vector frames.
 
 Engine extension beyond the reference (its nearest analogue is the
 faiss IndexFlatIP top-k retrieval in cand_gen/eval.py:291-356):
@@ -9,7 +10,7 @@ faiss IndexFlatIP top-k retrieval in cand_gen/eval.py:291-356):
 - :func:`ivf_topk` — IVF: each query searches its ``n_probe`` closest
   k-means cells (:func:`ivf_centroids`).
 - :func:`signbit_lsh_topk` — search within the query's sign-bit
-  bucket: O(Q·N) becomes O(Q·N/2^bits), recall traded off.
+  bucket: O(Q·N) becomes O(Q·N/2^4), recall traded off.
 - :func:`build_ivf_table` / :func:`ivf_table_topk` — the IVF index as
   a snapshot-table layout: a query opens only its probe cells' files.
 - :func:`embedding_near_pairs` — cosine near-duplicate pairs within
@@ -78,29 +79,21 @@ def _topk(queries: DataFrame, cands: DataFrame, k: int, on: str | None = None) -
     )
 
 
-def cosine_topk_bruteforce(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk_bruteforce(emb: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` ids."""
-    queries = _side(emb.where(F.col(id_col) < n_queries), id_col, vec_col, "query")
-    return _topk(queries, _side(emb, id_col, vec_col, "neighbor"), k)
+    queries = _side(emb.where(F.col("vec_id") < n_queries), "vec_id", "embedding", "query")
+    return _topk(queries, _side(emb, "vec_id", "embedding", "neighbor"), k)
 
 
-def signbit_bucket(vec_col, bits: int = 8):
-    """LSH bucket id from the sign bits of the first ``bits`` dimensions."""
+def signbit_bucket(vec_col):
+    """LSH bucket id from the sign bits of the first 4 dimensions."""
     out = F.lit(0)
-    for i in range(bits):
+    for i in range(4):
         out = out + F.when(F.element_at(vec_col, i + 1) > 0, F.lit(1 << i)).otherwise(F.lit(0))
     return out.cast("long")
 
 
-def _assign_to_centroids(
-    emb: DataFrame, cents: DataFrame, id_col: str, vec_col: str, top_n: int = 1
-) -> DataFrame:
+def _assign_to_centroids(emb: DataFrame, cents: DataFrame, top_n: int = 1) -> DataFrame:
     """The ``top_n`` closest cells per id by rounded cosine to the
     broadcast centroids, ties by lowest centroid id. ``top_n=1`` is cell
     assignment; ``top_n>1`` is a query's probe set — one definition so
@@ -109,28 +102,24 @@ def _assign_to_centroids(
     big side, per-id window."""
     w = Window.partitionBy("v_id").orderBy(F.desc("sim"), F.asc("c_id"))
     return (
-        _side(emb, id_col, vec_col, "v")
+        _side(emb, "vec_id", "embedding", "v")
         .crossJoin(F.broadcast(_side(cents, "cell", "cv", "c")))
         .withColumn("sim", _cos("v", "c"))
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= top_n)
         .select(
-            F.col("v_id").alias(id_col), F.col("v_v").alias(vec_col), F.col("c_id").alias("cell")
+            F.col("v_id").alias("vec_id"),
+            F.col("v_v").alias("embedding"),
+            F.col("c_id").alias("cell"),
         )
     )
 
 
-def ivf_centroids(
-    emb: DataFrame,
-    n_cells: int = 8,
-    n_iter: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_centroids(emb: DataFrame, n_cells: int = 8) -> DataFrame:
     """(cell, cv) k-means centroids: deterministic seeds (the first
-    ``n_cells`` vectors) + ``n_iter`` Lloyd iterations.
+    ``n_cells`` vectors) + one Lloyd iteration.
 
-    Each iteration is assign (broadcast centroids, one scan) →
+    The iteration is assign (broadcast centroids, one scan) →
     per-cell component mean (posexplode → groupBy(cell, pos) avg —
     map-side partial agg, no all-pairs anywhere). Means are NOT
     L2-normalized: cosine argmax is scale-invariant, so the mean's
@@ -140,43 +129,32 @@ def ivf_centroids(
     all members simply drop out (their centroid disappears), matching
     the SQL mirror.
     """
-    cents = emb.where(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("cv")
+    seeds = emb.where(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").alias("cell"), F.col("embedding").alias("cv")
     )
-    for _ in range(n_iter):
-        assigned = _assign_to_centroids(emb, cents, id_col, vec_col)
-        comp = assigned.select("cell", F.posexplode(F.col(vec_col)).alias("pos", "val"))
-        means = comp.groupBy("cell", "pos").agg(
-            F.round(F.avg(F.col("val").cast("double")), 6).alias("m")
-        )
-        cents = (
-            means.groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.transform("pm", lambda x: x["m"]).alias("cv"))
-        )
-    return cents
+    assigned = _assign_to_centroids(emb, seeds)
+    comp = assigned.select("cell", F.posexplode(F.col("embedding")).alias("pos", "val"))
+    means = comp.groupBy("cell", "pos").agg(
+        F.round(F.avg(F.col("val").cast("double")), 6).alias("m")
+    )
+    return (
+        means.groupBy("cell")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select("cell", F.transform("pm", lambda x: x["m"]).alias("cv"))
+    )
 
 
-def _probe_topk(probes: DataFrame, assigned: DataFrame, k: int, id_col: str, vec_col: str):
-    """Top-k inside the probe cells: ``probes`` holds one (id, vector,
+def _probe_topk(probes: DataFrame, assigned: DataFrame):
+    """Top-5 inside the probe cells: ``probes`` holds one (id, vector,
     cell) row per probed cell of each query, ``assigned`` every
     candidate with its cell. No dedup: every vector lives in exactly one
     cell and a query's probe cells are distinct, so (query, neighbor)
     pairs are unique by construction."""
-    queries = _side(probes, id_col, vec_col, "query", "cell")
-    return _topk(queries, _side(assigned, id_col, vec_col, "neighbor", "cell"), k, on="cell")
+    queries = _side(probes, "vec_id", "embedding", "query", "cell")
+    return _topk(queries, _side(assigned, "vec_id", "embedding", "neighbor", "cell"), 5, on="cell")
 
 
-def ivf_topk(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iter: int = 1,
-    n_probe: int = 1,
-) -> DataFrame:
+def ivf_topk(emb: DataFrame, n_queries: int = 10, n_cells: int = 8, n_probe: int = 1) -> DataFrame:
     """IVF-bucketed ANN: each query searches its ``n_probe`` closest
     cells (faiss's nprobe knob; the reference's analogue is the faiss
     index in cand_gen/eval.py). Turns O(Q·N) into O(Q·N·n_probe/cells)
@@ -184,49 +162,36 @@ def ivf_topk(
     reproduces :func:`cosine_topk_bruteforce` exactly (same rounding
     and tie rules — pinned by tests/test_dedup_similarity.py). At
     ``n_probe=1`` a query searches its own assignment cell."""
-    cents = ivf_centroids(emb, n_cells, n_iter, id_col, vec_col)
-    queries = emb.where(F.col(id_col) < n_queries)
-    probes = _assign_to_centroids(queries, cents, id_col, vec_col, top_n=n_probe)
-    assigned = _assign_to_centroids(emb, cents, id_col, vec_col)
-    return _probe_topk(probes, assigned, k, id_col, vec_col)
+    cents = ivf_centroids(emb, n_cells)
+    queries = emb.where(F.col("vec_id") < n_queries)
+    probes = _assign_to_centroids(queries, cents, top_n=n_probe)
+    return _probe_topk(probes, _assign_to_centroids(emb, cents))
 
 
-def signbit_lsh_topk(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's sign-bit
-    bucket (equi-join on bucket instead of a broadcast fan-out)."""
-    with_bucket = emb.withColumn("bucket", signbit_bucket(F.col(vec_col), bits))
-    queries = with_bucket.where(F.col(id_col) < n_queries)
+def signbit_lsh_topk(emb: DataFrame) -> DataFrame:
+    """Approximate top-5 neighbors of ids < 10: candidates restricted to
+    the query's 4-sign-bit bucket (equi-join on bucket instead of a
+    broadcast fan-out)."""
+    with_bucket = emb.withColumn("bucket", signbit_bucket(F.col("embedding")))
+    queries = with_bucket.where(F.col("vec_id") < 10)
     return _topk(
-        _side(queries, id_col, vec_col, "query", "bucket"),
-        _side(with_bucket, id_col, vec_col, "neighbor", "bucket"),
-        k,
+        _side(queries, "vec_id", "embedding", "query", "bucket"),
+        _side(with_bucket, "vec_id", "embedding", "neighbor", "bucket"),
+        5,
         on="bucket",
     )
 
 
-def embedding_near_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_near_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cos_sim ≥
     threshold) with candidates restricted to sign-bit LSH buckets — the
     embedding-space analogue of minhash_verified_pairs (bucket join
     proposes, exact cosine verifies; never all-pairs). Output feeds
     dedup.dup_clusters for keep-one-per-cluster semantics."""
-    with_bucket = emb.withColumn("bucket", signbit_bucket(F.col(vec_col), bits))
+    with_bucket = emb.withColumn("bucket", signbit_bucket(F.col("embedding")))
     return (
-        _side(with_bucket, id_col, vec_col, "a", "bucket")
-        .join(_side(with_bucket, id_col, vec_col, "b", "bucket"), "bucket")
+        _side(with_bucket, "vec_id", "embedding", "a", "bucket")
+        .join(_side(with_bucket, "vec_id", "embedding", "b", "bucket"), "bucket")
         .where(F.col("a_id") < F.col("b_id"))
         .withColumn("cos_sim", _cos("a", "b"))
         .where(F.col("cos_sim") >= threshold)
@@ -234,14 +199,7 @@ def embedding_near_pairs(
     )
 
 
-def build_ivf_table(
-    emb: DataFrame,
-    table: str,
-    n_cells: int = 8,
-    n_iter: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
+def build_ivf_table(emb: DataFrame, table: str, n_cells: int = 8) -> dict:
     """Materialize an IVF vector INDEX AS TABLE LAYOUT: vectors are
     cell-assigned (same Lloyd centroids + tie rules as :func:`ivf_topk`)
     and written as a snapshot-manifest table range-partitioned on
@@ -256,27 +214,19 @@ def build_ivf_table(
     beyond the table."""
     from bootleg_spark.sources import snaptable as st
 
-    cents = ivf_centroids(emb, n_cells, n_iter, id_col, vec_col)
-    assigned = _assign_to_centroids(emb, cents, id_col, vec_col)
+    cents = ivf_centroids(emb, n_cells)
+    assigned = _assign_to_centroids(emb, cents)
     cent_rows = sorted((int(r["cell"]), [float(x) for x in r["cv"]]) for r in cents.collect())
     df = assigned.withColumn("cell", F.col("cell").cast("long"))
     return st.write_table(
-        df.repartitionByRange(n_cells, "cell", id_col),
+        df.repartitionByRange(n_cells, "cell", "vec_id"),
         table,
         extra={"ivf": {"n_cells": n_cells, "centroids": cent_rows}},
     )
 
 
-def ivf_table_topk(
-    spark,
-    table: str,
-    n_queries: int = 10,
-    k: int = 5,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k cosine neighbors over a :func:`build_ivf_table` table,
+def ivf_table_topk(spark, table: str, n_queries: int = 10, n_probe: int = 1) -> DataFrame:
+    """Top-5 cosine neighbors over a :func:`build_ivf_table` table,
     reading only probed cells' files. Query vectors are the ids <
     ``n_queries`` (the suite's fixed protocol). Queries and candidates
     are read at the one snapshot version whose centroids pick the
@@ -308,24 +258,24 @@ def ivf_table_topk(
         cn = np.linalg.norm(C, axis=1)
         for pdf in batches:
             rows = []
-            for qid, vec in zip(pdf[id_col], pdf[vec_col]):
+            for qid, vec in zip(pdf["vec_id"], pdf["embedding"]):
                 qv = np.asarray(vec, dtype=float)
                 sims = np.round(C @ qv / (cn * np.linalg.norm(qv)), 6)
                 for i in np.lexsort((cells, -sims))[:n_probe]:
                     rows.append((int(qid), qv.tolist(), int(cells[i])))
-            yield pd.DataFrame(rows, columns=[id_col, vec_col, "cell"])
+            yield pd.DataFrame(rows, columns=["vec_id", "embedding", "cell"])
 
     # lazy localCheckpoint: the cells collect below materializes the
     # probes once and the returned plan reads those blocks, instead of
     # re-running the scoring pass inside the join
     probes = (
         st.read_snapshot(spark, table, snap)
-        .where(F.col(id_col) < n_queries)
-        .select(id_col, vec_col)
-        .mapInPandas(_score_probes, f"{id_col} long, {vec_col} array<double>, cell long")
+        .where(F.col("vec_id") < n_queries)
+        .select("vec_id", "embedding")
+        .mapInPandas(_score_probes, "vec_id long, embedding array<double>, cell long")
         .localCheckpoint(eager=False)
     )
     cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
     # no probes (no id < n_queries) prunes every file: an empty frame
     cands = st.read_snapshot(spark, table, snap, prune=("cell", "in", cells))
-    return _probe_topk(probes, cands, k, id_col, vec_col)
+    return _probe_topk(probes, cands)

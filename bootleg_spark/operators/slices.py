@@ -34,9 +34,6 @@ def build_slice_incidence(
     slice_probs: DataFrame,
     use_weak_label: bool = False,
     split: str = "train",
-    sent_col: str = "sent_idx",
-    idx_col: str = "alias_idx",
-    gold_col: str = "gold",
 ) -> DataFrame:
     """(sent_idx, slice_name, alias_new_idx, prob, in_slice).
 
@@ -59,27 +56,27 @@ def build_slice_incidence(
     - ``use_weak_label=True, split == "train"``: everything counts.
     """
     if not use_weak_label:
-        kept = mentions.where(F.col(gold_col))
-        w = Window.partitionBy(sent_col).orderBy(idx_col)
+        kept = mentions.where(F.col("gold"))
+        w = Window.partitionBy("sent_idx").orderBy("alias_idx")
         reindexed = kept.select(
-            F.col(sent_col).alias("sent_idx"),
-            F.col(idx_col).alias("alias_idx"),
+            "sent_idx",
+            "alias_idx",
             (F.row_number().over(w) - 1).cast("int").alias("alias_new_idx"),
         )
         members = reindexed
     else:
         reindexed = mentions.select(
-            F.col(sent_col).alias("sent_idx"),
-            F.col(idx_col).alias("alias_idx"),
-            F.col(idx_col).cast("int").alias("alias_new_idx"),
-            F.col(gold_col).alias("_gold"),
+            "sent_idx",
+            "alias_idx",
+            F.col("alias_idx").cast("int").alias("alias_new_idx"),
+            F.col("gold").alias("_gold"),
         )
         members = (
             reindexed if split == "train" else reindexed.where(F.col("_gold"))
         ).drop("_gold")
     probs = slice_probs.select(
-        F.col(sent_col).alias("sent_idx"),
-        F.col(idx_col).alias("alias_idx"),
+        "sent_idx",
+        "alias_idx",
         "slice_name",
         F.col("prob").cast("double").alias("prob"),
     )

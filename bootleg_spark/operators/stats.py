@@ -19,10 +19,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def qid_counts(linked: DataFrame, qid_col: str = "qid") -> DataFrame:
+def qid_counts(linked: DataFrame) -> DataFrame:
     """(qid, cnt): entity popularity over linked mentions — defines the
     tail/torso/head split."""
-    return linked.groupBy(F.col(qid_col).alias("qid")).agg(F.count("*").cast("long").alias("cnt"))
+    return linked.groupBy("qid").agg(F.count("*").cast("long").alias("cnt"))
 
 
 def alias_counts(mentions: DataFrame) -> DataFrame:
@@ -30,15 +30,10 @@ def alias_counts(mentions: DataFrame) -> DataFrame:
     return mentions.groupBy("alias").agg(F.count("*").cast("long").alias("cnt"))
 
 
-def alias_text_counts(
-    docs: DataFrame,
-    alias_df: DataFrame,
-    max_alias_len: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def alias_text_counts(docs: DataFrame, alias_df: DataFrame) -> DataFrame:
     """(alias_text, cnt): the reference's ``alias_text_occurrences``
     counter (compute_statistics.py:118-132) — every raw n-gram
-    (n = 1..max_alias_len) of the sentence whose lnrm form is in the
+    (n = 1..2) of the sentence whose lnrm form is in the
     alias dictionary counts one occurrence, with NO POS/boundary
     filtering (unlike the mention extractor, which is why this is a
     separate statistic). N-grams are generated JVM-side
@@ -49,7 +44,7 @@ def alias_text_counts(
     ``sentence.split()``, not ``split(' ')``)."""
     from bootleg_spark.functions.lnrm import lnrm_ascii_col
 
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
 
     def _gram_fn(n: int):
         # NB: a `lambda i, n=n` would be seen as two-arg by F.transform,
@@ -58,7 +53,7 @@ def alias_text_counts(
         return lambda i: F.concat_ws(" ", F.slice(words, i, n))
 
     gram_arrays = []
-    for n in range(1, max_alias_len + 1):
+    for n in range(1, 3):
         seq = F.sequence(F.lit(1), F.size(words) - F.lit(n - 1))
         g = F.transform(seq, _gram_fn(n))
         gram_arrays.append(
@@ -74,21 +69,19 @@ def alias_text_counts(
     )
 
 
-def alias_entity_pair_counts(
-    linked: DataFrame, alias_col: str = "alias", qid_col: str = "qid"
-) -> DataFrame:
+def alias_entity_pair_counts(linked: DataFrame) -> DataFrame:
     """(pair, cnt): the reference's ``alias_entity_pair`` counter
     (compute_statistics.py:136-140: key = alias + "|" + qid)."""
     return (
-        linked.groupBy(F.col(alias_col).alias("alias"), F.col(qid_col).alias("qid"))
+        linked.groupBy("alias", "qid")
         .agg(F.count("*").cast("long").alias("cnt"))
         .select(F.concat_ws("|", "alias", "qid").alias("pair"), "cnt")
     )
 
 
-def mentions_per_doc_hist(mentions: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def mentions_per_doc_hist(mentions: DataFrame) -> DataFrame:
     """(n_mentions, n_docs): distribution of per-page mention counts."""
-    per_doc = mentions.groupBy(id_col).agg(F.count("*").alias("n_mentions"))
+    per_doc = mentions.groupBy("doc_id").agg(F.count("*").alias("n_mentions"))
     return per_doc.groupBy("n_mentions").agg(F.count("*").cast("long").alias("n_docs")).select(
         F.col("n_mentions").cast("long"), "n_docs"
     )
@@ -102,9 +95,7 @@ def cand_count_hist(alias_cands: DataFrame) -> DataFrame:
     )
 
 
-def qid_count_buckets(
-    counts: DataFrame, n_quantiles: int = 21, exact: bool = False
-) -> DataFrame:
+def qid_count_buckets(counts: DataFrame, exact: bool = False) -> DataFrame:
     """(qid, cnt, bucket): popularity bucket = number of the 21 evenly
     spaced quantiles of cnt that are strictly below cnt
     (dataset.py:484-490 semantics: np.quantile grid, mention score =
@@ -116,7 +107,7 @@ def qid_count_buckets(
     small dims — at 5.8M+ entities exact percentile aggregates all
     values into a single reducer state, so approx is the scale default.
     """
-    qs = [i / (n_quantiles - 1) for i in range(n_quantiles)]
+    qs = [i / 20 for i in range(21)]
     fn = "percentile" if exact else "percentile_approx"
     quant = counts.select(
         F.expr(f"{fn}(cnt, array({','.join(str(q) for q in qs)}))").alias("qv")
@@ -139,14 +130,12 @@ def duplicate_key_count(df: DataFrame, keys: list[str]) -> DataFrame:
     return dupes.agg(F.count("*").cast("long").alias("n_dupes"))
 
 
-def slice_sampling_stats(
-    linked: DataFrame, slice_col: str = "slice_name", id_col: str = "doc_id"
-) -> DataFrame:
+def slice_sampling_stats(linked: DataFrame) -> DataFrame:
     """Per-slice sampling stats (scripts sample_eval_data.py:69-150):
     mention count + distinct-page count per slice."""
-    return linked.groupBy(F.col(slice_col).alias("slice_name")).agg(
+    return linked.groupBy("slice_name").agg(
         F.count("*").cast("long").alias("n_mentions"),
-        F.countDistinct(id_col).cast("long").alias("n_docs"),
+        F.countDistinct("doc_id").cast("long").alias("n_docs"),
     )
 
 
@@ -158,19 +147,14 @@ def relations_between(kg_relations: DataFrame) -> DataFrame:
     )
 
 
-def slice_eval(
-    linked: DataFrame,
-    gold_col: str = "qid_gold",
-    pred_col: str = "qid_pred",
-    slice_col: str = "slice_name",
-) -> DataFrame:
+def slice_eval(linked: DataFrame, pred_col: str = "qid_pred") -> DataFrame:
     """Per-slice accuracy (scorer.py:47-126): total mentions, correct,
     accuracy ratio."""
     return (
-        linked.groupBy(F.col(slice_col).alias("slice_name"))
+        linked.groupBy("slice_name")
         .agg(
             F.count("*").cast("long").alias("total"),
-            F.sum(F.when(F.col(pred_col) == F.col(gold_col), 1).otherwise(0))
+            F.sum(F.when(F.col(pred_col) == F.col("qid_gold"), 1).otherwise(0))
             .cast("long")
             .alias("correct"),
         )
@@ -178,22 +162,17 @@ def slice_eval(
     )
 
 
-def recall_at_k(
-    mention_cands: DataFrame,
-    ks: tuple[int, ...] = (1, 2, 3),
-    gold_col: str = "qid_gold",
-    cands_col: str = "cand_qids",
-) -> DataFrame:
-    """One row per k: fraction of mentions whose gold QID is in the top-k
+def recall_at_k(mention_cands: DataFrame) -> DataFrame:
+    """One row per k in (1, 2, 3): fraction of mentions whose gold QID is in the top-k
     candidates (cand_gen/eval.py:309-370)."""
-    pos = F.array_position(F.col(cands_col), F.col(gold_col))
+    pos = F.array_position(F.col("cand_qids"), F.col("qid_gold"))
     base = mention_cands.select(pos.alias("pos"))
     rows = [
         base.select(
             F.lit(k).cast("long").alias("k"),
             F.round(F.avg(F.when((F.col("pos") >= 1) & (F.col("pos") <= k), 1.0).otherwise(0.0)), 6).alias("recall"),
         )
-        for k in ks
+        for k in (1, 2, 3)
     ]
     out = rows[0]
     for r in rows[1:]:

@@ -14,7 +14,7 @@ Scale notes:
   map-side aggregate.
 - ``canonical_urls`` is likewise shuffle-free; URL-level dedup is its
   composition with :func:`bootleg_spark.operators.dedup.dedup_exact`
-  on the canonical column.
+  on the canonical column (renamed to ``text``).
 - ``ngram_contamination`` broadcasts the *eval-set* shingles (benchmark
   suites are MBs against a 100 TB corpus) so the corpus side joins
   map-side with no shuffle of corpus shingles; only the per-doc hit
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bootleg_spark.operators.dedup import _doc_sizes, word_shingles
+from bootleg_spark.operators.dedup import doc_shingle_arrays
 
 # Java-regex ∩ RE2 portable patterns (no lookaround/backref); DuckDB
 # single-quoted strings pass backslashes through literally, so these
@@ -36,7 +36,7 @@ PHONE_RE = r"\+\d{1,3}-\d{3}-\d{3,4}-\d{4}"
 IP_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """Redact emails → ``<EMAIL>``, then phones → ``<PHONE>``, then IPv4
     literals → ``<IP>``; count each category as it is removed.
 
@@ -46,7 +46,7 @@ def scrub_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     match as a bare domain/IP). Returns
     ``(id, n_emails, n_phones, n_ips, clean_text)``.
     """
-    t0 = F.col(text_col)
+    t0 = F.col("text")
     n_emails = F.size(F.regexp_extract_all(t0, F.lit(EMAIL_RE), 0))
     t1 = F.regexp_replace(t0, EMAIL_RE, "<EMAIL>")
     n_phones = F.size(F.regexp_extract_all(t1, F.lit(PHONE_RE), 0))
@@ -54,7 +54,7 @@ def scrub_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     n_ips = F.size(F.regexp_extract_all(t2, F.lit(IP_RE), 0))
     t3 = F.regexp_replace(t2, IP_RE, "<IP>")
     return docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         n_emails.cast("long").alias("n_emails"),
         n_phones.cast("long").alias("n_phones"),
         n_ips.cast("long").alias("n_ips"),
@@ -68,7 +68,7 @@ TRACKING_PREFIXES = ("utm_",)
 TRACKING_KEYS = ("fbclid", "gclid", "ref")
 
 
-def canonical_urls(df: DataFrame, url_col: str = "url", id_col: str = "doc_id") -> DataFrame:
+def canonical_urls(df: DataFrame) -> DataFrame:
     """Canonical URL form for URL-level dedup of a web crawl:
 
     - drop the fragment (``#...``);
@@ -80,9 +80,10 @@ def canonical_urls(df: DataFrame, url_col: str = "url", id_col: str = "doc_id") 
       ``ref``), sort the survivors, and rejoin.
 
     Returns ``(id, url_raw, url_canon)``. URL-level dedup = compose with
-    ``dedup_exact(out, text_col="url_canon", id_col="id")``.
+    ``dedup_exact`` on ``url_canon`` renamed to ``text`` and ``id`` to
+    ``doc_id``.
     """
-    u = F.col(url_col)
+    u = F.col("url")
     no_frag = F.regexp_replace(u, "#.*", "")
     base = F.regexp_extract(no_frag, r"^([^?]*)", 1)
     query = F.regexp_extract(no_frag, r"\?(.*)$", 1)
@@ -122,24 +123,26 @@ def canonical_urls(df: DataFrame, url_col: str = "url", id_col: str = "doc_id") 
     # but one. Identity is the safe canon for shapes the rules don't fit.
     canon = F.when(u.rlike("^[A-Za-z][A-Za-z0-9+.-]*://"), canon).otherwise(u)
     return df.select(
-        F.col(id_col).alias("id"), u.alias("url_raw"), canon.alias("url_canon")
+        F.col("doc_id").alias("id"), u.alias("url_raw"), canon.alias("url_canon")
     )
 
 
-def select_training_corpus(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    min_quality: float = 0.0,
-    lang: str = "en",
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def _shingles():
+    """One ``shingle`` row per element of a ``doc_shingle_arrays`` frame.
+    explode_outer, not explode: explode makes the optimizer infer
+    ``size(dsh) > 0`` and push it below the projection, so every doc is
+    shingled twice and the shingle slices run on docs the n-word filter
+    drops (a negative slice length raises). ``dsh`` is never empty, so
+    no row differs."""
+    return F.explode_outer("dsh").alias("shingle")
+
+
+def select_training_corpus(docs: DataFrame, eval_docs: DataFrame, shingle_n: int = 3) -> DataFrame:
     """End-to-end corpus curation: the composed "give me a clean
     training corpus" selection a web-scale pipeline runs before
     training. A document survives iff it
 
-    1. scores ``quality > min_quality`` AND language-IDs as ``lang``
+    1. scores ``quality > 0`` AND language-IDs as ``en``
        (both computed IN the scan projection via
        ``textstats.quality_exprs``/``lang_pred_expr`` — one pass over
        the corpus, no self-join of derived frames);
@@ -162,21 +165,22 @@ def select_training_corpus(
 
     from bootleg_spark.operators.textstats import lang_pred_expr, quality_exprs
 
-    q = quality_exprs(text_col)
+    q = quality_exprs()
     scored = docs.select(
-        F.col(id_col).alias("id"),
-        F.md5(F.col(text_col)).alias("content_hash"),
+        F.col("doc_id").alias("id"),
+        F.md5(F.col("text")).alias("content_hash"),
         q["n_words"].alias("n_words"),
         q["quality"].alias("quality"),
-        lang_pred_expr(text_col).alias("pred_lang"),
-    ).where((F.col("quality") > min_quality) & (F.col("pred_lang") == lang))
+        lang_pred_expr().alias("pred_lang"),
+    ).where((F.col("quality") > 0.0) & (F.col("pred_lang") == "en"))
     w = Window.partitionBy("content_hash")
     kept = scored.withColumn("keep_id", F.min("id").over(w)).where(
         F.col("id") == F.col("keep_id")
     )
-    e_sh = word_shingles(eval_docs, shingle_n, text_col, id_col).select("shingle").distinct()
+    e_sh = doc_shingle_arrays(eval_docs, shingle_n).select(_shingles()).distinct()
     cont_ids = (
-        word_shingles(docs, shingle_n, text_col, id_col)
+        doc_shingle_arrays(docs, shingle_n)
+        .select("id", _shingles())
         .join(F.broadcast(e_sh), "shingle")
         .select("id")
         .distinct()
@@ -186,15 +190,9 @@ def select_training_corpus(
     )
 
 
-def ngram_contamination(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_contamination(corpus: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark decontamination: per corpus document, how many of its
-    distinct word n-gram shingles also occur anywhere in the eval set.
+    distinct word 3-gram shingles also occur anywhere in the eval set.
 
     Returns ``(id, n_hit, n_shingles, hit_frac)`` for documents with at
     least one overlapping shingle — the candidates to drop or audit
@@ -202,29 +200,24 @@ def ngram_contamination(
     are small); the corpus side therefore joins map-side and only the
     per-doc counts shuffle.
     """
-    c_sh = word_shingles(corpus, n, text_col, id_col)
-    e_sh = word_shingles(eval_docs, n, text_col, id_col).select("shingle").distinct()
-    hits = (
+    c_sh = doc_shingle_arrays(corpus).select(
+        "id", _shingles(), F.size("dsh").cast("long").alias("n_shingles")
+    )
+    e_sh = doc_shingle_arrays(eval_docs).select(_shingles()).distinct()
+    return (
         c_sh.join(F.broadcast(e_sh), "shingle")
-        .groupBy("id")
+        .groupBy("id", "n_shingles")
         .agg(F.count("*").cast("long").alias("n_hit"))
-    )
-    sizes = _doc_sizes(c_sh)
-    return hits.join(sizes, "id").select(
-        "id",
-        "n_hit",
-        F.col("n_shingles"),
-        F.round(F.col("n_hit") / F.col("n_shingles"), 6).alias("hit_frac"),
+        .select(
+            "id",
+            "n_hit",
+            "n_shingles",
+            F.round(F.col("n_hit") / F.col("n_shingles"), 6).alias("hit_frac"),
+        )
     )
 
 
-def dedup_lines_global(
-    docs: DataFrame,
-    sep: str = "\n",
-    min_count: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_lines_global(docs: DataFrame, min_count: int = 4) -> DataFrame:
     """C4-style global line deduplication: any line occurring
     ``min_count`` or more times across the corpus is removed from
     EVERY document; documents left with no lines drop out. Returns
@@ -242,9 +235,8 @@ def dedup_lines_global(
     none of whose content lines are duplicated therefore round-trips
     byte-identically, blank lines and per-line whitespace included
     (ADVICE r4: the first version rebuilt text from trimmed lines and
-    silently dropped blanks). ``sep`` is a literal separator
-    (regex-quoted for the split, re-inserted verbatim on reassembly).
-    Plan shape for 100 TB:
+    silently dropped blanks). Lines split on ``\\n`` and are rejoined
+    with it. Plan shape for 100 TB:
     explode lines → map-side-combined groupBy on the line for the
     counts → one shuffle join back at line grain (hot boilerplate
     lines are the skew case — AQE skew-join splits them; the count
@@ -255,13 +247,9 @@ def dedup_lines_global(
     hash-propose/string-verify pattern of operators/dedup.py) →
     per-document reassembly in original line order. Deterministic;
     exact SQL mirror in the ``line_dedup`` oracle."""
-    import re as _re
-
     lines = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.split(F.col(text_col), F.lit(_re.escape(sep)), -1)
-        ).alias("pos", "line"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.split(F.col("text"), F.lit("\n"), -1)).alias("pos", "line"),
     ).withColumn("_key", F.trim("line"))
     # count CONTENT lines only (non-blank after trim), on the trimmed
     # key; whitespace-only lines never enter the count table
@@ -289,7 +277,7 @@ def dedup_lines_global(
         .select(
             "id",
             F.array_join(
-                F.transform(F.col("_k"), lambda x: x["line"]), sep
+                F.transform(F.col("_k"), lambda x: x["line"]), "\n"
             ).alias("text"),
             F.col("n_lines_kept").cast("long"),
             F.col("n_lines_dropped").cast("long"),

@@ -50,22 +50,22 @@ def _lang_ladder_expr(count_of):
     return chain.otherwise("und")
 
 
-def lang_pred_expr(text_col: str = "text"):
-    """pred_lang as a single column expression over ``text_col`` (for
+def lang_pred_expr():
+    """pred_lang as a single column expression over ``text`` (for
     composed single-scan plans; see :func:`quality_exprs`). Same
     marker-vote + tie order as :func:`lang_id_heuristic` — both render
     :func:`lang_ladder_rules`."""
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     c = {lang: _count_in(words, m) for lang, m in LANG_MARKERS.items()}
     return _lang_ladder_expr(lambda lang: c[lang])
 
 
-def lang_id_heuristic(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id_heuristic(docs: DataFrame) -> DataFrame:
     """(id, predicted_lang): language with the most marker-word hits;
     'und' (undetermined) when no marker occurs. Ties broken by the
     fixed :func:`lang_ladder_rules` order."""
-    words = F.split(F.col(text_col), " ")
-    d = docs.select(F.col(id_col).alias("id"), words.alias("w"))
+    words = F.split(F.col("text"), " ")
+    d = docs.select(F.col("doc_id").alias("id"), words.alias("w"))
     counts = {lang: _count_in(F.col("w"), m) for lang, m in LANG_MARKERS.items()}
     sel = d.select("id", *[counts[k].cast("long").alias(f"n_{k}") for k in LANG_MARKERS])
     pred = _lang_ladder_expr(lambda lang: F.col(f"n_{lang}"))
@@ -81,33 +81,33 @@ def lang_id_heuristic(docs: DataFrame, text_col: str = "text", id_col: str = "do
 BPE_ISH_PATTERN = r" ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\s]+"
 
 
-def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """(id, n_ws_tokens, n_word_tokens, n_bpe_tokens, n_chars):
     whitespace tokens, alnum-run word tokens, and BPE-ish pretokenizer
     pieces (BPE_ISH_PATTERN) via regexp counting — all JVM-side."""
     return docs.select(
-        F.col(id_col).alias("id"),
-        F.size(F.split(F.col(text_col), " ")).cast("long").alias("n_ws_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit("[a-z0-9]+"), 0))
+        F.col("doc_id").alias("id"),
+        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_ws_tokens"),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
         .cast("long")
         .alias("n_word_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0))
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH_PATTERN), 0))
         .cast("long")
         .alias("n_bpe_tokens"),
-        F.length(F.col(text_col)).cast("long").alias("n_chars"),
+        F.length(F.col("text")).cast("long").alias("n_chars"),
     )
 
 
-def quality_exprs(text_col: str = "text") -> dict:
+def quality_exprs() -> dict:
     """The quality-score column expressions, exposed so composed plans
     (e.g. ``textclean.select_training_corpus``) can evaluate them inside
     an existing scan projection instead of self-joining two derived
     frames on id — at corpus scale that self-join is a full shuffle."""
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     en_stop = LANG_MARKERS["en"]
     n_words = F.size(words)
     n_stop = F.size(F.filter(words, lambda w: w.isin(*en_stop)))
-    mean_len = F.round((F.length(F.col(text_col)) - (n_words - 1)) / n_words, 6)
+    mean_len = F.round((F.length(F.col("text")) - (n_words - 1)) / n_words, 6)
     stop_ratio = F.round(n_stop / n_words, 6)
     quality = F.round(
         F.when((n_words >= 5) & (mean_len >= 2.0) & (mean_len <= 12.0), 1.0 - F.abs(stop_ratio - 0.05))
@@ -122,18 +122,14 @@ def quality_exprs(text_col: str = "text") -> dict:
     }
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """(id, n_words, mean_word_len, stopword_ratio, quality): simple
     length/stopword heuristics — documents outside sane bounds score 0."""
-    e = quality_exprs(text_col)
-    return docs.select(
-        F.col(id_col).alias("id"), *[e[k].alias(k) for k in e]
-    )
+    e = quality_exprs()
+    return docs.select(F.col("doc_id").alias("id"), *[e[k].alias(k) for k in e])
 
 
-def doc_fingerprints(
-    docs: DataFrame, shingle_n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def doc_fingerprints(docs: DataFrame) -> DataFrame:
     """(id, fp_min, fp_max): the extreme md5 hashes over word shingles
     (order statistics on hex strings → engine-portable; see
     :func:`winnow_fingerprints` for the full winnowing fp sets).
@@ -143,41 +139,32 @@ def doc_fingerprints(
     exchanges.
 
     The filter runs FIRST on the cheap equivalent predicate
-    ``size(split(text)) >= shingle_n`` (``split`` always returns ≥1
-    element, so for every shingle_n ≥ 1 this is exactly "the shingle
-    array is non-empty"). The round-6 form filtered on ``size(hs) >= 1``
-    AFTER deriving ``hs``: predicate pushdown substituted the whole md5
+    ``size(split(text)) >= 3`` (``split`` always returns ≥1 element,
+    so this is exactly "the word-3-gram shingle array is non-empty").
+    The round-6 form filtered on ``size(hs) >= 1`` AFTER deriving ``hs``: predicate pushdown substituted the whole md5
     transform into the filter condition below the projection, so every
     row paid the full shingle hashing twice (guide §4.4's duplication,
     minus the UDF) — half of an 18 s single-core stage at sf1.0."""
     from bootleg_spark.operators.dedup import shingle_array_expr
 
-    w = F.split(F.col(text_col), " ")
-    d0 = docs.where(F.size(w) >= shingle_n).select(
-        F.col(id_col).alias("id"), w.alias("w")
-    )
-    hs = F.transform(shingle_array_expr(F.col("w"), shingle_n), lambda s: F.md5(s))
+    w = F.split(F.col("text"), " ")
+    d0 = docs.where(F.size(w) >= 3).select(F.col("doc_id").alias("id"), w.alias("w"))
+    hs = F.transform(shingle_array_expr(F.col("w"), 3), lambda s: F.md5(s))
     d = d0.select("id", hs.alias("hs"))
     return d.select(
         "id", F.array_min("hs").alias("fp_min"), F.array_max("hs").alias("fp_max")
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    w: int = 4,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03): the distinct minima of every ``w``-wide sliding window
-    over the doc's ordered shingle-hash sequence — the rolling-hash
-    fingerprint set plagiarism/near-dup systems index, guaranteeing any
-    shared run of ``w + shingle_n - 1`` words contributes a common
-    fingerprint.
+    SIGMOD'03): the distinct minima of every 4-wide sliding window
+    over the doc's ordered word-3-gram shingle-hash sequence — the
+    rolling-hash fingerprint set plagiarism/near-dup systems index,
+    guaranteeing any shared run of 4 + 3 - 1 = 6 words contributes a
+    common fingerprint.
 
-    Returns distinct ``(id, fp)``. Docs with fewer than ``w`` shingles
+    Returns distinct ``(id, fp)``. Docs with fewer than 4 shingles
     fall back to one whole-doc window (their global min) so every doc
     with ≥1 shingle fingerprints.
 
@@ -191,13 +178,13 @@ def winnow_fingerprints(
     # it: a split() inlined into the transform re-evaluates per element
     # (HOFs get no common-subexpression elimination) — O(words²)/row,
     # measured 11× slower
-    w0 = docs.select(F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("w"))
+    w0 = docs.select(F.col("doc_id").alias("id"), F.split(F.col("text"), " ").alias("w"))
     words = F.col("w")
     hs = F.when(
-        F.size(words) >= shingle_n,
+        F.size(words) >= 3,
         F.transform(
-            F.sequence(F.lit(1), F.size(words) - F.lit(shingle_n - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(words, i, shingle_n))),
+            F.sequence(F.lit(1), F.size(words) - F.lit(2)),
+            lambda i: F.md5(F.concat_ws(" ", F.slice(words, i, 3))),
         ),
     ).otherwise(F.array().cast("array<string>"))
     d = w0.select("id", hs.alias("hs"))
@@ -205,8 +192,8 @@ def winnow_fingerprints(
         F.size(F.col("hs")) >= 1,
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(F.col("hs")) - w, F.lit(0))),
-                lambda i: F.array_min(F.slice(F.col("hs"), i + 1, w)),
+                F.sequence(F.lit(0), F.greatest(F.size(F.col("hs")) - 4, F.lit(0))),
+                lambda i: F.array_min(F.slice(F.col("hs"), i + 1, 4)),
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
@@ -215,7 +202,7 @@ def winnow_fingerprints(
     return d.select("id", F.explode(fps).alias("fp"))
 
 
-def repetition_scores(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """(id, top_word_frac, top_2gram_frac): fraction of the document
     occupied by its most frequent word / 2-gram — the Gopher-style
     repetition filters web pipelines drop boilerplate with (a page
@@ -224,8 +211,8 @@ def repetition_scores(docs: DataFrame, text_col: str = "text", id_col: str = "do
     One explode per n, groupBy (doc, gram) with map-side partial
     aggregation, then a per-doc max — no windows, no Python.
     """
-    words = F.split(F.col(text_col), " ")
-    base = docs.select(F.col(id_col).alias("id"), words.alias("w"), F.size(words).alias("n"))
+    words = F.split(F.col("text"), " ")
+    base = docs.select(F.col("doc_id").alias("id"), words.alias("w"), F.size(words).alias("n"))
 
     def top_frac(n_gram: int, out_name: str):
         grams = F.when(
@@ -259,13 +246,7 @@ def repetition_scores(docs: DataFrame, text_col: str = "text", id_col: str = "do
     )
 
 
-def quality_model_score(
-    docs: DataFrame,
-    weights: tuple = (-2.0, 0.35, 0.15, 3.0),
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_model_score(docs: DataFrame) -> DataFrame:
     """(id, score, keep): MODEL-based quality scoring — the
     fastText/CCNet-classifier pattern every production corpus recipe
     layers over heuristics. A logistic model over interpretable
@@ -274,18 +255,17 @@ def quality_model_score(
         z = w0 + w1·ln(1 + n_words) + w2·mean_word_len
                + w3·stopword_ratio            score = σ(z), rounded 6
 
-    The WEIGHTS are data, not code — swap in trained coefficients the
-    same way the encoder seam swaps ``.npz`` weights (the defaults are
-    a deterministic stand-in: length-positive, stopword-positive,
-    biased negative so junk scores < 0.5). The plan is the point: the
+    The weights (w0..w3) = (−2.0, 0.35, 0.15, 3.0) are a deterministic
+    stand-in for trained coefficients: length-positive,
+    stopword-positive, biased negative so junk scores < 0.5. The plan is the point: the
     whole model evaluates INSIDE the scan projection as codegen
     expressions (features rounded to 6 first, exactly as
     :func:`quality_exprs` — no UDF, no second pass, no shuffle), so at
     100 TB the classifier costs the same as any other column. ``keep``
-    is ``score ≥ threshold`` computed on the ROUNDED score, so the
-    boolean is engine-portable too."""
-    w0, w1, w2, w3 = (float(w) for w in weights)
-    e = quality_exprs(text_col)
+    is ``score ≥ 0.5`` computed on the ROUNDED score, so the boolean is
+    engine-portable too."""
+    w0, w1, w2, w3 = -2.0, 0.35, 0.15, 3.0
+    e = quality_exprs()
     z = (
         F.lit(w0)
         + F.lit(w1) * F.log1p(e["n_words"])
@@ -293,21 +273,12 @@ def quality_model_score(
         + F.lit(w3) * e["stopword_ratio"]
     )
     score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-    return docs.select(
-        F.col(id_col).alias("id"),
-        score.alias("score"),
-    ).withColumn("keep", F.col("score") >= F.lit(float(threshold)))
+    return docs.select(F.col("doc_id").alias("id"), score.alias("score")).withColumn("keep", F.col("score") >= F.lit(0.5))
 
 
-def lm_cross_entropy(
-    docs: DataFrame,
-    ref: DataFrame | None = None,
-    k: float = 1.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lm_cross_entropy(docs: DataFrame, ref: DataFrame | None = None) -> DataFrame:
     """(id, cross_entropy, n_bigrams): per-document cross-entropy under
-    an add-k-smoothed BIGRAM language model — the CCNet/KenLM
+    an add-one-smoothed BIGRAM language model — the CCNet/KenLM
     perplexity-filter pattern (documents far from the reference
     distribution score high and get cut). ``ref`` is the training
     corpus for the model (defaults to ``docs`` itself — self-scored
@@ -315,7 +286,7 @@ def lm_cross_entropy(
     shape; like the encoder and quality-model seams, the model here is
     DATA — two count dims — not code).
 
-        P(w2|w1) = (c(w1,w2) + k) / (c(w1) + k·V)
+        P(w2|w1) = (c(w1,w2) + 1) / (c(w1) + V)
         cross_entropy(doc) = mean over bigrams of −ln P, rounded 6
 
     Tokens are lowercased whitespace words; documents with fewer than
@@ -327,26 +298,24 @@ def lm_cross_entropy(
     nothing at corpus×vocab grain, no UDF anywhere."""
     ref = ref if ref is not None else docs
 
-    def words(col):
-        return F.split(F.lower(F.col(col)), " ")
+    words = F.split(F.lower(F.col("text")), " ")
 
     def bigram_rows(frame, with_id):
-        w = words(text_col)
         pairs = F.zip_with(
-            F.expr(f"slice(split(lower({text_col}), ' '), 1, size(split(lower({text_col}), ' ')) - 1)"),
-            F.expr(f"slice(split(lower({text_col}), ' '), 2, size(split(lower({text_col}), ' ')) - 1)"),
+            F.expr("slice(split(lower(text), ' '), 1, size(split(lower(text), ' ')) - 1)"),
+            F.expr("slice(split(lower(text), ' '), 2, size(split(lower(text), ' ')) - 1)"),
             lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
         )
-        cols = ([F.col(id_col).alias("id")] if with_id else []) + [
+        cols = ([F.col("doc_id").alias("id")] if with_id else []) + [
             F.explode(pairs).alias("bg")
         ]
-        out = frame.where(F.size(w) >= 2).select(*cols)
+        out = frame.where(F.size(words) >= 2).select(*cols)
         return out.select(
             *(["id"] if with_id else []), F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
         )
 
     uni = (
-        ref.select(F.explode(words(text_col)).alias("w"))
+        ref.select(F.explode(words).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("double").alias("c1"))
     )
@@ -364,8 +333,8 @@ def lm_cross_entropy(
             "id",
             (
                 -F.log(
-                    (F.coalesce(F.col("c2"), F.lit(0.0)) + F.lit(k))
-                    / (F.coalesce(F.col("c1"), F.lit(0.0)) + F.lit(k * v))
+                    (F.coalesce(F.col("c2"), F.lit(0.0)) + F.lit(1.0))
+                    / (F.coalesce(F.col("c1"), F.lit(0.0)) + F.lit(float(v)))
                 )
             ).alias("nll"),
         )

@@ -39,13 +39,13 @@ def asof_join(
     keys: list[str],
     left_ts: str = "ts",
     right_ts: str = "ts",
-    right_prefix: str = "r_",
 ) -> DataFrame:
     """For every ``left`` row, attach the ``right`` row with the
     largest ``right_ts`` ≤ ``left_ts`` within the same ``keys`` (the
     classic as-of join: price at trade time, last config before an
     event, latest crawl snapshot before an annotation). Left rows with
-    no prior right row keep nulls — LEFT OUTER semantics.
+    no prior right row keep nulls — LEFT OUTER semantics. The right
+    row's non-key columns come back prefixed ``r_``.
 
     Union-merge construction: right rows get side=0, left rows side=1;
     one window over (keys) ordered by (ts, side, tiebreak) carries the
@@ -88,9 +88,7 @@ def asof_join(
         .where(F.col("__side") == 1)
     )
     out_cols = [F.col(f"__l.{c}").alias(c) for c in left.columns]
-    out_cols += [
-        F.col(f"__match.{c}").alias(f"{right_prefix}{c}") for c in r_payload
-    ]
+    out_cols += [F.col(f"__match.{c}").alias(f"r_{c}") for c in r_payload]
     return merged.select(*out_cols)
 
 
@@ -137,25 +135,20 @@ def interval_join(
     )
 
 
-def rollup_time_grains(
-    events: DataFrame,
-    ts_col: str = "ts",
-    group_cols: list[str] | None = None,
-    value_col: str = "value",
-    grains: tuple[str, ...] = ("hour", "day"),
-) -> DataFrame:
+def rollup_time_grains(events: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
     """(grain, bucket_start_epoch, *group_cols, n_events, total_value):
-    the hypertable continuous-aggregate pattern — every requested grain
+    the hypertable continuous-aggregate pattern — the hour and day grains
     computed in ONE scan with GROUPING SETS. Catalyst plans this as an
     Expand (each input row duplicated once per grain) feeding a single
     hash aggregate, so map-side partial aggregation still collapses
     rows before the exchange; n grains cost one shuffle, not n scans.
     ``total_value`` is rounded to 6 to pin float-sum determinism."""
     group_cols = group_cols or []
+    grains = ("hour", "day")
     base = events.select(
-        *[F.date_trunc(g, F.col(ts_col)).alias(f"__t_{g}") for g in grains],
+        *[F.date_trunc(g, F.col("ts")).alias(f"__t_{g}") for g in grains],
         *group_cols,
-        F.col(value_col).alias("__v"),
+        F.col("value").alias("__v"),
     )
     sets = ", ".join(
         "(" + ", ".join([f"__t_{g}", *group_cols]) + ")" for g in grains

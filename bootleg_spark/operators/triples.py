@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def doc_entities(linked: DataFrame, id_col: str = "doc_id", qid_col: str = "qid_pred") -> DataFrame:
+def doc_entities(linked: DataFrame, qid_col: str = "qid_pred") -> DataFrame:
     """Distinct (page, qid) — bounds pair fan-out before the self-join."""
-    return linked.select(F.col(id_col).alias("doc_id"), F.col(qid_col).alias("qid")).distinct()
+    return linked.select("doc_id", F.col(qid_col).alias("qid")).distinct()
 
 
 def cooccurrence_pairs(ents: DataFrame) -> DataFrame:
@@ -83,14 +83,14 @@ def triples_from_doc_entities(
     )
 
 
-def cooccurrence_pmi(ents: DataFrame, min_pair_count: int = 2) -> DataFrame:
+def cooccurrence_pmi(ents: DataFrame) -> DataFrame:
     """(qid_a, qid_b, n_pair, n_a, n_b, pmi, npmi): pointwise mutual
     information of entity co-occurrence at page grain — the
     distant-supervision signal relation-extraction pipelines rank
     candidate entity pairs by before proposing NEW relations (Mintz et
     al. ACL'09 start from exactly this table). Probabilities are doc
     frequencies over N = distinct pages in ``ents``; pairs unordered
-    (qid_a < qid_b), emitted when seen on ≥ ``min_pair_count`` pages;
+    (qid_a < qid_b), emitted when seen on ≥ 2 pages;
     npmi = pmi / −ln(p(a,b)) (Bouma 2009), with the p(a,b)=1 corner
     pinned to 1.0 before the division can hit −ln(1)=0. Rounds to 6
     for display; npmi divides the UNROUNDED pmi.
@@ -111,7 +111,7 @@ def cooccurrence_pmi(ents: DataFrame, min_pair_count: int = 2) -> DataFrame:
         .where(F.col("qid_a") < F.col("qid_b"))
         .groupBy("qid_a", "qid_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pair"))
-        .where(F.col("n_pair") >= min_pair_count)
+        .where(F.col("n_pair") >= 2)
     )
     ca = F.broadcast(ent_counts.select(F.col("qid").alias("qid_a"), F.col("n_q").alias("n_a")))
     cb = F.broadcast(ent_counts.select(F.col("qid").alias("qid_b"), F.col("n_q").alias("n_b")))

@@ -138,7 +138,7 @@ def with_ctes(*ctes: str, final: str) -> str:
 
 def shingle_body_sql(n: int, src: str = "documents", extra_where: str = "") -> str:
     """CTE body: DISTINCT (id, shingle) over word n-grams of src.text —
-    the SQL mirror of ``operators.dedup.word_shingles``."""
+    the SQL mirror of ``explode(dsh)`` over ``operators.dedup.doc_shingle_arrays``."""
     where = f" AND {extra_where}" if extra_where else ""
     return f"""
   SELECT DISTINCT doc_id AS id, s.shingle
@@ -150,10 +150,10 @@ def shingle_body_sql(n: int, src: str = "documents", extra_where: str = "") -> s
   WHERE len(s.shingle) > 0{where}"""
 
 
-def band_minima_body_sql(n_bands: int = 8) -> str:
+def band_minima_body_sql() -> str:
     """CTE body: per-(id, band) MinHash bucket minima over a ``sh``
     CTE — mirror of ``operators.dedup._band_minima_arrays``."""
-    vals = ",".join(f"({b})" for b in range(n_bands))
+    vals = ",".join(f"({b})" for b in range(8))
     return f"""
   SELECT id, b.band AS band, min(md5(CAST(b.band AS VARCHAR) || ':' || shingle)) AS min_hash
   FROM sh CROSS JOIN (VALUES {vals}) b(band)

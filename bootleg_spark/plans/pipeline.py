@@ -188,7 +188,7 @@ class KgPipeline:
                 found, ctx, cl = [], [], []
                 for html in pdf["html"]:
                     text = extract_html_text(bytes(html))
-                    ms = ngram_extract_aliases(text, aliases, 1, 6, dict_max_words=dict_w)
+                    ms = ngram_extract_aliases(text, aliases, dict_max_words=dict_w)
                     found.append(ms)
                     for a, s, e in ms:
                         ctx.append(extract_context((s, e), text, window))
@@ -200,9 +200,9 @@ class KgPipeline:
         p = pages if pages is not None else self.pages()
         return p.select(*cols, "html").mapInPandas(_kernel, schema)
 
-    def linked_fused(self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD) -> DataFrame:
+    def linked_fused(self, pages: DataFrame | None = None) -> DataFrame:
         """①–④ through the fused kernel (:meth:`_link`): one row per
-        mention linked above ``threshold``, the staged :meth:`linked`
+        mention linked above ``S.PROB_THRESHOLD``, the staged :meth:`linked`
         columns minus the candidate arrays."""
         span_cols = ["url", "doc_id", "mention_pos", "alias", "char_start", "char_end"]
 
@@ -222,11 +222,9 @@ class KgPipeline:
             "char_start int, char_end int, qid_pred string, prob double"
         )
         out = self._link(pages, ["url", "doc_id"], _mention_rows, schema)
-        return out.where((F.col("qid_pred") != "-1") & (F.col("prob") > F.lit(threshold)))
+        return out.where((F.col("qid_pred") != "-1") & (F.col("prob") > F.lit(S.PROB_THRESHOLD)))
 
-    def linked_relational(
-        self, pages: DataFrame | None = None, threshold: float = S.PROB_THRESHOLD
-    ) -> DataFrame:
+    def linked_relational(self, pages: DataFrame | None = None) -> DataFrame:
         """① + ② in the JVM (the html strip and the relational mention
         matcher, both codegen), then the staged ③ + ④ of
         :meth:`_link_mentions`. Exact ONLY on pages passing
@@ -258,7 +256,7 @@ class KgPipeline:
         mentions = extract_mentions_ngram_relational(
             p, self.dims["aliases"], text_col="text_extracted"
         )
-        return self._link_mentions(mentions, "text_extracted", threshold).select(
+        return self._link_mentions(mentions, "text_extracted", S.PROB_THRESHOLD).select(
             "url", "doc_id", "mention_pos", "alias", "char_start", "char_end",
             "qid_pred", "prob",
         )
@@ -266,7 +264,6 @@ class KgPipeline:
     def triples_fused_local(
         self,
         pages: DataFrame | None = None,
-        threshold: float = S.PROB_THRESHOLD,
         group_cols: tuple | list = (),
     ) -> DataFrame:
         """①–⑤ in one pass: per-page triple emission inside the fused
@@ -294,7 +291,9 @@ class KgPipeline:
             out, lo = set(), 0
             for ms, *key in zip(found, *(pdf[c] for c in group_cols)):
                 hi = lo + len(ms)
-                ents = {qid[i] for i in range(lo, hi) if qid[i] != "-1" and prob[i] > threshold}
+                ents = {
+                    qid[i] for i in range(lo, hi) if qid[i] != "-1" and prob[i] > S.PROB_THRESHOLD
+                }
                 lo = hi
                 for q in ents:
                     for rel, obj in rels.get(q, ()):
@@ -324,7 +323,7 @@ class KgPipeline:
         """
         if fused:
             return self.triples_fused_local(pages)
-        ents = doc_entities(self.linked(pages), id_col="doc_id", qid_col="qid_pred")
+        ents = doc_entities(self.linked(pages), qid_col="qid_pred")
         return triples_from_doc_entities(ents, self.dims["kg_relations"])
 
 
@@ -364,19 +363,13 @@ def _manifest_done(out_dir: str, layout: str, sf_dir: str) -> set[int]:
                 raise ValueError(
                     f"manifest {manifest_path} was written with {key} "
                     f"{rec.get(key)!r}, this run has {want!r}; its "
-                    "buckets hold other pages — use a fresh out_dir "
-                    "or resume=False"
+                    "buckets hold other pages — use a fresh out_dir"
                 )
         done.add(rec["bucket"])
     return done
 
 
-def materialize_triples(
-    pipe: KgPipeline,
-    out_dir: str,
-    n_buckets: int = 4,
-    resume: bool = True,
-) -> list[dict]:
+def materialize_triples(pipe: KgPipeline, out_dir: str, n_buckets: int = 4) -> list[dict]:
     """Link the corpus once into a store of triples bucketed by
     doc-id-hash, with a checkpoint manifest: the run's one linking
     pass, which :func:`snapshot_triples` then publishes.
@@ -399,7 +392,7 @@ def materialize_triples(
 
     os.makedirs(out_dir, exist_ok=True)
     layout = store.layout_id(["doc_id"], n_buckets)
-    done = _manifest_done(out_dir, layout, pipe.sf_dir) if resume else set()
+    done = _manifest_done(out_dir, layout, pipe.sf_dir)
     todo = [b for b in range(n_buckets) if b not in done]
     if not todo:
         return []
@@ -520,12 +513,7 @@ def insert_new_triples(tri: DataFrame, graph_table: str, batch_id: int) -> dict 
     return st.commit_stream_batch(tri, graph_table, batch_id=batch_id)
 
 
-def incremental_kg_update(
-    pipe: KgPipeline,
-    pages_table: str,
-    graph_table: str,
-    group: str = "kg-builder",
-) -> dict | None:
+def incremental_kg_update(pipe: KgPipeline, pages_table: str, graph_table: str) -> dict | None:
     """One incremental KG-construction step over the table-as-log: the
     crawl appends pages to ``pages_table`` (snapshot-manifest table);
     this consumes ONLY the pages added since the last acknowledged run
@@ -551,13 +539,13 @@ def incremental_kg_update(
     ``None`` when the consumer is caught up."""
     from bootleg_spark.sources import snaptable as st
 
-    got = st.consume_appends(pipe.spark, pages_table, group)
+    got = st.consume_appends(pipe.spark, pages_table, "kg-builder")
     if got is None:
         return None
     pages, v = got
     tri = pipe.triples(pages)
     commit = insert_new_triples(tri, graph_table, batch_id=v)
-    st.ack_consumed(pages_table, group, v)
+    st.ack_consumed(pages_table, "kg-builder", v)
     return {
         "consumed_version": v,
         "new_triples": commit["new_rows"] if commit else 0,

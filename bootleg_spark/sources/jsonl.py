@@ -23,23 +23,23 @@ from pyspark.sql.types import StructType
 
 
 def parse_json_lines(
-    raw: DataFrame, schema: StructType, value_col: str = "value", keep_cols: tuple[str, ...] = ()
+    raw: DataFrame, schema: StructType, keep_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """Parse a frame of raw JSON lines; ``keep_cols`` (e.g. a line-number
     column) ride along unchanged."""
     parsed = raw.select(
         F.from_json(
-            value_col,
+            "value",
             schema,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
         ).alias("j"),
-        value_col,
+        "value",
         *keep_cols,
     )
     cols = [f.name for f in schema.fields if f.name != "_corrupt"]
     return parsed.select(
         *[F.col(f"j.{c}").alias(c) for c in cols],
-        F.when(F.col("j").isNull() | F.col("j._corrupt").isNotNull(), F.col(value_col)).alias(
+        F.when(F.col("j").isNull() | F.col("j._corrupt").isNotNull(), F.col("value")).alias(
             "_corrupt"
         ),
         *keep_cols,

@@ -299,25 +299,17 @@ def profile_entity_types(profile: DataFrame, max_types: int = 10) -> DataFrame:
     )
 
 
-def profile_kg_relations(
-    profile: DataFrame, max_connections: int = 100, keep_pos: bool = False
-) -> DataFrame:
-    """(subj_qid, rel, obj_qid[, pos]): relation pairs exploded with
+def profile_kg_relations(profile: DataFrame, max_connections: int = 100) -> DataFrame:
+    """(subj_qid, rel, obj_qid): relation pairs exploded with
     per-(qid, relation) order-of-appearance truncation to
     max_connections (kg_symbols.py:70-81 keeps the first
-    max_connections objects of each relation's list). ``keep_pos``
-    retains the 0-based per-(qid, rel) position the truncation ranks
-    by."""
+    max_connections objects of each relation's list)."""
     r = profile.select(
         F.col("entity_id").alias("subj_qid"),
         F.posexplode("relations").alias("pos", "r"),
     ).select("subj_qid", F.col("r.relation").alias("rel"), F.col("r.object").alias("obj_qid"), "pos")
     w = Window.partitionBy("subj_qid", "rel").orderBy("pos")
     out = r.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") <= max_connections)
-    if keep_pos:
-        return out.select(
-            "subj_qid", "rel", "obj_qid", (F.col("_rk") - 1).cast("long").alias("pos")
-        )
     return out.select("subj_qid", "rel", "obj_qid")
 
 

@@ -214,9 +214,7 @@ def sentences_to_mentions(sents: DataFrame, use_weak_label: bool = True) -> Data
 import pandas as pd  # noqa: E402
 
 
-def sentences_add_char_spans(
-    df: DataFrame, text_col: str = "sentence", spans_col: str = "spans"
-) -> DataFrame:
+def sentences_add_char_spans(df: DataFrame, text_col: str = "sentence") -> DataFrame:
     """The reference's convert_to_char_spans preprocessing CLI
     (utils/preprocessing/convert_to_char_spans.py:34-88) as ONE
     Arrow-batched projection: word ``spans`` over arbitrary-whitespace
@@ -240,4 +238,4 @@ def sentences_add_char_spans(
             out.append(word_spans_to_char_spans(t, word_spans))
         return pd.Series(out)
 
-    return df.withColumn("char_spans", _conv(F.col(text_col), F.col(spans_col)))
+    return df.withColumn("char_spans", _conv(F.col(text_col), F.col("spans")))

@@ -703,7 +703,6 @@ def delete_rows(
     table: str,
     condition: str,
     prune: tuple[str, str, object] | None = None,
-    max_retries: int = 3,
 ) -> dict | None:
     """Copy-on-write row-level DELETE (Iceberg's copy-on-write mode —
     the first real-table capability a production corpus hits:
@@ -747,7 +746,6 @@ def delete_rows(
         transform=lambda df, cond: df.where(~cond),
         mode="delete",
         summary=lambda n: {"delete_condition": condition, "deleted_rows": n},
-        max_retries=max_retries,
     )
 
 
@@ -757,7 +755,6 @@ def update_rows(
     condition: str,
     set_exprs: dict[str, str],
     prune: tuple[str, str, object] | None = None,
-    max_retries: int = 3,
 ) -> dict | None:
     """Copy-on-write row-level UPDATE — rows matching ``condition``
     have each column in ``set_exprs`` replaced by its SQL expression
@@ -795,7 +792,6 @@ def update_rows(
             "set_exprs": dict(set_exprs),
             "updated_rows": n,
         },
-        max_retries=max_retries,
     )
 
 
@@ -807,7 +803,6 @@ def _cow_rewrite(
     transform,
     mode: str,
     summary,
-    max_retries: int,
 ) -> dict | None:
     """Shared copy-on-write machinery for DELETE and UPDATE: metadata
     prune → :func:`_touched` detection → per-partition-group rewrite via
@@ -840,15 +835,10 @@ def _cow_rewrite(
         # — they apply by value, not by file identity — so they carry
         return {"files": files, **summary(n_matched), "rewritten": sorted(touched_rel)}
 
-    return _commit(table, mode, build, max_retries)
+    return _commit(table, mode, build)
 
 
-def delete_rows_mor(
-    spark: SparkSession,
-    table: str,
-    keys: DataFrame,
-    max_retries: int = 3,
-) -> dict:
+def delete_rows_mor(spark: SparkSession, table: str, keys: DataFrame) -> dict:
     """MERGE-ON-READ equality DELETE (Iceberg v2's other delete mode):
     instead of rewriting every file containing a match (copy-on-write,
     :func:`delete_rows`), commit only a small DELETE FILE holding the
@@ -888,15 +878,10 @@ def delete_rows_mor(
             "delete_files": (base.get("delete_files") or []) + delete_entries,
         }
 
-    return _commit(table, "delete-mor", build, max_retries)
+    return _commit(table, "delete-mor", build)
 
 
-def delete_rows_positional(
-    spark: SparkSession,
-    table: str,
-    condition: str,
-    max_retries: int = 3,
-) -> dict | None:
+def delete_rows_positional(spark: SparkSession, table: str, condition: str) -> dict | None:
     """MERGE-ON-READ POSITIONAL delete (Iceberg v2 position delete
     files): evaluate ``condition`` once against the current snapshot,
     record the matching rows' (file_path, row_pos) coordinates in a
@@ -951,7 +936,7 @@ def delete_rows_positional(
             "delete_files": (base.get("delete_files") or []) + delete_entries,
         }
 
-    return _commit(table, "delete-pos", build, max_retries)
+    return _commit(table, "delete-pos", build)
 
 
 def _has_positional(snap: dict) -> bool:
@@ -1056,9 +1041,7 @@ def _apply_mor_deletes(spark: SparkSession, table: str, df: DataFrame, snap: dic
     return df.drop(*added)
 
 
-def apply_deletes(
-    spark: SparkSession, table: str, max_retries: int = 3
-) -> dict | None:
+def apply_deletes(spark: SparkSession, table: str) -> dict | None:
     """Materialize pending merge-on-read delete files: rewrite the data
     files minus matching rows and commit a snapshot with no
     ``delete_files`` — ending the per-scan anti-join tax (Iceberg's
@@ -1099,7 +1082,7 @@ def apply_deletes(
             "rewritten": sorted(touched_rel),
         }
 
-    return _commit(table, "apply-deletes", build, max_retries)
+    return _commit(table, "apply-deletes", build)
 
 
 def _overlaps(lo, hi, op: str, value) -> bool:
@@ -1316,7 +1299,6 @@ def merge_rows(
     table: str,
     source: DataFrame,
     key_cols: list[str],
-    max_retries: int = 3,
 ) -> dict | None:
     """Copy-on-write MERGE (upsert): every table row whose key matches
     a ``source`` row is replaced by that source row; source rows with
@@ -1383,15 +1365,10 @@ def merge_rows(
             "rewritten": sorted(touched_rel),
         }
 
-    return _commit(table, "merge", build, max_retries)
+    return _commit(table, "merge", build)
 
 
-def compact(
-    spark: SparkSession,
-    table: str,
-    target_rows: int = 1_000_000,
-    max_retries: int = 3,
-) -> dict | None:
+def compact(spark: SparkSession, table: str, target_rows: int = 1_000_000) -> dict | None:
     """Bin-pack small data files into ~``target_rows`` files and commit
     the result as a new snapshot — Iceberg's rewrite_data_files,
     the answer to the small-files problem that per-batch streaming
@@ -1444,7 +1421,7 @@ def compact(
         _check_rewrite_base(table, snap, base)
         return {"files": files, "compacted": sorted(small_set)}
 
-    return _commit(table, "compact", build, max_retries)
+    return _commit(table, "compact", build)
 
 
 def zorder_table(
@@ -1741,7 +1718,7 @@ def drop_ref(table: str, name: str) -> None:
     os.unlink(_ref_path(table, name))
 
 
-def rollback_table(table: str, to_version: int, max_retries: int = 3) -> dict:
+def rollback_table(table: str, to_version: int) -> dict:
     """Restore snapshot ``to_version`` as a NEW commit (Iceberg's
     rollback): the new snapshot references exactly the target's data
     files, delete files, schema, and partition spec — metadata-only, no
@@ -1762,7 +1739,6 @@ def rollback_table(table: str, to_version: int, max_retries: int = 3) -> dict:
             "files": target["files"],
             "rolled_back_to": to_version,
         },
-        max_retries,
     )
 
 
@@ -1830,7 +1806,7 @@ def read_staged(spark: SparkSession, table: str, wap_id: str) -> DataFrame:
     return _read_files(spark, table, _schema(staged), [f["path"] for f in staged["files"]])
 
 
-def publish_staged(table: str, wap_id: str, max_retries: int = 3) -> dict:
+def publish_staged(table: str, wap_id: str) -> dict:
     """Atomically make a staged write visible: new snapshot = current
     base's files + the staged files (pure metadata — no data I/O, so
     publish is O(manifest) regardless of staged volume). The base may
@@ -1852,7 +1828,7 @@ def publish_staged(table: str, wap_id: str, max_retries: int = 3) -> dict:
             "wap_id": wap_id,
         }
 
-    snap = _commit(table, "wap_publish", build, max_retries)
+    snap = _commit(table, "wap_publish", build)
     os.unlink(_wap_path(table, wap_id))
     return snap
 

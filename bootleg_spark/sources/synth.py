@@ -157,14 +157,14 @@ def entities_dim(aliases: DataFrame) -> DataFrame:
     )
 
 
-def alias_cands(entities: DataFrame, max_candidates: int = S.MAX_CANDIDATES) -> DataFrame:
+def alias_cands(entities: DataFrame) -> DataFrame:
     """Per-alias candidate list, sorted (score desc, qnum desc), truncated
-    to max_candidates with 1-based rank (entity_symbols.py:305-316)."""
+    to S.MAX_CANDIDATES with 1-based rank (entity_symbols.py:305-316)."""
     w = Window.partitionBy("alias").orderBy(F.desc("score"), F.desc("qnum"))
     return (
         entities.select("alias", "qid", "qnum", "score")
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= max_candidates)
+        .where(F.col("rank") <= S.MAX_CANDIDATES)
     )
 
 

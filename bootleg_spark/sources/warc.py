@@ -71,25 +71,18 @@ def warc_record_bytes(url_col, ts_col, payload_col):
     return F.concat(F.encode(header, "UTF-8"), payload_col, F.encode(F.lit("\r\n\r\n"), "UTF-8"))
 
 
-def pages_to_warc(
-    pages: DataFrame,
-    group_mod: int = 8,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    payload_col: str = "html",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pages_to_warc(pages: DataFrame, group_mod: int = 8) -> DataFrame:
     """(bucket, warc): multi-record WARC buffers, ``group_mod`` of them,
-    records concatenated in ``id_col`` order within each bucket.
+    records concatenated in ``doc_id`` order within each bucket.
 
     Deterministic: bucket assignment is ``pmod(id, group_mod)`` and the
     in-buffer order is the sorted id, so the same input always yields
     byte-identical buffers (testable against goldens).
     """
     rec = pages.select(
-        F.pmod(F.col(id_col), F.lit(group_mod)).cast("long").alias("bucket"),
-        F.col(id_col).alias("_id"),
-        warc_record_bytes(F.col(url_col), F.col(ts_col), F.col(payload_col)).alias("rec"),
+        F.pmod(F.col("doc_id"), F.lit(group_mod)).cast("long").alias("bucket"),
+        F.col("doc_id").alias("_id"),
+        warc_record_bytes(F.col("url"), F.col("warc_ts"), F.col("html")).alias("rec"),
     )
     return (
         rec.groupBy("bucket")
@@ -228,14 +221,7 @@ MANIFEST_SCHEMA = StructType(
 )
 
 
-def write_warc_files(
-    pages: DataFrame,
-    out_dir: str,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    payload_col: str = "html",
-    overwrite: bool = False,
-) -> DataFrame:
+def write_warc_files(pages: DataFrame, out_dir: str, overwrite: bool = False) -> DataFrame:
     """Production sink: one ``.warc.gz`` file per partition, each record
     its own gzip member (Common Crawl's layout — seekable per record).
 
@@ -296,7 +282,7 @@ def write_warc_files(
                 os.unlink(os.path.join(out_dir, name))
 
     rec = pages.select(
-        warc_record_bytes(F.col(url_col), F.col(ts_col), F.col(payload_col)).alias("rec")
+        warc_record_bytes(F.col("url"), F.col("warc_ts"), F.col("html")).alias("rec")
     )
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -84,7 +84,7 @@ def reference_outputs(sf_dir: str) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataF
     triples = set()
     for doc_id, lang, text in docs:
         url = f"{S.URL_PREFIX}{lang}/{doc_id}"
-        ms = ngram_extract_aliases(text, alias_set, 1, 6, dict_max_words=dict_w)
+        ms = ngram_extract_aliases(text, alias_set, dict_max_words=dict_w)
         if not ms:
             continue
         ctxs = [extract_context((cs, ce), text, S.MAX_SEQ_WINDOW_LEN) for _, cs, ce in ms]

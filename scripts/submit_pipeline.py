@@ -39,7 +39,7 @@ def main() -> None:
     from bootleg_spark.plans.pipeline import KgPipeline, materialize_triples, snapshot_triples
 
     pipe = KgPipeline(spark, sf_dir)
-    records = materialize_triples(pipe, out_dir, n_buckets=n_buckets, resume=True)
+    records = materialize_triples(pipe, out_dir, n_buckets=n_buckets)
     done = sum(r["pages"] for r in records)
     print(f"materialized {len(records)} bucket(s), {done} pages -> {out_dir}")
 

@@ -224,7 +224,7 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     # ranks, and tie order as the exact path
     df = _emb_df(spark)
     exact = _rows(similarity.cosine_topk_bruteforce(df, n_queries=4, k=5))
-    assert _rows(similarity.ivf_topk(df, n_queries=4, k=5, n_cells=4, n_probe=4)) == exact
+    assert _rows(similarity.ivf_topk(df, n_queries=4, n_cells=4, n_probe=4)) == exact
 
 
 def test_ivf_recall_improves_with_probes(spark):
@@ -233,7 +233,7 @@ def test_ivf_recall_improves_with_probes(spark):
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact}
 
     def recall(n_probe):
-        got = similarity.ivf_topk(df, n_queries=6, k=5, n_cells=4, n_probe=n_probe).collect()
+        got = similarity.ivf_topk(df, n_queries=6, n_cells=4, n_probe=n_probe).collect()
         hits = {(r["query_id"], r["neighbor_id"]) for r in got} & truth
         return len(hits) / len(truth)
 
@@ -254,7 +254,7 @@ def test_winnowing_guarantee_and_short_doc_fallback(spark):
             "tiny doc here",  # 1 shingle < w -> whole-doc fallback window
         ],
     )
-    fps = textstats.winnow_fingerprints(docs, w=4, shingle_n=3).collect()
+    fps = textstats.winnow_fingerprints(docs).collect()
     by_doc = {}
     for r in fps:
         by_doc.setdefault(r["id"], set()).add(r["fp"])
@@ -277,10 +277,10 @@ def test_ivf_table_layout_prunes_and_matches(spark, tmp_path):
     assert n_files >= 2  # range partitioning really split the cells
 
     exact = _rows(similarity.cosine_topk_bruteforce(df, n_queries=4, k=5))
-    assert _rows(similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=4)) == exact
+    assert _rows(similarity.ivf_table_topk(spark, table, n_queries=4, n_probe=4)) == exact
 
     # 1-probe: fewer files opened than the table holds
-    one = similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=1)
+    one = similarity.ivf_table_topk(spark, table, n_queries=4, n_probe=1)
     rows = one.collect()
     assert len(rows) > 0
     # every neighbor's cell must be a probed cell for its query
@@ -311,7 +311,7 @@ def test_ivf_table_topk_scores_probes_once(spark, tmp_path, monkeypatch):
     real_load, loads = st.load_snapshot, []
     monkeypatch.setattr(st, "load_snapshot", lambda *a: loads.append(a) or real_load(*a))
     out, n_jobs = count_jobs(
-        spark, lambda: similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=1)
+        spark, lambda: similarity.ivf_table_topk(spark, table, n_queries=4, n_probe=1)
     )
     assert n_jobs <= 1 and len(loads) == 1
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -335,11 +335,11 @@ def test_ivf_table_survives_deletes(spark, tmp_path, mode):
     else:
         st.delete_rows(spark, table, "vec_id = 2")
     exact = _rows(similarity.cosine_topk_bruteforce(df.where("vec_id != 2"), n_queries=4, k=5))
-    assert _rows(similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=4)) == exact
+    assert _rows(similarity.ivf_table_topk(spark, table, n_queries=4, n_probe=4)) == exact
 
     st.write_table(df, table)
     with pytest.raises(ValueError, match=re.escape(table)):
-        similarity.ivf_table_topk(spark, table, n_queries=4, k=5, n_probe=4)
+        similarity.ivf_table_topk(spark, table, n_queries=4, n_probe=4)
 
 
 def test_ivf_table_topk_no_queries_returns_empty(spark, tmp_path):
@@ -347,6 +347,6 @@ def test_ivf_table_topk_no_queries_returns_empty(spark, tmp_path):
     set is empty and every file is pruned — an empty typed frame comes
     back, not an error."""
     _, table, _ = _ivf_table(spark, tmp_path)
-    out = similarity.ivf_table_topk(spark, table, n_queries=0, k=5, n_probe=1)
+    out = similarity.ivf_table_topk(spark, table, n_queries=0, n_probe=1)
     assert out.columns == ["query_id", "neighbor_id", "rank", "cos_sim"]
     assert out.count() == 0

@@ -38,14 +38,14 @@ def test_candidate_pairs_stay_within_block(records):
 
 def test_verify_merges_normal_equal_and_splits_variants(records):
     out = {(r.id1, r.id2): r.jaccard
-           for r in verified_pairs(candidate_pairs(block_records(records)), 0.8).collect()}
+           for r in verified_pairs(candidate_pairs(block_records(records))).collect()}
     assert out == {("r1", "r2"): 1.0}  # identical after lnrm
     # r1/r3 share the 'apple ' prefix only — well under 0.8
 
 
 def test_resolution_maps_to_min_id_and_keeps_singletons(records):
     blocked = block_records(records)
-    matches = verified_pairs(candidate_pairs(blocked), 0.8)
+    matches = verified_pairs(candidate_pairs(blocked))
     canon = {r.rec_id: r.canon for r in resolve_records(blocked, matches).collect()}
     assert canon == {"r1": "r1", "r2": "r1", "r3": "r3", "r4": "r4", "r5": "r5"}
 
@@ -57,7 +57,7 @@ def test_short_strings_use_whole_string_shingle(spark):
     )
     blocked = block_records(recs)
     out = {(r.id1, r.id2): r.jaccard
-           for r in verified_pairs(candidate_pairs(blocked), 0.8).collect()}
+           for r in verified_pairs(candidate_pairs(blocked)).collect()}
     # 'ab' vs 'ab' -> 1.0; 'ab' vs 'ax' -> disjoint single shingles -> 0.0
     assert out == {("a1", "a2"): 1.0}
 

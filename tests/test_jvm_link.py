@@ -152,7 +152,7 @@ def test_salted_candidate_join_matches_broadcast(spark, pipe):
     from bootleg_spark.operators.mentions import extract_mentions_word
 
     docs = pipe.dims["documents"].select("doc_id", "text")
-    m = extract_mentions_word(docs, pipe.dims["aliases"], text_col="text")
+    m = extract_mentions_word(docs, pipe.dims["aliases"])
     cols = ["doc_id", "mention_pos", "alias", "cand_qids", "cand_eids"]
     bc = attach_candidates(m, pipe.grouped_cands)
     salted = attach_candidates_salted(m, pipe.grouped_cands, salt_n=8)

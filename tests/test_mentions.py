@@ -262,7 +262,7 @@ def test_relational_multiword_extractor_equals_python(spark):
     ]
     expected = []
     for t in texts:
-        for a, s, e in ngram_extract_aliases(t, aliases, 1, 6):
+        for a, s, e in ngram_extract_aliases(t, aliases):
             expected.append((t, a, s, e))
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"

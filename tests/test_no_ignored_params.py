@@ -1,14 +1,17 @@
 """Every parameter a ``bootleg_spark`` function takes is read by it,
-every module-level definition is reached, and the package reads no
-environment variable beyond its contract.
+every defaulted parameter is set by some call, every module-level
+definition is reached, and the package reads no environment variable
+beyond its contract.
 
 A parameter the body never reads is silently ignored: a caller who sets
 it gets no error and no effect. This walks the package's source with
 ``ast`` (no Spark) and fails on any such parameter; the few that a
-fixed call shape forces are allowlisted with their reason. A definition
-no query, workload or script loads is code only its own tests run, so
-the same walk fails on it. An environment variable is an option no
-signature shows, so the same walk pins the names the package reads.
+fixed call shape forces are allowlisted with their reason. A default
+no call overrides is an option nothing exercises, so the same walk
+fails on it. A definition no query, workload or script loads is code
+only its own tests run, so the same walk fails on it. An environment
+variable is an option no signature shows, so the same walk pins the
+names the package reads.
 """
 
 from __future__ import annotations
@@ -34,6 +37,10 @@ CALLERS = [
     for p in [*(ROOT / "scripts").rglob("*.py"), *(ROOT / "perfbench").rglob("*.py"),
               ROOT / "__spark_entry__.py", ROOT / "bench.py"]
     if "tests" not in p.relative_to(ROOT).parts
+]
+# the tests, which count as callers only for the defaults check
+TESTS = [
+    _parse(p) for p in [*(ROOT / "tests").rglob("*.py"), *(ROOT / "perfbench" / "tests").rglob("*.py")]
 ]
 
 # (module path under bootleg_spark/, function, parameter) -> why unread
@@ -147,6 +154,86 @@ def test_every_definition_is_reached():
     assert sorted(unreached - set(UNREACHED)) == []
     # an allowlist entry that is now reached (or gone) is stale
     assert sorted(set(UNREACHED) - unreached) == []
+
+
+# (module path under bootleg_spark/, function, parameter) -> why no call
+# sets its default; only definitions in UNREACHED may have one
+UNSET = {
+    ("annotator.py", "SparkAnnotator", "threshold"): "documented entry point",
+    ("streaming/ingest.py", "start_snapshot_triple_stream", "trigger_available_now"): "documented entry point",
+    ("functions/embedding.py", "make_mlp_encoder", "hidden"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("functions/embedding.py", "make_mlp_encoder", "seed"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("functions/npz_encoder.py", "export_tiny_encoder", "d_model"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("functions/npz_encoder.py", "export_tiny_encoder", "n_layers"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("functions/npz_encoder.py", "export_tiny_encoder", "n_buckets"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("functions/npz_encoder.py", "export_tiny_encoder", "max_len"): "learned-encoder slot behind KgPipeline(encoder=)",
+    ("sources/profile.py", "assert_valid_profile", "max_show"): "validator of the reference's profile JSONL (outside input)",
+    ("sources/profile.py", "write_profile_jsonl", "order"): "sink of the reference's profile JSONL format",
+    ("sources/sentences.py", "assert_valid_sentences", "max_show"): "validator of the reference's sentence JSONL (outside input)",
+}
+
+
+def _functions() -> list[tuple[str, str, ast.FunctionDef, int]]:
+    """(module path, the name a call uses, definition, leading
+    parameters a call does not pass) for every function the package
+    defines, nested ones included; a class is called by its name."""
+    out = []
+    for rel, tree in MODULES:
+        owner = {id(f): c for c in ast.walk(tree) if isinstance(c, ast.ClassDef) for f in c.body}
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            cls = owner.get(id(fn))
+            static = any(ast.unparse(d) == "staticmethod" for d in fn.decorator_list)
+            name = cls.name if cls is not None and fn.name == "__init__" else fn.name
+            out.append((rel, name, fn, int(cls is not None and not static)))
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position, or None for keyword-only, name) of each parameter
+    with a default."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    out = [(i, x.arg) for i, x in enumerate(pos)][len(pos) - len(a.defaults):]
+    return out + [(None, x.arg) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def _sets(call: ast.Call, name: str, pos: int | None) -> bool:
+    """Whether ``call`` passes parameter ``name`` (at call position
+    ``pos``) by keyword, by position or through ``*args``/``**kwargs``."""
+    if any(k.arg in (None, name) for k in call.keywords):
+        return True
+    for i, arg in enumerate(call.args if pos is not None else []):
+        if isinstance(arg, ast.Starred) or i == pos:
+            return i <= pos
+    return False
+
+
+def _unset_defaults() -> set[tuple[str, str, str]]:
+    """Defaulted parameters that no call in the package, the scripts,
+    ``perfbench``, the entry points or the tests sets; calls are
+    matched by name."""
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in [*(t for _, t in MODULES), *CALLERS, *TESTS]:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call) and isinstance(n.func, (ast.Name, ast.Attribute)):
+                name = n.func.id if isinstance(n.func, ast.Name) else n.func.attr
+                calls.setdefault(name, []).append(n)
+    return {
+        (rel, name, p)
+        for rel, name, fn, skip in _functions()
+        for pos, p in _defaulted(fn)
+        if not any(_sets(c, p, None if pos is None else pos - skip) for c in calls.get(name, []))
+    }
+
+
+def test_every_default_is_set():
+    unset = _unset_defaults()
+    assert sorted(unset - set(UNSET)) == []
+    # an allowlist entry whose default is now set (or gone) is stale
+    assert sorted(set(UNSET) - unset) == []
+    assert {(rel, fn) for rel, fn, _ in UNSET} <= set(UNREACHED)
 
 
 def _env_reads() -> set:

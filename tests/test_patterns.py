@@ -59,7 +59,7 @@ def _corpus(spark):
 
 def test_adjacent_pairs_gap_and_identity_rules(spark):
     docs, linked, _ = _corpus(spark)
-    pairs = adjacent_linked_pairs(linked, docs, min_gap=2, max_gap=4)
+    pairs = adjacent_linked_pairs(linked, docs)
     got = {(r.doc_id, r.qid1, r.qid2, r.pattern) for r in pairs.collect()}
     assert got == {
         (1, "Q1", "Q2", "works at"),
@@ -71,7 +71,7 @@ def test_adjacent_pairs_gap_and_identity_rules(spark):
 
 def test_mine_patterns_precision_arithmetic(spark):
     docs, linked, kg = _corpus(spark)
-    pairs = adjacent_linked_pairs(linked, docs, min_gap=2, max_gap=4)
+    pairs = adjacent_linked_pairs(linked, docs)
     mined = mine_patterns(pairs, kg).collect()
     assert len(mined) == 1
     row = mined[0]
@@ -82,7 +82,7 @@ def test_mine_patterns_precision_arithmetic(spark):
 
 def test_apply_patterns_proposes_only_unknown_triples(spark):
     docs, linked, kg = _corpus(spark)
-    pairs = adjacent_linked_pairs(linked, docs, min_gap=2, max_gap=4)
+    pairs = adjacent_linked_pairs(linked, docs)
     mined = mine_patterns(pairs, kg)
     out = apply_patterns(
         pairs, mined, kg, min_support=2, min_precision=0.5
@@ -96,7 +96,7 @@ def test_apply_patterns_proposes_only_unknown_triples(spark):
 
 def test_apply_patterns_threshold_drops_everything(spark):
     docs, linked, kg = _corpus(spark)
-    pairs = adjacent_linked_pairs(linked, docs, min_gap=2, max_gap=4)
+    pairs = adjacent_linked_pairs(linked, docs)
     mined = mine_patterns(pairs, kg)
     assert (
         apply_patterns(pairs, mined, kg, min_support=3, min_precision=0.5).count()
@@ -117,7 +117,7 @@ def test_multi_relation_pair_credits_each_relation(spark):
         [("Q1", "employer", "Q2"), ("Q1", "member_of", "Q2")],
         "subj_qid string, rel string, obj_qid string",
     )
-    pairs = adjacent_linked_pairs(linked, docs, min_gap=2, max_gap=4)
+    pairs = adjacent_linked_pairs(linked, docs)
     mined = {
         (r.pattern, r.rel): (r.support, r.n_pattern)
         for r in mine_patterns(pairs, kg).collect()
@@ -152,6 +152,6 @@ def test_bootstrap_cascades_across_rounds(spark):
     pairs = adjacent_linked_pairs(linked, docs)
     out = {(r.subj_qid, r.obj_qid): r.accepted_round
            for r in bootstrap_patterns(
-               pairs, kg, rounds=2, min_support=1, min_precision=0.1
+               pairs, kg, min_support=1, min_precision=0.1
            ).collect()}
     assert out == {("QC", "QD"): 1, ("QE", "QF"): 2}

@@ -42,7 +42,7 @@ def test_fused_local_triples_equal_staged_semijoin(pipe):
     from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
 
     linked = pipe.linked()
-    ents = doc_entities(linked, id_col="doc_id", qid_col="qid_pred")
+    ents = doc_entities(linked, qid_col="qid_pred")
     staged = {
         tuple(r) for r in triples_from_doc_entities(ents, pipe.dims["kg_relations"]).collect()
     }
@@ -98,7 +98,7 @@ def test_semijoin_plan_equals_naive_pairs_plan(pipe, spark):
     )
 
     linked = pipe.linked()
-    ents = doc_entities(linked, id_col="doc_id", qid_col="qid_pred")
+    ents = doc_entities(linked, qid_col="qid_pred")
     fast = {tuple(r) for r in triples_from_doc_entities(ents, pipe.dims["kg_relations"]).collect()}
     naive = {
         tuple(r)

@@ -96,7 +96,7 @@ def test_sample_frames_short_stream(spark):
         [("short", bytearray(b"tiny")), ("long", bytearray(b"A" * 256 + b"B" * 256 + b"C" * 256))],
         "url string, html binary",
     )
-    rows = sample_frames(df, frame_bytes=256, k=4).collect()
+    rows = sample_frames(df).collect()
     by_id = {}
     for r in rows:
         by_id.setdefault(r["id"], []).append(r)

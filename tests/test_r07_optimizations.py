@@ -112,20 +112,26 @@ def test_events_and_embeddings_scans_are_cached(spark, tmp_path):
 
 
 def test_doc_shingle_arrays_match_word_shingles(docs):
-    """explode(doc_shingle_arrays) ≡ word_shingles — the in-row form
-    must reproduce the exploded+distinct r06 frame row-for-row."""
+    """explode(doc_shingle_arrays) ≡ a plain-Python shingler: the
+    distinct non-empty space-joined word n-grams of ``text.split(" ")``
+    per doc, row-for-row."""
+    rows = docs.select("doc_id", "text").collect()
     for n in (1, 2, 3, 5):
-        old = {
-            (r["id"], r["shingle"])
-            for r in dedup.word_shingles(docs, n=n).collect()
-        }
-        new = {
+        want = set()
+        for r in rows:
+            words = r["text"].split(" ")
+            want |= {
+                (r["doc_id"], g)
+                for g in (" ".join(words[i : i + n]) for i in range(len(words) - n + 1))
+                if g
+            }
+        got = {
             (r["id"], r["shingle"])
             for r in dedup.doc_shingle_arrays(docs, n=n)
             .select("id", F.explode("dsh").alias("shingle"))
             .collect()
         }
-        assert new == old, f"shingle mismatch at n={n}"
+        assert got == want, f"shingle mismatch at n={n}"
 
 
 def test_bucket_pairs_match_self_join(docs):

@@ -188,7 +188,7 @@ def test_sample_exact_k_deterministic_uniform(spark):
     df = spark.createDataFrame(rows, "doc_id long, lang string")
     got = {
         (r["lang"], r["doc_id"]): r["sample_rank"]
-        for r in sample_exact_k(df, k=7, seed=101).collect()
+        for r in sample_exact_k(df, k=7).collect()
     }
 
     def draw(i):
@@ -210,7 +210,7 @@ def test_sample_exact_k_deterministic_uniform(spark):
     )
     got2 = {
         (r["lang"], r["doc_id"]): r["sample_rank"]
-        for r in sample_exact_k(grown, k=7, seed=101).collect()
+        for r in sample_exact_k(grown, k=7).collect()
     }
     new_de = sorted(
         (i for i, l in rows + [(1000 + j, "de") for j in range(5)] if l == "de"),

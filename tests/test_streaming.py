@@ -36,7 +36,7 @@ def test_session_windows_streaming_with_watermark(spark, tmp_path):
             .parquet(src + "/*")
         )
         q = (
-            sessionize_windows(stream, gap="30 minutes", watermark="10 minutes")
+            sessionize_windows(stream, watermark="10 minutes")
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)

@@ -92,7 +92,7 @@ class TestContamination:
             "doc_id long, text string",
         )
         ev = _df(spark, [(100, "beta gamma delta epsilon")], "doc_id long, text string")
-        out = {r["id"]: r for r in textclean.ngram_contamination(corpus, ev, n=3).collect()}
+        out = {r["id"]: r for r in textclean.ngram_contamination(corpus, ev).collect()}
         # doc 1 shares 'beta gamma delta'; doc 2 shares nothing
         assert set(out) == {1}
         assert out[1]["n_hit"] == 1 and out[1]["n_shingles"] == 2
