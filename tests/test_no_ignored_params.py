@@ -204,7 +204,10 @@ def _sets(call: ast.Call, name: str, pos: int | None) -> bool:
     ``pos``) by keyword, by position or through ``*args``/``**kwargs``."""
     if any(k.arg in (None, name) for k in call.keywords):
         return True
-    for i, arg in enumerate(call.args if pos is not None else []):
+    if pos is None:
+        return False
+    # a starred argument may fill every position from its own on
+    for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred) or i == pos:
             return i <= pos
     return False
